@@ -56,10 +56,10 @@ object Bench {
     // warm the JVM/codegen once on the smallest SF so per-query times
     // measure the engine, not first-call classloading.
     System.gc()
-    headline.foreach { q =>
+    headline.foreach { q => Pin.scope {
       try q.run(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-    }
+    }}
     // Load gate (r16 judging: bench totals r13-r16 ran at load averages
     // 1.6/3.9/6.6/3.3 and became uncomparable — every r16 headline query
     // read +5%..+64% vs r15 on a binary whose only hot-path changes were
@@ -156,7 +156,7 @@ object Bench {
       val reps = (1 to nReps).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { Pin.scope(q.run(spark, sfDir).write.format("noop").mode("overwrite").save()); true }
           catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: $e"); false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
@@ -191,7 +191,7 @@ object Bench {
                   val t0 = System.nanoTime()
                   val ok =
                     try {
-                      qq.run(spark, d).write.format("noop").mode("overwrite").save()
+                      Pin.scope(qq.run(spark, d).write.format("noop").mode("overwrite").save())
                       true
                     } catch { case _: Throwable => false }
                   if (ok) Some((System.nanoTime() - t0) / 1e9) else None

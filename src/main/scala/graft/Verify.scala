@@ -23,20 +23,11 @@ object Verify {
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // registry paths pin reused frames with a LAZY cache() (the
-        // eager=false discipline: plan construction must run no jobs —
-        // clusteringOf, shingleCorpusOf, collocationsOf). The write above
-        // is the only consumer, so drop those blocks here instead of
-        // letting 300 queries accumulate them in the CacheManager
-        // (r17 advisor: clusteringOf left three entries pinned per run).
-        // Own try: the parquet above is already GOOD — a clearCache
-        // hiccup (executor lost mid-unpersist) must not fall into the
-        // catch and overwrite it with a red marker.
-        try spark.catalog.clearCache()
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name clearCache after success: $e")
+        // the scope releases whatever the query pinned, on success and
+        // failure alike, and only that: no session-wide cache flush
+        Pin.scope {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
         }
       } catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
@@ -51,9 +42,6 @@ object Verify {
         } catch { case e2: Throwable =>
           System.err.println(s"[verify] $name marker write failed too: $e2")
         }
-        // a failing query may have pinned caches before it threw
-        try spark.catalog.clearCache()
-        catch { case _: Throwable => () }
       }
     }
     // merge with any prior record: queries that ran here own their entry

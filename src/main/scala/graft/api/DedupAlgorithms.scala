@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
@@ -31,14 +32,11 @@ object DedupAlgorithms {
     * J = 0.8; documents under 3 words have no shingles and never pair).
     * Candidate generation is band-bounded, never all-pairs.
     *
-    * Eagerly materializes the signature frame via localCheckpoint so the
-    * 16-permutation minhash runs once (banding and verification both read
-    * it); the checkpoint blocks are reclaimed by Spark's ContextCleaner
-    * once the result is dereferenced — unlike cache(), nothing accumulates
-    * across repeated library calls.
+    * The signature frame is [[Pin.reuse]]d so the 16-permutation
+    * minhash runs once (banding and verification both read it).
     * @return (doc_a, doc_b, n_eq) with doc_a < doc_b, n_eq of 16 */
   def nearDupPairs(df: DataFrame): DataFrame = {
-    val sig = Dedup.perRowSigFast(docs(df)).localCheckpoint(true)
+    val sig = Pin.reuse(Dedup.perRowSigFast(docs(df)))
     Dedup.verifiedPairs(Dedup.bandedSig(sig, Dedup.xxBand))
   }
 
@@ -114,7 +112,7 @@ object DedupAlgorithms {
     require(maxShingleDf >= 2, s"maxShingleDf must be >= 2, got $maxShingleDf")
     SimilaritySearch.guardExactPairs("DedupAlgorithms.jaccardPairs", df,
       exact, "DedupAlgorithms.nearDupPairs (MinHash-LSH: digests shuffle, texts don't)")
-    Dedup.jaccardPairsOf(docs(df), minJaccardPct, maxShingleDf, eager = true)
+    Dedup.jaccardPairsOf(docs(df), minJaccardPct, maxShingleDf)
   }
 
   /** Asymmetric containment pairs C(A,B) = |S(A) ∩ S(B)| / |S(A)| >=
@@ -133,7 +131,6 @@ object DedupAlgorithms {
     require(maxShingleDf >= 2, s"maxShingleDf must be >= 2, got $maxShingleDf")
     SimilaritySearch.guardExactPairs("DedupAlgorithms.containmentPairs", df,
       exact, "DedupAlgorithms.nearDupPairs (MinHash-LSH: digests shuffle, texts don't)")
-    Dedup.containmentPairsOf(docs(df), minContainmentPct, maxShingleDf,
-      eager = true)
+    Dedup.containmentPairsOf(docs(df), minContainmentPct, maxShingleDf)
   }
 }

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.GraphOps
@@ -34,9 +35,7 @@ object GraphAlgorithms {
   /** Per-node triangle counts over a canonical half-edge list — the body
     * [[triangles]] and [[clusteringCoefficient]] share. */
   private def triangleCountsOf(half: DataFrame): DataFrame = {
-    // eager localCheckpoint, not cache(): the house facade discipline —
-    // nothing accumulates in the CacheManager across repeated calls
-    val o = GraphOps.orient(half, GraphOps.degrees(half)).localCheckpoint(true)
+    val o = Pin.reuse(GraphOps.orient(half, GraphOps.degrees(half)))
     GraphOps.orientedWedges(o)
       .join(o.as("e3"), col("e3.src") === col("y") && col("e3.dst") === col("z"))
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
@@ -134,20 +133,20 @@ object GraphAlgorithms {
     * @param pairs undirected edges, two columns
     * @return (node, n_triangles), all triangle-participating nodes */
   def triangles(pairs: DataFrame): DataFrame =
-    triangleCountsOf(canonical(pairs).localCheckpoint(true))
+    triangleCountsOf(Pin.reuse(canonical(pairs)))
 
   /** Per-node local clustering coefficient 2·triangles/(deg·(deg−1)) in
     * exact micros — how tightly each node's neighborhood closes, the
     * community-tightness profile next to a degree histogram. Rides the
     * same (degree, id)-oriented once-each wedge enumeration as
     * [[triangles]] (the registry core — one shared expression, one
-    * checkpointed half-edge list), so wedge work stays Σ C(outdeg, 2)
+    * pinned half-edge list), so wedge work stays Σ C(outdeg, 2)
     * under power-law hubs. Degree-0/1 nodes are excluded (the
     * coefficient is undefined).
     * @param pairs undirected edges, two columns
     * @return (node, degree, n_triangles, coeff_micro) */
   def clusteringCoefficient(pairs: DataFrame): DataFrame =
-    GraphOps.clusteringOf(canonical(pairs), eager = true)
+    GraphOps.clusteringOf(canonical(pairs))
 
   /** Newman degree assortativity: the one-row do-hubs-link-to-hubs
     * Pearson coefficient over edge endpoints — all moments exact BIGINT
@@ -173,14 +172,14 @@ object GraphAlgorithms {
     * micro-div. Pairs whose EVERY shared neighbor is a hub have an empty
     * filtered intersection and are absent — the cap is the semantics,
     * not an approximation of an uncapped score. Rides the registry's
-    * once-each wedge pass over ONE checkpointed half-edge list and ONE
-    * checkpointed degree table.
+    * once-each wedge pass over ONE pinned half-edge list and ONE
+    * pinned degree table.
     * @param pairs undirected edges, two columns
     * @return (a, b, n_common, jaccard_micro) per non-adjacent candidate */
   def jaccardSimilarity(pairs: DataFrame, hubCap: Int = 1024): DataFrame = {
     require(hubCap >= 1, s"jaccardSimilarity needs hubCap >= 1, got $hubCap")
-    val h = canonical(pairs).localCheckpoint(true)
-    val deg = GraphOps.degrees(h).localCheckpoint(true)
+    val h = Pin.reuse(canonical(pairs))
+    val deg = Pin.reuse(GraphOps.degrees(h))
     GraphOps.jaccardScoresOf(h, deg, hubCap)
       .select(col("a"), col("b"), col("n_common"),
         col("jaccard_micro").cast("bigint").as("jaccard_micro"))

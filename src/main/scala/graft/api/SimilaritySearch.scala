@@ -337,9 +337,9 @@ object SimilaritySearch {
           graft.operators.Similarity.servingParts(
             n * (shortLinks + longLinks) * 2, 24), col("vec_a"))
         .sortWithinPartitions(col("vec_a"))
-        .transform(graft.operators.Similarity.pinServing)
+        .transform(graft.Pin.serving)
     }
-    // the two LONG-LIVED serving structures go through pinServing: with a
+    // the two LONG-LIVED serving structures go through Pin.serving: with a
     // reliable checkpoint dir configured on the session they survive
     // executor loss (r19; build intermediates above stay localCheckpoint —
     // losing one only fails the build call itself, which is rerunnable)
@@ -348,7 +348,7 @@ object SimilaritySearch {
         graft.operators.Similarity.servingParts(n, 8 + 4L * dim),
         col("vec_id"))
       .sortWithinPartitions(col("vec_id"))
-      .transform(graft.operators.Similarity.pinServing)
+      .transform(graft.Pin.serving)
     GraphAnnIndex(adj, cKeyed, entries, n)
   }
 

@@ -125,7 +125,7 @@ object TextAnalytics {
       topN: Int = 30): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    TextAnalysis.collocationsOf(docs(df), minCount, topN, eager = true)
+    TextAnalysis.collocationsOf(docs(df), minCount, topN)
   }
 
   /** RAKE keyword extraction (Rose et al. 2010): candidate phrases are

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -677,7 +677,7 @@ object Curation {
             .when(col("s_es") >= col("s_fr"), "es")
             .otherwise("fr"))
         .select(col("lang"), col("pred_lang"))
-        .cache()
+        .transform(Pin.reuse)
       val tot = pred.agg(count(lit(1)).as("n_docs"),
         sum(when(col("lang") === col("pred_lang"), 1L).otherwise(0L)).as("n_agree"))
       val chance = pred.groupBy(col("lang")).agg(count(lit(1)).as("n_true"))

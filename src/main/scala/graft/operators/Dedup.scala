@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -129,7 +129,7 @@ object Dedup {
     * signature stage runs twice. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
     verifiedPairs(bandedSig(
-      perRowSig(t(s, dir, "documents"), md5Hash).cache(), md5Band))
+      Pin.reuse(perRowSig(t(s, dir, "documents"), md5Hash)), md5Band))
 
   /** The md5 MinHash pipeline through verified pairs, as DuckDB CTEs (the
     * text both minhash oracles share). Ends with `eq(doc_a, doc_b, n_eq)`. */
@@ -230,7 +230,7 @@ object Dedup {
   val simhash = GraftQuery(
     "dedup_simhash",
     (s, dir) => {
-      val sim = simhashSig(t(s, dir, "documents")).cache()
+      val sim = Pin.reuse(simhashSig(t(s, dir, "documents")))
       val bands = sim.select(col("doc_id"), col("f"),
         posexplode(expr("transform(sequence(0, 3), b -> substring(f, b * 16 + 1, 16))")).as(Seq("b", "bh")))
       bands.select(col("doc_id").as("doc_a"), col("f").as("fa"), col("b"), col("bh"))
@@ -281,20 +281,17 @@ object Dedup {
     * candidate machinery shared by [[ngramJaccard]], [[containment]] and
     * the public facade's pair functions. df >= 2 because a shingle in one
     * doc can't generate a pair anyway; `maxDf` is the candidate-bound
-    * ceiling ([[MaxShingleDf]] documents the trade).
-    * `eager = true` (the facade path) materializes the shingle arrays via
-    * localCheckpoint so repeated LIBRARY calls accumulate nothing in the
-    * CacheManager (the nearDupPairs discipline); `eager = false` (the
-    * registry path) keeps the lazy cache() so constructing the query plan
-    * runs no Spark jobs (plan linting stays job-free). */
-  private[graft] def shingleCorpusOf(docs: DataFrame, maxDf: Int,
-      eager: Boolean): (DataFrame, DataFrame) = {
+    * ceiling ([[MaxShingleDf]] documents the trade). The shingle arrays
+    * feed the index and both verify-side joins, so they are
+    * [[Pin.reuse]]d. */
+  private[graft] def shingleCorpusOf(docs: DataFrame, maxDf: Int)
+      : (DataFrame, DataFrame) = {
     val sh0 = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), expr(
         "array_distinct(transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2])))").as("sh"))
-    val docsSh = if (eager) sh0.localCheckpoint(true) else sh0.cache()
+    val docsSh = Pin.reuse(sh0)
     val idx = docsSh.select(col("doc_id"), explode(col("sh")).as("s"))
     val rare = idx.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
@@ -310,8 +307,8 @@ object Dedup {
     * [[graft.api.DedupAlgorithms.jaccardPairs]].
     * @return (doc_a, doc_b, inter, jaccard) with doc_a < doc_b */
   private[graft] def jaccardPairsOf(docs: DataFrame, pct: Int,
-      maxDf: Int = MaxShingleDf, eager: Boolean = false): DataFrame = {
-    val (docsSh, pruned) = shingleCorpusOf(docs, maxDf, eager)
+      maxDf: Int = MaxShingleDf): DataFrame = {
+    val (docsSh, pruned) = shingleCorpusOf(docs, maxDf)
     val cand = pruned.select(col("doc_id").as("doc_a"), col("s"))
       .join(pruned.select(col("doc_id").as("doc_b"), col("s")), "s")
       .filter(col("doc_a") < col("doc_b"))
@@ -336,8 +333,8 @@ object Dedup {
     * Shared with [[graft.api.DedupAlgorithms.containmentPairs]].
     * @return (doc_a, doc_b, inter, containment) ordered pairs */
   private[graft] def containmentPairsOf(docs: DataFrame, pct: Int,
-      maxDf: Int = MaxShingleDf, eager: Boolean = false): DataFrame = {
-    val (docsSh, pruned) = shingleCorpusOf(docs, maxDf, eager)
+      maxDf: Int = MaxShingleDf): DataFrame = {
+    val (docsSh, pruned) = shingleCorpusOf(docs, maxDf)
     val cand = pruned.select(col("doc_id").as("doc_a"), col("s"))
       .join(pruned.select(col("doc_id").as("doc_b"), col("s")), "s")
       .filter(col("doc_a") =!= col("doc_b")) // ordered: both directions
@@ -472,7 +469,7 @@ object Dedup {
       // same pipeline as dedup_minhash with the hash-once xxhash64 family;
       // sig cached for the same both-sides-of-the-self-join reason
       verifiedPairs(bandedSig(
-        perRowSigFast(t(s, dir, "documents")).cache(), xxBand))
+        Pin.reuse(perRowSigFast(t(s, dir, "documents"))), xxBand))
         .select(col("doc_a"), col("doc_b"))
         .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""WITH $MinhashPairsCte
@@ -545,7 +542,7 @@ object Dedup {
       .select(col("doc_id"), explode(expr(
         s"""transform(sequence(0, size(w) - $window),
               i -> md5(concat_ws(' ', slice(w, i + 1, $window))))""")).as("h"))
-      .cache()
+      .transform(Pin.reuse)
     val shared = wins.select(col("h"), col("doc_id")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2).select(col("h"))
@@ -971,7 +968,7 @@ object Dedup {
   val bandingSweep = GraftQuery(
     "dedup_banding_sweep",
     (s, dir) => {
-      val sig = perRowSig(t(s, dir, "documents"), md5Hash).cache()
+      val sig = Pin.reuse(perRowSig(t(s, dir, "documents"), md5Hash))
       val perConfig = Seq((8, 2), (4, 4), (2, 8)).map { case (nb, rpb) =>
         val bandCols = (0 until nb).map(b =>
           md5Band((0 until rpb).map(r => col("sig").getItem(rpb * b + r))))
@@ -1084,7 +1081,7 @@ object Dedup {
     (s, dir) => {
       import s.implicits._
       val bands = bandedSig(
-        perRowSig(t(s, dir, "documents"), md5Hash).cache(), md5Band)
+        Pin.reuse(perRowSig(t(s, dir, "documents"), md5Hash)), md5Band)
       val nEq = expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))")
       val byEq = bands
         .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"), col("b"), col("bh"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,16 +35,16 @@ object GraphOps {
   /** [[components]] plus the tick count it converged in — exposed so the
     * spec can pin the pointer-jumping O(log diameter) bound (a chain of
     * n nodes must converge in ~log2(n) ticks, not n). */
-  private[graft] def componentsWithTicks(pairsIn: DataFrame): (DataFrame, Int) = {
+  private[graft] def componentsWithTicks(pairsIn: DataFrame): (DataFrame, Int) = Pin.scope {
     val p = pairsIn.toDF("a", "b")
     val edges = p.select(col("a").as("src"), col("b").as("dst"))
       .union(p.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().cache()
+      .distinct().transform(Pin.reuse)
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint(true)
     var changed = 1L
     var it = 0
-    while (changed > 0 && it < 50) {
+    while (changed > 0 && it < 50) Pin.scope { // releases this tick's pins
       it += 1
       // hook: pull the min label across each edge
       val nbrMin = edges.join(labels, col("src") === col("node"))
@@ -53,7 +53,7 @@ object GraphOps {
       val hooked = labels.join(nbrMin, col("node") === col("nb"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .cache() // read twice by the shortcut self-join below
+        .transform(Pin.reuse) // read twice by the shortcut self-join below
       // shortcut (pointer jumping): follow one level of label indirection —
       // this is what turns O(diameter) ticks into O(log diameter)
       val short = hooked.as("x")
@@ -64,11 +64,9 @@ object GraphOps {
         .localCheckpoint(true)
       changed = short.as("n").join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.label") =!= col("o.label")).count()
-      hooked.unpersist()
       labels.unpersist() // short is checkpointed; drop the old tick's blocks
       labels = short
     }
-    edges.unpersist()
     (labels, it)
   }
 
@@ -167,8 +165,8 @@ object GraphOps {
   val triangleCount = GraftQuery(
     "graph_triangles",
     (s, dir) => {
-      val half = coPurchaseEdges(s, dir).cache()
-      val o = orient(half, degrees(half)).cache()
+      val half = Pin.reuse(coPurchaseEdges(s, dir))
+      val o = Pin.reuse(orient(half, degrees(half)))
       val tri = orientedWedges(o)
         .join(o.as("e3"), col("e3.src") === col("y") && col("e3.dst") === col("z"))
         .select(col("x"), col("y"), col("z"))
@@ -211,10 +209,12 @@ object GraphOps {
     * (node, label) vote count; ticks are cut by eager localCheckpoint.
     * Shared by graph_label_propagation and
     * [[graft.api.GraphAlgorithms.labelPropagation]].
+    * The edge cache lives for the call: the returned labels are
+    * checkpointed.
     * @return (node, seed, label) after `rounds` synchronous rounds */
   private[graft] def lpaOn(edges0: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val edges = edges0.cache()
+      rounds: Int): DataFrame = Pin.scope {
+    val edges = Pin.reuse(edges0)
     var labels = seeds.withColumn("label", col("seed")).localCheckpoint(true)
     for (_ <- 1 to rounds) {
       val votes = edges.join(labels, col("u") === col("node"))
@@ -232,7 +232,6 @@ object GraphOps {
       labels.unpersist()
       labels = next
     }
-    edges.unpersist() // labels is checkpointed; the edge cache fed the loop
     labels
   }
 
@@ -294,11 +293,11 @@ object GraphOps {
     * graph takes <= 5 rounds at sf0.1 (fewer below), and extra unrolled
     * rounds are no-ops because the peel step is idempotent at fixpoint —
     * the oracle unrolls 12. */
-  private[graft] def kcore(pairsIn: DataFrame, k: Int): (DataFrame, Int) = {
+  private[graft] def kcore(pairsIn: DataFrame, k: Int): (DataFrame, Int) = Pin.scope {
     val p = pairsIn.toDF("a", "b")
     val edges = p.select(col("a").as("u"), col("b").as("v"))
       .union(p.select(col("b").as("u"), col("a").as("v")))
-      .distinct().cache()
+      .distinct().transform(Pin.reuse)
     def degrees(alive: DataFrame): DataFrame =
       edges.join(alive.select(col("node").as("u")), "u")
         .join(alive.select(col("node").as("v")), "v")
@@ -309,7 +308,7 @@ object GraphOps {
     // at fixpoint those ARE the final core degrees (the set stopped
     // changing), so no post-loop recompute is needed, and the eager
     // checkpoint cuts the returned plan's lineage from the edge cache
-    // before it unpersists.
+    // before the scope releases it.
     var alive = edges.select(col("u").as("node")).distinct()
       .withColumn("c", lit(0L)).localCheckpoint(true)
     var n = alive.count()
@@ -328,7 +327,6 @@ object GraphOps {
     // a capped non-fixpoint result would be silently NOT a k-core — fail
     // loudly instead (50 rounds >> any graph this serves; see OracleRounds)
     require(!changed, s"kcore failed to reach fixpoint within $it rounds")
-    edges.unpersist()
     (alive.select(col("node"), col("c").as("degree")), it)
   }
 
@@ -405,7 +403,8 @@ object GraphOps {
 
   val ssspQuery = GraftQuery(
     "graph_sssp",
-    (s, dir) => {
+    // the scope drops the edges once the relaxation rounds are checkpointed
+    (s, dir) => Pin.scope {
       // weighted symmetrized supplier<->part subgraph: weight = min quantity
       // over the lineitems that realize the edge (deterministic; quantities
       // are integral 1..50, exact as BIGINT)
@@ -415,13 +414,11 @@ object GraphOps {
       val half = li.groupBy(col("a"), col("b")).agg(min(col("q")).as("w"))
       val edges = half.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(half.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .cache()
+        .transform(Pin.reuse)
       // source = min node id — a 1-row aggregate, no crossJoin, no collect
       val source = edges.select(col("src").as("node")).agg(min(col("node")).as("node"))
         .withColumn("dist", lit(0L))
-      val out = sssp(edges, source, SsspHops).orderBy(col("node"))
-      edges.unpersist()
-      out
+      sssp(edges, source, SsspHops).orderBy(col("node"))
     },
     Some {
       // MATERIALIZED is load-bearing (the graph_kcore precedent): each round
@@ -547,7 +544,7 @@ object GraphOps {
     // in-memory copy, the same discipline as the callers' cached e/deg
     // (and the GraphAlgorithms facade, which already pins its oriented
     // list).
-    val o = orient(half, deg).cache()
+    val o = Pin.reuse(orient(half, deg))
     // neighbor lists keyed by the wedge CENTER c, carrying the center's
     // own degree and the neighbor's (deg, id) rank; capped centers are
     // excluded on both lists
@@ -595,17 +592,13 @@ object GraphOps {
   private[operators] val BipartitePartDropsMetric = "graph_bipartite_c4_part_drops"
   private[operators] val BipartiteSuppDropsMetric = "graph_bipartite_c4_supp_drops"
 
-  private val dropLoggerSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
   /** One-time-per-session QueryExecutionListener that warn-logs the
     * [[DroppedCentersMetric]] observation when nonzero — the cap stays
     * loud WITHOUT an eager build-time Spark job: merely constructing or
     * plan-linting the DataFrame runs nothing; the count is collected by
     * the CollectMetrics node during the query's own execution. */
   private[operators] def ensureDropLogger(s: SparkSession): Unit =
-    if (dropLoggerSessions.add(s))
+    Pin.memo(s, "graph-drop-logger")(
       s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
@@ -624,7 +617,7 @@ object GraphOps {
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
-      })
+      }))
 
   /** LINK PREDICTION BASELINE: top-20 non-adjacent node pairs by
     * common-neighbor count — the simplest (and the standard first)
@@ -641,8 +634,8 @@ object GraphOps {
     "graph_common_neighbors",
     (s, dir) => {
       ensureDropLogger(s)
-      val e = coPurchaseEdges(s, dir).cache()
-      val deg = degrees(e).cache()
+      val e = Pin.reuse(coPurchaseEdges(s, dir))
+      val deg = Pin.reuse(degrees(e))
         .observe(DroppedCentersMetric,
           sum(when(col("deg") > WedgeHubCap, 1L).otherwise(0L))
             .as("dropped_centers"))
@@ -689,8 +682,8 @@ object GraphOps {
     "graph_resource_alloc",
     (s, dir) => {
       ensureDropLogger(s)
-      val e = coPurchaseEdges(s, dir).cache()
-      val deg = degrees(e).cache()
+      val e = Pin.reuse(coPurchaseEdges(s, dir))
+      val deg = Pin.reuse(degrees(e))
         .observe(RaDroppedCentersMetric,
           sum(when(col("deg") > WedgeHubCap, 1L).otherwise(0L))
             .as("dropped_centers"))
@@ -788,8 +781,8 @@ object GraphOps {
   val jaccardSimilarity = GraftQuery(
     "graph_jaccard_similarity",
     (s, dir) => {
-      val e = coPurchaseEdges(s, dir).cache()
-      val deg = degrees(e).cache()
+      val e = Pin.reuse(coPurchaseEdges(s, dir))
+      val deg = Pin.reuse(degrees(e))
       jaccardScoresOf(e, deg, WedgeHubCap)
         .orderBy(col("jaccard_micro").desc, col("a"), col("b")).limit(20)
     },
@@ -838,7 +831,7 @@ object GraphOps {
     (s, dir) => {
       val li = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        .cache()
+        .transform(Pin.reuse)
       val nOrders = broadcast(li.agg(countDistinct(col("o")).as("n_orders")))
       val item = li.groupBy(col("p")).agg(count(lit(1)).as("n_item"))
       val pair = li.as("a").join(li.as("b"),
@@ -934,22 +927,14 @@ object GraphOps {
     * half-edge list — shared by graph_clustering_coeff and
     * [[graft.api.GraphAlgorithms.clusteringCoefficient]] so the
     * 2·tri/(deg·(deg−1)) exact-micro expression lives once. The input is
-    * reused three ways (degrees, orientation, the wedge pass): `eager =
-    * true` (the facade path) materializes via localCheckpoint so those
-    * passes read blocks instead of re-running the dedup shuffle; `eager
-    * = false` (the registry path) keeps the lazy cache() so plan
-    * CONSTRUCTION runs no Spark jobs — plan linting stays job-free (the
-    * shingleCorpusOf/bpeStats discipline, r16 advisor). The lazy blocks
-    * are dropped by the registry executor (Verify.dump clears the session
-    * cache after each query's write — r17 advisor: three entries were
-    * left pinned per run), so neither path accumulates CacheManager state.
+    * reused three ways (degrees, orientation, the wedge pass), so it and
+    * the two frames derived from it are [[Pin.reuse]]d: those passes read
+    * blocks instead of re-running the dedup shuffle.
     * @return (node, degree, n_triangles, coeff_micro), deg >= 2 only */
-  private[graft] def clusteringOf(half0: DataFrame,
-      eager: Boolean = false): DataFrame = {
-    def pin(df: DataFrame) = if (eager) df.localCheckpoint(true) else df.cache()
-    val half = pin(half0)
-    val deg = pin(degrees(half))
-    val o = pin(orient(half, deg))
+  private[graft] def clusteringOf(half0: DataFrame): DataFrame = {
+    val half = Pin.reuse(half0)
+    val deg = Pin.reuse(degrees(half))
+    val o = Pin.reuse(orient(half, deg))
     val tri = orientedWedges(o)
       .join(o.as("e3"), col("e3.src") === col("y") && col("e3.dst") === col("z"))
       .select(col("x"), col("y"), col("z"))
@@ -1014,13 +999,13 @@ object GraphOps {
       val half = Tables.t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 50 === 0)
         .select(col("l_partkey").as("u"), (col("l_suppkey") + SuppOffset).as("v"))
-        .distinct().cache()
-      val deg = degrees(half).cache()
+        .distinct().transform(Pin.reuse)
+      val deg = Pin.reuse(degrees(half))
       val m = broadcast(half.agg(count(lit(1)).as("m")))
       val comps = components(half.select(col("u").as("a"), col("v").as("b")))
         .select(col("node"), col("label").as("c"))
       def q(comm: DataFrame, kind: String): DataFrame = {
-        val cm = comm.cache()
+        val cm = Pin.reuse(comm)
         val dc = cm.join(deg, "node")
           .groupBy(col("c")).agg(sum(col("deg")).as("d_c"))
         val ec = half
@@ -1114,7 +1099,7 @@ object GraphOps {
       val half = Tables.t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 50 === 0)
         .select(col("l_partkey").as("u"), (col("l_suppkey") + SuppOffset).as("v"))
-        .distinct().cache()
+        .distinct().transform(Pin.reuse)
       val m = half.count()
       val edges = half.union(half.select(col("v").as("u"), col("u").as("v")))
       val deg = degrees(half)
@@ -1122,15 +1107,13 @@ object GraphOps {
         .join(deg.select(col("node").as("u"), col("deg").as("degree")), "u")
         .join(deg.select(col("node").as("v"), col("deg").as("degj")), "v")
       val w = Window.partitionBy(col("u")).orderBy(col("degj"), col("v"))
-      val out = cand.withColumn("rn", row_number().over(w))
+      cand.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("u").as("node"), col("degree"),
           expr(s"case when ${m}L * 2 - degree * degj > 0 then v else u end").as("target"),
           expr(s"${m}L * 2 - degree * degj").as("gain_scaled"),
           expr(s"${m}L * 2 - degree * degj > 0").as("moved"))
         .orderBy(col("node"))
-      half.unpersist()
-      out
     },
     Some(s"""WITH half AS MATERIALIZED (
                SELECT DISTINCT l_partkey AS u, l_suppkey + $SuppOffset AS v
@@ -1265,14 +1248,14 @@ object GraphOps {
     * Scale shapes: each pass is two key-sized aggregations + one window
     * (never edges⋈edges); contraction is one edge-list pass; the level-2
     * graph is communities-sized. Driver state: six scalar Longs. */
-  private[graft] def louvainRun(half0: DataFrame): LouvainResult = {
-    val half = half0.select(col("u"), col("v")).withColumn("w", lit(1L)).cache()
+  private[graft] def louvainRun(half0: DataFrame): LouvainResult = Pin.scope {
+    val half = Pin.reuse(half0.select(col("u"), col("v")).withColumn("w", lit(1L)))
     val m = half.agg(coalesce(sum(col("w")), lit(0L))).head.getLong(0)
     require(m > 0, "louvain needs at least one edge")
     val und = half.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .union(half.select(col("v").as("src"), col("u").as("dst"), col("w")))
-      .cache()
-    val k0 = und.groupBy(col("src").as("node")).agg(sum(col("w")).as("k")).cache()
+      .transform(Pin.reuse)
+    val k0 = Pin.reuse(und.groupBy(col("src").as("node")).agg(sum(col("w")).as("k")))
     val a0 = k0.select(col("node"), col("node").as("c"))
     def micro(qn: Long): Long =
       ((BigInt(qn) + BigInt(4) * m * m) * 1000000 / (BigInt(4) * m * m)
@@ -1295,12 +1278,12 @@ object GraphOps {
     val sHalf = hcc.filter(col("cu") =!= col("cv"))
       .select(least(col("cu"), col("cv")).as("u"),
         greatest(col("cu"), col("cv")).as("v"), col("w"))
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w")).cache()
+      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w")).transform(Pin.reuse)
     val sLoops = hcc.filter(col("cu") === col("cv"))
-      .groupBy(col("cu").as("node")).agg(sum(col("w")).as("l")).cache()
+      .groupBy(col("cu").as("node")).agg(sum(col("w")).as("l")).transform(Pin.reuse)
     val sK = a1.join(k0, "node")
       .groupBy(col("c")).agg(sum(col("k")).as("k"))
-      .select(col("c").as("node"), col("k")).cache()
+      .select(col("c").as("node"), col("k")).transform(Pin.reuse)
     val sUnd = sHalf.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .union(sHalf.select(col("v").as("src"), col("u").as("dst"), col("w")))
     val a20 = sK.select(col("node"), col("node").as("c"))
@@ -1313,7 +1296,6 @@ object GraphOps {
     }
     val nc2 = a2.select(col("c")).distinct().count()
     val nc0 = k0.count()
-    Seq(half, und, k0, sHalf, sLoops, sK).foreach(_.unpersist())
     LouvainResult(
       Seq((0L, nc0, q0, micro(q0)), (1L, nc1, q1, micro(q1)),
         (2L, nc2, q2, micro(q2))),
@@ -1461,7 +1443,7 @@ object GraphOps {
         .select(col("l_partkey").as("u"), (col("l_suppkey") + SuppOffset).as("v"))
         .distinct()
       val edges = half.union(half.select(col("v").as("u"), col("u").as("v")))
-        .select(col("u").as("src"), col("v").as("dst")).cache()
+        .select(col("u").as("src"), col("v").as("dst")).transform(Pin.reuse)
       val nbr = edges.withColumn("idx",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1678,7 +1660,7 @@ object GraphOps {
         .filter(col("l_orderkey") % 50 === 0)
         .select(col("l_partkey").as("u"), (col("l_suppkey") + SuppOffset).as("v"))
         .distinct()
-      bipartiteC4Census(bipartiteCapPrune(raw, WedgeHubCap).cache())
+      bipartiteC4Census(Pin.reuse(bipartiteCapPrune(raw, WedgeHubCap)))
     },
     Some(s"""WITH raw AS MATERIALIZED (
                SELECT DISTINCT l_partkey AS u, l_suppkey + $SuppOffset AS v
@@ -1725,8 +1707,8 @@ object GraphOps {
   val richClub = GraftQuery(
     "graph_rich_club",
     (s, dir) => {
-      val half = coPurchaseEdges(s, dir).cache()
-      val deg = degrees(half).cache()
+      val half = Pin.reuse(coPurchaseEdges(s, dir))
+      val deg = Pin.reuse(degrees(half))
       val qs = broadcast(deg.agg(
         expr("percentile(deg, 0.5D)").as("p50"),
         expr("percentile(deg, 0.75D)").as("p75"),
@@ -1746,14 +1728,12 @@ object GraphOps {
         .crossJoin(qs).selectExpr("dmin", cutsExpr)
         .filter(col("dmin") > col("c.cutv"))
         .groupBy(col("c.cut").as("cut")).agg(count(lit(1)).as("n_edges"))
-      val out = nodes.join(edges, Seq("cut"), "left")
+      nodes.join(edges, Seq("cut"), "left")
         .select(col("cut"), col("n_nodes"),
           coalesce(col("n_edges"), lit(0L)).as("n_edges"),
           expr("""coalesce(n_edges, 0) * 2000000
                   div nullif(n_nodes * (n_nodes - 1), 0)""").as("phi_micro"))
         .orderBy(col("cut"))
-      half.unpersist(); deg.unpersist()
-      out
     },
     Some("""WITH e AS MATERIALIZED (
               SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -1875,8 +1855,8 @@ object GraphOps {
     * a shortest-path edge, so predecessor discovery is one equi-join.
     * @return (s, v, dist, sigma, delta) over the forward pass's rows */
   private[graft] def brandesDelta(und: DataFrame, visited: DataFrame,
-      hops: Int, onLevel: Int => Unit = _ => ()): DataFrame = {
-    val vis = visited.cache()
+      hops: Int, onLevel: Int => Unit = _ => ()): DataFrame = Pin.scope {
+    val vis = Pin.reuse(visited)
     // per-level row counts once up front (state-sized aggregate): the
     // level frames drive the same size-aware broadcast as the forward
     // pass — without it each backward level re-shuffles the edge fact
@@ -1905,7 +1885,6 @@ object GraphOps {
       out = out.union(lvlRows).localCheckpoint(true)
       onLevel(lvl)
     }
-    vis.unpersist()
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,13 +72,14 @@ object KMeans {
   /** @return (centroids after training, iterations run, objective history —
     *         summed best cosine per iteration). */
   def train(s: SparkSession, e: DataFrame, k: Int,
-      maxIters: Int = 10, tol: Double = 1e-4): (Array[Array[Double]], Int, Seq[Double]) = {
+      maxIters: Int = 10, tol: Double = 1e-4): (Array[Array[Double]], Int, Seq[Double]) = Pin.scope {
     // the packed-long argmax below reserves 8 bits for the centroid id
     // (radix 256); a larger k would make (255 - c_id) negative and bleed
     // into the score field, silently corrupting assignments
     require(k >= 1 && k <= 256, s"k must be in [1, 256] (packed argmax radix), got $k")
     graft.functions.VectorFunctions.ensureRegistered(s)
-    val corpus = e.select(col("vec_id"), col("embedding")).cache()
+    // re-read every iteration; the scope drops it when training returns
+    val corpus = Pin.reuse(e.select(col("vec_id"), col("embedding")))
     // deterministic seeds: the first k vectors by vec_id
     var centroids: Array[Array[Double]] = corpus.orderBy(col("vec_id")).limit(k)
       .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
@@ -111,7 +113,6 @@ object KMeans {
       centroids = next
       it += 1
     }
-    corpus.unpersist()
     (centroids, it, objective.result())
   }
 

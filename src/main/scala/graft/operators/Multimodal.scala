@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -623,7 +623,7 @@ object Multimodal {
   val phashBandSweep = GraftQuery(
     "mm_phash_band_sweep",
     (s, dir) => {
-      val sig = dhashSig(s, dir).cache()
+      val sig = Pin.reuse(dhashSig(s, dir))
       val layouts = Seq((3, 20), (4, 15), (5, 12), (6, 10))
       val perLayout = layouts.map { case (nb, bits) =>
         val mask = (1L << bits) - 1

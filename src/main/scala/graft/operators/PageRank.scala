@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,14 +53,14 @@ object PageRank {
     * so none exist there). */
   private[graft] def iterateEdges(s: SparkSession, edgesIn: DataFrame,
       maxIters: Int, tol: Double): DataFrame = {
-    val edges = edgesIn.cache()
+    val edges = Pin.reuse(edgesIn)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // nodes = src ∪ dst: on the registry's symmetrized fixture dst ⊆ src
     // (identical result to the historical src-only derivation, oracle
     // unchanged), but a user's DIRECTED graph has sink nodes that only
     // appear as dst — they must hold rank too
     val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct().cache()
+      .union(edges.select(col("dst").as("node"))).distinct().transform(Pin.reuse)
     val n = nodes.count() // driver-side scalar; fine at any scale
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     var it = 0
@@ -125,12 +125,13 @@ object PageRank {
     * depth-bounded recursive CTE with UNION dedup. */
   val bfs = GraftQuery(
     "graph_bfs",
-    (s, dir) => {
+    // the scope drops the edges once the visited set is checkpointed
+    (s, dir) => Pin.scope {
       import s.implicits._
       val li = Tables.t(s, dir, "lineitem")
       val fwd = li.select((col("l_suppkey") + SuppOffset).as("src"), col("l_partkey").as("dst"))
       val rev = li.select(col("l_partkey").as("src"), (col("l_suppkey") + SuppOffset).as("dst"))
-      val edges = fwd.union(rev).distinct().cache()
+      val edges = Pin.reuse(fwd.union(rev).distinct())
       val source = 1L
       var visited = Seq((source, 0)).toDF("node", "hops").localCheckpoint(true)
       var frontier = visited.select(col("node"))
@@ -145,7 +146,6 @@ object PageRank {
           .localCheckpoint(true)
         frontier = next.select(col("node"))
       }
-      edges.unpersist()
       visited.select(col("node"), col("hops")).orderBy(col("node"))
     },
     Some(s"""WITH RECURSIVE edges AS (
@@ -215,11 +215,12 @@ object PageRank {
     "graph_hits",
     (s, dir) => {
       val li = Tables.t(s, dir, "lineitem")
-      val edges = li.select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-        .distinct().cache()
-      val out = hitsScores(edges, iters = 3).orderBy(col("kind"), col("node"))
-      edges.unpersist()
-      out
+      // the scope drops the edges once the score ticks are checkpointed
+      Pin.scope {
+        val edges = li.select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
+          .distinct().transform(Pin.reuse)
+        hitsScores(edges, iters = 3)
+      }.orderBy(col("kind"), col("node"))
     },
     Some("""WITH edges AS MATERIALIZED (
                SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
@@ -271,13 +272,14 @@ object PageRank {
     * |S| is one driver-side scalar, exactly like [[pagerank]]'s n. */
   val ppr = GraftQuery(
     "graph_personalized_pagerank",
-    (s, dir) => {
+    // the scope drops edges and nodes once the rank ticks are checkpointed
+    (s, dir) => Pin.scope {
       val li = Tables.t(s, dir, "lineitem")
       val fwd = li.select((col("l_suppkey") + SuppOffset).as("src"), col("l_partkey").as("dst"))
       val rev = li.select(col("l_partkey").as("src"), (col("l_suppkey") + SuppOffset).as("dst"))
-      val edges = fwd.union(rev).distinct().cache()
+      val edges = Pin.reuse(fwd.union(rev).distinct())
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val nodes = edges.select(col("src").as("node")).distinct().cache()
+      val nodes = Pin.reuse(edges.select(col("src").as("node")).distinct())
       val nSeeds = nodes.filter(col("node") % 17 === 0).count()
       val teleport = when(col("node") % 17 === 0, lit(0.15 / nSeeds)).otherwise(lit(0.0))
       var ranks = nodes.withColumn("rank",
@@ -297,7 +299,6 @@ object PageRank {
         ranks = next
         it += 1
       }
-      edges.unpersist()
       ranks.select(col("node"), round(col("rank"), 8).as("ppr")).orderBy(col("node"))
     },
     Some(s"""WITH edges AS (

@@ -998,45 +998,11 @@ object Relational {
       val asiaCust = t(s, dir, "customer")
         .join(asiaNationKeys, col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"))
-      val ord0 = t(s, dir, "orders")
+      val ord = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1996-01-01") &&
           col("o_orderdate") < lit("1998-01-01"))
         .select(col("o_orderkey"), col("o_custkey"),
           year(col("o_orderdate")).as("o_year"))
-      // Bloom pre-filter on the fact chain (r19, guide §3.2): the one
-      // shuffle this plan keeps at scale exchanges the part-pruned fact by
-      // custkey into the asiaCust sort-merge — and ASIA is 1 of 5 regions,
-      // so ~4/5 of those rows exchange only to be dropped by the join. A
-      // Bloom filter over asiaCust's c_custkey applied to orders BEFORE
-      // the lineitem join drops non-ASIA orders upstream of BOTH the
-      // orderkey and custkey exchanges. No false negatives, so the join
-      // result — and the oracle hash — is identical with or without it.
-      // SCALE-GATED, not unconditional: building the filter costs two
-      // extra jobs (count + bloom aggregate over customer) plus a per-row
-      // probe, a fixed ~0.3 s that at bench scale exceeds the KB-sized
-      // exchange it saves (measured sf0.1 forced-on A/B in
-      // OPTIMIZATION_r19.md) — so it arms only when the lineitem scan
-      // estimate crosses spark.graft.q44.bloomMinFactBytes (default 4 GiB;
-      // the threshold is data-size-derived like servingParts, never a
-      // core-count constant, so the same binary serves local[32] and the
-      // cluster). expectedNumItems is the exact count just taken, capped
-      // at 5e8 (past ~1e9 keys the fp rate degrades gracefully — the
-      // filter passes more rows but never corrupts the result).
-      val bloomMinFactBytes = s.conf
-        .get("spark.graft.q44.bloomMinFactBytes", (4L << 30).toString).toLong
-      val factBytes = t(s, dir, "lineitem")
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      val ord =
-        if (factBytes < bloomMinFactBytes) ord0
-        else {
-          val nAsia = asiaCust.count()
-          val bf = asiaCust.stat.bloomFilter("c_custkey",
-            math.min(math.max(nAsia, 1000L), 500000000L), 0.02)
-          val bfB = s.sparkContext.broadcast(bf)
-          val mightContain =
-            udf((k: java.lang.Long) => k != null && bfB.value.mightContainLong(k))
-          ord0.filter(mightContain(col("o_custkey")))
-        }
       val stdParts = broadcast(
         t(s, dir, "part").filter(col("p_type") === "STANDARD")
           .select(col("p_partkey")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,7 +100,7 @@ object Sampling {
   private[operators] def prefixSum(s: SparkSession, in: DataFrame,
       keyCol: String, valCol: String, outCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val df = in.cache() // value column computed once, not once per phase
+    val df = Pin.reuse(in) // value column computed once, not once per phase
     val parallelism = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val range = df.agg(min(col(keyCol)), max(col(keyCol))).head()
     if (range.isNullAt(0)) // empty input: empty result, right schema
@@ -377,18 +377,13 @@ object Sampling {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), md5(col("text")).as("hk"))
-        .cache()
+        .transform(Pin.reuse) // read by the count matrix and the ranking
       // monotonic hash-range bucket: first md5 byte / 8 -> 32 ordered buckets
       val withPid = docs.withColumn("pid",
         (conv(substring(col("hk"), 1, 2), 16, 10).cast("int") / 8).cast("int"))
       val bases = withPid.groupBy(col("source"), col("pid")).count()
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
         .sortBy(x => (x._1, x._2))
-      // the count-matrix job above was the only consumer that scans twice;
-      // the returned plan recomputes the cheap projection, so release the
-      // cached relation instead of pinning it in the shared session for
-      // every registry/bench invocation (KMeans.train's unpersist pattern)
-      docs.unpersist()
       val exclusive = bases.groupBy(_._1).toSeq.flatMap { case (src, rows) =>
         var acc = 0L
         rows.sortBy(_._2).toSeq.map { case (_, pid, n) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -181,7 +181,7 @@ object Similarity {
   val embNearDupLsh = GraftQuery(
     "dedup_embedding_lsh",
     (s, dir) => {
-      val banded = lshBandedSig(t(s, dir, "embeddings"), bands = 16, rowsPerBand = 2).cache()
+      val banded = Pin.reuse(lshBandedSig(t(s, dir, "embeddings"), bands = 16, rowsPerBand = 2))
       banded.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("b"), col("bh"))
         .join(banded.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("b"), col("bh")),
           Seq("b", "bh"))
@@ -396,7 +396,7 @@ object Similarity {
       // self-join AND the final keep/drop join — without the cache the
       // corpus is scored against the seeds three times (three scans +
       // three argmax shuffles; confirmed in the formatted plan).
-      val m = kmeansAssign(s, t(s, dir, "embeddings")).cache()
+      val m = Pin.reuse(kmeansAssign(s, t(s, dir, "embeddings")))
       val a = m.select(col("cluster"), col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = m.select(col("cluster"), col("vec_id").as("vec_b"), col("embedding").as("eb"))
       val dups = a.join(b, "cluster").filter(col("vec_a") < col("vec_b"))
@@ -1093,23 +1093,19 @@ object Similarity {
   /** Combo-independent graph-ANN build state, shared by every (beam,
     * links) parameterization: the trained-cell kNN edges, the j-tagged
     * long-link pool (j = 1..[[MaxLongLinks]] — a combo takes the j <=
-    * links prefix), entry points, query set, and the corpus frame.
-    * `adjByLinks` memoizes the SERVING adjacency (symmetrized +
-    * checkpointed) per links prefix: the symmetrize/distinct shuffle is
-    * the only corpus-edge-sized work left at search time, and it's
-    * links-dependent but query-independent — so repeated searches (bench
-    * reps, the 3 sweep cells sharing a links value) reuse the blocks
-    * instead of re-shuffling the edge list per call. */
-  private case class BeamContext(knn: DataFrame, lnkAll: DataFrame,
-      ent: DataFrame, q: DataFrame, e: DataFrame, n: Long) {
-    val adjByLinks = scala.collection.concurrent.TrieMap.empty[Int, DataFrame]
-  }
+    * links prefix), entry points, query set, and the corpus frame. */
+  private case class BeamContext(dir: String, knn: DataFrame, lnkAll: DataFrame,
+      ent: DataFrame, q: DataFrame, e: DataFrame, n: Long)
 
   /** The memoized serving adjacency for a links prefix, laid out on its
     * lookup key ([[servingParts]] partitions derived from the edge count:
-    * n × (3 kNN + links) half-edges, symmetrized). */
-  private def adjFor(ctx: BeamContext, links: Int): DataFrame =
-    ctx.adjByLinks.getOrElseUpdate(links,
+    * n × (3 kNN + links) half-edges, symmetrized). The symmetrize/distinct
+    * shuffle is the only corpus-edge-sized work left at search time, and
+    * it's links-dependent but query-independent — so repeated searches
+    * (bench reps, the 3 sweep cells sharing a links value) reuse the
+    * blocks instead of re-shuffling the edge list per call. */
+  private def adjFor(s: SparkSession, ctx: BeamContext, links: Int): DataFrame =
+    Pin.memo(s, ("graph-ann-adj", ctx.dir, links))(
       symmetrizedAdj(ctx.knn.union(
         ctx.lnkAll.filter(col("j") <= links)
           .select(col("vec_a"), col("vec_b"))),
@@ -1126,48 +1122,17 @@ object Similarity {
     math.max(1L, math.min(1L << 20, (rows * bytesPerRow + target - 1) / target)).toInt
   }
 
-  /** Materialize a LONG-LIVED serving structure (index adjacency, keyed
-    * corpus, entry/query frames — built once, searched many times).
-    * Default: eager localCheckpoint — blocks live on executors with no
-    * reliable copy, the right local/bench trade (zero fs writes) but at
-    * cluster scale an executor loss silently kills every later search
-    * over the structure instead of recomputing it (r18 judge item 3).
-    * When the session has a reliable checkpoint dir configured
-    * (`SparkContext.setCheckpointDir`), the structure is written there
-    * instead and survives executor loss. Deliberately NOT applied to the
-    * per-hop beam frames inside [[beamOverAdj]]: those live milliseconds
-    * within one search call, so reliability buys nothing and the fs
-    * round-trip would multiply per-hop latency. */
-  private[graft] def pinServing(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
-
   /** Largest long-link count any parameterization uses — the sweep's
     * upper bound; [[LongLinks]] <= this. */
   private val MaxLongLinks = 4
 
-  // memoized per (session, dir) — the bpeTrainState discipline: a graph-ANN
-  // index is built once and served repeatedly (ann_graph_topk, _recall and
-  // the 9-cell param sweep all read the same build), so the expensive
-  // combo-independent part (k-means quantizer + within-cell kNN + link
-  // pool, all localCheckpoint'ed) must not be re-derived per query.
-  // Consequence: consumers must never unpersist the checkpointed frames.
-  // NOT weak-keyed: a cached BeamContext holds DataFrames that strongly
-  // reference their SparkSession, so a weak key could never be collected
-  // while its value is held — liveness is tracked explicitly instead:
-  // every lookup sweeps entries whose underlying SparkContext has
-  // stopped (the checkpointed blocks died with that context anyway, so
-  // the sweep only releases the now-useless plan objects).
-  private val beamCache = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, scala.collection.concurrent.TrieMap[String, BeamContext]]
-
-  private def beamContext(s: SparkSession, dir: String): BeamContext = {
-    beamCache.filterInPlace { case (sess, _) => !sess.sparkContext.isStopped }
-    val perSession = beamCache.getOrElseUpdate(s,
-      scala.collection.concurrent.TrieMap.empty)
-    perSession.getOrElseUpdate(dir, beamContextImpl(s, dir))
-  }
+  // memoized per (session, dir): a graph-ANN index is built once and
+  // served repeatedly (ann_graph_topk, _recall and the 9-cell param sweep
+  // all read the same build), so the expensive combo-independent part
+  // (k-means quantizer + within-cell kNN + link pool, all
+  // checkpointed) must not be re-derived per query.
+  private def beamContext(s: SparkSession, dir: String): BeamContext =
+    Pin.memo(s, ("graph-ann", dir))(beamContextImpl(s, dir))
 
   /** Build the graph-ANN context (the expensive, combo-independent part:
     * k-means quantizer + kNN graph). */
@@ -1185,9 +1150,9 @@ object Similarity {
     // scoring join): checkpointed once here so a search never re-scans
     // parquet for them per hop (r18: each hop's query re-read the
     // embeddings footer + filter for the 8-row query frame)
-    BeamContext(pinServing(knn), pinServing(lnkAll),
-      pinServing(ent), pinServing(q),
-      pinServing(eKeyed), n)
+    BeamContext(dir, Pin.serving(knn), Pin.serving(lnkAll),
+      Pin.serving(ent), Pin.serving(q),
+      Pin.serving(eKeyed), n)
   }
 
   /** The un-checkpointed build frames (knn edges, j-tagged long-link
@@ -1207,7 +1172,7 @@ object Similarity {
     // trained-cell build recovers actual neighborhoods, exactly the
     // ann_ivf_trained_recall lesson applied to the graph index
     val m = kmeansAssign(s, e)
-      .select(col("vec_id"), col("cluster"), col("embedding")).cache()
+      .select(col("vec_id"), col("cluster"), col("embedding")).transform(Pin.reuse)
     val ka = m.select(col("cluster"), col("vec_id").as("vec_a"),
       col("embedding").as("ea"))
     val kb = m.select(col("cluster"), col("vec_id").as("vec_b"),
@@ -1259,7 +1224,7 @@ object Similarity {
       .union(adjHalf.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
       .distinct()
       .repartition(parts, col("vec_a")).sortWithinPartitions(col("vec_a"))
-      .transform(pinServing)
+      .transform(Pin.serving)
 
   /** The frame-generic synchronous beam search over a PREBUILT
     * symmetrized adjacency — [[beamRun]]'s loop, shared with the public
@@ -1337,7 +1302,7 @@ object Similarity {
     // count so EnsureRequirements matches the two sides without moving the
     // index. An unkeyed caller frame still plans correctly (Spark inserts
     // the exchanges the old route always paid).
-    val eParts = if (smallIndex) e.rdd.getNumPartitions else 1
+    lazy val eParts = e.rdd.getNumPartitions
     // The hop loop materializes eagerly (one localCheckpoint per hop), so
     // AQE turns every Exchange into its own query-stage JOB plus a
     // re-optimization pass — r18 counted 59 jobs/59 stages for 64 TASKS
@@ -1402,10 +1367,10 @@ object Similarity {
     // route): the registry corpora are test-SF-sized by construction
     // (≤ 2k vectors; the DuckDB oracle unrolls the identical plan), and
     // deriving the flag here would cost a count() job during plan
-    // construction, which the registry keeps job-free (the clusteringOf
-    // eager-flag discipline). Corpora past SmallIndexMaxRows go through
-    // the public facade, which derives the flag from the build-time n.
-    beamOverAdj(s, adjFor(ctx, links),
+    // construction, which the registry keeps job-free. Corpora past
+    // SmallIndexMaxRows go through the public facade, which derives the
+    // flag from the build-time n.
+    beamOverAdj(s, adjFor(s, ctx, links),
       ctx.e, ctx.ent, ctx.q, beamWidth, BeamHops, 10, excludeSelf = true,
       smallIndex = true)
 
@@ -1593,7 +1558,7 @@ object Similarity {
     "ann_ivf_trained_topk",
     (s, dir) => {
       val m = kmeansAssign(s, t(s, dir, "embeddings"))
-        .select(col("vec_id"), col("cluster"), col("embedding")).cache()
+        .select(col("vec_id"), col("cluster"), col("embedding")).transform(Pin.reuse)
       val q = m.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           col("cluster"))
@@ -1752,7 +1717,7 @@ object Similarity {
   val annIvfHier = GraftQuery(
     "ann_ivf_hier_topk",
     (s, dir) => {
-      val m = hierAssign(s, t(s, dir, "embeddings")).cache()
+      val m = Pin.reuse(hierAssign(s, t(s, dir, "embeddings")))
       val q = m.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           col("coarse"), col("f_id"))
@@ -1842,7 +1807,7 @@ object Similarity {
         .select(col("vec_id"), col("label"), col("d6"))
         // cached: read by the stats build AND the final probe — without it
         // the corpus scan + fixed-point folds run twice
-        .cache()
+        .transform(Pin.reuse)
       val stats = scored.groupBy(col("label"))
         .agg(count(lit(1)).as("n"), sum(col("d6")).as("s1"),
           sum(col("d6") * col("d6")).as("s2"))
@@ -2696,10 +2661,11 @@ object Similarity {
     * (the MMR discipline) so selection is a total order cross-engine. */
   val kmeansSeedFarthest = GraftQuery(
     "emb_kmeans_seed_farthest",
-    (s, dir) => {
+    // the scope drops the corpus once the picks are on the driver
+    (s, dir) => Pin.scope {
       import s.implicits._
       graft.functions.VectorFunctions.ensureRegistered(s)
-      val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding")).cache()
+      val e = Pin.reuse(t(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
       var picks = Seq((1, 0L, Option.empty[Long])) // (rank, vec_id, dist_micro)
       var k = 2
       while (k <= 5) {
@@ -2717,7 +2683,6 @@ object Similarity {
           Some(math.floor(winner.getDouble(1) * 1e6 + 0.5).toLong)))
         k += 1
       }
-      e.unpersist()
       picks.map { case (r, v, d) => (r, v, d) }
         .toDF("seed_rank", "vec_id", "dist_micro")
         .orderBy(col("seed_rank"))
@@ -2813,7 +2778,9 @@ object Similarity {
 
   val annMmrTopK = GraftQuery(
     "ann_mmr_topk",
-    (s, dir) => {
+    // the scope drops the shortlist once the selection loop has
+    // checkpointed its picks
+    (s, dir) => Pin.scope {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2826,10 +2793,8 @@ object Similarity {
         .withColumn("rn", row_number().over(wr))
         .filter(col("rn") <= 20)
         .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"))
-        .cache()
-      val out = mmrSelect(s, shortlist).orderBy(col("q_id"), col("pick"))
-      shortlist.unpersist()
-      out
+        .transform(Pin.reuse)
+      mmrSelect(s, shortlist).orderBy(col("q_id"), col("pick"))
     },
     Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
                         FROM embeddings WHERE vec_id < 8),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,24 +51,6 @@ object Skew {
     * the probe one cheap scan. */
   private[graft] val ProbeFraction = 0.05
 
-  /** Memoized probe results per (session, probe-plan semantic hash, key):
-    * constructing the q28 plan runs the probe's Spark jobs EAGERLY (the
-    * salt count must exist before the join plan can be declared), so
-    * without memoization every registry enumeration / plan lint / bench
-    * rep would re-scan the fact sample. The cache makes construction lazy
-    * in the amortized sense — one probe per distinct (frame, key) per
-    * session. Stopped sessions are swept on every lookup (the beamCache
-    * discipline: the cached ints are worthless once their context dies).
-    * A plan semantic hash alone would serve a STALE salt after the
-    * underlying data changes (overwrite the same parquet dir with a
-    * skewed corpus → identical plan, new risk profile — r16 review
-    * finding 3), so the key also folds in the scan's resolved input-file
-    * list: an overwrite writes new part-file names, which misses the
-    * cache and re-probes. inputFiles is a driver-side read of the file
-    * index the relation already holds — no job. */
-  private val saltCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, String, Long), Int]
-
   /** SALT COUNT FROM THE OBSERVED KEY HISTOGRAM: estimate the hottest
     * key's row count from a seeded sample (sampled max count ÷ fraction),
     * then size the salt so each (key, salt) slot holds at most
@@ -78,19 +60,26 @@ object Skew {
     * build-side explode — a plan invariant, PlanInvariantsSpec) — no 8×
     * build-side tax for skew that isn't there. The probe is a
     * driver-scalar read of one aggregated sample (the k-means centroid
-    * discipline), not a collect of data rows. NOTE: the probe runs Spark
-    * jobs at DataFrame-construction time (memoized per (session, frame,
-    * key) — see [[saltCache]]). */
+    * discipline), not a collect of data rows.
+    *
+    * The probe runs Spark jobs at DataFrame-construction time (the salt
+    * count must exist before the join plan can be declared), so results
+    * are [[Pin.memo]]ized per (session, probe-plan semantic hash, key):
+    * one probe per distinct (frame, key) per session, not one per
+    * registry enumeration / plan lint / bench rep. A plan semantic hash
+    * alone would serve a STALE salt after the underlying data changes
+    * (overwrite the same parquet dir with a skewed corpus → identical
+    * plan, new risk profile), so the key also folds in the scan's
+    * resolved input-file list: an overwrite writes new part-file names,
+    * which misses the memo and re-probes. inputFiles is a driver-side read
+    * of the file index the relation already holds — no job. */
   private[graft] def probedSalt(probe: DataFrame, keyCol: String,
-      targetRowsPerSlot: Long = TargetRowsPerSlot): Int = {
-    saltCache.filterInPlace { case ((sess, _, _, _, _), _) =>
-      !sess.sparkContext.isStopped }
-    saltCache.getOrElseUpdate(
-      (probe.sparkSession, probe.queryExecution.analyzed.semanticHash(),
+      targetRowsPerSlot: Long = TargetRowsPerSlot): Int =
+    Pin.memo(probe.sparkSession,
+      ("salt", probe.queryExecution.analyzed.semanticHash(),
         probe.inputFiles.sorted.mkString("\n").hashCode, // order-free
-        keyCol, targetRowsPerSlot),
+        keyCol, targetRowsPerSlot))(
       probedSaltImpl(probe, keyCol, targetRowsPerSlot))
-  }
 
   private def probedSaltImpl(probe: DataFrame, keyCol: String,
       targetRowsPerSlot: Long): Int = {

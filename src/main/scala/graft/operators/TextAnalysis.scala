@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -405,31 +405,9 @@ object TextAnalysis {
   // memoized per (session, dir): text_bpe_train and text_bpe_encode both
   // need the loop, and a Verify/Bench run executes both back-to-back —
   // the 10 collect rounds and checkpoint materializations should run once.
-  // Consequence: the checkpointed state must NOT be unpersisted by either
-  // consumer (its lineage is truncated; dropping the blocks would make the
-  // cached entry unrecoverable for the other op).
-  // Keyed on the session OBJECT (identityHashCode is not unique; two live
-  // sessions can never collide onto each other's checkpointed state). NOT
-  // weak-keyed: the cached DataFrame strongly references its session, so
-  // a weak key could never be collected while its value is held — dead
-  // entries are swept on lookup via sparkContext.isStopped instead (the
-  // checkpointed blocks died with the context; the sweep releases the
-  // plan objects).
-  private val bpeCache = scala.collection.concurrent.TrieMap.empty[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[String, (Seq[(Int, String, String, Long)], DataFrame)]]
-
   private[operators] def bpeTrainState(s: SparkSession, dir: String)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    bpeCache.filterInPlace { case (sess, _) => !sess.sparkContext.isStopped }
-    val perSession = bpeCache.getOrElseUpdate(s,
-      scala.collection.concurrent.TrieMap.empty)
-    perSession.getOrElseUpdate(dir, bpeTrainStateImpl(s, dir))
-  }
-
-  private def bpeTrainStateImpl(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeTrainOn(t(s, dir, "documents"))
+    Pin.memo(s, ("bpe-train", dir))(bpeTrainOn(t(s, dir, "documents")))
 
   /** The BPE merge-training loop over an arbitrary (doc_id, text) frame:
     * learns `rounds` greedy merges (most frequent adjacent symbol pair,
@@ -1011,19 +989,15 @@ object TextAnalysis {
     * TakeOrderedAndProject keeps the head. Text never shuffles. */
   /** The PMI collocation core over any (doc_id, text) frame — shared by
     * text_collocations and [[graft.api.TextAnalytics.collocations]].
-    * `eager = true` (the facade path) materializes the two count models
-    * via localCheckpoint so repeated library calls accumulate nothing in
-    * the CacheManager; `eager = false` (the registry path) keeps the lazy
-    * cache() so plan construction runs no Spark jobs.
+    * Both count models are read twice (scoring joins and totals), so
+    * they are [[Pin.reuse]]d.
     * @return (bigram, c_bg, c1, c2, pmi_micro) top-`topN` by PMI */
   private[graft] def collocationsOf(docs: DataFrame, minCount: Int,
-      topN: Int, eager: Boolean = false): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (eager) df.localCheckpoint(true) else df.cache()
+      topN: Int): DataFrame = {
     val words = docs.select(split(col("text"), " ").as("w"))
-    val uni = pin(words.select(explode(col("w")).as("tok"))
+    val uni = Pin.reuse(words.select(explode(col("w")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c_tok")))
-    val bi = pin(words.filter(size(col("w")) >= 2)
+    val bi = Pin.reuse(words.filter(size(col("w")) >= 2)
       .select(explode(expr(
         "transform(sequence(0, size(w)-2), i -> struct(w[i] AS w1, w[i+1] AS w2))"))
         .as("p"))

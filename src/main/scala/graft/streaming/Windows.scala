@@ -161,12 +161,13 @@ object Windows {
     * driver's traffic grows with the number of open windows only. */
   def topKPerWindowExternal(k: Int, clientFactory: () => TopKClient,
       sink: (String, Seq[(String, Double)]) => Unit): (DataFrame, Long) => Unit =
-    { (batch: DataFrame, _: Long) =>
+    { (b: DataFrame, _: Long) =>
       // Two actions run over this batch (upsert pass + touched-window
-      // distinct); persist so the second doesn't recompute the upstream
+      // distinct); pin it so the second doesn't recompute the upstream
       // stateful aggregation — the pattern the foreachBatch docs recommend.
-      batch.persist()
-      try {
+      // The per-batch scope releases it when the batch is done.
+      graft.Pin.scope {
+        val batch = graft.Pin.reuse(b)
         batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           if (it.hasNext) {
             val c = clientFactory()
@@ -179,6 +180,6 @@ object Windows {
         val c = clientFactory()
         try touched.foreach(w => sink(w, c.topK(w, k)))
         finally c.close()
-      } finally { batch.unpersist(); () }
+      }
     }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Engine, SparkEntry}
+import graft.{Engine, Pin, SparkEntry}
 
 /** Plan auditor: prints the formatted physical plan for the named queries
   * (default: headline set). Used to keep scan pushdown / broadcast / codegen
@@ -17,7 +17,9 @@ object Explain {
     val spark = Engine.session("graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      // in a scope, as the executors run it: reused frames print as their
+      // cached subtrees, and building the plan runs no jobs
+      Pin.scope(SparkEntry.queries(n)(spark, sfDir).explain("formatted"))
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Engine, SparkEntry}
+import graft.{Engine, Pin, SparkEntry}
 
 /** Ad-hoc per-query timer for iterating on plans: runs the named queries
   * (default: headline set) through the noop sink `reps` times each and
@@ -26,8 +26,8 @@ object Time {
     names.foreach { n =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        Pin.scope(SparkEntry.queries(n)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
         (System.nanoTime() - t0) / 1e9
       }
       println(f"$n%-28s ${times.map(t => f"$t%.3f").mkString(" ")}  min=${times.min}%.3f")

@@ -99,8 +99,11 @@ class ScaleStressSpec extends SparkTestBase {
     * live: dedup_rewrite's whole reconstruction pipeline optimized away,
     * 0.1 s "completion"). Hash every output column into the aggregate so
     * the full plan actually executes. */
-  private def run(name: String, dir: String): (Long, Double, DataFrame, DataFrame) = {
+  private def run(name: String, dir: String): (Long, Double, DataFrame, DataFrame) = Pin.scope {
+    // in a scope, as the executors run it; df is planned while its reused
+    // frames are cached, so its plan shows their subtrees
     val df = SparkEntry.queries(name)(spark, dir)
+    df.queryExecution.executedPlan
     val probe = df
       .select(xxhash64(df.columns.map(col): _*).as("h"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)"))

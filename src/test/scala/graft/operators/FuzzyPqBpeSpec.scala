@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{Pin, SparkEntry, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Semantic + scale-posture pins for the round-6 operators: FastSS fuzzy
@@ -28,8 +28,8 @@ class FuzzyPqBpeSpec extends SparkTestBase {
   }
 
   test("dedup_fuzzy_names: plan is an equi-join on the signature, no cartesian") {
-    val p = SparkEntry.queries("dedup_fuzzy_names")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = Pin.scope(SparkEntry.queries("dedup_fuzzy_names")(spark, sf)
+      .queryExecution.executedPlan.toString)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"fuzzy dedup must not fall back to all-pairs:\n$p")
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{Pin, SparkEntry, SparkTestBase}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions.{col, sum}
@@ -13,8 +14,20 @@ import org.apache.spark.sql.functions.{col, sum}
   * (README "Scale design"). */
 class PlanInvariantsSpec extends SparkTestBase {
 
+  /** The executed plan as the registry executors (Verify, Bench,
+    * AppRegistry) produce it: inside a [[Pin.scope]], where reused frames
+    * are lazy caches and their subtrees stay visible in the plan. */
   private def plan(name: String, sfDir: String = sf): SparkPlan =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    Pin.scope(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+
+  /** The entry run to completion inside a [[Pin.scope]], for tests that
+    * read its final adaptive plan. */
+  private def collected(name: String, sfDir: String = sf): DataFrame =
+    Pin.scope {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      df
+    }
 
   /** Broadcast-side choices are size-driven: at the toy SF the optimizer
     * may legally broadcast anything, so build-side invariants are asserted
@@ -95,8 +108,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     // round-2 shape was Window.orderBy with no partitionBy = Exchange
     // SinglePartition = the whole corpus prefix-summed by ONE task; the
     // two-phase rewrite must never declare a single-partition distribution
-    val df = SparkEntry.queries("pipeline_pack_sequences")(spark, sf)
-    df.collect() // force AQE final plan
+    val df = collected("pipeline_pack_sequences")
     val singles = shuffleExchanges(df.queryExecution.executedPlan)
       .filter(_.outputPartitioning == org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
     assert(singles.isEmpty,
@@ -138,16 +150,14 @@ class PlanInvariantsSpec extends SparkTestBase {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
 
   test("text_repetition: per-row signals shuffle nothing but the output sort") {
-    val df = SparkEntry.queries("text_repetition")(spark, sf)
-    df.collect()
+    val df = collected("text_repetition")
     val hs = hashShuffles(df.queryExecution.executedPlan)
     assert(hs.isEmpty,
       s"repetition signals must be scan-side (no hash exchange):\n${df.queryExecution.executedPlan}")
   }
 
   test("ann_range_search: corpus is scored map-side — queries broadcast, no corpus hash shuffle") {
-    val df = SparkEntry.queries("ann_range_search")(spark, sf)
-    df.collect()
+    val df = collected("ann_range_search")
     val p = df.queryExecution.executedPlan
     assert(broadcastSubtrees(p).nonEmpty, s"query set should broadcast:\n$p")
     assert(hashShuffles(p).isEmpty,
@@ -155,8 +165,7 @@ class PlanInvariantsSpec extends SparkTestBase {
   }
 
   test("lm_bigram_score: scoring joins are key-partitioned, never nested-loop") {
-    val df = SparkEntry.queries("lm_bigram_score")(spark, sf)
-    df.collect()
+    val df = collected("lm_bigram_score")
     val s = df.queryExecution.executedPlan.toString
     assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
       s"LM scoring must join on the bigram key, plan:\n$s")
@@ -167,9 +176,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     // keep/drop join); uncached, the corpus is scored against the seeds
     // three times. The cached plan must show cache scans in the outer tree
     // and push the one seed-scoring nested-loop inside the cached relation.
-    spark.sharedState.cacheManager.clearCache()
-    val df = SparkEntry.queries("dedup_semantic")(spark, sf)
-    df.collect()
+    val df = collected("dedup_semantic")
     var cacheScans = 0; var scoringJoins = 0
     def walk(n: SparkPlan): Unit = {
       n match {
@@ -187,7 +194,6 @@ class PlanInvariantsSpec extends SparkTestBase {
       s"expected all three assignment consumers to read the cache, got $cacheScans:\n${df.queryExecution.executedPlan}")
     assert(scoringJoins == 0,
       s"seed scoring should run once inside the cached relation, not per consumer:\n${df.queryExecution.executedPlan}")
-    spark.sharedState.cacheManager.clearCache()
   }
 
   test("curation_mixture_quota: per-source quota prunes map-side via WindowGroupLimit") {
@@ -333,10 +339,9 @@ class PlanInvariantsSpec extends SparkTestBase {
     for (name <- Seq("ev_forward_fill", "ev_transition_matrix",
         "ev_asof_nearest", "pipeline_interleave_sources",
         "ev_rate_limit", "ev_top_paths")) {
-      val df = SparkEntry.queries(name)(spark, sf)
+      val df = collected(name)
       assert(emptyPartitionWindows(df).isEmpty,
         s"$name declares an unpartitioned window")
-      df.collect()
       val singles = shuffleExchanges(df.queryExecution.executedPlan)
         .filter(_.outputPartitioning ==
           org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
@@ -360,8 +365,7 @@ class PlanInvariantsSpec extends SparkTestBase {
   }
 
   test("mm_shard_manifest: byte prefix sum is partition-parallel — no single-partition exchange") {
-    val df = SparkEntry.queries("mm_shard_manifest")(spark, sf)
-    df.collect() // force AQE final plan
+    val df = collected("mm_shard_manifest")
     val singles = shuffleExchanges(df.queryExecution.executedPlan)
       .filter(_.outputPartitioning ==
         org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
@@ -370,8 +374,7 @@ class PlanInvariantsSpec extends SparkTestBase {
   }
 
   test("curation_dsir_weights: the 1024-row ratio table joins broadcast, corpus never shuffles on bucket") {
-    val df = SparkEntry.queries("curation_dsir_weights")(spark, benchSf)
-    df.collect()
+    val df = collected("curation_dsir_weights", benchSf)
     val s = df.queryExecution.executedPlan.toString
     assert(s.contains("BroadcastHashJoin"),
       s"expected the lr table broadcast into the scoring join, plan:\n$s")
@@ -380,16 +383,14 @@ class PlanInvariantsSpec extends SparkTestBase {
   }
 
   test("graph_triangles: wedge closure is equi-joins only — no cartesian, no nested loop") {
-    val df = SparkEntry.queries("graph_triangles")(spark, sf)
-    df.collect()
+    val df = collected("graph_triangles")
     val s = df.queryExecution.executedPlan.toString
     assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
       s"triangle closure must stay an equi-join, plan:\n$s")
   }
 
   test("emb_ood_score: centroids and stats broadcast; the corpus is never the build side") {
-    val df = SparkEntry.queries("emb_ood_score")(spark, benchSf)
-    df.collect()
+    val df = collected("emb_ood_score", benchSf)
     val p = df.queryExecution.executedPlan
     val bs = broadcastSubtrees(p)
     assert(bs.nonEmpty, s"expected centroid/stats broadcasts, plan:\n$p")
@@ -410,8 +411,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     // only (doc_id, idx, digest)-shaped rows; the tokenized text may cross
     // the wire exactly once — the co-partitioning join that rebuilds the
     // document (zero times on a doc_id-bucketed corpus)
-    val df = SparkEntry.queries("dedup_rewrite")(spark, sf)
-    df.collect()
+    val df = collected("dedup_rewrite")
     val withText = shuffleExchanges(df.queryExecution.executedPlan)
       .filter(_.output.exists(a => a.name == "w" || a.name == "text"))
     assert(withText.size <= 1,
@@ -423,8 +423,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     // vocabulary-sized dict (a sort-merge join would shuffle the exploded
     // corpus), and the training state must come from its localCheckpoint,
     // not a re-scan — one parquet scan total in the executed plan
-    val df = SparkEntry.queries("text_bpe_encode")(spark, sf)
-    df.collect()
+    val df = collected("text_bpe_encode")
     val p = df.queryExecution.executedPlan
     val s = p.toString
     assert(s.contains("BroadcastHashJoin"), s"dict join must broadcast:\n$s")

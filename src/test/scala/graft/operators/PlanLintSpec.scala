@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkTestBase}
+import graft.{Pin, SparkEntry, SparkTestBase}
 
 /** Global scale-posture lint over EVERY registry query's physical plan:
   * a shuffle CartesianProduct (both sides data-sized) is a 100 TB
@@ -126,7 +126,8 @@ class PlanLintSpec extends SparkTestBase {
   test("no registry query plans a shuffle CartesianProduct; BNLJ only by design") {
     val offenders = SparkEntry.registry.flatMap { q =>
       val plan =
-        try q.run(spark, sf).queryExecution.executedPlan.toString
+        // in a scope, as the executors run it: reused subtrees stay in the plan
+        try Pin.scope(q.run(spark, sf).queryExecution.executedPlan.toString)
         catch { case e: Throwable => s"PLANNING FAILED: $e" }
       val cart = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign(q.name)
