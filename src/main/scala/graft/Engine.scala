@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the graft engine.
+/** SparkSession factory for the graft engine, and the one module that
+  * writes session state (SessionLintSpec keeps it that way).
   *
   * Replaces the reference's cluster bootstrap — Master/Worker/AppMaster actor
   * hierarchy (reference: core/src/main/scala/io/gearpump/cluster/main/Local.scala,
   * cluster/embedded/EmbeddedCluster.scala:29-62): in a Spark-native design the
   * "cluster" is the SparkSession and scheduling/placement belongs to Spark's
-  * DAG scheduler, not custom actors.
+  * DAG scheduler, not custom actors. As one AppMaster never changes another
+  * app's configuration, no query path writes the shared session: what a
+  * graft session needs is applied once, by [[session]] or [[install]].
   *
   * Scale notes (100 TB target):
   *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting means
@@ -31,12 +34,49 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // Tables.normalizeTs reads a TIMESTAMP(NANOS) `ts` as a long
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the engine's own optimizer extensions (idempotent; external callers
-    // get the same via spark.sql.extensions=graft.plans.GraftExtensions)
-    graft.plans.ProximityJoin.install(spark)
+    install(spark)
     spark
   }
+
+  /** Apply to a live session everything a graft session needs: the
+    * native functions of [[graft.plans.GraftExtensions]], the
+    * [[graft.plans.ProximityJoin]] rule and the graph drop-logger
+    * listener. Idempotent; the public facades that take a caller's session
+    * call it once at entry. */
+  def install(spark: SparkSession): Unit = synchronized {
+    installPlanning(spark)
+    val logger = graft.operators.GraphOps.DropLogger
+    Pin.memo(spark, logger)(spark.listenerManager.register(logger))
+  }
+
+  private def installPlanning(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    new graft.plans.GraftExtensions().functions.foreach { case (id, info, builder) =>
+      // skip present names: re-registering logs a "replaced" WARN
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+    }
+    val rule = graft.plans.ProximityJoin
+    if (!spark.experimental.extraOptimizations.contains(rule))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+  }
+
+  /** A sibling of `spark` (same SparkContext and cache) with AQE off, for
+    * the graph-ANN hop loop: a frame rooted in it plans without AQE while
+    * `spark`'s conf is never written. Created on first use, once per
+    * session, from a snapshot of `spark`'s runtime conf (later changes do
+    * not reach it); its executions are reported to `spark`'s listeners. */
+  private[graft] def fixedPlanSession(spark: SparkSession): SparkSession =
+    Pin.memo(spark, "fixed-plan-session") {
+      val sib = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) sib.conf.set(k, v) }
+      sib.conf.set("spark.sql.adaptive.enabled", "false")
+      installPlanning(sib)
+      sib.listenerManager.register(new org.apache.spark.sql.graft.ReportTo(spark))
+      sib
+    }
 }

@@ -17,12 +17,13 @@ object Tables {
   /** The driver's `events` table has shipped `ts` in two physical shapes
     * across regenerations: parquet TIMESTAMP(NANOS) (which Spark 4 refuses
     * to read natively — surfaced as a nanosecond long under
-    * `nanosAsLong`) and TIMESTAMP_MICROS with isAdjustedToUTC=0 (which
-    * Spark 4 reads as TIMESTAMP_NTZ). Normalize both to a session-TZ
-    * TIMESTAMP so every downstream `unix_micros`/window consumer sees one
-    * type. Sessions run with timeZone=UTC, so the NTZ→TIMESTAMP cast is
-    * instant-preserving and the nanos path floor-truncates to micros — the
-    * same value DuckDB materializes, so oracle compares stay exact. */
+    * `nanosAsLong`, which the session builders set) and TIMESTAMP_MICROS
+    * with isAdjustedToUTC=0 (which Spark 4 reads as TIMESTAMP_NTZ).
+    * Normalize both to a session-TZ TIMESTAMP so every downstream
+    * `unix_micros`/window consumer sees one type. Sessions run with
+    * timeZone=UTC, so the NTZ→TIMESTAMP cast is instant-preserving and the
+    * nanos path floor-truncates to micros — the same value DuckDB
+    * materializes, so oracle compares stay exact. */
   def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -36,10 +37,8 @@ object Tables {
     }
   }
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
-  }
 
   /** Register all tables as temp views so `spark.sql` works too. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -61,9 +61,7 @@ object Verify {
       } catch { case _: Throwable => Map.empty } // unreadable: rebuild fresh
     val merged = (stale -- ran) ++ failed
     if (merged.nonEmpty) {
-      val errJson = merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(ep, errJson)
+      Files.writeString(ep, json(merged.toSeq.sortBy(_._1)))
     } else {
       Files.deleteIfExists(ep); ()
     }
@@ -72,39 +70,41 @@ object Verify {
     failed.toMap
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** A flat JSON object of strings. The oracle compare parses these
+    * files, so every control character a message may hold must come out
+    * escaped. */
+  private def json(fields: Seq[(String, String)]): String = {
+    import org.json4s._
+    org.json4s.jackson.JsonMethods.compact(
+      JObject(fields.map { case (k, v) => k -> JString(v) }.toList))
+  }
 
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query names — local iteration only]
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, n) => (s, o, Some(n.split(",").toSet))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [comma-separated query names]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // not Engine.session: the dump keeps Spark's default INT96 parquet
+    // timestamps; Engine's TIMESTAMP_MICROS would make the DuckDB oracle
+    // compare (scripts/check.py) read them as TIMESTAMPTZ
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Engine.install(spark)
     dump(spark,
       SparkEntry.queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) },
       sfDir, outDir)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql.toSeq))
     spark.stop()
     // deliberately rc=0 even on per-query failure: the red-row parquet +
     // errors.json are the signal; a nonzero rc could make a harness discard

@@ -48,7 +48,7 @@ object SimilaritySearch {
     * @return (q_id, vec_id, cos_sim, rank) */
   def topK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val c = named(corpus, "vec_id", "embedding")
     val q = named(queries, "q_id", "q_emb")
     val w = Window.partitionBy(col("q_id"))
@@ -66,7 +66,7 @@ object SimilaritySearch {
     * @return (q_id, pick, vec_id, rel, score), 5 picks per query */
   def mmrTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       shortlist: Int = 20): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val c = named(corpus, "vec_id", "embedding")
     val q = named(queries, "q_id", "q_emb")
     val w = Window.partitionBy(col("q_id"))
@@ -84,8 +84,10 @@ object SimilaritySearch {
     * updates — the registry's emb_kmeans_* loop).
     * @return (centroids, iterations, per-iteration objective) */
   def kMeansTrain(spark: SparkSession, corpus: DataFrame, k: Int,
-      maxIters: Int = 10, tol: Double = 1e-4): (Array[Array[Double]], Int, Seq[Double]) =
+      maxIters: Int = 10, tol: Double = 1e-4): (Array[Array[Double]], Int, Seq[Double]) = {
+    graft.Engine.install(spark)
     KMeans.train(spark, named(corpus, "vec_id", "embedding"), k, maxIters, tol)
+  }
 
   /** TRAINED-CELL IVF top-k — the scale route [[topK]]'s exact scan is
     * traded against: train `nlist` k-means cells over the corpus
@@ -100,7 +102,7 @@ object SimilaritySearch {
   def ivfTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10, nlist: Int = 8, nprobe: Int = 2,
       trainIters: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val c = named(corpus, "vec_id", "embedding")
     val q = named(queries, "q_id", "q_emb")
     val (cents, _, _) = KMeans.train(spark, c, nlist, trainIters)
@@ -142,7 +144,7 @@ object SimilaritySearch {
       k: Int = 10, coarseK: Int = 4, fineK: Int = 4,
       nprobeCoarse: Int = 2, nprobeFine: Int = 2,
       trainIters: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val c = named(corpus, "vec_id", "embedding")
     val q = named(queries, "q_id", "q_emb")
     val (hier, _, _) =
@@ -233,7 +235,7 @@ object SimilaritySearch {
       s"shortLinks must be in [1, 64], got $shortLinks")
     require(longLinks >= 1 && longLinks <= 64,
       s"longLinks must be in [1, 64], got $longLinks")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     // ids: any INTEGRAL type (cast up to long — the hub array and entry
     // frame are driver-side longs); reject non-integral ids with a named
     // contract error instead of a ClassCastException at hub collection
@@ -365,6 +367,9 @@ object SimilaritySearch {
     * clamp(log₂(n) − 6, 5, 16) from the index size recorded at build
     * time, the probedSalt/derivedHubs discipline applied to the last
     * fixed serving constant. Pass an explicit positive `hops` to pin it.
+    * The hops plan without AQE on a sibling of `spark` that snapshots its
+    * runtime conf at the session's first search (later changes do not
+    * reach them); `spark`'s listeners see the hops' executions.
     * @return (q_id, vec_id, cos_sim, rank) top-k per query */
   def graphAnnSearch(spark: SparkSession, index: GraphAnnIndex,
       queries: DataFrame, k: Int = 10, beamWidth: Int = 16,
@@ -376,7 +381,7 @@ object SimilaritySearch {
       s"beamWidth must be in [1, 1024], got $beamWidth " +
         "(0 would return silently empty results; the beam broadcasts " +
         "per hop, so width multiplies the broadcast volume)")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     // the beam side broadcasts every hop (that is WHY search shuffles
     // zero bytes — see Similarity.beamOverAdj), so the PER-HOP BROADCAST
     // VOLUME — queries × beamWidth × links candidate rows, plus the
@@ -456,7 +461,7 @@ object SimilaritySearch {
     *         approximate squared-L2, ascending */
   def pqTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       k: Int = 10, subspaces: Int = 4, codebookSize: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     require(codebookSize >= 1 && codebookSize <= 16,
       s"codebookSize must be in [1, 16] (packed argmin radix), got $codebookSize")
     val c = named(corpus, "vec_id", "embedding")
@@ -525,7 +530,7 @@ object SimilaritySearch {
     * @return (q_id, vec_id, cos_sim) all matches, no ranking */
   def rangeSearch(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       minCosine: Double): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val c = named(corpus, "vec_id", "embedding")
     val q = named(queries, "q_id", "q_emb")
     c.crossJoin(broadcast(q))
@@ -551,7 +556,7 @@ object SimilaritySearch {
     * @return (id_a, id_b, cos_sim) with id_a < id_b */
   def nearDupPairs(spark: SparkSession, corpus: DataFrame,
       minCosine: Double = 0.35, exact: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     guardExactPairs("SimilaritySearch.nearDupPairs", corpus, exact,
       "the registry's LSH-bucketed (dedup_embedding_lsh) or SemDeDup-cluster routes")
     val a = named(corpus, "id_a", "ea")

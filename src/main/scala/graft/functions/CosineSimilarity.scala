@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,23 +75,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorFunctions {
-  /** Register `graft_cosine` + `graft_l2sq` for SQL/expr use (idempotent).
-    * Skips names already present: createOrReplaceTempFunction logs a
-    * "replaced a temporary function" WARN on every re-registration, which
-    * spammed each bench/test session 6+ times. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def registerIfAbsent(name: String, builder: Seq[Expression] => Expression): Unit = {
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    registerIfAbsent("graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)))
-    registerIfAbsent("graft_l2sq",
-      exprs => SubvectorL2Sq(exprs(0), exprs(1), exprs(2), exprs(3)))
-    registerIfAbsent("graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
-  }
 }

@@ -694,7 +694,7 @@ object Dedup {
     * full snapshot: correct, but the snapshot side shuffles (or must fit
     * a broadcast hash map). The standard scale route replaces that with a
     * Bloom filter BUILT AS AN AGGREGATE (Spark's own BloomFilterAggregate
-    * via [[graft.functions.BloomFunctions]]: map-side partial filters
+    * via [[graft.plans.GraftExtensions]]: map-side partial filters
     * OR-merge, one reduce emits a single binary) consumed as a SCALAR
     * SUBQUERY, so every incoming row evaluates a codegen'd
     * graft_might_contain against the shared KB-sized filter — no join, no
@@ -711,7 +711,6 @@ object Dedup {
   val ingestDeltaBloom = GraftQuery(
     "dedup_ingest_delta_bloom",
     (s, dir) => {
-      graft.functions.BloomFunctions.ensureRegistered(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("h"))
       val snapshot = docs.filter(col("doc_id") % 7 === 0).select(col("h"))

@@ -591,7 +591,6 @@ object EventOps {
   val intervalJoinAuto = GraftQuery(
     "ev_interval_join_auto",
     (s, dir) => {
-      graft.plans.ProximityJoin.install(s)
       val B = 300000000L
       val ev = t(s, dir, "events")
       val p = ev.filter(col("event_type") === "purchase")
@@ -621,7 +620,6 @@ object EventOps {
   val intervalJoinBetween = GraftQuery(
     "ev_interval_join_between",
     (s, dir) => {
-      graft.plans.ProximityJoin.install(s)
       val ev = t(s, dir, "events")
       val p = ev.filter(col("event_type") === "purchase").select(col("ts").as("p_ts"))
       val c = ev.filter(col("event_type") === "click").select(col("ts").as("c_ts"))

@@ -577,7 +577,7 @@ object GraphOps {
   }
 
   /** Observed-metric name under which [[commonNeighbors]] reports its
-    * dropped-hub count (surfaced by [[ensureDropLogger]] at execution
+    * dropped-hub count (surfaced by [[DropLogger]] at execution
     * time, and by the ops server's observedMetrics passthrough). */
   private[operators] val DroppedCentersMetric = "graph_common_neighbors_drops"
 
@@ -592,32 +592,31 @@ object GraphOps {
   private[operators] val BipartitePartDropsMetric = "graph_bipartite_c4_part_drops"
   private[operators] val BipartiteSuppDropsMetric = "graph_bipartite_c4_supp_drops"
 
-  /** One-time-per-session QueryExecutionListener that warn-logs the
-    * [[DroppedCentersMetric]] observation when nonzero — the cap stays
+  /** QueryExecutionListener that warn-logs the
+    * [[DroppedCentersMetric]] observations when nonzero — the cap stays
     * loud WITHOUT an eager build-time Spark job: merely constructing or
     * plan-linting the DataFrame runs nothing; the count is collected by
-    * the CollectMetrics node during the query's own execution. */
-  private[operators] def ensureDropLogger(s: SparkSession): Unit =
-    Pin.memo(s, "graph-drop-logger")(
-      s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit =
-          Seq(DroppedCentersMetric, RaDroppedCentersMetric,
-              BipartitePartDropsMetric, BipartiteSuppDropsMetric).foreach { m =>
-            qe.observedMetrics.get(m).foreach { row =>
-              val d = row.getAs[Long]("dropped_centers")
-              if (d > 0)
-                org.slf4j.LoggerFactory.getLogger("graft.operators.GraphOps").warn(
-                  s"$m: $d wedge centers exceed degree " +
-                    s"$WedgeHubCap and are excluded from scoring (by design; " +
-                    "the oracle applies the identical cap)")
-            }
-          }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      }))
+    * the CollectMetrics node during the query's own execution.
+    * [[graft.Engine.install]] registers it once per session. */
+  private[graft] object DropLogger extends org.apache.spark.sql.util.QueryExecutionListener {
+    override def onSuccess(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution,
+        durationNs: Long): Unit =
+      Seq(DroppedCentersMetric, RaDroppedCentersMetric,
+          BipartitePartDropsMetric, BipartiteSuppDropsMetric).foreach { m =>
+        qe.observedMetrics.get(m).foreach { row =>
+          val d = row.getAs[Long]("dropped_centers")
+          if (d > 0)
+            org.slf4j.LoggerFactory.getLogger("graft.operators.GraphOps").warn(
+              s"$m: $d wedge centers exceed degree " +
+                s"$WedgeHubCap and are excluded from scoring (by design; " +
+                "the oracle applies the identical cap)")
+        }
+      }
+    override def onFailure(funcName: String,
+        qe: org.apache.spark.sql.execution.QueryExecution,
+        exception: Exception): Unit = ()
+  }
 
   /** LINK PREDICTION BASELINE: top-20 non-adjacent node pairs by
     * common-neighbor count — the simplest (and the standard first)
@@ -633,7 +632,6 @@ object GraphOps {
   val commonNeighbors = GraftQuery(
     "graph_common_neighbors",
     (s, dir) => {
-      ensureDropLogger(s)
       val e = Pin.reuse(coPurchaseEdges(s, dir))
       val deg = Pin.reuse(degrees(e))
         .observe(DroppedCentersMetric,
@@ -681,7 +679,6 @@ object GraphOps {
   val resourceAlloc = GraftQuery(
     "graph_resource_alloc",
     (s, dir) => {
-      ensureDropLogger(s)
       val e = Pin.reuse(coPurchaseEdges(s, dir))
       val deg = Pin.reuse(degrees(e))
         .observe(RaDroppedCentersMetric,
@@ -1615,7 +1612,7 @@ object GraphOps {
     * side: pruning per side would break the two-sided square equality,
     * because the sides would drop different squares), the per-side dropped
     * hub counts are surfaced as OBSERVED metrics and warn-logged by
-    * [[ensureDropLogger]], and the oracle applies the identical cap
+    * [[DropLogger]], and the oracle applies the identical cap
     * predicate so capping never diverges the hash. The census is exact on
     * the cap-pruned graph — the documented trade, per the
     * graph_common_neighbors precedent. */
@@ -1655,7 +1652,6 @@ object GraphOps {
   val bipartiteC4 = GraftQuery(
     "graph_bipartite_c4",
     (s, dir) => {
-      ensureDropLogger(s)
       val raw = Tables.t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 50 === 0)
         .select(col("l_partkey").as("u"), (col("l_suppkey") + SuppOffset).as("v"))

@@ -55,7 +55,6 @@ object KMeans {
       centroids: Array[Array[Double]]): DataFrame = {
     require(centroids.length <= 256,
       s"k must be <= 256 (packed argmax radix), got ${centroids.length}")
-    graft.functions.VectorFunctions.ensureRegistered(s)
     corpus.crossJoin(broadcast(centroidFrame(s, centroids)))
       .select(col("vec_id"), col("embedding"), col("c_id"),
         floor(expr("graft_cosine(embedding, c_emb)") * lit(1e6) + lit(0.5))
@@ -77,7 +76,6 @@ object KMeans {
     // (radix 256); a larger k would make (255 - c_id) negative and bleed
     // into the score field, silently corrupting assignments
     require(k >= 1 && k <= 256, s"k must be in [1, 256] (packed argmax radix), got $k")
-    graft.functions.VectorFunctions.ensureRegistered(s)
     // re-read every iteration; the scope drops it when training returns
     val corpus = Pin.reuse(e.select(col("vec_id"), col("embedding")))
     // deterministic seeds: the first k vectors by vec_id
@@ -146,7 +144,6 @@ object KMeans {
   private[graft] def assignToHier(s: SparkSession, assigned: DataFrame,
       fine: Map[(Int, Int), Array[Double]]): DataFrame = {
     require(fine.keys.forall(_._2 < 256), "fine ids must fit radix 256")
-    graft.functions.VectorFunctions.ensureRegistered(s)
     assigned.join(broadcast(fineFrame(s, fine)), Seq("cluster"))
       .select(col("vec_id"), col("embedding"), col("cluster"), col("f_id"),
         floor(expr("graft_cosine(embedding, f_emb)") * lit(1e6) + lit(0.5))

@@ -168,7 +168,6 @@ object Multimodal {
   val captionPairs = GraftQuery(
     "mm_caption_pairs",
     (s, dir) => {
-      graft.functions.VectorFunctions.ensureRegistered(s)
       t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
         .join(t(s, dir, "embeddings")

@@ -41,10 +41,7 @@ object Similarity {
   /** Production path: the codegen'd native CosineSimilarity expression —
     * bit-identical to cosineFold (same accumulation order), ~3x fewer
     * expression-tree nodes in the hot loop. */
-  private def cosine(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    expr(s"graft_cosine($a, $b)")
-  }
+  private def cosine(a: String, b: String): Column = expr(s"graft_cosine($a, $b)")
 
   private val sqlDot =
     (a: String, b: String) => s"""list_sum(list_transform(generate_series(1, 64),
@@ -63,7 +60,7 @@ object Similarity {
       val scored = e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w))
@@ -93,7 +90,7 @@ object Similarity {
       val scored = e.join(broadcast(q), Seq("label"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w))
@@ -120,7 +117,7 @@ object Similarity {
       val a = t(s, dir, "embeddings").select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = t(s, dir, "embeddings").select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
       a.crossJoin(b).filter(col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"), round(cosine(s, "ea", "eb"), 4).as("cos_sim"))
+        .select(col("vec_a"), col("vec_b"), round(cosine("ea", "eb"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.35)
         .orderBy(col("vec_a"), col("vec_b"))
     },
@@ -187,7 +184,7 @@ object Similarity {
           Seq("b", "bh"))
         .filter(col("vec_a") < col("vec_b"))
         .select(col("vec_a"), col("vec_b"),
-          round(cosine(s, "ea", "eb"), 4).as("cos_sim"))
+          round(cosine("ea", "eb"), 4).as("cos_sim"))
         .groupBy(col("vec_a"), col("vec_b")).agg(min(col("cos_sim")).as("cos_sim"))
         .filter(col("cos_sim") >= 0.35)
         .orderBy(col("vec_a"), col("vec_b"))
@@ -240,7 +237,7 @@ object Similarity {
       e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.30)
         .orderBy(col("q_id"), col("vec_id"))
     },
@@ -313,7 +310,7 @@ object Similarity {
     // still hash-based, no per-partition sorts).
     e.crossJoin(broadcast(seeds))
       .select(col("vec_id"), col("embedding"), col("c_id"),
-        floor(cosine(s, "embedding", "c_emb") * lit(1e4) + lit(0.5)).as("cs_scaled"))
+        floor(cosine("embedding", "c_emb") * lit(1e4) + lit(0.5)).as("cs_scaled"))
       .withColumn("packed", (col("cs_scaled") + 10000L) * 8L + (lit(7L) - col("c_id")))
       .groupBy(col("vec_id"))
       .agg(max(col("packed")).as("best"), first(col("embedding")).as("embedding"))
@@ -400,7 +397,7 @@ object Similarity {
       val a = m.select(col("cluster"), col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = m.select(col("cluster"), col("vec_id").as("vec_b"), col("embedding").as("eb"))
       val dups = a.join(b, "cluster").filter(col("vec_a") < col("vec_b"))
-        .filter(round(cosine(s, "ea", "eb"), 4) >= 0.35)
+        .filter(round(cosine("ea", "eb"), 4) >= 0.35)
         .select(col("vec_b").as("vec_id")).distinct()
       m.select(col("vec_id"), col("cluster"))
         .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
@@ -457,8 +454,7 @@ object Similarity {
     * (per-partition sorts on both sides of the exchange; seen in the
     * formatted plan). Bound: dist < 2^43 micro-units (embeddings are
     * unit-scale; a 16-dim squared L2 is < 8.8e12 micros), code < 16. */
-  private def pqCodes(s: SparkSession, e: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
+  private def pqCodes(e: DataFrame): DataFrame = {
     e.crossJoin(broadcast(pqCodebook(e)))
       .select(col("vec_id"), col("code"),
         posexplode(array(
@@ -476,7 +472,7 @@ object Similarity {
   val pqAssign = GraftQuery(
     "emb_pq_assign",
     (s, dir) =>
-      pqCodes(s, t(s, dir, "embeddings"))
+      pqCodes(t(s, dir, "embeddings"))
         .select(col("vec_id"), col("subspace"), col("code"),
           expr("dm / 1e6").as("dist"))
         .orderBy(col("vec_id"), col("subspace")),
@@ -515,7 +511,7 @@ object Similarity {
     "ann_pq_topk",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val codes = pqCodes(s, e)
+      val codes = pqCodes(e)
       val q = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       // ADC lookup table: 4 queries x 8 codes x 4 subspaces = 128 rows
@@ -582,7 +578,7 @@ object Similarity {
     "ann_pq_rerank",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val codes = pqCodes(s, e)
+      val codes = pqCodes(e)
       val q = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val dtab = q.crossJoin(broadcast(pqCodebook(e)))
@@ -605,7 +601,7 @@ object Similarity {
       e.join(broadcast(shortlist), "vec_id")
         .join(broadcast(q), "q_id")
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
         .withColumn("rank", row_number().over(wCos))
         .filter(col("rank") <= 5)
         .select(col("q_id"), col("rank"), col("vec_id"), col("cos_sim"))
@@ -670,7 +666,7 @@ object Similarity {
     "ann_ivfpq_topk",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val codes = pqCodes(s, e)
+      val codes = pqCodes(e)
       val cells = e.select(col("vec_id"), col("label"))
       val q = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -742,7 +738,7 @@ object Similarity {
       a.join(b, Seq("label"))
         .filter(col("vec_a") =!= col("vec_b"))
         .select(col("vec_a"), col("vec_b"),
-          round(cosine(s, "ea", "eb"), 4).as("cos_sim"))
+          round(cosine("ea", "eb"), 4).as("cos_sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
         .select(col("vec_a"), col("rank"), col("vec_b"), col("cos_sim"))
@@ -1182,7 +1178,7 @@ object Similarity {
     val knn = ka.join(kb, Seq("cluster"))
       .filter(col("vec_a") =!= col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(cosine(s, "ea", "eb"), 4).as("cs"))
+        round(cosine("ea", "eb"), 4).as("cs"))
       .withColumn("rk", row_number().over(wk)).filter(col("rk") <= 3)
       .select(col("vec_a"), col("vec_b"))
     // long-range links: hash48('lnk:j:id') mod n lands directly on a
@@ -1240,6 +1236,31 @@ object Similarity {
       e: DataFrame, ent: DataFrame, q: DataFrame, beamWidth: Int,
       hops: Int, k: Int, excludeSelf: Boolean,
       smallIndex: Boolean, beamRows: Long = 128L): DataFrame = {
+    // The hop loop materializes eagerly (one localCheckpoint per hop), so
+    // AQE turns every Exchange into its own query-stage JOB plus a
+    // re-optimization pass — r18 counted 59 jobs/59 stages for 64 TASKS
+    // per search, i.e. the whole search cost is per-stage scheduling over
+    // KB-sized frames (§2.2's many-small-blocks pathology, driver-side).
+    // Every per-hop frame is beam-bounded BY CONSTRUCTION at any corpus
+    // size (that is the point of beam search), and every exchange in the
+    // loop carries an explicit size-derived partition count, so AQE has
+    // nothing to decide here: each hop plans once and runs as ONE
+    // multi-stage job (+1 broadcast job per hop input). A Dataset plans in
+    // the session it starts from, so the loop's inputs are rooted here in
+    // `loop`, the caller's AQE-off sibling, and prune builds the beam
+    // there: the caller's conf is never written, and concurrent apps on
+    // the shared session keep AQE. Job groups are SparkContext-wide, so
+    // OpsServer kill still reaches the hop jobs. The index BUILD and the
+    // final rank assembly (rooted back in `s`) keep AQE.
+    val loop = graft.Engine.fixedPlanSession(s)
+    // the same analyzed plan in `session`: unlike a createDataFrame rebase
+    // it keeps the statistics (which pick hop 0's joins) and keyed layout
+    def rooted(session: SparkSession, df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.classic.ClassicConversions._
+      new org.apache.spark.sql.classic.Dataset(session, df.queryExecution.analyzed, df.encoder)
+    }
+    val (adjL, eL, entL, qL) =
+      (rooted(loop, adj), rooted(loop, e), rooted(loop, ent), rooted(loop, q))
     // Scoring-join strategy is SIZE-AWARE (r17, measured): `smallIndex`
     // (decided by callers from the build-time n) keeps Spark's unhinted
     // choice for the corpus-lookup join, a large index forces the
@@ -1253,21 +1274,21 @@ object Similarity {
     // routes broadcast the beam keys onto the keyed adjacency (see the
     // hop loop below). Both routes return identical rows (spec-pinned).
     def score(cands: DataFrame): DataFrame =
-      (if (smallIndex) cands.join(e, "vec_id")
-       else e.join(broadcast(cands), "vec_id"))
-      .join(broadcast(q), "q_id")
+      (if (smallIndex) cands.join(eL, "vec_id")
+       else eL.join(broadcast(cands), "vec_id"))
+      .join(broadcast(qL), "q_id")
       .select(col("q_id"), col("vec_id"),
-        round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+        round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
     val wB = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     // prune REBASES the checkpointed beam onto its RDD (createDataFrame
-    // over lc.rdd): localCheckpoint preserves the pruned plan's constraint
-    // set, and when the inputs carry renamed lineage (the facade's toDF'd
-    // user frames) those constraints can reference attributes the next
-    // hop's union no longer has — Catalyst's Union constraint rewrite then
-    // throws "key not found: vec_id#N". The rebase yields a constraint-
-    // free relation over the same blocks; the beam is queries × beamWidth
-    // rows, so the extra row boundary costs nothing.
+    // over lc.rdd, in `loop`): localCheckpoint preserves the pruned plan's
+    // constraint set, and when the inputs carry renamed lineage (the
+    // facade's toDF'd user frames) those constraints can reference
+    // attributes the next hop's union no longer has — Catalyst's Union
+    // constraint rewrite then throws "key not found: vec_id#N". The rebase
+    // yields a constraint-free relation over the same blocks; the beam is
+    // queries × beamWidth rows, so the extra row boundary costs nothing.
     //
     // Dedup discipline (r18): the candidate dedup exchanges are KEYED so
     // each one doubles as the clustering the next operator needs —
@@ -1280,7 +1301,7 @@ object Similarity {
     // Beam-sized exchange widths, derived from the caller-declared beam
     // row bound (nQueries × beamWidth; the facade's batch cap bounds it at
     // any scale, the registry's is 8 × 16) — explicit counts because the
-    // hop loop runs with AQE OFF (below), so nothing coalesces a
+    // hop loop plans with AQE OFF (below), so nothing coalesces a
     // default-width exchange of a KB-sized frame into one task. qParts
     // keys the prune dedup+rank, candParts the large-route candidate
     // dedup (candidates ≈ beam × symmetrized degree ≈ 16×).
@@ -1293,7 +1314,7 @@ object Similarity {
         .withColumn("rn", row_number().over(wB)).filter(col("rn") <= beamWidth)
         .select(col("q_id"), col("vec_id"), col("cos_sim"))
         .localCheckpoint(true)
-      s.createDataFrame(lc.rdd, lc.schema)
+      loop.createDataFrame(lc.rdd, lc.schema)
     }
     // smallIndex: adj and e come from [[symmetrizedAdj]]/[[beamContextImpl]]
     // (or the facade's build) checkpointed ON their lookup keys, so the
@@ -1303,29 +1324,11 @@ object Similarity {
     // index. An unkeyed caller frame still plans correctly (Spark inserts
     // the exchanges the old route always paid).
     lazy val eParts = e.rdd.getNumPartitions
-    // The hop loop materializes eagerly (one localCheckpoint per hop), so
-    // AQE turns every Exchange into its own query-stage JOB plus a
-    // re-optimization pass — r18 counted 59 jobs/59 stages for 64 TASKS
-    // per search, i.e. the whole search cost is per-stage scheduling over
-    // KB-sized frames (§2.2's many-small-blocks pathology, driver-side).
-    // Every per-hop frame is beam-bounded BY CONSTRUCTION at any corpus
-    // size (that is the point of beam search), and every exchange in the
-    // loop carries an explicit size-derived partition count, so AQE has
-    // nothing to decide here: switch it off for the loop's duration and
-    // each hop plans once and runs as ONE multi-stage job (+1 broadcast
-    // job per hop input). The index BUILD and the final rank assembly
-    // (lazy, executed by the caller) keep AQE — corpus-sized work stays
-    // adaptive. Restored in finally; session conf is not thread-local, so
-    // a concurrent query in the same session would briefly plan without
-    // AQE — searches are driver-sequential in every engine path.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = s.conf.get(aqeKey, "true")
     val descPrev = s.sparkContext.getLocalProperty("spark.job.description")
-    s.conf.set(aqeKey, "false")
-    var beam =
+    val beam =
       try {
         s.sparkContext.setJobDescription("graphann: hop 0 (entry scoring)")
-        var b = prune(score(q.select(col("q_id")).crossJoin(ent)))
+        var b = prune(score(qL.select(col("q_id")).crossJoin(entL)))
         (1 to hops).foreach { h =>
           s.sparkContext.setJobDescription(s"graphann: hop $h")
           val beamKeys = b.select(col("q_id"), col("vec_id").as("vec_a"))
@@ -1335,7 +1338,7 @@ object Similarity {
           // this frame), so the broadcast is guard-bounded at any corpus size,
           // and the adjacency side never moves. The routes differ only in the
           // scoring join and dedup keying below.
-          val expanded = adj.join(broadcast(beamKeys), "vec_a")
+          val expanded = adjL.join(broadcast(beamKeys), "vec_a")
             .select(col("q_id"), col("vec_b").as("vec_id"))
           val nbrs =
             if (smallIndex)
@@ -1346,11 +1349,8 @@ object Similarity {
                 .dropDuplicates("q_id", "vec_id")
           b = prune(score(nbrs).union(b))
         }
-        b
-      } finally {
-        s.conf.set(aqeKey, aqePrev)
-        s.sparkContext.setJobDescription(descPrev)
-      }
+        rooted(s, b)
+      } finally s.sparkContext.setJobDescription(descPrev)
     (if (excludeSelf) beam.filter(col("vec_id") =!= col("q_id")) else beam)
       .withColumn("rank", row_number().over(wB))
       .filter(col("rank") <= k)
@@ -1565,7 +1565,7 @@ object Similarity {
       val scored = m.join(broadcast(q), Seq("cluster"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w))
@@ -1676,7 +1676,7 @@ object Similarity {
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val coarse = e.crossJoin(broadcast(cs))
       .select(col("vec_id"), col("embedding"), col("c_id"),
-        floor(cosine(s, "embedding", "c_emb") * lit(1e4) + lit(0.5))
+        floor(cosine("embedding", "c_emb") * lit(1e4) + lit(0.5))
           .as("cs_scaled"))
       .withColumn("packed",
         (col("cs_scaled") + 10000L) * 8L + (lit(7L) - col("c_id")))
@@ -1691,7 +1691,7 @@ object Similarity {
         col("embedding").as("f_emb"))
     coarse.join(broadcast(fs), Seq("coarse"))
       .select(col("vec_id"), col("embedding"), col("coarse"), col("f_id"),
-        floor(cosine(s, "embedding", "f_emb") * lit(1e4) + lit(0.5))
+        floor(cosine("embedding", "f_emb") * lit(1e4) + lit(0.5))
           .as("fs_scaled"))
       .withColumn("packed",
         (col("fs_scaled") + 10000L) * 8L + (lit(7L) - col("f_id")))
@@ -1726,7 +1726,7 @@ object Similarity {
       m.join(broadcast(q), Seq("coarse", "f_id"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 10)
         .orderBy(col("q_id"), col("rank"))
@@ -2087,7 +2087,7 @@ object Similarity {
         .join(broadcast(q), Seq("q_id"))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("probe"), col("vec_id"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cs"))
+          round(cosine("embedding", "q_emb"), 4).as("cs"))
         .withColumn("rank", row_number().over(Window
           .partitionBy(col("q_id"), col("probe"))
           .orderBy(col("cs").desc, col("vec_id"))))
@@ -2410,7 +2410,6 @@ object Similarity {
       import s.implicits._
       val a = t(s, dir, "embeddings").select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
       val b = t(s, dir, "embeddings").select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val hist = a.crossJoin(b).filter(col("vec_a") < col("vec_b"))
         .select(expr("cast(floor(graft_cosine(ea, eb) * 10000 + 0.5) as int)")
           .as("sim_4dp"))
@@ -2447,7 +2446,6 @@ object Similarity {
     "emb_threshold_sweep_sampled",
     (s, dir) => {
       import s.implicits._
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val sample = t(s, dir, "embeddings")
         .filter(substring(md5(col("vec_id").cast("string")), 1, 1) === "0")
       val a = sample.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
@@ -2502,7 +2500,6 @@ object Similarity {
   val semanticDecontam = GraftQuery(
     "emb_semantic_decontam",
     (s, dir) => {
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val e = t(s, dir, "embeddings")
       val evalRaw = e.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("e_id"), col("embedding").as("e_emb"))
@@ -2599,7 +2596,6 @@ object Similarity {
       // graft_dot: codegen'd native inner product, bit-identical to
       // dotFold (same accumulation order; VectorFunctionsSpec) and one
       // third of graft_cosine's work since the norms aren't needed
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2664,7 +2660,6 @@ object Similarity {
     // the scope drops the corpus once the picks are on the driver
     (s, dir) => Pin.scope {
       import s.implicits._
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val e = Pin.reuse(t(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
       var picks = Seq((1, 0L, Option.empty[Long])) // (rank, vec_id, dist_micro)
       var k = 2
@@ -2757,7 +2752,6 @@ object Similarity {
       .localCheckpoint(true)
     var k = 2
     while (k <= 5) {
-      graft.functions.VectorFunctions.ensureRegistered(s)
       val cand = shortlist
         .join(selected.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"), "left_anti")
       val scoredK = cand
@@ -2789,7 +2783,7 @@ object Similarity {
       val shortlist = e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), col("embedding"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("rel"))
+          round(cosine("embedding", "q_emb"), 4).as("rel"))
         .withColumn("rn", row_number().over(wr))
         .filter(col("rn") <= 20)
         .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"))
@@ -2841,7 +2835,7 @@ object Similarity {
       val scored = e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), col("label"),
-          round(cosine(s, "embedding", "q_emb"), 4).as("cos_sim"))
+          round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
         .withColumn("grank", row_number().over(wq))
       val pred = scored.filter(col("label") % 4 === col("q_id") % 4)
         .withColumn("frank", row_number().over(wq))

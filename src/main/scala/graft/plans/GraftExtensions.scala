@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.{CosineSimilarity, DotProduct, SubvectorL2Sq}
 
@@ -18,10 +19,9 @@ import graft.functions.{CosineSimilarity, DotProduct, SubvectorL2Sq}
   * }}}
   *
   * Injects the native functions permanently into the session catalog
-  * (every new session of the builder), unlike
-  * [[graft.functions.VectorFunctions.ensureRegistered]] which patches one
-  * live session. Both routes register the identical Expression, so plans
-  * and results cannot differ.
+  * (every new session of the builder), unlike [[graft.Engine.install]]
+  * which patches one live session from the same [[functions]] inventory,
+  * so plans and results cannot differ.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   /** The injected inventory, exposed so specs can drive the exact builders
@@ -36,7 +36,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SubvectorL2Sq(exprs(0), exprs(1), exprs(2), exprs(3))),
     (FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
+      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))),
+    // SQL handles for Spark's OWN Bloom-filter pair: BloomFilterAggregate
+    // (a TypedImperativeAggregate whose map-side buffers merge, so building
+    // the filter is one normal aggregation) and the codegen'd
+    // BloomFilterMightContain. Spark wires them only into runtime row-level
+    // filtering, not the public FunctionRegistry (UNRESOLVED_ROUTINE on
+    // 4.1.2). Contracts inherited from the internals: the value side must
+    // be a LONG (hash with xxhash64 first); the filter side of
+    // graft_might_contain must be a constant or a scalar subquery, which
+    // makes the plan a build-once, share-everywhere filter, not a join.
+    (FunctionIdentifier("graft_bloom_agg"),
+      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
+      {
+        case Seq(child) => new BloomFilterAggregate(child)
+        case Seq(child, est) => new BloomFilterAggregate(child, est)
+        case Seq(child, est, bits) => new BloomFilterAggregate(child, est, bits)
+        case other => throw new IllegalArgumentException(
+          s"graft_bloom_agg expects 1-3 args, got ${other.size}")
+      }),
+    (FunctionIdentifier("graft_might_contain"),
+      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
+      {
+        case Seq(bloom, value) => BloomFilterMightContain(bloom, value)
+        case other => throw new IllegalArgumentException(
+          s"graft_might_contain expects 2 args, got ${other.size}")
+      }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     functions.foreach(ext.injectFunction)

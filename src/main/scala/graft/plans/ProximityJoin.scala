@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -48,23 +47,13 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * to overflow-proof constant bin offsets — would cost ~66% extra
   * replication on every normal query to serve that corner.
   *
-  * Installed per-session by [[ProximityJoin.install]] or for every session
+  * Installed per-session by [[graft.Engine.install]] or for every session
   * via `spark.sql.extensions=graft.plans.GraftExtensions`. The rule runs in
   * the operator-optimization batch; its output contains a cross-side
   * equi-conjunct, so it can never re-match its own rewrite (fixed-point
   * safe).
   */
 object ProximityJoin extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Idempotently add the rule to a live session's extra optimizations. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-
-  def remove(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == this)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case j @ Join(left, right, Inner, Some(cond), hint) =>

@@ -43,6 +43,7 @@ final class StreamingMmrTracker(
     shortlistK: Int = 20,
     excludeSelf: Boolean = true) {
   import spark.implicits._
+  graft.Engine.install(spark)
 
   // bounded state: the running per-query shortlist, queries × shortlistK
   @volatile private var shortlist: Array[(Long, Long, Seq[Float], Double)] =
@@ -54,7 +55,6 @@ final class StreamingMmrTracker(
   /** Fold one micro-batch of (vec_id, embedding) corpus vectors into the
     * running shortlists. Idempotent under replay. */
   def update(batch: DataFrame): Unit = synchronized {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val scoredAll = batch.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(queries.select(col("q_id"), col("q_emb"))))
     val scored = (if (excludeSelf) scoredAll.filter(col("vec_id") =!= col("q_id"))

@@ -1,0 +1,158 @@
+package graft
+
+import graft.ops.AppRegistry
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, CyclicBarrier, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+/** Apps share one session (OpsServer runs each submit on its own thread),
+  * so no query may change what another one plans with: the graph-ANN hop
+  * loop plans without AQE, yet the shared session keeps it on at every
+  * job, and concurrent apps, kill included, behave as they do alone. */
+class SharedSessionSpec extends SparkTestBase {
+
+  private val aqe = "spark.sql.adaptive.enabled"
+
+  private def entry(name: String) = SparkEntry.registry.find(_.name == name).get
+
+  private def hash(df: DataFrame): Long = df.selectExpr("sum(hash(*))").head().getLong(0)
+
+  /** Runs `body` with a listener that reads the shared session's AQE flag
+    * at every job start; returns the values read. */
+  private def aqeAtJobStarts(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { seen.add(spark.conf.get(aqe)); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener delivery is async: wait until the count stops moving
+      var last = -1
+      val deadline = System.currentTimeMillis() + 10000
+      while (seen.size != last && System.currentTimeMillis() < deadline) {
+        last = seen.size; Thread.sleep(200)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    seen.asScala.toSeq
+  }
+
+  private def awaitDone(registry: AppRegistry, ids: Seq[java.util.UUID]): Seq[String] = {
+    def statuses = ids.map(id => registry.submitted.find(_.id == id).get.status)
+    val deadline = System.currentTimeMillis() + 180000
+    while (statuses.contains("running") && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    statuses
+  }
+
+  test("ann_graph_topk leaves the shared session's AQE on at every job") {
+    val seen = aqeAtJobStarts(Pin.scope(entry("ann_graph_topk").run(spark, sf).collect()))
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "true"), s"AQE read at job starts: ${seen.mkString(",")}")
+  }
+
+  test("a graphAnnSearch facade call leaves the shared session's AQE on at every job") {
+    import spark.implicits._
+    val c = (0L until 64L).map(i =>
+      (i, Seq.tabulate(4)(d => ((i * 31 + d * 17) % 97).toFloat / 97f)))
+      .toDF("id", "vec")
+    val q = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f))).toDF("qid", "qvec")
+    val idx = graft.api.SimilaritySearch.graphAnnBuild(spark, c, nlist = 2)
+    val seen = aqeAtJobStarts {
+      assert(graft.api.SimilaritySearch.graphAnnSearch(spark, idx, q, k = 5).collect().nonEmpty)
+    }
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "true"), s"AQE read at job starts: ${seen.mkString(",")}")
+  }
+
+  test("concurrent ann_graph_topk and ev_interval_join_auto apps each match their serial run") {
+    val names = Seq("ann_graph_topk", "ev_interval_join_auto")
+    val serial = names.map(n => n -> Pin.scope(hash(entry(n).run(spark, sf)))).toMap
+    val hashes = new ConcurrentHashMap[String, Long]()
+    val registry = new AppRegistry(spark)
+    // both apps start planning together, so the interval join plans while
+    // the beam search runs its hops
+    val started = new CyclicBarrier(names.size)
+    def hashed(n: String): (SparkSession, String) => DataFrame = (s, dir) => {
+      started.await(60, TimeUnit.SECONDS)
+      val df = entry(n).run(s, dir)
+      hashes.put(n, hash(df))
+      df
+    }
+    val seen = aqeAtJobStarts {
+      val ids = names.map(n => registry.submit(n, hashed(n), sf))
+      assert(awaitDone(registry, ids) == Seq("finished", "finished"))
+    }
+    assert(hashes.asScala.toMap == serial)
+    assert(seen.forall(_ == "true"), s"AQE read at job starts: ${seen.mkString(",")}")
+  }
+
+  test("killing an ann_graph_topk app mid-search ends it as killed") {
+    val registry = new AppRegistry(spark)
+    val hopRunning = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("graphann: hop 1"))) hopRunning.countDown()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val id = registry.submit("ann_graph_topk", entry("ann_graph_topk").run, sf)
+      assert(hopRunning.await(120, TimeUnit.SECONDS), "the search never reached hop 1")
+      assert(registry.killSubmitted(id), "the app ended before the kill")
+      assert(awaitDone(registry, Seq(id)) == Seq("killed"))
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(spark.conf.get(aqe) == "true")
+  }
+
+  test("the caller's query listeners see the hop loop's executions until unregistered") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val c = (0L until 64L).map(i =>
+      (i, Seq.tabulate(4)(d => ((i * 31 + d * 17) % 97).toFloat / 97f)))
+      .toDF("id", "vec")
+    val q = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f))).toDF("qid", "qvec")
+    val idx = graft.api.SimilaritySearch.graphAnnBuild(fresh, c, nlist = 2)
+    // executions another session ran for `fresh`: the AQE-off hop loop
+    val forwarded = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = if (qe.sparkSession ne fresh) forwarded.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def search(): Unit = {
+      graft.api.SimilaritySearch.graphAnnSearch(fresh, idx, q, k = 3, hops = 2).collect(); ()
+    }
+    // listener delivery is async: wait until the count stops moving
+    def settled(): Int = {
+      var last = -1
+      val deadline = System.currentTimeMillis() + 10000
+      while (forwarded.get != last && System.currentTimeMillis() < deadline) {
+        last = forwarded.get; Thread.sleep(200)
+      }
+      last
+    }
+    fresh.listenerManager.register(l)
+    search()
+    // one beam checkpoint per hop, plus hop 0
+    assert(settled() >= 3)
+    fresh.listenerManager.unregister(l)
+    val before = settled()
+    search()
+    assert(settled() == before)
+  }
+
+  test("the hop loop's sibling starts from the caller's runtime conf, with AQE off") {
+    val fresh = spark.newSession()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    fresh.conf.set(key, "12345")
+    val sib = Engine.fixedPlanSession(fresh)
+    assert(sib ne fresh)
+    assert(sib.conf.get(key) == "12345")
+    assert(sib.conf.get(aqe) == "false" && fresh.conf.get(aqe) == "true")
+    assert(Engine.fixedPlanSession(fresh) eq sib)
+  }
+}

@@ -8,7 +8,7 @@ class SqlSurfaceSpec extends SparkTestBase {
 
   test("registerAll + spark.sql runs relational and vector queries end-to-end") {
     Tables.registerAll(spark, sf)
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    Engine.install(spark)
 
     val agg = spark.sql(
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty

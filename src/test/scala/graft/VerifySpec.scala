@@ -79,4 +79,15 @@ class VerifySpec extends SparkTestBase {
     Verify.dump(spark, Seq("other_broken" -> good), sf, out)
     assert(!java.nio.file.Files.exists(ep), "clean state left stale errors.json")
   }
+
+  test("errors.json carries a message with a tab, quote, backslash and control character unchanged") {
+    val out = tmp()
+    val msg = "tab\there \"quoted\" back\\slash \u0001 end"
+    val odd: (SparkSession, String) => DataFrame =
+      (_, _) => throw new IllegalStateException(msg)
+    Verify.dump(spark, Seq("odd_query" -> odd), sf, out)
+    val ej = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/errors.json"))
+    assert(org.json4s.jackson.JsonMethods.parse(ej) \ "odd_query" ===
+      org.json4s.JString(s"IllegalStateException: $msg"), ej)
+  }
 }

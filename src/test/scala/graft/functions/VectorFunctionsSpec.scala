@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class VectorFunctionsSpec extends SparkTestBase {
 
   test("native expression == declarative fold, bit for bit, on the corpus") {
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val e = Tables.t(spark, sf, "embeddings")
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"))
@@ -24,7 +24,7 @@ class VectorFunctionsSpec extends SparkTestBase {
   }
 
   test("graft_dot == declarative fold, bit for bit, on the corpus") {
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val e = Tables.t(spark, sf, "embeddings")
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"))
@@ -38,7 +38,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("graft_dot interpreted path agrees with a hand computation") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq((Array(1f, 2f, 3f), Array(4f, 5f, 6f))).toDF("a", "b")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
@@ -53,7 +53,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("interpreted path (eval) agrees with a hand computation") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq((Array(1f, 0f, 1f), Array(1f, 1f, 0f))).toDF("a", "b")
     // codegen disabled -> exercises nullSafeEval
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
@@ -68,7 +68,7 @@ class VectorFunctionsSpec extends SparkTestBase {
   }
 
   test("graft_l2sq == declarative subrange fold, bit for bit, on the corpus") {
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val e = Tables.t(spark, sf, "embeddings")
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"))
@@ -86,7 +86,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("graft_l2sq interpreted path agrees with a hand computation") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq((Array(1f, 2f, 3f, 4f), Array(1f, 0f, 0f, 1f))).toDF("a", "b")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
@@ -102,7 +102,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("graft_l2sq clamps a negative offset in both execution paths") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq((Array(1f, 2f), Array(0f, 0f))).toDF("a", "b")
     // off=-3, len=5 -> window [0, 2): 1 + 4; a negative start must never
     // reach ArrayData.getFloat (unchecked OOB read on UnsafeArrayData)
@@ -120,7 +120,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("graft_l2sq upper bound cannot wrap when off+len underflows a long-to-int cast") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq((Array(1f, 2f), Array(0f, 0f))).toDF("a", "b")
     // off=Int.MinValue, len=-100: o+len ~ -2^31-100; an unguarded
     // (int) cast of that long wraps POSITIVE (~2147483548), turning the
@@ -138,7 +138,7 @@ class VectorFunctionsSpec extends SparkTestBase {
 
   test("nulls and mismatched lengths behave") {
     import spark.implicits._
-    VectorFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val df = Seq(
       (Some(Array(1f, 2f)), None: Option[Array[Float]]),
       (Some(Array(1f, 0f, 0f, 0f)), Some(Array(1f, 0f)))).toDF("a", "b")

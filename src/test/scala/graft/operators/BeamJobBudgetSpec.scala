@@ -8,9 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * per-job/per-stage scheduling over beam-sized (KB) frames, not data
   * movement, so the job count IS the regression surface. r18 measured 59
   * jobs for one 5-hop search (AQE spawned a query-stage job per exchange
-  * per hop plus a re-optimization pass each); the r19 loop plans each hop
-  * once with AQE off and explicit size-derived partition counts, which
-  * caps a hop at its two input broadcasts plus one multi-stage job. */
+  * per hop plus a re-optimization pass each); the loop now plans each hop
+  * once, on the session's AQE-off sibling (Engine.fixedPlanSession, so the
+  * caller's session keeps AQE) with explicit size-derived partition
+  * counts, which caps a hop at its two input broadcasts plus one
+  * multi-stage job. */
 class BeamJobBudgetSpec extends SparkTestBase {
 
   private def jobCount(body: => Unit): Int = {

@@ -15,7 +15,7 @@ class BloomGateSpec extends SparkTestBase {
       s"${numBits}L) FROM $view)"
 
   test("bloom ingest gate: identical delta, zero false negatives, FP rate within the configured bound") {
-    graft.functions.BloomFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     val exact = Dedup.ingestDelta.run(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val bloom = Dedup.ingestDeltaBloom.run(spark, sf)
@@ -59,7 +59,7 @@ class BloomGateSpec extends SparkTestBase {
   }
 
   test("bloom sizing derived from a 10x snapshot keeps FP within bound (no silent saturation)") {
-    graft.functions.BloomFunctions.ensureRegistered(spark)
+    graft.Engine.install(spark)
     import spark.implicits._
     // 700 k synthetic snapshot digests — 10x the sf0.1 snapshot, and 7x
     // the r12 fixture constant (100 k) that this test exists to bury: at

@@ -188,7 +188,10 @@ class OpsSpec extends SparkTestBase {
     addFile(1, 4)
     val q1 = writer(1).start()
     q1.processAllAvailable()
-    // "dynamicdag": replace the x1 stage with an x10 stage, same checkpoint
+    // "dynamicdag": replace the x1 stage with an x10 stage, same checkpoint.
+    // The new file lands while the old plan is down: added while q1 still
+    // ran, q1's next trigger could take it before the stop.
+    q1.stop()
     addFile(4, 7)
     val q2 = Redeploy.replace(q1, () => writer(10))
     q2.processAllAvailable(); q2.stop()

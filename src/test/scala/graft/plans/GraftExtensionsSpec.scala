@@ -29,4 +29,17 @@ class GraftExtensionsSpec extends SparkTestBase {
     val cos = e.eval(null).asInstanceOf[Double]
     assert(math.abs(cos - 1.0) < 1e-12, s"cos of identical vectors = $cos")
   }
+
+  test("Engine.install registers exactly the injected functions and the rule on a fresh session") {
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    def names = reg.listFunction().map(_.funcName).toSet
+    val before = names
+    graft.Engine.install(fresh)
+    val injected = new GraftExtensions().functions.map(_._1.funcName).toSet
+    assert(names -- before === injected)
+    assert(injected === Set("graft_cosine", "graft_l2sq", "graft_dot",
+      "graft_bloom_agg", "graft_might_contain"))
+    assert(fresh.experimental.extraOptimizations.contains(ProximityJoin))
+  }
 }

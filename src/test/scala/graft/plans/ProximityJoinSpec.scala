@@ -10,16 +10,20 @@ import org.apache.spark.sql.functions._
 class ProximityJoinSpec extends SparkTestBase {
 
   private def withRule[T](f: => T): T = {
-    ProximityJoin.install(spark)
-    try f finally ProximityJoin.remove(spark)
+    graft.Engine.install(spark)
+    try f finally remove()
   }
+
+  private def remove(): Unit =
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == ProximityJoin)
 
   /** Engine.session now installs the rule by default — the brute-force
     * controls below must run with it explicitly OFF to stay a genuinely
     * independent plan. */
   private def withoutRule[T](f: => T): T = {
-    ProximityJoin.remove(spark)
-    try f finally ProximityJoin.install(spark)
+    remove()
+    try f finally graft.Engine.install(spark)
   }
 
   private def left: DataFrame = {
