@@ -56,7 +56,7 @@ object Bench {
     // warm the JVM/codegen once on the smallest SF so per-query times
     // measure the engine, not first-call classloading.
     System.gc()
-    headline.foreach { q => Pin.scope {
+    headline.foreach { q => Pin.query {
       try q.run(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }}
@@ -156,7 +156,7 @@ object Bench {
       val reps = (1 to nReps).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { Pin.scope(q.run(spark, sfDir).write.format("noop").mode("overwrite").save()); true }
+          try { Pin.query(q.run(spark, sfDir).write.format("noop").mode("overwrite").save()); true }
           catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: $e"); false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
@@ -191,7 +191,7 @@ object Bench {
                   val t0 = System.nanoTime()
                   val ok =
                     try {
-                      Pin.scope(qq.run(spark, d).write.format("noop").mode("overwrite").save())
+                      Pin.query(qq.run(spark, d).write.format("noop").mode("overwrite").save())
                       true
                     } catch { case _: Throwable => false }
                   if (ok) Some((System.nanoTime() - t0) / 1e9) else None

@@ -23,9 +23,9 @@ object Verify {
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
       try {
-        // the scope releases whatever the query pinned, on success and
-        // failure alike, and only that: no session-wide cache flush
-        Pin.scope {
+        // the query releases whatever it pinned and ticked, on success
+        // and failure alike, and only that: no session-wide cache flush
+        Pin.query {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }

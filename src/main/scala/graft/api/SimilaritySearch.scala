@@ -252,7 +252,7 @@ object SimilaritySearch {
     // never renames before checkpointing, so only the facade needs this)
     val c = {
       val lc = named0.withColumn("vec_id", col("vec_id").cast("long"))
-        .localCheckpoint(true)
+        .transform(graft.Pin.tick)
       spark.createDataFrame(lc.rdd, lc.schema)
     }
     // the corpus count is a cheap scan of the just-checkpointed blocks
@@ -263,7 +263,7 @@ object SimilaritySearch {
     val (cents, _, _) = KMeans.train(spark, c, nlist, trainIters)
     val m = KMeans.assignToCentroids(spark, c, cents)
       .select(col("vec_id"), col("cluster"), col("embedding"))
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
     val ka = m.select(col("cluster"), col("vec_id").as("vec_a"),
       col("embedding").as("ea"))
     val kb = m.select(col("cluster"), col("vec_id").as("vec_b"),
@@ -315,7 +315,7 @@ object SimilaritySearch {
     // reverse: a live `half.union(half.select(...))` computes the kNN
     // window-join and hub explode once per union branch — the most
     // expensive build stage doubled (r15 review)
-    val half = knn.union(lnk).localCheckpoint(true)
+    val half = graft.Pin.tick(knn.union(lnk))
     // serving layout (r18): the symmetrized adjacency and the corpus are
     // checkpointed ON their lookup keys (hash-partitioned + sorted within
     // partitions, partition count derived from the structure's size — the
@@ -333,7 +333,7 @@ object SimilaritySearch {
     val adj = {
       val lc = half
         .union(half.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
-        .distinct().localCheckpoint(true)
+        .distinct().transform(graft.Pin.tick)
       spark.createDataFrame(lc.rdd, lc.schema)
         .repartition(
           graft.operators.Similarity.servingParts(

@@ -76,8 +76,9 @@ object TextAnalytics {
   def bpeTrain(df: DataFrame, rounds: Int = 10): DataFrame = {
     val d = docs(df)
     import d.sparkSession.implicits._
-    TextAnalysis.bpeTrainOn(d, rounds)._1
-      .toDF("rank", "lhs", "rhs", "pair_count")
+    val (merges, state) = TextAnalysis.bpeTrainOn(d, rounds)
+    graft.Pin.drop(state)
+    merges.toDF("rank", "lhs", "rhs", "pair_count")
   }
 
   /** Train BPE merges on this corpus and encode it under them: per-document

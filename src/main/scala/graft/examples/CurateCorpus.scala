@@ -41,28 +41,28 @@ object CurateCorpus {
     *   shard, pos); attrition has one row per filtering stage. */
   def curate(raw: DataFrame, packBudget: Int = 512, nShards: Int = 8,
       gateRule: String = "r_all"): (DataFrame, Seq[Attrition]) = {
-    val docs = raw.toDF("doc_id", "text").localCheckpoint(true)
+    val docs = raw.toDF("doc_id", "text").transform(graft.Pin.tick)
     val n0 = docs.count()
 
     // 1. quality gate: Gopher rule panel, keep the chosen rule's passers
     val quality = docs
       .join(TextAnalytics.gopherFlags(docs).filter(col(gateRule))
         .select(col("doc_id")), "doc_id")
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
     val n1 = quality.count()
 
     // 2. exact dedup: one keeper per content digest (lowest id)
     val exact = quality
       .join(DedupAlgorithms.exactDuplicates(quality)
         .select(col("keep_id").as("doc_id")), "doc_id")
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
     val n2 = exact.count()
 
     // 3. near-dup dedup: MinHash+LSH clusters, keep each cluster's min id
     val nearDrops = DedupAlgorithms.nearDupClusters(exact)
       .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
     val kept = exact.join(nearDrops, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
     val n3 = kept.count()
 
     // 4. PII scrub: redact emails/IPs in the survivors BEFORE any tokens
@@ -73,7 +73,7 @@ object CurateCorpus {
     // near-dup stage, rather than silently collapsing post-redaction.
     val scrubbed = TextAnalytics.piiScrub(kept)
       .select(col("doc_id"), col("scrubbed").as("text"))
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
 
     // 5-7. tokenize (BPE trained on the scrubbed survivors), pack, shard —
     // all cardinality-preserving: the manifest carries every survivor once
@@ -125,7 +125,7 @@ object CurateCorpus {
       val fresh = exact
         .join(DedupAlgorithms.ingestDelta(exact, kept)
           .select(col("doc_id")), "doc_id")
-      kept = kept.unionByName(fresh).localCheckpoint(true)
+      kept = kept.unionByName(fresh).transform(graft.Pin.tick)
     }
 
     /** The accumulated post-dedup survivor set (doc_id, text). */

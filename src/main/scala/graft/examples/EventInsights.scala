@@ -51,7 +51,7 @@ object EventInsights {
     // whole log are not) — the trade this example does not pay at its
     // scale but a production scheduler must choose.
     val ev = events.toDF("event_id", "user_id", "ts", "event_type", "value")
-      .localCheckpoint(true)
+      .transform(graft.Pin.tick)
     Report(
       sessions = EventAnalytics.sessionize(
         ev.select(col("user_id"), col("ts"), col("value")), gap),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1842,9 +1842,9 @@ object EventOps {
       val tot = hop.groupBy(col("i")).agg(sum(col("n")).as("tot"))
       val p = hop.join(tot, "i")
         .select(col("i"), col("j"), expr("n * 1000000L div tot").as("p_micro"))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
       val states = p.select(col("i").as("state"))
-        .union(p.select(col("j").as("state"))).distinct().localCheckpoint(true)
+        .union(p.select(col("j").as("state"))).distinct().transform(Pin.tick)
       val k = states.count()
       val pi0 = states.select(col("state"), lit(1000000L / k).as("pi"))
       var pi = pi0
@@ -1853,9 +1853,11 @@ object EventOps {
         val next = pi.as("x").join(p.as("p"), col("p.i") === col("x.state"))
           .groupBy(col("p.j").as("state"))
           .agg(sum(expr("pi * p_micro div 1000000")).as("pi"))
-        pi = states.join(next, Seq("state"), "left")
+        val cur = states.join(next, Seq("state"), "left")
           .select(col("state"), coalesce(col("pi"), lit(0L)).as("pi"))
-          .localCheckpoint(true)
+          .transform(Pin.tick)
+        if (tck % 2 == 0) Pin.drop(pi) // odd ticks are not emitted
+        pi = cur
         snaps(tck) = pi
       }
       states
@@ -1943,7 +1945,7 @@ object EventOps {
         .withColumn("h", expr(
           """cast(conv(substring(md5(concat('kmv:', cast(user_id as string))),
              1, 12), 16, 10) as bigint)"""))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
       val exact = both.groupBy(col("seg")).agg(count(lit(1)).as("exact_distinct"))
       // two-phase K-minimum-values: partial top-K per (seg, h mod 64) bucket,
       // then final top-K per segment
@@ -1953,7 +1955,7 @@ object EventOps {
       val kset = both.select(col("seg"), col("h"))
         .withColumn("r1", row_number().over(w1)).filter(col("r1") <= K)
         .withColumn("r2", row_number().over(w2)).filter(col("r2") <= K)
-        .select(col("seg"), col("h"), col("r2")).localCheckpoint(true)
+        .select(col("seg"), col("h"), col("r2")).transform(Pin.tick)
       val R = lit(281474976710656.0) // 2^48 as double, exact
       def estRow(src: DataFrame, name: String, exactDf: DataFrame): DataFrame = {
         val agg = src.agg(count(lit(1)).as("n_sketch"), max(col("h")).as("kth_hash"))
@@ -2168,7 +2170,7 @@ object EventOps {
       val ranked = hashed
         .withColumn("r1", row_number().over(w1)).filter(col("r1") <= Kmax)
         .withColumn("r2", row_number().over(w2)).filter(col("r2") <= Kmax)
-        .select(col("h"), col("r2")).localCheckpoint(true)
+        .select(col("h"), col("r2")).transform(Pin.tick)
       val exact = broadcast(hashed.agg(count(lit(1)).as("exact_distinct")))
       val R = lit(281474976710656.0) // 2^48 as double, exact
       val ks = s.range(0, 3).select(

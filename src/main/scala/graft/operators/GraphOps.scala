@@ -41,7 +41,7 @@ object GraphOps {
       .union(p.select(col("b").as("src"), col("a").as("dst")))
       .distinct().transform(Pin.reuse)
     var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
+      .withColumn("label", col("node")).transform(Pin.tick)
     var changed = 1L
     var it = 0
     while (changed > 0 && it < 50) Pin.scope { // releases this tick's pins
@@ -61,10 +61,10 @@ object GraphOps {
           col("x.label") === col("y.ln"), "left")
         .select(col("x.node").as("node"),
           least(col("x.label"), coalesce(col("lab2"), col("x.label"))).as("label"))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
       changed = short.as("n").join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.label") =!= col("o.label")).count()
-      labels.unpersist() // short is checkpointed; drop the old tick's blocks
+      Pin.drop(labels)
       labels = short
     }
     (labels, it)
@@ -215,7 +215,7 @@ object GraphOps {
   private[graft] def lpaOn(edges0: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = Pin.scope {
     val edges = Pin.reuse(edges0)
-    var labels = seeds.withColumn("label", col("seed")).localCheckpoint(true)
+    var labels = seeds.withColumn("label", col("seed")).transform(Pin.tick)
     for (_ <- 1 to rounds) {
       val votes = edges.join(labels, col("u") === col("node"))
         .filter(col("label").isNotNull)
@@ -228,8 +228,8 @@ object GraphOps {
       val next = seeds.join(adopted, Seq("node"), "left")
         .select(col("node"), col("seed"),
           coalesce(col("seed"), col("adopted")).as("label"))
-        .localCheckpoint(true) // eager: materialized before the old tick drops
-      labels.unpersist()
+        .transform(Pin.tick) // eager: materialized before the old tick drops
+      Pin.drop(labels)
       labels = next
     }
     labels
@@ -310,17 +310,17 @@ object GraphOps {
     // checkpoint cuts the returned plan's lineage from the edge cache
     // before the scope releases it.
     var alive = edges.select(col("u").as("node")).distinct()
-      .withColumn("c", lit(0L)).localCheckpoint(true)
+      .withColumn("c", lit(0L)).transform(Pin.tick)
     var n = alive.count()
     var changed = true
     var it = 0
     while (changed && it < 50) {
       it += 1
       val next = degrees(alive.select("node")).filter(col("c") >= k)
-        .select(col("u").as("node"), col("c")).localCheckpoint(true)
+        .select(col("u").as("node"), col("c")).transform(Pin.tick)
       val m = next.count()
       changed = m != n
-      alive.unpersist()
+      Pin.drop(alive)
       alive = next
       n = m
     }
@@ -386,14 +386,14 @@ object GraphOps {
     * (node, dist=0) seed. Output: (node, dist) for nodes reachable within
     * the hop bound. */
   private[graft] def sssp(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
-    var dist = sources.localCheckpoint(true)
+    var dist = Pin.tick(sources)
     for (_ <- 1 to maxHops) {
       val relax = dist.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
       val next = dist.select(col("node"), col("dist").as("cand")).union(relax)
         .groupBy(col("node")).agg(min(col("cand")).as("dist"))
-        .localCheckpoint(true)
-      dist.unpersist()
+        .transform(Pin.tick)
+      Pin.drop(dist)
       dist = next
     }
     dist
@@ -1260,9 +1260,12 @@ object GraphOps {
     val q0 = louvainQNum(half, None, k0, a0, m)
     var a = a0; var q = q0
     Seq(0, 1, 0, 1).foreach { p =>
-      val cand = louvainPass(und, k0, a, m, p).localCheckpoint(true)
+      val cand = Pin.tick(louvainPass(und, k0, a, m, p))
       val qc = louvainQNum(half, None, k0, cand, m)
-      if (qc > q) { a = cand; q = qc }
+      if (qc > q) {
+        if (a ne a0) Pin.drop(a)
+        a = cand; q = qc
+      } else Pin.drop(cand)
     }
     val (a1, q1) = (a, q)
     val nc1 = a1.select(col("c")).distinct().count()
@@ -1287,9 +1290,12 @@ object GraphOps {
     val q20 = louvainQNum(sHalf, Some(sLoops), sK, a20, m)
     var a2 = a20; var q2 = q20
     Seq(0, 1).foreach { p =>
-      val cand2 = louvainPass(sUnd, sK, a2, m, p).localCheckpoint(true)
+      val cand2 = Pin.tick(louvainPass(sUnd, sK, a2, m, p))
       val qc2 = louvainQNum(sHalf, Some(sLoops), sK, cand2, m)
-      if (qc2 > q2) { a2 = cand2; q2 = qc2 }
+      if (qc2 > q2) {
+        if (a2 ne a20) Pin.drop(a2)
+        a2 = cand2; q2 = qc2
+      } else Pin.drop(cand2)
     }
     val nc2 = a2.select(col("c")).distinct().count()
     val nc0 = k0.count()
@@ -1572,10 +1578,12 @@ object GraphOps {
           col("a.l_orderkey") === col("b.l_orderkey") &&
             col("a.l_partkey") < col("b.l_partkey"))
         .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct().localCheckpoint(true)
+        .distinct().transform(Pin.tick)
       var r = 0
       while (r < 8) {
-        half = trussPeelRound(half).localCheckpoint(true)
+        val next = Pin.tick(trussPeelRound(half))
+        Pin.drop(half)
+        half = next
         r += 1
       }
       half.join(edgeSupport(half), Seq("u", "v"), "left")
@@ -1795,7 +1803,7 @@ object GraphOps {
     import sess.implicits._
     var visited = seeds.map(x => (x, x, 0, 1L))
       .toDF("s", "v", "dist", "sigma")
-      .localCheckpoint(true)
+      .transform(Pin.tick)
     var vRows = seeds.size.toLong
     var frontier = visited
     var fRows = vRows
@@ -1820,7 +1828,9 @@ object GraphOps {
         .join(hintSmall(visited.select(col("s"), col("v")), vRows),
           Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(h).as("dist"), col("sigma"))
-      visited = visited.union(news).localCheckpoint(true)
+      val grown = Pin.tick(visited.union(news))
+      Pin.drop(visited)
+      visited = grown
       vRows = visited.count()
       frontier = visited.filter(col("dist") === h)
       fRows = frontier.count()
@@ -1861,7 +1871,7 @@ object GraphOps {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     var out = vis.filter(col("dist") === hops)
       .select(col("s"), col("v"), col("dist"), col("sigma"), lit(0L).as("delta"))
-      .localCheckpoint(true)
+      .transform(Pin.tick)
     (hops to 1 by -1).foreach { lvl =>
       val nLvl = lvlCounts.getOrElse(lvl, 0L)
       val nPrev = lvlCounts.getOrElse(lvl - 1, 0L)
@@ -1878,7 +1888,9 @@ object GraphOps {
         .join(terms, Seq("s", "v"), "left")
         .select(col("s"), col("v"), col("dist"), col("sigma"),
           coalesce(col("delta"), lit(0L)).as("delta"))
-      out = out.union(lvlRows).localCheckpoint(true)
+      val grown = Pin.tick(out.union(lvlRows))
+      Pin.drop(out)
+      out = grown
       onLevel(lvl)
     }
     out
@@ -1900,7 +1912,7 @@ object GraphOps {
       .distinct()
     val und = half.select(col("u").as("src"), col("v").as("dst"))
       .union(half.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint(true)
+      .transform(Pin.tick)
     import org.apache.spark.sql.expressions.Window
     val seeds = und.select(col("src").as("node")).distinct()
       .withColumn("h", md5(concat(lit("btw:"), col("node").cast("string"))))
@@ -1990,7 +2002,7 @@ object GraphOps {
         .distinct()
       val und = half.select(col("u").as("src"), col("v").as("dst"))
         .union(half.select(col("v").as("src"), col("u").as("dst")))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
       val visited = brandesVisited(s, dir)
       val deltas = brandesDelta(und, visited, BrandesHops)
       val w = Window.orderBy(col("btw_micro").desc, col("node"))

@@ -179,7 +179,7 @@ object KMeans {
     val assigned = assignToCentroids(s,
         e.select(col("vec_id"), col("embedding")), coarse)
       .select(col("vec_id"), col("embedding"), col("cluster"))
-      .localCheckpoint(true) // coarse cells are fixed across fine ticks
+      .transform(Pin.tick) // coarse cells are fixed across fine ticks
     val sw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster")).orderBy(col("vec_id"))
     var fine: Map[(Int, Int), Array[Double]] = assigned

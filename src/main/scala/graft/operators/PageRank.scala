@@ -78,14 +78,14 @@ object PageRank {
       val next = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(0.15 / n) + lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
       if (tol > 0.0) {
         // one scalar per tick: the reference's convergence check
         val delta = next.as("a").join(ranks.as("b"), col("a.node") === col("b.node"))
           .agg(max(abs(col("a.rank") - col("b.rank")))).head().getDouble(0)
         converged = delta < tol
       }
-      ranks.unpersist()
+      if (it > 0) Pin.drop(ranks) // the first ranks are the lazy uniform start
       ranks = next
       it += 1
     }
@@ -133,18 +133,20 @@ object PageRank {
       val rev = li.select(col("l_partkey").as("src"), (col("l_suppkey") + SuppOffset).as("dst"))
       val edges = Pin.reuse(fwd.union(rev).distinct())
       val source = 1L
-      var visited = Seq((source, 0)).toDF("node", "hops").localCheckpoint(true)
-      var frontier = visited.select(col("node"))
+      var visited = Seq((source, 0)).toDF("node", "hops").transform(Pin.tick)
+      var frontier = visited // the tick holding the nodes reached last round
       var d = 0
       while (d < 4) {
         d += 1
-        val next = frontier.join(edges, col("node") === col("src"))
+        val next = frontier.select(col("node")).join(edges, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")).as("v"), Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        visited = visited.union(next.withColumn("hops", lit(d)))
-          .localCheckpoint(true)
-        frontier = next.select(col("node"))
+          .transform(Pin.tick)
+        if (frontier ne visited) Pin.drop(frontier)
+        val grown = visited.union(next.withColumn("hops", lit(d))).transform(Pin.tick)
+        Pin.drop(visited)
+        visited = grown
+        frontier = next
       }
       visited.select(col("node"), col("hops")).orderBy(col("node"))
     },
@@ -189,22 +191,26 @@ object PageRank {
   private[operators] def hitsScores(edges: DataFrame, iters: Int): DataFrame = {
     var auth = edges.select(col("dst").as("node")).distinct()
       .withColumn("a", lit(1000000L))
-      .localCheckpoint(true)
+      .transform(Pin.tick)
     var hub: DataFrame = null
     var it = 0
     while (it < iters) {
       val hRaw = edges.join(auth, col("dst") === col("node"))
         .groupBy(col("src")).agg(sum(col("a")).as("h_raw"))
       val hMax = hRaw.agg(max(col("h_raw"))).head().getLong(0)
-      hub = hRaw
+      val nextHub = hRaw
         .select(col("src"), expr(s"h_raw * 1000000 div ${hMax}L").as("h"))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
+      if (hub != null) Pin.drop(hub)
+      hub = nextHub
       val aRaw = edges.join(hub, Seq("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("a_raw"))
       val aMax = aRaw.agg(max(col("a_raw"))).head().getLong(0)
-      auth = aRaw
+      val nextAuth = aRaw
         .select(col("dst").as("node"), expr(s"a_raw * 1000000 div ${aMax}L").as("a"))
-        .localCheckpoint(true)
+        .transform(Pin.tick)
+      Pin.drop(auth)
+      auth = nextAuth
       it += 1
     }
     hub.select(lit("hub").as("kind"), col("src").as("node"), col("h").as("score_ppm"))
@@ -294,8 +300,8 @@ object PageRank {
         val next = nodes.join(contribs, Seq("node"), "left")
           .select(col("node"),
             (teleport + lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-          .localCheckpoint(true)
-        ranks.unpersist()
+          .transform(Pin.tick)
+        if (it > 0) Pin.drop(ranks) // the first ranks are the lazy seed vector
         ranks = next
         it += 1
       }

@@ -1281,7 +1281,7 @@ object Similarity {
         round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
     val wB = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
-    // prune REBASES the checkpointed beam onto its RDD (createDataFrame
+    // the pruned beam is a tick, REBASED onto its RDD (createDataFrame
     // over lc.rdd, in `loop`): localCheckpoint preserves the pruned plan's
     // constraint set, and when the inputs carry renamed lineage (the
     // facade's toDF'd user frames) those constraints can reference
@@ -1307,15 +1307,13 @@ object Similarity {
     // dedup (candidates ≈ beam × symmetrized degree ≈ 16×).
     val qParts = servingParts(beamRows, 48)
     val candParts = servingParts(beamRows * 16, 24)
-    def prune(scored: DataFrame): DataFrame = {
-      val lc = scored
-        .repartition(qParts, col("q_id"))
-        .dropDuplicates("q_id", "vec_id")
-        .withColumn("rn", row_number().over(wB)).filter(col("rn") <= beamWidth)
-        .select(col("q_id"), col("vec_id"), col("cos_sim"))
-        .localCheckpoint(true)
-      loop.createDataFrame(lc.rdd, lc.schema)
-    }
+    def prune(scored: DataFrame): DataFrame = scored
+      .repartition(qParts, col("q_id"))
+      .dropDuplicates("q_id", "vec_id")
+      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= beamWidth)
+      .select(col("q_id"), col("vec_id"), col("cos_sim"))
+      .transform(Pin.tick)
+    def rebase(lc: DataFrame): DataFrame = loop.createDataFrame(lc.rdd, lc.schema)
     // smallIndex: adj and e come from [[symmetrizedAdj]]/[[beamContextImpl]]
     // (or the facade's build) checkpointed ON their lookup keys, so the
     // expansion join exchanges only the beam keys and the scoring join only
@@ -1328,7 +1326,9 @@ object Similarity {
     val beam =
       try {
         s.sparkContext.setJobDescription("graphann: hop 0 (entry scoring)")
-        var b = prune(score(qL.select(col("q_id")).crossJoin(entL)))
+        // lc is the beam's tick, b the beam rebased onto it
+        var lc = prune(score(qL.select(col("q_id")).crossJoin(entL)))
+        var b = rebase(lc)
         (1 to hops).foreach { h =>
           s.sparkContext.setJobDescription(s"graphann: hop $h")
           val beamKeys = b.select(col("q_id"), col("vec_id").as("vec_a"))
@@ -1347,7 +1347,10 @@ object Similarity {
             else
               expanded.repartition(candParts, col("q_id"), col("vec_id"))
                 .dropDuplicates("q_id", "vec_id")
-          b = prune(score(nbrs).union(b))
+          val next = prune(score(nbrs).union(b))
+          Pin.drop(lc)
+          lc = next
+          b = rebase(lc)
         }
         rooted(s, b)
       } finally s.sparkContext.setJobDescription(descPrev)
@@ -2749,7 +2752,7 @@ object Similarity {
       .filter(col("rn") === 1)
       .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"),
         lit(1).as("pick"), expr("0.7 * rel - 0.3 * 0.0").as("score"))
-      .localCheckpoint(true)
+      .transform(Pin.tick)
     var k = 2
     while (k <= 5) {
       val cand = shortlist
@@ -2764,7 +2767,9 @@ object Similarity {
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"),
           lit(k).as("pick"), col("score"))
-      selected = selected.union(scoredK).localCheckpoint(true)
+      val grown = Pin.tick(selected.union(scoredK))
+      Pin.drop(selected)
+      selected = grown
       k += 1
     }
     selected.select(col("q_id"), col("pick"), col("vec_id"), col("rel"), col("score"))
@@ -2920,7 +2925,7 @@ object Similarity {
       import s.implicits._
       val ctx = beamContext(s, dir)
       val exact = annBruteTopK.run(s, dir)
-        .select(col("q_id"), col("vec_id")).localCheckpoint(true)
+        .select(col("q_id"), col("vec_id")).transform(Pin.tick)
       val nExact = exact.count()
       val rows = for {
         bw <- Seq(8, 16, 32); lk <- Seq(0, 2, 4)

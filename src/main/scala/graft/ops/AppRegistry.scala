@@ -123,8 +123,9 @@ final class AppRegistry(spark: SparkSession) {
         // job group is thread-local: this dedicated thread scopes every job
         // the query spawns under the app id, so kill = cancelJobGroup(id)
         spark.sparkContext.setJobGroup(id.toString, s"graft submitapp $name", interruptOnCancel = true)
-        // the scope releases the app's pins when it ends, is killed or fails
-        try graft.Pin.scope(run(spark, sfDir).write.format("noop").mode("overwrite").save())
+        // the query releases what the app pinned and ticked when it ends,
+        // is killed or fails
+        try graft.Pin.query(run(spark, sfDir).write.format("noop").mode("overwrite").save())
         finally spark.sparkContext.clearJobGroup()
         app.finish(if (app.killRequested) "killed" else "finished", null)
       } catch {

@@ -267,10 +267,10 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // worker/<id>, worker/<id>/config, worker/<id>/metrics per worker;
           // the Spark worker analog is one executor from the status tracker
           workerInfo(id) match {
-            case None => respond(x, 404, s"""{"error":"no worker $id"}""")
+            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no worker $id")}}""")
             case Some(json) if rest.isEmpty => respond(x, 200, json)
             case Some(_) if rest == List("config") => respond(x, 200, workerConfig(id))
-            case Some(json) => respond(x, 200, s"""{"workerId":$id,"metrics":$json}""")
+            case Some(json) => respond(x, 200, s"""{"workerId":${id.toInt},"metrics":$json}""")
           }
         case ("POST", "master" :: "submitdag" :: Nil) =>
           val body = new String(x.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -292,7 +292,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
         case ("GET", "appmaster" :: id :: Nil) =>
           withId(x, id)(uuid => registry.appDetail(uuid).orElse(registry.submittedDetail(uuid)) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":"no active query $id"}""")
+            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
           })
         case ("GET", "appmaster" :: id :: "metrics" :: Nil) =>
           withId(x, id) { uuid =>
@@ -314,12 +314,12 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // submitted batch apps relaunch here as a new app id.
           withId(x, id)(uuid => registry.restartSubmitted(uuid) match {
             case Some(newId) => respond(x, 200, s"""{"status":"success","appId":"$newId"}""")
-            case None => respond(x, 404, s"""{"error":"no submitted app $id"}""")
+            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no submitted app $id")}}""")
           })
         case ("GET", "appmaster" :: id :: "config" :: Nil) =>
           withId(x, id)(uuid => registry.appConfigJson(uuid) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":"no query or app $id"}""")
+            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no query or app $id")}}""")
           })
         case ("POST", "appmaster" :: id :: "dynamicdag" :: Nil) =>
           // reference: AppMasterService `dynamicdag` replaces a processor in
@@ -331,7 +331,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
                 case Some(run) => registry.replaceSubmitted(uuid, name, run) match {
                   case Some(newId) =>
                     respond(x, 200, s"""{"status":"success","appId":"$newId"}""")
-                  case None => respond(x, 404, s"""{"error":"no submitted app $id"}""")
+                  case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no submitted app $id")}}""")
                 }
                 case None =>
                   respond(x, 404, s"""{"error":"unknown registry query","name":${AppRegistry.jstrStatic(name)}}""")
@@ -342,7 +342,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
         case ("GET", "appmaster" :: id :: "errors" :: Nil) =>
           withId(x, id)(uuid => registry.errorsJson(uuid) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":"no query or app $id"}""")
+            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no query or app $id")}}""")
           })
         case ("GET", "appmaster" :: id :: "executor" :: eid :: rest)
             if rest.isEmpty || rest == List("config") =>
@@ -351,15 +351,15 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // tracker executor to the app — 404s on unknown app OR executor
           withId(x, id) { uuid =>
             registry.appDetail(uuid).orElse(registry.submittedDetail(uuid)) match {
-              case None => respond(x, 404, s"""{"error":"no active query $id"}""")
+              case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
               case Some(_) => workerInfo(eid) match {
                 case None =>
-                  respond(x, 404, s"""{"error":"no executor $eid for app $id"}""")
+                  respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no executor $eid for app $id")}}""")
                 case Some(json) if rest.isEmpty =>
                   respond(x, 200, s"""{"appId":"$uuid","executor":$json}""")
                 case Some(_) =>
                   respond(x, 200,
-                    s"""{"appId":"$uuid","executorId":$eid,"config":${workerConfig(eid)}}""")
+                    s"""{"appId":"$uuid","executorId":${eid.toInt},"config":${workerConfig(eid)}}""")
               }
             }
           }
@@ -374,9 +374,9 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
             case Some(q) => q.stop(); respond(x, 200, """{"status":"success"}""")
             case None =>
               if (registry.killSubmitted(uuid)) respond(x, 200, """{"status":"success"}""")
-              else respond(x, 404, s"""{"error":"no active query $id"}""")
+              else respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
           })
-        case _ => respond(x, 404, s"""{"error":"unknown endpoint ${x.getRequestURI.getPath}"}""")
+        case _ => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"unknown endpoint ${x.getRequestURI.getPath}")}}""")
       }
     } catch {
       case e: Exception => respond(x, 500, s"""{"error":${AppRegistry.jstrStatic(e.toString)}}""")
@@ -475,15 +475,12 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
     val kv = keys.map(k => s"${AppRegistry.jstrStatic(k)}:" +
       AppRegistry.jstrStatic(spark.conf.getOption(k)
         .orElse(Option(spark.sparkContext.getConf.get(k, null))).getOrElse("")))
-    s"""{"workerId":$id,"config":${kv.mkString("{", ",", "}")}}"""
+    s"""{"workerId":${id.toInt},"config":${kv.mkString("{", ",", "}")}}"""
   }
 
-  private def masterSummary: String = {
-    val up = System.currentTimeMillis() - startedAtMs
-    s"""{"engine":"graft","sparkVersion":"${spark.version}",""" +
-      s""""master":"${spark.sparkContext.master}","appName":"${spark.sparkContext.appName}",""" +
-      s""""uptimeMs":$up,"activeQueries":${registry.active.size}}"""
-  }
+  private def masterSummary: String =
+    OpsServer.masterJson(spark.version, spark.sparkContext.master, spark.sparkContext.appName,
+      System.currentTimeMillis() - startedAtMs, registry.active.size)
 
   private def configJson: String =
     spark.conf.getAll.toSeq.sortBy(_._1).map { case (k, v) =>
@@ -553,6 +550,15 @@ object OpsServer {
     "ShuffleGroupingPartitioner" -> "repartition(n) round-robin",
     "ShufflePartitioner" -> "repartition(n) round-robin",
     "RangePartitioner" -> "repartitionByRange(n, cols)")
+
+  /** The GET master body; every string field escaped (an app name or
+    * master URL may hold a quote). */
+  private[ops] def masterJson(sparkVersion: String, master: String, appName: String,
+      uptimeMs: Long, activeQueries: Int): String = {
+    def j(v: String) = AppRegistry.jstrStatic(v)
+    s"""{"engine":"graft","sparkVersion":${j(sparkVersion)},"master":${j(master)},""" +
+      s""""appName":${j(appName)},"uptimeMs":$uptimeMs,"activeQueries":$activeQueries}"""
+  }
 
   private[ops] val PartitionersJson: String =
     Partitioners.map { case (name, spark) =>

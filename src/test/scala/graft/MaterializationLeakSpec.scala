@@ -4,13 +4,10 @@ import graft.ops.AppRegistry
 import org.apache.spark.storage.StorageLevel
 
 /** Pins the materialization lifecycle ([[Pin]]): a query run inside a
-  * [[Pin.scope]] leaves no CacheManager entry and no cached RDD behind it,
-  * on success, on failure, and when apps share the session.
-  *
-  * Checkpointed RDDs are out of this spec's reach: the serving frames a
-  * [[Pin.memo]] holds stay for the session by design, and Spark keeps some
-  * lineage-cutting `localCheckpoint` ticks of iterative operators alive
-  * long after their query ends (their release is the ContextCleaner's). */
+  * [[Pin.query]] leaves no CacheManager entry and no persisted RDD behind
+  * it, cached or checkpointed, on success, on failure, and when apps share
+  * the session. Only [[Pin.serving]] frames, which a [[Pin.memo]] holds
+  * for the session, stay by design. */
 class MaterializationLeakSpec extends SparkTestBase {
 
   private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
@@ -18,20 +15,81 @@ class MaterializationLeakSpec extends SparkTestBase {
   private def persisted: Map[Int, org.apache.spark.rdd.RDD[_]] =
     spark.sparkContext.getPersistentRDDs.toMap
 
+  /** What is persisted now and was not in `before`, serving frames aside:
+    * each RDD by its `toString`, which names the line that made it. */
+  private def leftSince(before: Set[Int]): Seq[String] =
+    (persisted -- before).toSeq.sortBy(_._1).map(_._2).filterNot(Pin.isServing).map(_.toString)
+
   test("every registry entry releases what it pinned when its scope ends") {
     spark.sharedState.cacheManager.clearCache() // whatever earlier suites left
     val leaks = SparkEntry.registry.flatMap { q =>
       val before = persisted.keySet
-      Pin.scope(q.run(spark, sf).write.format("noop").mode("overwrite").save())
+      Pin.query(q.run(spark, sf).write.format("noop").mode("overwrite").save())
       val cacheLeak = !cacheEmpty
       if (cacheLeak) spark.sharedState.cacheManager.clearCache()
-      // the scope unpersists synchronously: anything new and persisted that
-      // is not a checkpoint is a pin nobody released
-      val pinned = (persisted -- before).filterNot(_._2.isCheckpointed).keys.toSeq.sorted
+      // the query unpersists before it returns: anything new and persisted
+      // that is not served is a pin or a tick nobody released
+      val left = leftSince(before)
       Seq(s"${q.name}: CacheManager not empty").filter(_ => cacheLeak) ++
-        Seq(s"${q.name}: cached RDDs $pinned outlive the scope").filter(_ => pinned.nonEmpty)
+        Seq(s"${q.name}: ${left.mkString(", ")} outlive the query").filter(_ => left.nonEmpty)
     }
     assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
+
+  /** The RDD under a checkpointed frame. */
+  private def rddOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+
+  test("a loop drops every tick it replaces: only the returned labels stay") {
+    import spark.implicits._
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    val before = persisted.keySet
+    val (labels, _) = operators.GraphOps.componentsWithTicks(chain)
+    val left = (persisted -- before).values.toSeq
+    assert(left.map(_.id) == Seq(rddOf(labels).id), s"persisted after the loop: ${left.mkString(", ")}")
+    assert(labels.count() == 64)
+    Pin.drop(labels)
+    assert(!persisted.contains(rddOf(labels).id), "drop left the tick persisted")
+  }
+
+  test("a query releases its undropped ticks when it ends; a serving frame stays") {
+    val before = persisted.keySet
+    val (ticked, served) = Pin.query {
+      val t = Pin.tick(spark.range(50).toDF("t"))
+      assert(persisted.contains(rddOf(t).id))
+      // what a leak report prints: the line that cut it
+      assert(rddOf(t).toString.matches(".* at localCheckpoint at MaterializationLeakSpec.scala:\\d+"),
+        rddOf(t).toString)
+      (t, Pin.serving(spark.range(60).toDF("s")))
+    }
+    assert(!persisted.contains(rddOf(ticked).id), "the query kept its tick")
+    assert(leftSince(before).isEmpty, s"left: ${leftSince(before)}")
+    assert(served.count() == 60, "the query released a serving frame")
+    assert(Pin.isServing(rddOf(served)))
+    rddOf(served).unpersist(blocking = true)
+  }
+
+  test("Pin.drop refuses a frame that is not a tick") {
+    val t = Pin.tick(spark.range(5).toDF("x"))
+    intercept[IllegalArgumentException](Pin.drop(t.select("x")))
+    intercept[IllegalArgumentException](Pin.drop(spark.range(5).toDF("x")))
+    val s = Pin.serving(spark.range(5).toDF("y"))
+    intercept[IllegalArgumentException](Pin.drop(s))
+    Pin.drop(t)
+    assert(!persisted.contains(rddOf(t).id))
+    rddOf(s).unpersist(blocking = true)
+  }
+
+  test("text_bpe_train gives the same result in two consecutive queries") {
+    // its training state is memoized for the session: the first query
+    // must not release what the second one reads
+    val q = SparkEntry.registry.find(_.name == "text_bpe_train").get
+    def hash(): Long =
+      Pin.query(q.run(spark, sf).selectExpr("sum(hash(*))").head().getLong(0))
+    val first = hash()
+    assert(hash() == first)
+    val enc = SparkEntry.registry.find(_.name == "text_bpe_encode").get
+    assert(Pin.query(enc.run(spark, sf).count()) > 0)
   }
 
   test("a scope releases its pins when its body throws") {
@@ -66,6 +124,7 @@ class MaterializationLeakSpec extends SparkTestBase {
     assert(cacheEmpty, "reuse outside a scope must not register a cache")
     assert(eager.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.execution.LogicalRDD])
+    Pin.drop(eager) // a tick: nothing else would release it before GC
   }
 
   test("a cache two threads' scopes share stays until the last of them ends") {
@@ -108,7 +167,7 @@ class MaterializationLeakSpec extends SparkTestBase {
     val q = SparkEntry.registry.find(_.name == "dedup_minhash_fast").get
     def hash(df: org.apache.spark.sql.DataFrame): Long =
       df.selectExpr("sum(hash(*))").head().getLong(0)
-    val serial = Pin.scope(hash(q.run(spark, sf)))
+    val serial = Pin.query(hash(q.run(spark, sf)))
     val before = persisted.keySet
     val hashes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val registry = new AppRegistry(spark)
@@ -131,7 +190,6 @@ class MaterializationLeakSpec extends SparkTestBase {
     assert(statuses == Seq("finished", "finished"), s"statuses $statuses")
     assert(hashes.toArray.toSeq == Seq(serial, serial))
     assert(cacheEmpty, "the apps' scopes left a cache behind")
-    val pinned = (persisted -- before).filterNot(_._2.isCheckpointed).keys
-    assert(pinned.isEmpty, s"cached RDDs $pinned outlive both apps")
+    assert(leftSince(before).isEmpty, s"${leftSince(before).mkString(", ")} outlive both apps")
   }
 }

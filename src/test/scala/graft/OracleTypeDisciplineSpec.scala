@@ -176,8 +176,9 @@ class OracleTypeDisciplineSpec extends AnyFunSuite {
     * column and the driver's pandas comparator crashed sorting numpy
     * arrays (`TypeError: unhashable type`). Arrays/maps/structs in an
     * oracled output are therefore banned outright — flatten to scalar
-    * columns (p00..p15) or explode to rows. Schema derivation is lazy
-    * analysis only; inside a [[Pin.scope]] nothing executes. */
+    * columns (p00..p15) or explode to rows. Schema derivation is
+    * analysis plus whatever ticks the entry cuts while it builds; the
+    * [[Pin.query]] releases those and its caches. */
   test("no oracled query emits a top-level ARRAY/MAP/STRUCT output column") {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     val spark = Engine.session("graft-test", "local[4]", 4)
@@ -192,7 +193,7 @@ class OracleTypeDisciplineSpec extends AnyFunSuite {
     val bad = Tables.t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     assert(complexCols(bad.schema).nonEmpty, "lint failed to flag an array column")
     val violations = SparkEntry.registry.filter(_.oracle.isDefined).flatMap { q =>
-      complexCols(Pin.scope(q.run(spark, dir).schema)).map { c =>
+      complexCols(Pin.query(q.run(spark, dir).schema)).map { c =>
         s"${q.name}: output column $c — the driver's pandas comparator cannot sort " +
           "array/map cells; flatten to scalar columns or explode to rows"
       }

@@ -99,7 +99,7 @@ class ScaleStressSpec extends SparkTestBase {
     * live: dedup_rewrite's whole reconstruction pipeline optimized away,
     * 0.1 s "completion"). Hash every output column into the aggregate so
     * the full plan actually executes. */
-  private def run(name: String, dir: String): (Long, Double, DataFrame, DataFrame) = Pin.scope {
+  private def run(name: String, dir: String): (Long, Double, DataFrame, DataFrame) = Pin.query {
     // in a scope, as the executors run it; df is planned while its reused
     // frames are cached, so its plan shows their subtrees
     val df = SparkEntry.queries(name)(spark, dir)

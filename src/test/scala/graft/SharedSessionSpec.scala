@@ -48,7 +48,7 @@ class SharedSessionSpec extends SparkTestBase {
   }
 
   test("ann_graph_topk leaves the shared session's AQE on at every job") {
-    val seen = aqeAtJobStarts(Pin.scope(entry("ann_graph_topk").run(spark, sf).collect()))
+    val seen = aqeAtJobStarts(Pin.query(entry("ann_graph_topk").run(spark, sf).collect()))
     assert(seen.nonEmpty)
     assert(seen.forall(_ == "true"), s"AQE read at job starts: ${seen.mkString(",")}")
   }
@@ -69,7 +69,7 @@ class SharedSessionSpec extends SparkTestBase {
 
   test("concurrent ann_graph_topk and ev_interval_join_auto apps each match their serial run") {
     val names = Seq("ann_graph_topk", "ev_interval_join_auto")
-    val serial = names.map(n => n -> Pin.scope(hash(entry(n).run(spark, sf)))).toMap
+    val serial = names.map(n => n -> Pin.query(hash(entry(n).run(spark, sf)))).toMap
     val hashes = new ConcurrentHashMap[String, Long]()
     val registry = new AppRegistry(spark)
     // both apps start planning together, so the interval join plans while
@@ -98,6 +98,7 @@ class SharedSessionSpec extends SparkTestBase {
             .exists(_.startsWith("graphann: hop 1"))) hopRunning.countDown()
     }
     spark.sparkContext.addSparkListener(l)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val id = registry.submit("ann_graph_topk", entry("ann_graph_topk").run, sf)
       assert(hopRunning.await(120, TimeUnit.SECONDS), "the search never reached hop 1")
@@ -105,6 +106,10 @@ class SharedSessionSpec extends SparkTestBase {
       assert(awaitDone(registry, Seq(id)) == Seq("killed"))
     } finally spark.sparkContext.removeSparkListener(l)
     assert(spark.conf.get(aqe) == "true")
+    // the killed query released its caches and ticks; only the index the
+    // session memoizes may have been added
+    val left = (spark.sparkContext.getPersistentRDDs -- before).values.filterNot(Pin.isServing)
+    assert(left.isEmpty, s"the killed app left ${left.mkString(", ")}")
   }
 
   test("the caller's query listeners see the hop loop's executions until unregistered") {

@@ -28,7 +28,7 @@ class FuzzyPqBpeSpec extends SparkTestBase {
   }
 
   test("dedup_fuzzy_names: plan is an equi-join on the signature, no cartesian") {
-    val p = Pin.scope(SparkEntry.queries("dedup_fuzzy_names")(spark, sf)
+    val p = Pin.query(SparkEntry.queries("dedup_fuzzy_names")(spark, sf)
       .queryExecution.executedPlan.toString)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"fuzzy dedup must not fall back to all-pairs:\n$p")

@@ -15,15 +15,15 @@ import org.apache.spark.sql.functions.{col, sum}
 class PlanInvariantsSpec extends SparkTestBase {
 
   /** The executed plan as the registry executors (Verify, Bench,
-    * AppRegistry) produce it: inside a [[Pin.scope]], where reused frames
+    * AppRegistry) produce it: inside a [[Pin.query]], where reused frames
     * are lazy caches and their subtrees stay visible in the plan. */
   private def plan(name: String, sfDir: String = sf): SparkPlan =
-    Pin.scope(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+    Pin.query(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
 
-  /** The entry run to completion inside a [[Pin.scope]], for tests that
+  /** The entry run to completion inside a [[Pin.query]], for tests that
     * read its final adaptive plan. */
   private def collected(name: String, sfDir: String = sf): DataFrame =
-    Pin.scope {
+    Pin.query {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
       df

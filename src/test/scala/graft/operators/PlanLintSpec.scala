@@ -127,7 +127,7 @@ class PlanLintSpec extends SparkTestBase {
     val offenders = SparkEntry.registry.flatMap { q =>
       val plan =
         // in a scope, as the executors run it: reused subtrees stay in the plan
-        try Pin.scope(q.run(spark, sf).queryExecution.executedPlan.toString)
+        try Pin.query(q.run(spark, sf).queryExecution.executedPlan.toString)
         catch { case e: Throwable => s"PLANNING FAILED: $e" }
       val cart = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign(q.name)

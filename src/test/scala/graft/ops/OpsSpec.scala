@@ -582,6 +582,43 @@ class OpsSpec extends SparkTestBase {
     } finally { srv.stop(); reg.close() }
   }
 
+  test("404 bodies and the master summary stay valid JSON around quotes in their input") {
+    import spark.implicits._
+    val reg = new AppRegistry(spark)
+    val srv = new OpsServer(spark, reg, catalog = Map.empty).start()
+    val in = GraftSource.memory[Int](spark)
+    val q = in.toDS().writeStream.format("noop").queryName("ops_escape").start()
+    def error(method: String, path: String): String = {
+      val (code, body) = httpOn(srv.boundPort, method, path)
+      assert(code === 404, body)
+      org.json4s.jackson.JsonMethods.parse(body) \ "error" match {
+        case org.json4s.JString(e) => e
+        case other => fail(s"no error string in $body: $other")
+      }
+    }
+    try {
+      val none = java.util.UUID.randomUUID()
+      // getPath decodes %22 into a quote
+      assert(error("GET", "/api/v1.0/worker/a%22b") == "no worker a\"b")
+      assert(error("GET", "/api/v1.0/no%22where") == "unknown endpoint /api/v1.0/no\"where")
+      assert(error("GET", s"/api/v1.0/appmaster/$none") == s"no active query $none")
+      assert(error("DELETE", s"/api/v1.0/appmaster/$none") == s"no active query $none")
+      assert(error("GET", s"/api/v1.0/appmaster/$none/config") == s"no query or app $none")
+      assert(error("GET", s"/api/v1.0/appmaster/$none/errors") == s"no query or app $none")
+      assert(error("POST", s"/api/v1.0/appmaster/$none/restart") == s"no submitted app $none")
+      assert(error("GET", s"/api/v1.0/appmaster/${q.id}/executor/a%22b") ==
+        s"no executor a\"b for app ${q.id}")
+      // a sign is a valid integer id, but not a JSON number
+      val (mc, m) = httpOn(srv.boundPort, "GET", "/api/v1.0/worker/%2B0/metrics")
+      assert(mc === 200, m)
+      assert((org.json4s.jackson.JsonMethods.parse(m) \ "workerId") == org.json4s.JInt(0))
+    } finally { q.stop(); srv.stop(); reg.close() }
+    val master = org.json4s.jackson.JsonMethods.parse(
+      OpsServer.masterJson(spark.version, "local[\"4\"]", "graft \"ops\" \\ demo", 7L, 0))
+    assert((master \ "appName") == org.json4s.JString("graft \"ops\" \\ demo"))
+    assert((master \ "master") == org.json4s.JString("local[\"4\"]"))
+  }
+
   test("metrics?history=true serves a bounded, time-ordered snapshot ring") {
     import spark.implicits._
     val reg = new AppRegistry(spark)
