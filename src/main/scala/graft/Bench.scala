@@ -26,10 +26,10 @@ object Bench {
     // percentiles at a small, unsaturated trigger — measured AFTER the
     // throughput probe's heap churn is collected, BEFORE the batch suite.
     // Repeated LatencyReps times with a per-probe spread, the same noise
-    // discipline the headline queries carry: r15's single-shot p50 read
-    // 333 ms vs r14's 120 ms on unchanged streaming code, and nothing in
-    // the JSON could say whether that was regression or scheduling
-    // lottery. The reported histogram is the min-p50 rep (the quietest
+    // discipline the headline queries carry: the single-shot p50 read
+    // 333 ms in BENCH_r15.json against 120 ms in BENCH_r14.json on
+    // unchanged streaming code, and nothing in the JSON could say whether
+    // that was regression or scheduling lottery. The reported histogram is the min-p50 rep (the quietest
     // window); the spread column is (max p50 − min p50) / min p50.
     System.gc()
     val (latencyReading, latencySpread) =
@@ -60,9 +60,10 @@ object Bench {
       try q.run(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }}
-    // Load gate (r16 judging: bench totals r13-r16 ran at load averages
-    // 1.6/3.9/6.6/3.3 and became uncomparable — every r16 headline query
-    // read +5%..+64% vs r15 on a binary whose only hot-path changes were
+    // Load gate (BENCH_r13.json to BENCH_r16.json started at load averages
+    // 1.6/3.9/6.6/3.3, their `load_avg_start`, and became uncomparable —
+    // every headline query in BENCH_r16.json reads +5%..+64% against
+    // BENCH_r15.json on a binary whose only hot-path changes were
     // work-removing, the signature of box contention the JSON could note
     // but not remove). Before the timed query loop, spin-wait up to
     // LoadGateMaxWaitSec for the 1-min load average to drop below
@@ -95,13 +96,13 @@ object Bench {
     // Nine timed reps, report min AND median: a single sample folds GC
     // pauses and compilation stalls of THIS box into the graded number;
     // the min is the quietest-window estimator, the median the typical-rep
-    // estimator — when they diverge (r16: q44 spread 4.85 meant even the
-    // min-of-9 was likely inflated) the divergence itself flags load
-    // inflation inline, per query, without a rerun.
-    // The rep count is PINNED at 9 regardless of load (r15 judging: r13
-    // min-of-3 / r14 min-of-5 / r15 min-of-9 made the round-over-round
-    // TOTAL incomparable on top of the load differences — a constant rep
-    // count removes the one confound the bench controls; 9 reps cost
+    // estimator — when they diverge (BENCH_r16.json: q44 spread 4.85 meant
+    // even the min-of-9 was likely inflated) the divergence itself flags
+    // load inflation inline, per query, without a rerun.
+    // The rep count is PINNED at 9 regardless of load (a rep count that
+    // changes between runs makes their TOTALs incomparable on top of the
+    // load differences — a constant rep count removes the one confound
+    // the bench controls; 9 reps cost
     // ~25 s and give the min many chances to land in a quiet scheduling
     // window on a loaded box). The JSON carries a per-query spread column
     // ((max-min)/min over the reps) plus the load average sampled at each
@@ -109,10 +110,10 @@ object Bench {
     // are sample-stable and which are scheduling lottery, per query.
     val loaded = loadAtSuite > 2.0
     val nReps = 9
-    // Mid-suite re-gate (r18 judging: the graded window ran at load
-    // 1.7-1.9 and the verdict hinged on un-reproducible contention; the
-    // one gate at suite start could not help a tenant that arrives
-    // mid-suite). Between queries — NEVER inside a query's timed reps —
+    // Mid-suite re-gate (BENCH_r18.json: its queries started at load
+    // 1.5-2.1, their `query_load`, after a suite start at 1.5 — contention
+    // that cannot be reproduced, and the one gate at suite start cannot
+    // help against a tenant that arrives mid-suite). Between queries — NEVER inside a query's timed reps —
     // estimate the EXTERNAL load as (1-min load average − this JVM's own
     // CPU utilization over the same trailing window) and, when it exceeds
     // the quiet-box bar, wait for it to decay before starting the next
@@ -245,9 +246,9 @@ object Bench {
     val errors = results.filterNot(_._4).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val total = results.filter(_._4).map(_._2).sum
     val totalMedian = results.filter(_._4).map(_._3).sum
-    // Per-phase micro-batch latency attribution (r17 judge task 4: p50
-    // went 118 -> 168 ms across two load-gated readings while continuous
-    // stayed at 1 ms — the phase medians say WHERE the per-batch time
+    // Per-phase micro-batch latency attribution (the p50 went 118 -> 168 ms
+    // from BENCH_r16.json to BENCH_r17.json while continuous stayed at
+    // 0-1 ms — the phase medians say WHERE the per-batch time
     // goes: queryPlanning = Catalyst work per trigger, addBatch =
     // execution, latestOffset/walCommit/commitOffsets = progress
     // bookkeeping, unattributed = trigger scheduling overhead the

@@ -101,13 +101,14 @@ object CurateCorpus {
     * pipeline's post-exact-dedup survivors (first-arrival keeper; feed in
     * id order for bit-parity with batch's min-id keeper). */
   final class StreamingCurator(spark: SparkSession) {
-    @volatile private var kept: DataFrame =
+    // always a tick, so each update can drop the one it replaces
+    @volatile private var kept: DataFrame = graft.Pin.tick(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
+            org.apache.spark.sql.types.StringType)))))
 
     /** Fold one micro-batch of (id, text) documents. Idempotent under
       * replay: a replayed doc is digest-matched by ingestDelta and
@@ -125,10 +126,14 @@ object CurateCorpus {
       val fresh = exact
         .join(DedupAlgorithms.ingestDelta(exact, kept)
           .select(col("doc_id")), "doc_id")
+      // the new tick is eager, so nothing reads the previous one any more
+      val prev = kept
       kept = kept.unionByName(fresh).transform(graft.Pin.tick)
+      graft.Pin.drop(prev)
     }
 
-    /** The accumulated post-dedup survivor set (doc_id, text). */
+    /** The accumulated post-dedup survivor set (doc_id, text). The frame
+      * is valid until the next [[update]], which releases its blocks. */
     def keptDocs: DataFrame = kept
 
     /** Wire a streaming (id, text) corpus into this curator. */

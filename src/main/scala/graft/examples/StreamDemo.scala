@@ -41,7 +41,7 @@ object StreamDemo {
     val opsQ = opsIn.toDS().writeStream.format("noop").queryName("ops_live").start()
     opsIn.addData(1 to 1000: _*)
     opsQ.processAllAvailable()
-    println("OPS_APPLIST=" + reg.applist)
+    println("OPS_APPLIST=" + org.json4s.jackson.JsonMethods.compact(reg.applist))
     println("OPS_STALLING=" + reg.stalling(60000).size)
     opsQ.stop(); reg.close()
 

@@ -1901,7 +1901,10 @@ object GraphOps {
     * explodes path counts fails LOUDLY here instead of overflowing. */
   private[graft] val BrandesSigmaCap = 1000000L
 
-  private def brandesVisited(s: SparkSession, dir: String): DataFrame = {
+  /** The pruned co-purchase graph's undirected edge list (src, dst),
+    * ticked once per run: the forward pass and the backward accumulation
+    * read it every hop. */
+  private def brandesUnd(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
       .filter(col("l_orderkey") % 5 === 0)
@@ -1910,9 +1913,12 @@ object GraphOps {
           col("a.l_partkey") < col("b.l_partkey"))
       .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
       .distinct()
-    val und = half.select(col("u").as("src"), col("v").as("dst"))
+    half.select(col("u").as("src"), col("v").as("dst"))
       .union(half.select(col("v").as("src"), col("u").as("dst")))
       .transform(Pin.tick)
+  }
+
+  private def brandesVisited(und: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val seeds = und.select(col("src").as("node")).distinct()
       .withColumn("h", md5(concat(lit("btw:"), col("node").cast("string"))))
@@ -1992,19 +1998,8 @@ object GraphOps {
     "graph_betweenness",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val li = Tables.t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-        .filter(col("l_orderkey") % 5 === 0)
-      val half = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct()
-      val und = half.select(col("u").as("src"), col("v").as("dst"))
-        .union(half.select(col("v").as("src"), col("u").as("dst")))
-        .transform(Pin.tick)
-      val visited = brandesVisited(s, dir)
-      val deltas = brandesDelta(und, visited, BrandesHops)
+      val und = brandesUnd(s, dir)
+      val deltas = brandesDelta(und, brandesVisited(und), BrandesHops)
       val w = Window.orderBy(col("btw_micro").desc, col("node"))
       deltas.filter(col("v") =!= col("s"))
         .groupBy(col("v").as("node"))
@@ -2036,7 +2031,7 @@ object GraphOps {
     "graph_harmonic",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val visited = brandesVisited(s, dir)
+      val visited = brandesVisited(brandesUnd(s, dir))
       val w = Window.orderBy(col("harm_micro").desc, col("node"))
       visited.filter(col("dist") >= 1)
         .groupBy(col("v").as("node"))
@@ -2071,7 +2066,7 @@ object GraphOps {
   val eccentricity = GraftQuery(
     "graph_eccentricity",
     (s, dir) => {
-      val visited = brandesVisited(s, dir)
+      val visited = brandesVisited(brandesUnd(s, dir))
       visited.groupBy(col("s"))
         .agg(count(lit(1)).as("n_reached"), max(col("dist")).as("ecc_bound"))
         .select(col("s").as("source"), col("n_reached"), col("ecc_bound"))

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.JsonValues
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.json4s._
+import org.json4s.JsonDSL._
 import scala.collection.concurrent.TrieMap
 
 /** Ops/introspection layer — library-level parity with the reference's REST
@@ -14,7 +17,8 @@ import scala.collection.concurrent.TrieMap
   *  - `.../stallingtasks`  -> queries without progress for > threshold
   *    (HealthChecker stallingThresholdSeconds=60,
   *    reference: appmaster/ClockService.scala:48,373)
-  * Exposed as JSON strings so an HTTP layer is a trivial wrapper.
+  * Each view is a json4s value built here (a null string is JSON null);
+  * [[OpsServer]] embeds them in its responses and renders each body once.
   */
 final class AppRegistry(spark: SparkSession) {
   import AppRegistry.{LatencyHistogram, Metrics}
@@ -34,7 +38,7 @@ final class AppRegistry(spark: SparkSession) {
   // snapshots, one per progress event (the reference's
   // HistoryMetricsService also retains master/worker-level series for the
   // cluster charts, not just per-app ones)
-  private val masterHistory = scala.collection.mutable.ArrayDeque.empty[(Long, String)]
+  private val masterHistory = scala.collection.mutable.ArrayDeque.empty[(Long, JValue)]
 
   private val listener = new StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -56,7 +60,7 @@ final class AppRegistry(spark: SparkSession) {
             p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap },
           { import scala.jdk.CollectionConverters._
             p.observedMetrics.asScala.map { case (k, row) =>
-              k -> sanitizeJson(row.json) }.toMap },
+              k -> AppRegistry.finite(JsonValues(row)) }.toMap },
           p.stateOperators.toSeq.map(so => Metrics.StateOp(so.operatorName,
             so.numRowsTotal, so.numRowsUpdated, so.memoryUsedBytes)))
       lastSeen.put(p.id, (System.nanoTime(), metrics))
@@ -94,7 +98,6 @@ final class AppRegistry(spark: SparkSession) {
   spark.streams.addListener(listener)
 
   private def nz(d: Double) = if (d.isNaN) 0.0 else d
-  private def sanitizeJson(j: String): String = AppRegistry.sanitizeJson(j)
 
   def active: Seq[StreamingQuery] = spark.streams.active.toSeq
 
@@ -188,44 +191,45 @@ final class AppRegistry(spark: SparkSession) {
   /** Per-app config view (reference: AppMasterService.scala serves
     * `appmaster/<id>/config`): identity + the engine conf that shapes the
     * app's execution. Works for both live streams and submitted apps. */
-  def appConfigJson(id: java.util.UUID): Option[String] = {
-    def conf(k: String) = jstr(spark.conf.getOption(k).getOrElse(""))
-    val engine =
-      s""""engine":{"spark.sql.shuffle.partitions":${conf("spark.sql.shuffle.partitions")},""" +
-        s""""spark.sql.session.timeZone":${conf("spark.sql.session.timeZone")},""" +
-        s""""master":${jstr(spark.sparkContext.master)}}"""
+  def appConfigJson(id: java.util.UUID): Option[JValue] = {
+    def conf(k: String) = spark.conf.getOption(k).getOrElse("")
+    val engine = "engine" ->
+      (("spark.sql.shuffle.partitions" -> conf("spark.sql.shuffle.partitions")) ~
+        ("spark.sql.session.timeZone" -> conf("spark.sql.session.timeZone")) ~
+        ("master" -> spark.sparkContext.master))
     active.find(_.id == id).map(q =>
-      s"""{"id":"${q.id}","name":${jstr(q.name)},"kind":"stream","runId":"${q.runId}",$engine}""")
+      ("id" -> q.id.toString) ~ ("name" -> q.name) ~ ("kind" -> "stream") ~
+        ("runId" -> q.runId.toString) ~ engine)
       .orElse(submittedApps.get(id).map(a =>
-        s"""{"id":"${a.id}","name":${jstr(a.name)},"kind":"batch",""" +
-          s""""sfDir":${jstr(a.sfDir)},"status":"${a.status}",$engine}"""))
+        ("id" -> a.id.toString) ~ ("name" -> a.name) ~ ("kind" -> "batch") ~
+          ("sfDir" -> a.sfDir) ~ ("status" -> a.status) ~ engine))
   }
 
   /** REST `applist` parity: active streaming queries + submitted batch apps. */
-  def applist: String = {
+  def applist: JValue = {
     val streams = active.map(q =>
-      s"""{"id":"${q.id}","name":${jstr(q.name)},"isActive":${q.isActive},"kind":"stream"}""")
+      ("id" -> q.id.toString) ~ ("name" -> q.name) ~ ("isActive" -> q.isActive) ~
+        ("kind" -> "stream"))
     val batches = submitted.map(a =>
-      s"""{"id":"${a.id}","name":${jstr(a.name)},"isActive":${a.status == "running"},""" +
-        s""""kind":"batch","status":"${a.status}"}""")
-    (streams ++ batches).mkString("[", ",", "]")
+      ("id" -> a.id.toString) ~ ("name" -> a.name) ~ ("isActive" -> (a.status == "running")) ~
+        ("kind" -> "batch") ~ ("status" -> a.status))
+    streams ++ batches
   }
 
   /** Detail JSON for a submitted batch app (appmaster/<id> parity). */
-  def submittedDetail(id: java.util.UUID): Option[String] =
+  def submittedDetail(id: java.util.UUID): Option[JValue] =
     submittedApps.get(id).map { a =>
-      s"""{"id":"${a.id}","name":${jstr(a.name)},"kind":"batch","status":"${a.status}",""" +
-        s""""sfDir":${jstr(a.sfDir)},"startedAtMs":${a.startedAtMs},""" +
-        s""""finishedAtMs":${a.finishedAtMs},"error":${jstr(a.error)}}"""
+      ("id" -> a.id.toString) ~ ("name" -> a.name) ~ ("kind" -> "batch") ~
+        ("status" -> a.status) ~ ("sfDir" -> a.sfDir) ~ ("startedAtMs" -> a.startedAtMs) ~
+        ("finishedAtMs" -> a.finishedAtMs) ~ ("error" -> a.error)
     }
 
   /** REST `appmaster/<id>` parity: status + last progress + latency. */
-  def appDetail(id: java.util.UUID): Option[String] =
+  def appDetail(id: java.util.UUID): Option[JValue] =
     active.find(_.id == id).map { q =>
-      val m = lastSeen.get(id).map(_._2)
-      s"""{"id":"${q.id}","name":${jstr(q.name)},"status":${q.status.json},""" +
-        s""""lastProgress":${m.fold("null")(fmt)},""" +
-        s""""latency":${latency(id).fold("null")(fmtHist)}}"""
+      ("id" -> q.id.toString) ~ ("name" -> q.name) ~ ("status" -> JsonValues(q.status)) ~
+        ("lastProgress" -> lastSeen.get(id).map(_._2).fold[JValue](JNull)(fmt)) ~
+        ("latency" -> latency(id).fold[JValue](JNull)(fmtHist))
     }
 
   /** REST `.../metrics` parity. */
@@ -240,24 +244,20 @@ final class AppRegistry(spark: SparkSession) {
     history.get(id).map(h => h.synchronized { h.toVector }).getOrElse(Vector.empty)
 
   /** JSON time series for `?history=true`: `[{"atMs":t,"progress":{...}}]`. */
-  def historyJson(id: java.util.UUID): String =
-    metricsHistory(id)
-      .map { case (atMs, m) => s"""{"atMs":$atMs,"progress":${fmt(m)}}""" }
-      .mkString("[", ",", "]")
+  def historyJson(id: java.util.UUID): JValue =
+    metricsHistory(id).map { case (atMs, m) => ("atMs" -> atMs) ~ ("progress" -> fmt(m)) }
 
   /** Bounded engine-wide rollup history, oldest first — the master-level
     * twin of [[metricsHistory]], REST `master/metrics?history=true`
     * (reference HistoryMetricsService retains master-level series for the
     * cluster charts too). Each snapshot is the [[rollupJson]] captured at
     * a progress event. */
-  def masterMetricsHistory: Seq[(Long, String)] =
+  def masterMetricsHistory: Seq[(Long, JValue)] =
     masterHistory.synchronized { masterHistory.toVector }
 
   /** JSON time series for `master/metrics?history=true`. */
-  def masterHistoryJson: String =
-    masterMetricsHistory
-      .map { case (atMs, roll) => s"""{"atMs":$atMs,"rollup":$roll}""" }
-      .mkString("[", ",", "]")
+  def masterHistoryJson: JValue =
+    masterMetricsHistory.map { case (atMs, roll) => ("atMs" -> atMs) ~ ("rollup" -> roll) }
 
   /** Percentiles over the retained batch-duration window (nearest-rank). */
   def latency(id: java.util.UUID): Option[LatencyHistogram] =
@@ -274,18 +274,14 @@ final class AppRegistry(spark: SparkSession) {
 
   /** REST `master/metrics` parity: engine-wide rollup — rate sums across
     * active queries plus the merged latency histogram. */
-  def rollupJson: String = {
-    val ms = lastSeen.values.map(_._2).toSeq
-    val inRps = ms.map(_.inputRowsPerSecond).sum
-    val procRps = ms.map(_.processedRowsPerSecond).sum
-    val rows = ms.map(_.numInputRows).sum
-    val stateRows = ms.flatMap(_.stateOps).map(_.rowsTotal).sum
-    val stateMem = ms.flatMap(_.stateOps).map(_.memoryUsedBytes).sum
-    s"""{"queries":${active.size},"submittedApps":${submitted.size},""" +
-      f""""inputRowsPerSecond":$inRps%.3f,"processedRowsPerSecond":$procRps%.3f,""" +
-      s""""numInputRows":$rows,"stateRowsTotal":$stateRows,""" +
-      s""""stateMemoryUsedBytes":$stateMem,""" +
-      s""""latency":${aggregateLatency.fold("null")(fmtHist)}}"""
+  def rollupJson: JValue = {
+    val r = rollup
+    ("queries" -> active.size) ~ ("submittedApps" -> submitted.size) ~
+      ("inputRowsPerSecond" -> JDecimal(r.inputRps)) ~
+      ("processedRowsPerSecond" -> JDecimal(r.processedRps)) ~
+      ("numInputRows" -> r.rows) ~ ("stateRowsTotal" -> r.stateRows) ~
+      ("stateMemoryUsedBytes" -> r.stateMemory) ~
+      ("latency" -> aggregateLatency.fold[JValue](JNull)(fmtHist))
   }
 
   /** Prometheus text exposition (format 0.0.4) of the same engine-wide
@@ -297,23 +293,18 @@ final class AppRegistry(spark: SparkSession) {
     * (snake_case, unit-suffixed); the latency histogram exports as
     * quantile-labeled summary gauges off the merged ring. */
   def prometheusText: String = {
-    val ms = lastSeen.values.map(_._2).toSeq
+    val r = rollup
     val sb = new StringBuilder
-    def gauge(name: String, help: String, v: String): Unit = {
+    def gauge(name: String, help: String, v: Any): Unit = {
       sb.append(s"# HELP $name $help\n# TYPE $name gauge\n$name $v\n")
     }
-    gauge("graft_queries_active", "Active streaming queries", active.size.toString)
-    gauge("graft_apps_submitted", "Batch apps submitted via REST", submitted.size.toString)
-    gauge("graft_input_rows_per_second", "Summed source ingest rate",
-      f"${ms.map(_.inputRowsPerSecond).sum}%.3f")
-    gauge("graft_processed_rows_per_second", "Summed processing rate",
-      f"${ms.map(_.processedRowsPerSecond).sum}%.3f")
-    gauge("graft_input_rows_total", "Input rows in the latest progress per query",
-      ms.map(_.numInputRows).sum.toString)
-    gauge("graft_state_rows_total", "Rows across all state stores",
-      ms.flatMap(_.stateOps).map(_.rowsTotal).sum.toString)
-    gauge("graft_state_memory_bytes", "State store memory used",
-      ms.flatMap(_.stateOps).map(_.memoryUsedBytes).sum.toString)
+    gauge("graft_queries_active", "Active streaming queries", active.size)
+    gauge("graft_apps_submitted", "Batch apps submitted via REST", submitted.size)
+    gauge("graft_input_rows_per_second", "Summed source ingest rate", r.inputRps)
+    gauge("graft_processed_rows_per_second", "Summed processing rate", r.processedRps)
+    gauge("graft_input_rows_total", "Input rows in the latest progress per query", r.rows)
+    gauge("graft_state_rows_total", "Rows across all state stores", r.stateRows)
+    gauge("graft_state_memory_bytes", "State store memory used", r.stateMemory)
     aggregateLatency.foreach { h =>
       sb.append("# HELP graft_batch_duration_ms Micro-batch duration summary\n")
       sb.append("# TYPE graft_batch_duration_ms summary\n")
@@ -325,29 +316,33 @@ final class AppRegistry(spark: SparkSession) {
     sb.toString
   }
 
+  /** The sums both rollup views serve, over each query's latest progress. */
+  private def rollup: AppRegistry.Rollup = {
+    val ms = lastSeen.values.map(_._2).toSeq
+    AppRegistry.Rollup(AppRegistry.rate(ms.map(_.inputRowsPerSecond).sum),
+      AppRegistry.rate(ms.map(_.processedRowsPerSecond).sum), ms.map(_.numInputRows).sum,
+      ms.flatMap(_.stateOps).map(_.rowsTotal).sum, ms.flatMap(_.stateOps).map(_.memoryUsedBytes).sum)
+  }
+
   /** REST `appmaster/<id>/errors` parity (reference:
     * services/jvm/src/main/scala/io/gearpump/services/AppMasterService.scala:93
     * serves the app's lastErrors): a streaming query reports its terminal
     * `exception()`; a submitted batch app reports its captured failure.
     * None = the id is unknown to either registry. */
-  def errorsJson(id: java.util.UUID): Option[String] = {
+  def errorsJson(id: java.util.UUID): Option[JValue] = {
+    def body(kind: String, status: String, error: Option[(String, Long)]) =
+      ("id" -> id.toString) ~ ("kind" -> kind) ~ ("status" -> status) ~
+        ("errors" -> error.toList.map { case (e, atMs) => ("message" -> e) ~ ("atMs" -> atMs) })
     // a running stream has no terminal exception yet; a TERMINATED stream is
     // gone from spark.streams.active, so its error lives in the listener's
     // capture (checked second) — without it the endpoint could never serve
     // the one error a failed stream actually produced
-    val activeStream = active.find(_.id == id).map(_ =>
-      s"""{"id":"$id","kind":"stream","status":"active","errors":[]}""")
-    activeStream
+    active.find(_.id == id).map(_ => body("stream", "active", None))
       .orElse(terminatedStreams.get(id).map { case (atMs, exc) =>
-        val errs = exc.map(e => s"""{"message":${jstr(e)},"atMs":$atMs}""").toSeq
-        val status = if (exc.isDefined) "failed" else "terminated"
-        s"""{"id":"$id","kind":"stream","status":"$status","errors":${errs.mkString("[", ",", "]")}}"""
+        body("stream", if (exc.isDefined) "failed" else "terminated", exc.map(_ -> atMs))
       })
-      .orElse(submittedApps.get(id).map { a =>
-        val errs = Option(a.error).map(e =>
-          s"""{"message":${jstr(e)},"atMs":${a.finishedAtMs}}""").toSeq
-        s"""{"id":"$id","kind":"batch","status":"${a.status}","errors":${errs.mkString("[", ",", "]")}}"""
-      })
+      .orElse(submittedApps.get(id).map(a =>
+        body("batch", a.status, Option(a.error).map(_ -> a.finishedAtMs))))
   }
 
   /** REST `.../stallingtasks` parity: active queries with no progress event
@@ -364,24 +359,20 @@ final class AppRegistry(spark: SparkSession) {
 
   def close(): Unit = { spark.streams.removeListener(listener); () }
 
-  private[ops] def fmtHist(h: LatencyHistogram): String =
-    s"""{"count":${h.count},"meanMs":${h.meanMs},"p50Ms":${h.p50Ms},""" +
-      s""""p95Ms":${h.p95Ms},"p99Ms":${h.p99Ms},"maxMs":${h.maxMs}}"""
+  private[ops] def fmtHist(h: LatencyHistogram): JValue =
+    ("count" -> h.count) ~ ("meanMs" -> h.meanMs) ~ ("p50Ms" -> h.p50Ms) ~
+      ("p95Ms" -> h.p95Ms) ~ ("p99Ms" -> h.p99Ms) ~ ("maxMs" -> h.maxMs)
 
-  private[ops] def fmt(m: Metrics): String =
-    s"""{"batchId":${m.batchId},"inputRowsPerSecond":${m.inputRowsPerSecond},""" +
-      s""""processedRowsPerSecond":${m.processedRowsPerSecond},""" +
-      s""""batchDurationMs":${m.batchDurationMs},"numInputRows":${m.numInputRows},""" +
-      s""""timestamp":${jstr(m.timestamp)},""" +
-      s""""durationMs":${m.phases.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")},""" +
-      s""""observedMetrics":${m.observed.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")},""" +
-      s""""stateOperators":${m.stateOps.map(so =>
-        s"""{"name":${jstr(so.name)},"numRowsTotal":${so.rowsTotal},""" +
-          s""""numRowsUpdated":${so.rowsUpdated},"memoryUsedBytes":${so.memoryUsedBytes}}""")
-        .mkString("[", ",", "]")}}"""
-  private def jstr(s: String): String = AppRegistry.jstrStatic(s)
+  private[ops] def fmt(m: Metrics): JValue =
+    ("batchId" -> m.batchId) ~ ("inputRowsPerSecond" -> m.inputRowsPerSecond) ~
+      ("processedRowsPerSecond" -> m.processedRowsPerSecond) ~
+      ("batchDurationMs" -> m.batchDurationMs) ~ ("numInputRows" -> m.numInputRows) ~
+      ("timestamp" -> m.timestamp) ~
+      ("durationMs" -> JObject(m.phases.toList.sortBy(_._1).map { case (k, v) => JField(k, v) })) ~
+      ("observedMetrics" -> JObject(m.observed.toList.sortBy(_._1))) ~
+      ("stateOperators" -> m.stateOps.map(so =>
+        ("name" -> so.name) ~ ("numRowsTotal" -> so.rowsTotal) ~
+          ("numRowsUpdated" -> so.rowsUpdated) ~ ("memoryUsedBytes" -> so.memoryUsedBytes)))
 }
 
 object AppRegistry {
@@ -397,7 +388,7 @@ object AppRegistry {
       batchId: Long, inputRowsPerSecond: Double, processedRowsPerSecond: Double,
       batchDurationMs: Long, numInputRows: Long, timestamp: String,
       phases: Map[String, Long] = Map.empty,
-      observed: Map[String, String] = Map.empty,
+      observed: Map[String, JValue] = Map.empty,
       stateOps: Seq[Metrics.StateOp] = Seq.empty)
 
   object Metrics {
@@ -444,18 +435,17 @@ object AppRegistry {
         pct(0.50), pct(0.95), pct(0.99), s.last))
     }
 
-  /** Row.json renders non-finite doubles (e.g. avg() over zero rows) as bare
-    * NaN/Infinity, which would make the whole /metrics payload invalid JSON
-    * when embedded — map them to null. Token-boundary anchors keep string
-    * values containing "NaN" untouched. */
-  private[ops] def sanitizeJson(j: String): String =
-    j.replaceAll("""(?<=[:,\[])\s*(-?Infinity|NaN)(?=\s*[,}\]])""", "null")
+  /** The engine-wide sums behind [[AppRegistry.rollupJson]] and
+    * [[AppRegistry.prometheusText]]. */
+  private final case class Rollup(inputRps: BigDecimal, processedRps: BigDecimal,
+      rows: Long, stateRows: Long, stateMemory: Long)
 
-  private[ops] def jstrStatic(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A summed rate to 3 decimals, rounded as `f"%.3f"` rounds it but
+    * written with a '.' under every default locale. */
+  private def rate(x: Double): BigDecimal = BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+
+  /** A metric value with every non-finite double (`avg` over a NaN, `max`
+    * over an infinity) as null: JSON has no number for it. */
+  private[ops] def finite(v: JValue): JValue =
+    v.transform { case JDouble(d) if d.isNaN || d.isInfinite => JNull }
 }

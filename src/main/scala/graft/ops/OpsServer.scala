@@ -5,12 +5,16 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.compact
 
 /** The HTTP face of [[AppRegistry]] — parity with the reference's REST
   * service layer (reference:
   * services/jvm/src/main/scala/io/gearpump/services/{MasterService,AppMasterService}.scala;
   * endpoint spec docs/contents/dev/dev-rest-api.md). Zero new dependencies:
   * JDK `com.sun.net.httpserver` (the dashboard talks JSON, not HTML).
+  * Every JSON body is a json4s value, rendered once in `respond`.
   *
   * Endpoints (paths mirror the reference's nouns):
   *  - GET    /api/v1.0/version                        — engine + Spark version
@@ -67,13 +71,9 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
   // Prometheus scrape surface at the conventional bare /metrics: the same
   // engine-wide rollup master/metrics serves as JSON, in text exposition
   // 0.0.4 so a stock Prometheus/Grafana stack scrapes it unconfigured
-  private val promCtx = server.createContext("/metrics", (x: HttpExchange) => {
-    val body = registry.prometheusText.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
-    x.sendResponseHeaders(200, body.length.toLong)
-    x.getResponseBody.write(body)
-    x.close()
-  })
+  private val promCtx = server.createContext("/metrics", (x: HttpExchange) =>
+    send(x, 200, "text/plain; version=0.0.4; charset=utf-8",
+      registry.prometheusText.getBytes(StandardCharsets.UTF_8)))
 
   // MessageDigest.isEqual is constant-time: String == short-circuits at
   // the first differing char, leaking a timing oracle on the password
@@ -106,7 +106,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
 
   private def handleLogin(x: HttpExchange, user: String, pass: String): Unit = {
     try {
-      if (x.getRequestMethod != "POST") { respond(x, 405, """{"error":"POST only"}""") }
+      if (x.getRequestMethod != "POST") { respond(x, 405, error("POST only")) }
       else {
         // credentials come as a form body (user=...&pass=...) or a Basic header
         val body = new String(x.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -137,12 +137,12 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
             // to Lax
             x.getResponseHeaders.add("Set-Cookie",
               s"graft_session=$tok; HttpOnly; Path=/; SameSite=Strict")
-            respond(x, 200, s"""{"status":"success","user":${AppRegistry.jstrStatic(u)}}""")
-          case _ => respond(x, 401, """{"error":"invalid credentials"}""")
+            respond(x, 200, ("status" -> "success") ~ ("user" -> u))
+          case _ => respond(x, 401, error("invalid credentials"))
         }
       }
     } catch {
-      case e: Exception => respond(x, 500, s"""{"error":${AppRegistry.jstrStatic(e.toString)}}""")
+      case e: Exception => respond(x, 500, error(e.toString))
     }
   }
 
@@ -153,7 +153,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
     }.foreach(sessions.remove)
     x.getResponseHeaders.add("Set-Cookie",
       "graft_session=; HttpOnly; Path=/; Max-Age=0; SameSite=Strict")
-    respond(x, 200, """{"status":"success"}""")
+    respond(x, 200, "status" -> "success")
   }
 
   auth.foreach { case (user, pass) =>
@@ -195,7 +195,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
         case ("GET", "version" :: Nil) =>
           // reference: StaticService.scala:38 serves Util.version
           respond(x, 200,
-            s"""{"version":"graft-${OpsServer.Version}","sparkVersion":"${spark.version}"}""")
+            ("version" -> s"graft-${OpsServer.Version}") ~ ("sparkVersion" -> spark.version))
         case ("GET", "master" :: "partitioners" :: Nil) =>
           // reference: MasterService.scala:168 lists BUILTIN_PARTITIONERS
           // (streaming/Constants.scala:34-39); each row carries the
@@ -205,12 +205,12 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // reference: SupervisorService.scala:50 serves the supervisor actor
           // path (null when no resource manager); the Spark-native resource
           // supervisor is the cluster manager named by the master URL
-          respond(x, 200, s"""{"path":${AppRegistry.jstrStatic(spark.sparkContext.master)}}""")
+          respond(x, 200, "path" -> spark.sparkContext.master)
         case ("POST", "supervisor" :: "status" :: Nil) =>
           // reference: SupervisorService.scala:61 — enabled iff a resource
           // manager can add/remove workers. Spark analog: dynamic executor
           // requests exist only on cluster scheduler backends, never local
-          respond(x, 200, s"""{"enabled":${!spark.sparkContext.isLocal}}""")
+          respond(x, 200, "enabled" -> !spark.sparkContext.isLocal)
         case ("POST", "supervisor" :: "addworker" :: n :: Nil) =>
           // reference: SupervisorService.scala:70 AddWorker(count). Spark:
           // SparkContext.requestExecutors — false (with a WARN) on backends
@@ -218,14 +218,14 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           n.toIntOption.filter(_ > 0) match {
             case Some(count) =>
               val ok = spark.sparkContext.requestExecutors(count)
-              respond(x, 200, s"""{"success":$ok}""")
-            case None => respond(x, 400, """{"error":"addworker requires a positive integer count"}""")
+              respond(x, 200, "success" -> ok)
+            case None => respond(x, 400, error("addworker requires a positive integer count"))
           }
         case ("POST", "supervisor" :: "removeworker" :: workerId :: Nil) =>
           // reference: SupervisorService.scala:82 RemoveWorker(containerId);
           // Spark: decommission by executor id via killExecutors
           val ok = spark.sparkContext.killExecutors(Seq(workerId))
-          respond(x, 200, s"""{"success":$ok}""")
+          respond(x, 200, "success" -> ok)
         case ("POST", "terminate" :: Nil) =>
           // reference: AdminService.scala:39 terminates the actor system.
           // DESTRUCTIVE and, like the reference's AdminService (its own
@@ -240,7 +240,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // The response is already committed, so everything after runs in
           // its own try: an app-stop exception must neither re-respond on
           // the committed exchange nor skip the server stop.
-          respond(x, 200, """{"status":"terminating"}""")
+          respond(x, 200, "status" -> "terminating")
           try {
             registry.active.foreach(q => try q.stop() catch { case _: Exception => })
             registry.submitted.filter(_.status == "running")
@@ -259,7 +259,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           if (query(x, "history").contains("true"))
             // master-level HistoryMetricsService parity: the bounded
             // engine-wide rollup ring behind the dashboard's cluster chart
-            respond(x, 200, s"""{"history":${registry.masterHistoryJson}}""")
+            respond(x, 200, "history" -> registry.masterHistoryJson)
           else respond(x, 200, registry.rollupJson)
         case ("GET", "master" :: "workerlist" :: Nil) => respond(x, 200, workerlist)
         case ("GET", "worker" :: id :: rest) if rest.isEmpty || rest == List("config") || rest == List("metrics") =>
@@ -267,45 +267,43 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // worker/<id>, worker/<id>/config, worker/<id>/metrics per worker;
           // the Spark worker analog is one executor from the status tracker
           workerInfo(id) match {
-            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no worker $id")}}""")
+            case None => respond(x, 404, error(s"no worker $id"))
             case Some(json) if rest.isEmpty => respond(x, 200, json)
             case Some(_) if rest == List("config") => respond(x, 200, workerConfig(id))
-            case Some(json) => respond(x, 200, s"""{"workerId":${id.toInt},"metrics":$json}""")
+            case Some(json) => respond(x, 200, ("workerId" -> id.toInt) ~ ("metrics" -> json))
           }
         case ("POST", "master" :: "submitdag" :: Nil) =>
           val body = new String(x.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
           submitDag(body) match {
-            case Right(id) => respond(x, 200, s"""{"status":"success","appId":"$id"}""")
-            case Left(err) => respond(x, 400, s"""{"error":${AppRegistry.jstrStatic(err)}}""")
+            case Right(id) => respond(x, 200, launched(id))
+            case Left(err) => respond(x, 400, error(err))
           }
         case ("POST", "master" :: "submitapp" :: Nil) =>
           (query(x, "name"), query(x, "sf")) match {
             case (Some(name), Some(sf)) => catalog.get(name) match {
               case Some(run) =>
                 val id = registry.submit(name, run, sf)
-                respond(x, 200, s"""{"status":"success","appId":"$id"}""")
+                respond(x, 200, launched(id))
               case None =>
-                respond(x, 404, s"""{"error":"unknown registry query","name":${AppRegistry.jstrStatic(name)}}""")
+                respond(x, 404, error("unknown registry query") ~ ("name" -> name))
             }
-            case _ => respond(x, 400, """{"error":"required params: name=<registry query>, sf=<data dir>"}""")
+            case _ => respond(x, 400, error("required params: name=<registry query>, sf=<data dir>"))
           }
         case ("GET", "appmaster" :: id :: Nil) =>
           withId(x, id)(uuid => registry.appDetail(uuid).orElse(registry.submittedDetail(uuid)) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
+            case None => respond(x, 404, error(s"no active query $id"))
           })
         case ("GET", "appmaster" :: id :: "metrics" :: Nil) =>
           withId(x, id) { uuid =>
             if (query(x, "history").contains("true"))
               // reference HistoryMetricsService parity: the bounded
               // progress-snapshot ring behind the dashboard's charts
-              respond(x, 200, s"""{"id":"$uuid","history":${registry.historyJson(uuid)}}""")
+              respond(x, 200, ("id" -> uuid.toString) ~ ("history" -> registry.historyJson(uuid)))
             else {
-              val m = registry.metrics.get(uuid.toString)
-              val h = registry.latency(uuid)
               respond(x, 200,
-                s"""{"lastProgress":${m.fold("null")(registry.fmt)},""" +
-                  s""""latency":${h.fold("null")(registry.fmtHist)}}""")
+                ("lastProgress" -> registry.metrics.get(uuid.toString).fold[JValue](JNull)(registry.fmt)) ~
+                  ("latency" -> registry.latency(uuid).fold[JValue](JNull)(registry.fmtHist)))
             }
           }
         case ("POST", "appmaster" :: id :: "restart" :: Nil) =>
@@ -313,13 +311,13 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // Streaming queries restart via Redeploy.replace (a plan is code);
           // submitted batch apps relaunch here as a new app id.
           withId(x, id)(uuid => registry.restartSubmitted(uuid) match {
-            case Some(newId) => respond(x, 200, s"""{"status":"success","appId":"$newId"}""")
-            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no submitted app $id")}}""")
+            case Some(newId) => respond(x, 200, launched(newId))
+            case None => respond(x, 404, error(s"no submitted app $id"))
           })
         case ("GET", "appmaster" :: id :: "config" :: Nil) =>
           withId(x, id)(uuid => registry.appConfigJson(uuid) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no query or app $id")}}""")
+            case None => respond(x, 404, error(s"no query or app $id"))
           })
         case ("POST", "appmaster" :: id :: "dynamicdag" :: Nil) =>
           // reference: AppMasterService `dynamicdag` replaces a processor in
@@ -329,20 +327,19 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
             query(x, "name") match {
               case Some(name) => catalog.get(name) match {
                 case Some(run) => registry.replaceSubmitted(uuid, name, run) match {
-                  case Some(newId) =>
-                    respond(x, 200, s"""{"status":"success","appId":"$newId"}""")
-                  case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no submitted app $id")}}""")
+                  case Some(newId) => respond(x, 200, launched(newId))
+                  case None => respond(x, 404, error(s"no submitted app $id"))
                 }
                 case None =>
-                  respond(x, 404, s"""{"error":"unknown registry query","name":${AppRegistry.jstrStatic(name)}}""")
+                  respond(x, 404, error("unknown registry query") ~ ("name" -> name))
               }
-              case None => respond(x, 400, """{"error":"required param: name=<registry query>"}""")
+              case None => respond(x, 400, error("required param: name=<registry query>"))
             }
           }
         case ("GET", "appmaster" :: id :: "errors" :: Nil) =>
           withId(x, id)(uuid => registry.errorsJson(uuid) match {
             case Some(json) => respond(x, 200, json)
-            case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no query or app $id")}}""")
+            case None => respond(x, 404, error(s"no query or app $id"))
           })
         case ("GET", "appmaster" :: id :: "executor" :: eid :: rest)
             if rest.isEmpty || rest == List("config") =>
@@ -351,15 +348,15 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           // tracker executor to the app — 404s on unknown app OR executor
           withId(x, id) { uuid =>
             registry.appDetail(uuid).orElse(registry.submittedDetail(uuid)) match {
-              case None => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
+              case None => respond(x, 404, error(s"no active query $id"))
               case Some(_) => workerInfo(eid) match {
                 case None =>
-                  respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no executor $eid for app $id")}}""")
+                  respond(x, 404, error(s"no executor $eid for app $id"))
                 case Some(json) if rest.isEmpty =>
-                  respond(x, 200, s"""{"appId":"$uuid","executor":$json}""")
+                  respond(x, 200, ("appId" -> uuid.toString) ~ ("executor" -> json))
                 case Some(_) =>
-                  respond(x, 200,
-                    s"""{"appId":"$uuid","executorId":${eid.toInt},"config":${workerConfig(eid)}}""")
+                  respond(x, 200, ("appId" -> uuid.toString) ~ ("executorId" -> eid.toInt) ~
+                    ("config" -> workerConfig(eid)))
               }
             }
           }
@@ -367,19 +364,19 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
           withId(x, id) { uuid =>
             val threshold = query(x, "threshold").map(_.toLong).getOrElse(60000L)
             val stalled = registry.stalling(threshold).exists(_.id == uuid)
-            respond(x, 200, s"""{"id":"$uuid","stalling":$stalled}""")
+            respond(x, 200, ("id" -> uuid.toString) ~ ("stalling" -> stalled))
           }
         case ("DELETE", "appmaster" :: id :: Nil) =>
           withId(x, id)(uuid => registry.active.find(_.id == uuid) match {
-            case Some(q) => q.stop(); respond(x, 200, """{"status":"success"}""")
+            case Some(q) => q.stop(); respond(x, 200, "status" -> "success")
             case None =>
-              if (registry.killSubmitted(uuid)) respond(x, 200, """{"status":"success"}""")
-              else respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"no active query $id")}}""")
+              if (registry.killSubmitted(uuid)) respond(x, 200, "status" -> "success")
+              else respond(x, 404, error(s"no active query $id"))
           })
-        case _ => respond(x, 404, s"""{"error":${AppRegistry.jstrStatic(s"unknown endpoint ${x.getRequestURI.getPath}")}}""")
+        case _ => respond(x, 404, error(s"unknown endpoint ${x.getRequestURI.getPath}"))
       }
     } catch {
-      case e: Exception => respond(x, 500, s"""{"error":${AppRegistry.jstrStatic(e.toString)}}""")
+      case e: Exception => respond(x, 500, error(e.toString))
     }
   }
 
@@ -394,7 +391,6 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
     * {"table":"lineitem","sf":"/data/sf0.01","where":"l_quantity > 10",
     *  "groupBy":["l_returnflag"],"aggs":{"sum_qty":"sum(l_quantity)"}} */
   private def submitDag(body: String): Either[String, java.util.UUID] = {
-    import org.json4s._
     try {
       val j = org.json4s.jackson.JsonMethods.parse(body)
       def str(k: String): Option[String] =
@@ -437,60 +433,55 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
     * the executor set — id/host/port, running tasks, and storage-memory
     * headroom from the public status tracker. local[n] reports the single
     * driver-executor; on a 1000-executor cluster this is the fleet view. */
-  private def workerlist: String = {
+  private def workerlist: JValue = {
     val sc = spark.sparkContext
-    val execs = sc.statusTracker.getExecutorInfos.map { e =>
-      s"""{"host":${AppRegistry.jstrStatic(e.host)},"port":${e.port},""" +
-        s""""numRunningTasks":${e.numRunningTasks},""" +
-        s""""usedOnHeapStorageMemory":${e.usedOnHeapStorageMemory},""" +
-        s""""totalOnHeapStorageMemory":${e.totalOnHeapStorageMemory}}"""
+    val execs = sc.statusTracker.getExecutorInfos.toList.map { e =>
+      ("host" -> e.host) ~ ("port" -> e.port) ~ ("numRunningTasks" -> e.numRunningTasks) ~
+        ("usedOnHeapStorageMemory" -> e.usedOnHeapStorageMemory) ~
+        ("totalOnHeapStorageMemory" -> e.totalOnHeapStorageMemory)
     }
-    s"""{"defaultParallelism":${sc.defaultParallelism},""" +
-      s""""workers":${execs.mkString("[", ",", "]")}}"""
+    ("defaultParallelism" -> sc.defaultParallelism) ~ ("workers" -> execs)
   }
 
   /** One executor's gauges, keyed by its stable index in the (host, port)-
     * sorted executor list — the integer worker id the reference's
     * WorkerService addresses (WorkerService.scala:38). None = unknown id. */
-  private def workerInfo(id: String): Option[String] = {
+  private def workerInfo(id: String): Option[JValue] = {
     val execs = spark.sparkContext.statusTracker.getExecutorInfos
       .sortBy(e => (e.host, e.port))
     id.toIntOption.filter(i => i >= 0 && i < execs.length).map { i =>
       val e = execs(i)
-      s"""{"workerId":$i,"host":${AppRegistry.jstrStatic(e.host)},"port":${e.port},""" +
-        s""""numRunningTasks":${e.numRunningTasks},""" +
-        s""""usedOnHeapStorageMemory":${e.usedOnHeapStorageMemory},""" +
-        s""""totalOnHeapStorageMemory":${e.totalOnHeapStorageMemory},""" +
-        s""""usedOffHeapStorageMemory":${e.usedOffHeapStorageMemory},""" +
-        s""""totalOffHeapStorageMemory":${e.totalOffHeapStorageMemory}}"""
+      ("workerId" -> i) ~ ("host" -> e.host) ~ ("port" -> e.port) ~
+        ("numRunningTasks" -> e.numRunningTasks) ~
+        ("usedOnHeapStorageMemory" -> e.usedOnHeapStorageMemory) ~
+        ("totalOnHeapStorageMemory" -> e.totalOnHeapStorageMemory) ~
+        ("usedOffHeapStorageMemory" -> e.usedOffHeapStorageMemory) ~
+        ("totalOffHeapStorageMemory" -> e.totalOffHeapStorageMemory)
     }
   }
 
   /** worker/<id>/config parity (WorkerService.scala:50 serves the worker's
     * resolved config): the conf keys that shape an executor's JVM. */
-  private def workerConfig(id: String): String = {
-    val keys = Seq("spark.executor.memory", "spark.executor.cores",
+  private def workerConfig(id: String): JValue = {
+    val keys = List("spark.executor.memory", "spark.executor.cores",
       "spark.executor.instances", "spark.memory.fraction",
       "spark.sql.shuffle.partitions", "spark.master")
-    val kv = keys.map(k => s"${AppRegistry.jstrStatic(k)}:" +
-      AppRegistry.jstrStatic(spark.conf.getOption(k)
-        .orElse(Option(spark.sparkContext.getConf.get(k, null))).getOrElse("")))
-    s"""{"workerId":${id.toInt},"config":${kv.mkString("{", ",", "}")}}"""
+    def value(k: String): String = spark.conf.getOption(k)
+      .orElse(Option(spark.sparkContext.getConf.get(k, null))).getOrElse("")
+    ("workerId" -> id.toInt) ~ ("config" -> JObject(keys.map(k => JField(k, JString(value(k))))))
   }
 
-  private def masterSummary: String =
+  private def masterSummary: JValue =
     OpsServer.masterJson(spark.version, spark.sparkContext.master, spark.sparkContext.appName,
       System.currentTimeMillis() - startedAtMs, registry.active.size)
 
-  private def configJson: String =
-    spark.conf.getAll.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${AppRegistry.jstrStatic(k)}:${AppRegistry.jstrStatic(v)}"
-    }.mkString("{", ",", "}")
+  private def configJson: JValue =
+    JObject(spark.conf.getAll.toList.sortBy(_._1).map { case (k, v) => JField(k, v) })
 
   private def withId(x: HttpExchange, id: String)(f: java.util.UUID => Unit): Unit =
     try f(java.util.UUID.fromString(id))
     catch { case _: IllegalArgumentException =>
-      respond(x, 400, s"""{"error":"malformed query id"}""") }
+      respond(x, 400, error("malformed query id")) }
 
   private def query(x: HttpExchange, key: String): Option[String] =
     Option(x.getRequestURI.getQuery).flatMap(_.split("&").collectFirst {
@@ -499,19 +490,19 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
 
   private def serveDashboard(x: HttpExchange): Unit = {
     val in = getClass.getResourceAsStream("/graft/dashboard.html")
-    if (in == null) respond(x, 404, """{"error":"dashboard resource missing"}""")
-    else {
-      val bytes = try in.readAllBytes() finally in.close()
-      x.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      x.sendResponseHeaders(200, bytes.length.toLong)
-      val os = x.getResponseBody
-      try os.write(bytes) finally os.close()
-    }
+    if (in == null) respond(x, 404, error("dashboard resource missing"))
+    else send(x, 200, "text/html; charset=utf-8", try in.readAllBytes() finally in.close())
   }
 
-  private def respond(x: HttpExchange, code: Int, json: String): Unit = {
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "application/json")
+  private def error(message: String): JObject = "error" -> message
+
+  private def launched(id: java.util.UUID): JObject = ("status" -> "success") ~ ("appId" -> id.toString)
+
+  private def respond(x: HttpExchange, code: Int, body: JValue): Unit =
+    send(x, code, "application/json", compact(body).getBytes(StandardCharsets.UTF_8))
+
+  private def send(x: HttpExchange, code: Int, contentType: String, bytes: Array[Byte]): Unit = {
+    x.getResponseHeaders.set("Content-Type", contentType)
     x.sendResponseHeaders(code, bytes.length.toLong)
     val os = x.getResponseBody
     try os.write(bytes) finally os.close()
@@ -551,17 +542,12 @@ object OpsServer {
     "ShufflePartitioner" -> "repartition(n) round-robin",
     "RangePartitioner" -> "repartitionByRange(n, cols)")
 
-  /** The GET master body; every string field escaped (an app name or
-    * master URL may hold a quote). */
+  /** The GET master body. */
   private[ops] def masterJson(sparkVersion: String, master: String, appName: String,
-      uptimeMs: Long, activeQueries: Int): String = {
-    def j(v: String) = AppRegistry.jstrStatic(v)
-    s"""{"engine":"graft","sparkVersion":${j(sparkVersion)},"master":${j(master)},""" +
-      s""""appName":${j(appName)},"uptimeMs":$uptimeMs,"activeQueries":$activeQueries}"""
-  }
+      uptimeMs: Long, activeQueries: Int): JValue =
+    ("engine" -> "graft") ~ ("sparkVersion" -> sparkVersion) ~ ("master" -> master) ~
+      ("appName" -> appName) ~ ("uptimeMs" -> uptimeMs) ~ ("activeQueries" -> activeQueries)
 
-  private[ops] val PartitionersJson: String =
-    Partitioners.map { case (name, spark) =>
-      s"""{"name":${AppRegistry.jstrStatic(name)},"spark":${AppRegistry.jstrStatic(spark)}}"""
-    }.mkString("""{"partitioners":[""", ",", "]}")
+  private[ops] val PartitionersJson: JValue =
+    "partitioners" -> Partitioners.map { case (name, spark) => ("name" -> name) ~ ("spark" -> spark) }
 }

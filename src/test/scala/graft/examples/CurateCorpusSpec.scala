@@ -64,7 +64,14 @@ class CurateCorpusSpec extends SparkTestBase {
     try {
       // id order (so first-arrival == min-id keeper), adversarial chunks
       val chunks = Seq(all.take(1), all.slice(1, 14), all.drop(14))
-      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+      // each update replaces the kept tick: what this feed persists stays
+      // flat (RDDs earlier suites left are the ContextCleaner's to reap)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val persisted = chunks.map { c =>
+        in.addData(c); q.processAllAvailable()
+        (spark.sparkContext.getPersistentRDDs -- before).size
+      }
+      assert(persisted.last == persisted.head, s"persisted RDDs after each chunk: $persisted")
       val streamed = curator.keptDocs.collect()
         .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       // batch reference: quality gate + exact dedup (near-dup is the

@@ -319,4 +319,21 @@ class GraphOpsSpec extends SparkTestBase {
     // heavy shortcut opened up (4 in round 2, 5 in round 3)
     assert(bounded.keySet == (0L to 5L).toSet, s"3-round reachable set: $bounded")
   }
+
+  test("the Brandes entries tick the undirected edge list once per run") {
+    // the edge list (src, dst) is the only two-column frame these entries
+    // tick; the forward and backward passes tick wider state frames, and
+    // every undropped tick stays persisted until the query ends
+    for (name <- Seq("graph_betweenness", "graph_harmonic", "graph_eccentricity")) {
+      val q = graft.SparkEntry.registry.find(_.name == name).get
+      val edgeTicks = graft.Pin.query {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        q.run(spark, sf).write.format("noop").mode("overwrite").save()
+        (spark.sparkContext.getPersistentRDDs -- before).values.count(rdd =>
+          rdd.asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+            .map(_.numFields).take(1).sameElements(Seq(2)))
+      }
+      assert(edgeTicks == 1, s"$name ticked the edge list $edgeTicks times")
+    }
+  }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.SparkTestBase
 import graft.streaming.GraftSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.jackson.JsonMethods.compact
 
 object RedeployCollector {
   val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -41,9 +42,9 @@ class OpsSpec extends SparkTestBase {
     try {
       in.addData(1 to 50: _*)
       q.processAllAvailable()
-      assert(reg.applist.contains("ops_demo"))
+      assert(compact(reg.applist).contains("ops_demo"))
       val detail = reg.appDetail(q.id)
-      assert(detail.isDefined && detail.get.contains("\"lastProgress\""))
+      assert(detail.isDefined && compact(detail.get).contains("\"lastProgress\""))
       // progress events arrive on the async listener bus — bounded wait,
       // the same discipline as every other listener-dependent test here
       val deadline = System.currentTimeMillis() + 15000
@@ -73,10 +74,10 @@ class OpsSpec extends SparkTestBase {
       while (find().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
       val m = find()
       assert(m.isDefined, s"observed metrics missing: ${reg.metrics}")
-      val json = m.get.observed("quality")
+      val json = compact(m.get.observed("quality"))
       assert(json.contains("\"rows\":10") && json.contains("\"evens\":5"), json)
       // and the REST metrics JSON embeds them
-      assert(reg.fmt(m.get).contains("\"observedMetrics\":{\"quality\""))
+      assert(compact(reg.fmt(m.get)).contains("\"observedMetrics\":{\"quality\""))
     } finally { q.stop(); reg.close() }
   }
 
@@ -98,7 +99,7 @@ class OpsSpec extends SparkTestBase {
       assert(hist.p50Ms <= hist.p95Ms && hist.p95Ms <= hist.p99Ms && hist.p99Ms <= hist.maxMs)
       assert(hist.meanMs >= 0.0 && hist.maxMs >= 0L)
       // appDetail embeds the histogram for the dashboard
-      assert(reg.appDetail(q.id).get.contains("\"latency\":{\"count\""))
+      assert(compact(reg.appDetail(q.id).get).contains("\"latency\":{\"count\""))
     } finally { q.stop(); reg.close() }
   }
 
@@ -351,19 +352,82 @@ class OpsSpec extends SparkTestBase {
       assert(so.head.rowsTotal === 3L, so) // keys 1, 2, 3 held in state
       assert(so.head.memoryUsedBytes > 0L)
       val m = reg.metrics(q.id.toString)
-      assert(reg.fmt(m).contains("\"stateOperators\":[{\"name\""), reg.fmt(m))
-      assert(reg.rollupJson.contains("\"stateRowsTotal\":3"), reg.rollupJson)
+      assert(compact(reg.fmt(m)).contains("\"stateOperators\":[{\"name\""), compact(reg.fmt(m)))
+      assert(compact(reg.rollupJson).contains("\"stateRowsTotal\":3"), compact(reg.rollupJson))
     } finally { q.stop(); reg.close() }
   }
 
+  /** The observed metrics `GET appmaster/<id>/metrics` serves for a
+    * stream that observes `exprs` as `name`, once its first batch has
+    * reported them. */
+  private def observedOverHttp(name: String, exprs: org.apache.spark.sql.Column*): org.json4s.JValue = {
+    import spark.implicits._
+    val reg = new AppRegistry(spark)
+    val srv = new OpsServer(spark, reg, catalog = Map.empty).start()
+    val in = GraftSource.memory[Int](spark)
+    val q = in.toDS().toDF("v").observe(name, exprs.head, exprs.tail: _*)
+      .writeStream.format("noop").queryName(s"ops_$name").start()
+    try {
+      in.addData(1, 2, 3); q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 15000
+      def observed() = {
+        val (code, body) = httpOn(srv.boundPort, "GET", s"/api/v1.0/appmaster/${q.id}/metrics")
+        assert(code === 200, body)
+        // strict parse: a bare NaN or a stray token fails here
+        org.json4s.jackson.JsonMethods.parse(body) \ "lastProgress" \ "observedMetrics" \ name
+      }
+      while (observed() == org.json4s.JNothing && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      observed()
+    } finally { q.stop(); srv.stop(); reg.close() }
+  }
+
   test("observed-metrics JSON stays valid when observe() yields non-finite doubles") {
-    // avg() over zero rows renders as bare NaN via Row.json — the sanitizer
-    // must null it without touching legitimate "NaN" string values
-    val dirty = """{"n":0,"avg":NaN,"hi":Infinity,"lo":-Infinity,"tag":"NaN"}"""
-    val clean = AppRegistry.sanitizeJson(dirty)
-    assert(clean === """{"n":0,"avg":null,"hi":null,"lo":null,"tag":"NaN"}""")
-    // and the result parses as JSON (json4s strict parse)
-    org.json4s.jackson.JsonMethods.parse(clean)
+    // avg() over zero rows is null; a string value "NaN" is data, not a
+    // number, and must reach the client as that string
+    import org.apache.spark.sql.functions._
+    val m = observedOverHttp("sparse",
+      avg(when(col("v") < 0, col("v"))).as("avg"), max(lit("NaN")).as("tag"))
+    assert((m \ "avg") === org.json4s.JNull, m)
+    assert((m \ "tag") === org.json4s.JString("NaN"), m)
+  }
+
+  test("non-finite observe() doubles serve as JSON null") {
+    import org.apache.spark.sql.functions._
+    val m = observedOverHttp("edges", avg(lit(Double.NaN)).as("nan"),
+      max(lit(Double.PositiveInfinity)).as("hi"), min(lit(Double.NegativeInfinity)).as("lo"),
+      count(lit(1)).as("n"))
+    for (k <- Seq("nan", "hi", "lo")) assert((m \ k) === org.json4s.JNull, s"$k in $m")
+    assert((m \ "n") === org.json4s.JInt(3), m)
+  }
+
+  test("master/metrics and /metrics write numbers the same under a German default locale") {
+    import spark.implicits._
+    val reg = new AppRegistry(spark)
+    val srv = new OpsServer(spark, reg, catalog = Map.empty).start()
+    val in = GraftSource.memory[Int](spark)
+    val q = in.toDS().writeStream.format("noop").queryName("ops_locale").start()
+    val prev = (java.util.Locale.getDefault,
+      java.util.Locale.getDefault(java.util.Locale.Category.FORMAT))
+    try {
+      in.addData(1 to 50: _*); q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 15000
+      while (reg.latency(q.id).isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      val (jc, json) = httpOn(srv.boundPort, "GET", "/api/v1.0/master/metrics")
+      assert(jc === 200, json)
+      val rollup = org.json4s.jackson.JsonMethods.parse(json)
+      assert((rollup \ "processedRowsPerSecond").isInstanceOf[org.json4s.JDouble], json)
+      val (pc, text) = httpOn(srv.boundPort, "GET", "/metrics")
+      assert(pc === 200, text)
+      val samples = text.linesIterator.filterNot(l => l.isEmpty || l.startsWith("#")).toSeq
+      assert(samples.exists(_.startsWith("graft_processed_rows_per_second ")), text)
+      for (s <- samples) s.substring(s.lastIndexOf(' ') + 1).toDouble
+    } finally {
+      java.util.Locale.setDefault(prev._1)
+      java.util.Locale.setDefault(java.util.Locale.Category.FORMAT, prev._2)
+      q.stop(); srv.stop(); reg.close()
+    }
   }
 
   test("workerlist + per-app errors endpoints (MasterService/AppMasterService parity)") {
@@ -614,7 +678,7 @@ class OpsSpec extends SparkTestBase {
       assert((org.json4s.jackson.JsonMethods.parse(m) \ "workerId") == org.json4s.JInt(0))
     } finally { q.stop(); srv.stop(); reg.close() }
     val master = org.json4s.jackson.JsonMethods.parse(
-      OpsServer.masterJson(spark.version, "local[\"4\"]", "graft \"ops\" \\ demo", 7L, 0))
+      compact(OpsServer.masterJson(spark.version, "local[\"4\"]", "graft \"ops\" \\ demo", 7L, 0)))
     assert((master \ "appName") == org.json4s.JString("graft \"ops\" \\ demo"))
     assert((master \ "master") == org.json4s.JString("local[\"4\"]"))
   }
@@ -669,7 +733,7 @@ class OpsSpec extends SparkTestBase {
         case Seq((t1, _), (t2, _)) => t1 <= t2
         case _ => true
       }, "master history must be time-ordered")
-      assert(hist.forall(_._2.contains("\"processedRowsPerSecond\"")))
+      assert(hist.forall(h => compact(h._2).contains("\"processedRowsPerSecond\"")))
       // the endpoint serves >= 2 snapshots under a running query, parseable
       val (hc, body) = httpOn(srv.boundPort, "GET", "/api/v1.0/master/metrics?history=true")
       assert(hc === 200 && body.contains("\"history\":[") && body.contains("\"rollup\""),
