@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Per-round benchmark main: runs the headline queries against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Results are forced through
@@ -36,7 +39,6 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_SOL").contains("off"))
         (Option.empty[LatencyReading], 0.0)
       else repeatedReading(LatencyReps)(latencyProbe(spark))
-    val latency = latencyReading.map(_.hist)
     // Async-progress-tracking reading beside the synchronous one: the
     // walCommit/commitOffsets fsyncs leave the critical path (the
     // at-least-once tradeoff; see latencyAsyncProbe).
@@ -108,7 +110,6 @@ object Bench {
     // ((max-min)/min over the reps) plus the load average sampled at each
     // query's start, so the round-over-round reader can see which numbers
     // are sample-stable and which are scheduling lottery, per query.
-    val loaded = loadAtSuite > 2.0
     val nReps = 9
     // Mid-suite re-gate (BENCH_r18.json: its queries started at load
     // 1.5-2.1, their `query_load`, after a suite start at 1.5 — contention
@@ -162,8 +163,7 @@ object Bench {
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       val times = reps.map(_._1).sorted
-      val median = times(times.length / 2)
-      (q.name, times.min, median, reps.forall(_._2),
+      QueryRun(q.name, times.min, times(times.length / 2), reps.forall(_._2),
         (times.max - times.min) / times.min, qLoad, extLoad)
     }
     // Scaling exponent (r17 judge task 6): time every headline query at
@@ -175,8 +175,8 @@ object Bench {
     // where data cost dominates and a superlinear operator shows
     // slope > 1 while the biggest shipped SF is still 0.1).
     // Runs AFTER the timed loop so headline totals stay round-comparable.
-    val scalingJson =
-      if (sys.env.get("SPARK_GRAFT_SCALING").contains("off")) ""
+    val scaling =
+      if (sys.env.get("SPARK_GRAFT_SCALING").contains("off")) Nil
       else {
         def sfOf(dir: String): Option[Double] =
           "sf([0-9.]+)/?$".r.findFirstMatchIn(dir)
@@ -205,47 +205,11 @@ object Bench {
               (sfOf(d).get, times)
             }
             // main-SF anchor: only queries whose timed loop succeeded
-            val mainTimes = results.filter(_._4).map(r => r._1 -> r._2).toMap
-            val pts = (smallPts :+ (sfMain, mainTimes)).sortBy(_._1)
-            val sfsArr = pts.map(p => f"${p._1}%s").mkString("[", ",", "]")
-            val names = headline.map(_.name)
-            val timesJson = names.map { n =>
-              "\"" + n + "\":" + pts.map(p =>
-                p._2.get(n).map(v => f"$v%.3f").getOrElse("null"))
-                .mkString("[", ",", "]")
-            }.mkString("{", ",", "}")
-            val (loSf, loT) = pts(pts.length - 2)
-            val (hiSf, hiT) = pts.last
-            val slopeJson = names.map { n =>
-              (loT.get(n), hiT.get(n)) match {
-                case (Some(a), Some(b)) if a > 0 && b > 0 =>
-                  val sl = math.log(b / a) / math.log(hiSf / loSf)
-                  "\"" + n + f"\":$sl%.2f"
-                case _ => "\"" + n + "\":null"
-              }
-            }.mkString("{", ",", "}")
-            s""","scaling":{"sfs":$sfsArr,"reps_small_sf":3,"times":$timesJson,"slope_top_decade":$slopeJson}"""
-          case _ => ""
+            val mainTimes = results.filter(_.ok).map(r => r.name -> r.min).toMap
+            (smallPts :+ (sfMain, mainTimes)).sortBy(_._1)
+          case _ => Nil
         }
       }
-    val qs = results.map { case (k, v, _, ok, _, _, _) =>
-      if (ok) "\"" + k + f"\":$v%.3f" else "\"" + k + "\":null"
-    }.mkString("{", ",", "}")
-    val medians = results.map { case (k, _, m, ok, _, _, _) =>
-      if (ok) "\"" + k + f"\":$m%.3f" else "\"" + k + "\":null"
-    }.mkString("{", ",", "}")
-    val spreads = results.map { case (k, _, _, _, sp, _, _) =>
-      "\"" + k + f"\":$sp%.2f"
-    }.mkString("{", ",", "}")
-    val qloads = results.map { case (k, _, _, _, _, ld, _) =>
-      "\"" + k + f"\":$ld%.1f"
-    }.mkString("{", ",", "}")
-    val qExtLoads = results.map { case (k, _, _, _, _, _, el) =>
-      "\"" + k + f"\":$el%.1f"
-    }.mkString("{", ",", "}")
-    val errors = results.filterNot(_._4).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val total = results.filter(_._4).map(_._2).sum
-    val totalMedian = results.filter(_._4).map(_._3).sum
     // Per-phase micro-batch latency attribution (the p50 went 118 -> 168 ms
     // from BENCH_r16.json to BENCH_r17.json while continuous stayed at
     // 0-1 ms — the phase medians say WHERE the per-batch time
@@ -254,20 +218,7 @@ object Bench {
     // bookkeeping, unattributed = trigger scheduling overhead the
     // durationMs map doesn't itemize). Medians come from the SAME rep the
     // reported histogram came from (the min-p50 window).
-    def phaseJsonOf(key: String, r: Option[LatencyReading]): String =
-      r.map(_.phases).filter(_.nonEmpty).fold("") { ph =>
-        val fields = ph.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + s"\":$v" }.mkString("{", ",", "}")
-        s""","$key":$fields"""
-      }
-    val asyncJson = latencyAsync.map(_.hist).fold("")(h =>
-      f""","latency_async_ms_p50":${h.p50Ms},"latency_async_ms_p95":${h.p95Ms},"latency_async_ms_p99":${h.p99Ms},"latency_async_ms_mean":${h.meanMs}%.1f,"latency_async_ms_p50_spread":$latencyAsyncSpread%.2f""") +
-      phaseJsonOf("latency_async_phase_ms", latencyAsync)
-    val lat = latency.fold("")(h =>
-      f""","latency_ms_p50":${h.p50Ms},"latency_ms_p95":${h.p95Ms},"latency_ms_p99":${h.p99Ms},"latency_ms_mean":${h.meanMs}%.1f,"latency_ms_p50_spread":$latencySpread%.2f""") +
-      phaseJsonOf("latency_phase_ms", latencyReading) + asyncJson +
-      latencyCont.fold("")(h =>
-        f""","latency_continuous_ms_p50":${h.p50Ms},"latency_continuous_ms_p95":${h.p95Ms},"latency_continuous_ms_p99":${h.p99Ms},"latency_continuous_ms_mean":${h.meanMs}%.1f,"latency_continuous_ms_p50_spread":$latencyContSpread%.2f""")
+    //
     // Self-reported contention telemetry: round 8's driver-captured bench
     // regressed ~2x purely from concurrent load on the box (a clean rerun
     // of identical code was the best round on record), and the artifact
@@ -275,19 +226,14 @@ object Bench {
     // (from the JVM's own OS bean) so a contaminated sample is detectable
     // from the JSON itself: on a quiet 32-thread box load_avg should be
     // ~the bench's own parallelism; >>cpus means a shared box.
-    val loadEnd = osLoadAvg()
     // cpus as a JSON number: the env value may be "*" (local[*]) — resolve
     // that to the actual core count rather than emitting invalid JSON
     val cpusNum = scala.util.Try(cpus.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    val load =
-      f""","load_avg_start":$loadStart%.1f,"load_avg_end":$loadEnd%.1f,"cpus":$cpusNum"""
-    val noise =
-      if (loaded)
-        f""","noise_note":"load_avg $loadAtSuite%.1f at suite start (after the gate): shared-box contention; per-query times are min-of-$nReps but may still be inflated — compare totals across rounds with the per-query load column, not at face value""""
-      else ""
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_median":$totalMedian%.3f,"queries":$qs,"queries_median":$medians,"spread":$spreads,"query_load":$qloads,"query_ext_load":$qExtLoads,"load_gate_waited_sec":$gateWaited,"regate_waited_sec":$regateWaited,"load_at_suite_start":$loadAtSuite%.1f,"reps":$nReps,"errors":$errors,"stream_rows_per_sec":$streamRps%.0f,"stream_rows_per_sec_spread":$streamRpsSpread%.2f$lat$load$noise$scalingJson,"sf":"$sfDir"}"""
+    val json = compact(render(record(Run(sfDir, results, nReps, gateWaited,
+      regateWaited, loadAtSuite, streamRps, streamRpsSpread,
+      latencyReading.map(_ -> latencySpread), latencyAsync.map(_ -> latencyAsyncSpread),
+      latencyCont.map(_ -> latencyContSpread), loadStart, osLoadAvg(), cpusNum, scaling))))
     // Evidence must be unlosable (round-2 lesson: the TaskKilled WARN flood
     // after solThroughput's q.stop() pushed the metric line out of the
     // harness's captured log tail). So: persist to a file FIRST, then stop
@@ -296,7 +242,84 @@ object Bench {
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
     println(json)
-    if (results.exists(!_._4)) sys.exit(1)
+    if (results.exists(!_.ok)) sys.exit(1)
+  }
+
+  /** One headline query's timed reps: min and median seconds, whether
+    * every rep succeeded, (max − min) / min, and the 1-min load average
+    * (whole box, and external to this JVM) at its start. */
+  private[graft] final case class QueryRun(name: String, min: Double, median: Double,
+      ok: Boolean, spread: Double, load: Double, extLoad: Double)
+
+  /** Everything the result line reports. Each latency reading comes with
+    * its p50 spread over the reps; `scaling` holds (sf, seconds per query)
+    * points in ascending sf, empty when the scaling leg did not run. */
+  private[graft] final case class Run(sfDir: String, queries: Seq[QueryRun], reps: Int,
+      gateWaitedSec: Long, regateWaitedSec: Long, loadAtSuite: Double,
+      streamRps: Double, streamRpsSpread: Double,
+      latency: Option[(LatencyReading, Double)],
+      latencyAsync: Option[(LatencyReading, Double)],
+      latencyCont: Option[(graft.ops.AppRegistry.LatencyHistogram, Double)],
+      loadStart: Double, loadEnd: Double, cpus: Int,
+      scaling: Seq[(Double, Map[String, Double])])
+
+  /** `v` with `places` decimals (half up, as `%.Nf` wrote them, but in no
+    * locale); null when not finite. */
+  private def dec(v: Double, places: Int): JValue =
+    if (v.isNaN || v.isInfinite) JNull
+    else JDecimal(BigDecimal(v).setScale(places, BigDecimal.RoundingMode.HALF_UP))
+
+  /** The bench's one JSON line: key names, key order and each number's
+    * decimal places are those of the committed BENCH_r*.json files. */
+  private[graft] def record(r: Run): JObject = {
+    def perQuery(f: QueryRun => JValue): JObject = JObject(r.queries.map(q => q.name -> f(q)): _*)
+    def hist(key: String, h: graft.ops.AppRegistry.LatencyHistogram, spread: Double): JObject =
+      (s"${key}_p50" -> h.p50Ms) ~ (s"${key}_p95" -> h.p95Ms) ~ (s"${key}_p99" -> h.p99Ms) ~
+        (s"${key}_mean" -> dec(h.meanMs, 1)) ~ (s"${key}_p50_spread" -> dec(spread, 2))
+    def reading(key: String, phaseKey: String, lr: Option[(LatencyReading, Double)]): JObject =
+      lr.fold(JObject()) { case (rd, spread) =>
+        hist(key, rd.hist, spread) ~ (
+          if (rd.phases.isEmpty) JObject()
+          else JObject(phaseKey -> JObject(rd.phases.toSeq.sorted.map { case (k, v) => k -> JLong(v) }: _*)))
+      }
+    val names = r.queries.map(_.name)
+    val scaling = r.scaling match {
+      case pts if pts.size >= 2 =>
+        val ((loSf, loT), (hiSf, hiT)) = (pts(pts.length - 2), pts.last)
+        JObject("scaling" ->
+          (("sfs" -> pts.map(p => JDouble(p._1))) ~ ("reps_small_sf" -> 3) ~
+            ("times" -> JObject(names.map(n => n -> JArray(pts.map(_._2.get(n).fold[JValue](JNull)(dec(_, 3))).toList)): _*)) ~
+            ("slope_top_decade" -> JObject(names.map(n => n -> ((loT.get(n), hiT.get(n)) match {
+              case (Some(a), Some(b)) if a > 0 && b > 0 => dec(math.log(b / a) / math.log(hiSf / loSf), 2)
+              case _ => JNull
+            })): _*))))
+      case _ => JObject()
+    }
+    val ok = r.queries.filter(_.ok)
+    ("metric" -> "total") ~ ("value" -> dec(ok.map(_.min).sum, 3)) ~ ("unit" -> "sec") ~
+      ("total_median" -> dec(ok.map(_.median).sum, 3)) ~
+      ("queries" -> perQuery(q => if (q.ok) dec(q.min, 3) else JNull)) ~
+      ("queries_median" -> perQuery(q => if (q.ok) dec(q.median, 3) else JNull)) ~
+      ("spread" -> perQuery(q => dec(q.spread, 2))) ~
+      ("query_load" -> perQuery(q => dec(q.load, 1))) ~
+      ("query_ext_load" -> perQuery(q => dec(q.extLoad, 1))) ~
+      ("load_gate_waited_sec" -> r.gateWaitedSec) ~ ("regate_waited_sec" -> r.regateWaitedSec) ~
+      ("load_at_suite_start" -> dec(r.loadAtSuite, 1)) ~ ("reps" -> r.reps) ~
+      ("errors" -> r.queries.filterNot(_.ok).map(_.name)) ~
+      ("stream_rows_per_sec" -> dec(r.streamRps, 0)) ~
+      ("stream_rows_per_sec_spread" -> dec(r.streamRpsSpread, 2)) ~
+      reading("latency_ms", "latency_phase_ms", r.latency) ~
+      reading("latency_async_ms", "latency_async_phase_ms", r.latencyAsync) ~
+      r.latencyCont.fold(JObject()) { case (h, spread) => hist("latency_continuous_ms", h, spread) } ~
+      ("load_avg_start" -> dec(r.loadStart, 1)) ~ ("load_avg_end" -> dec(r.loadEnd, 1)) ~
+      ("cpus" -> r.cpus) ~
+      (if (r.loadAtSuite > 2.0)
+         JObject("noise_note" -> JString(("load_avg %.1f at suite start (after the gate): " +
+           "shared-box contention; per-query times are min-of-%d but may still be inflated — " +
+           "compare totals across rounds with the per-query load column, not at face value")
+           .formatLocal(java.util.Locale.ROOT, r.loadAtSuite, r.reps)))
+       else JObject()) ~
+      scaling ~ ("sf" -> r.sfDir)
   }
 
   /** Load-gate knobs: the suite waits (up to the cap) for the 1-min load
@@ -343,7 +366,7 @@ object Bench {
   /** One micro-batch latency rep: the percentile histogram plus the
     * per-phase medians (ms) of the SAME probe window, so the reported
     * p50 and its attribution come from one scheduling context. */
-  private final case class LatencyReading(
+  private[graft] final case class LatencyReading(
       hist: graft.ops.AppRegistry.LatencyHistogram,
       phases: Map[String, Long])
 

@@ -49,12 +49,6 @@ object Engine {
     * listener. Idempotent; the public facades that take a caller's session
     * call it once at entry. */
   def install(spark: SparkSession): Unit = synchronized {
-    installPlanning(spark)
-    val logger = graft.operators.GraphOps.DropLogger
-    Pin.memo(spark, logger)(spark.listenerManager.register(logger))
-  }
-
-  private def installPlanning(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     new graft.plans.GraftExtensions().functions.foreach { case (id, info, builder) =>
       // skip present names: re-registering logs a "replaced" WARN
@@ -63,20 +57,7 @@ object Engine {
     val rule = graft.plans.ProximityJoin
     if (!spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    val logger = graft.operators.GraphOps.DropLogger
+    Pin.memo(spark, logger)(spark.listenerManager.register(logger))
   }
-
-  /** A sibling of `spark` (same SparkContext and cache) with AQE off, for
-    * the graph-ANN hop loop: a frame rooted in it plans without AQE while
-    * `spark`'s conf is never written. Created on first use, once per
-    * session, from a snapshot of `spark`'s runtime conf (later changes do
-    * not reach it); its executions are reported to `spark`'s listeners. */
-  private[graft] def fixedPlanSession(spark: SparkSession): SparkSession =
-    Pin.memo(spark, "fixed-plan-session") {
-      val sib = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) sib.conf.set(k, v) }
-      sib.conf.set("spark.sql.adaptive.enabled", "false")
-      installPlanning(sib)
-      sib.listenerManager.register(new org.apache.spark.sql.graft.ReportTo(spark))
-      sib
-    }
 }

@@ -150,7 +150,7 @@ object Pin {
     if (quietly(ReleaseBlocks(rdd))) open.get.foreach(_.ticks -= rdd)
   }
 
-  /** Materialize a long-lived serving structure (index adjacency, keyed
+  /** Materialize a long-lived serving structure (index adjacency,
     * corpus, entry/query frames — built once, searched many times). With a
     * reliable checkpoint dir configured (`SparkContext.setCheckpointDir`)
     * it is written there and survives executor loss; otherwise it is an

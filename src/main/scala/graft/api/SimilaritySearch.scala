@@ -35,7 +35,7 @@ object SimilaritySearch {
     * fixed hops = 5 and stayed 0.725 at beam 16 → 64, but recovered to
     * 0.950 at hops = 8 and 1.000 at hops = 12 = the derived value.
     * Exposed for specs (the derivation is part of the public contract).
-    * Each hop costs two key-lookup joins, so serving latency scales with
+    * Each hop costs two key lookups, so serving latency scales with
     * the derived value — pin `hops` explicitly to trade recall for
     * latency. */
   private[graft] def derivedHops(n: Long): Int =
@@ -247,12 +247,13 @@ object SimilaritySearch {
     // rename + checkpoint + REBASE: a localCheckpoint of a renamed frame
     // preserves alias constraints (vec_id := <user id col>) whose
     // references dangle once the original attributes are gone, and
-    // Catalyst's Union constraint rewrite throws on them when the beam
-    // loop unions frames derived from this corpus (the registry build
-    // never renames before checkpointing, so only the facade needs this)
+    // Catalyst's Union constraint rewrite throws on them when the build
+    // unions frames derived from this corpus (the kNN and hub edges below;
+    // the registry build never renames before checkpointing, so only the
+    // facade needs this). The corpus is the index's serving copy.
     val c = {
       val lc = named0.withColumn("vec_id", col("vec_id").cast("long"))
-        .transform(graft.Pin.tick)
+        .transform(graft.Pin.serving)
       spark.createDataFrame(lc.rdd, lc.schema)
     }
     // the corpus count is a cheap scan of the just-checkpointed blocks
@@ -305,61 +306,29 @@ object SimilaritySearch {
     // symmetrize at BUILD time (both edge directions + dedup) so every
     // search is pure point lookups — graphAnnSearch must run zero
     // edge-list shuffles per call (r15 review: the symmetrize used to
-    // re-run per search). Then rebase onto the materialized RDD:
-    // localCheckpoint alone preserves the plan's constraint set, and the
-    // alias lineage (vec_a := vec_id) in those constraints trips
-    // Catalyst's Union constraint rewrite downstream ("key not found:
-    // vec_id#N"); createDataFrame over the checkpointed RDD yields a
-    // constraint-free relation with the same blocks.
+    // re-run per search).
     // materialize the half-edge list BEFORE self-unioning with its
     // reverse: a live `half.union(half.select(...))` computes the kNN
     // window-join and hub explode once per union branch — the most
     // expensive build stage doubled (r15 review)
     val half = graft.Pin.tick(knn.union(lnk))
-    // serving layout (r18): the symmetrized adjacency and the corpus are
-    // checkpointed ON their lookup keys (hash-partitioned + sorted within
-    // partitions, partition count derived from the structure's size — the
-    // registry's Similarity.servingParts discipline), so every search hop
-    // exchanges only beam-sized frames; the index itself never re-shuffles.
-    // The keyed re-layout runs AFTER the constraint-killing rebase, so the
-    // second checkpoint carries no renamed lineage for the Union rewrite
-    // to trip on.
-    // width probe skips null embeddings (r18 advisor: a null FIRST row
-    // used to silently default dim=64 and undersize cKeyed by up to 16×
-    // for wide corpora — sizing only, never correctness)
-    val dim = c.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()
-      .headOption.map(_.getInt(0)).filter(_ > 0).getOrElse(64)
-    val adj = {
-      val lc = half
-        .union(half.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
-        .distinct().transform(graft.Pin.tick)
-      spark.createDataFrame(lc.rdd, lc.schema)
-        .repartition(
-          graft.operators.Similarity.servingParts(
-            n * (shortLinks + longLinks) * 2, 24), col("vec_a"))
-        .sortWithinPartitions(col("vec_a"))
-        .transform(graft.Pin.serving)
-    }
-    // the two LONG-LIVED serving structures go through Pin.serving: with a
-    // reliable checkpoint dir configured on the session they survive
-    // executor loss (r19; build intermediates above stay localCheckpoint —
-    // losing one only fails the build call itself, which is rerunnable)
-    val cKeyed = c
-      .repartition(
-        graft.operators.Similarity.servingParts(n, 8 + 4L * dim),
-        col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .transform(graft.Pin.serving)
-    GraphAnnIndex(adj, cKeyed, entries, n)
+    // the two LONG-LIVED serving structures (the corpus `c` above and
+    // this adjacency) go through Pin.serving: with a reliable checkpoint
+    // dir configured on the session they survive executor loss (r19;
+    // build intermediates stay localCheckpoint — losing one only fails
+    // the build call itself, which is rerunnable)
+    val adj = half
+      .union(half.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
+      .distinct().transform(graft.Pin.serving)
+    GraphAnnIndex(adj, c, entries, n)
   }
 
   /** Beam search over a [[graphAnnBuild]] index — identical loop to the
     * registry's ann_graph_topk serving path (synchronous
     * expand-score-prune, (cosine desc, id) total order): beam state is
     * queries × `beamWidth` rows regardless of corpus size; each hop is
-    * two key-lookup joins against the checkpointed index and one
-    * beam-sized window; the corpus is never shuffled. Recall follows the
+    * two key lookups against the checkpointed index and a beam-sized
+    * merge on the driver; the corpus is never shuffled. Recall follows the
     * registry's measured (beam × links) sweep (ann_graph_param_sweep) —
     * and, as the corpus grows, the HOP count (see [[derivedHops]]): the
     * r16 fixed hops = 5 held recall 1.000 at n = 20k but decayed to
@@ -367,9 +336,8 @@ object SimilaritySearch {
     * clamp(log₂(n) − 6, 5, 16) from the index size recorded at build
     * time, the probedSalt/derivedHubs discipline applied to the last
     * fixed serving constant. Pass an explicit positive `hops` to pin it.
-    * The hops plan without AQE on a sibling of `spark` that snapshots its
-    * runtime conf at the session's first search (later changes do not
-    * reach them); `spark`'s listeners see the hops' executions.
+    * The beam lives on the driver; every hop runs on `spark` itself, so
+    * its conf and listeners apply as to any other query.
     * @return (q_id, vec_id, cos_sim, rank) top-k per query */
   def graphAnnSearch(spark: SparkSession, index: GraphAnnIndex,
       queries: DataFrame, k: Int = 10, beamWidth: Int = 16,
@@ -382,20 +350,20 @@ object SimilaritySearch {
         "(0 would return silently empty results; the beam broadcasts " +
         "per hop, so width multiplies the broadcast volume)")
     graft.Engine.install(spark)
-    // the beam side broadcasts every hop (that is WHY search shuffles
-    // zero bytes — see Similarity.beamOverAdj), so the PER-HOP BROADCAST
-    // VOLUME — queries × beamWidth × links candidate rows, plus the
-    // q_emb-carrying query frame itself — must stay broadcast-sized.
+    // the beam's ids and candidates broadcast every hop and the query
+    // embeddings once per search (that is WHY search shuffles zero bytes
+    // — see Similarity.beamOverAdj), so the BROADCAST VOLUME — queries ×
+    // beamWidth × links candidate pairs, plus the query embeddings — must
+    // stay broadcast-sized.
     // The cap therefore scales DOWN with both beamWidth and the
     // embedding width (r17 second review: a count-only guard was
     // defeated by beamWidth = 64 × 1024-float embeddings — exactly the
     // opaque 8 GB abort it claimed to prevent): MaxSearchQueries is
     // calibrated at beam 16 / dim 64, and wider settings shrink the
     // admitted batch proportionally — but the beam-scaling never ADMITS
-    // MORE than the calibrated ceiling, because the q_emb-carrying query
-    // frame is part of the per-hop broadcast and does not shrink with
-    // beamWidth (r17 advisor: beamWidth = 1 must not re-open a 16×
-    // query-frame broadcast). Refuse with a named contract error;
+    // MORE than the calibrated ceiling, because the query embeddings
+    // broadcast too and do not shrink with beamWidth (r17 advisor:
+    // beamWidth = 1 must not re-open a 16× query-embedding broadcast). Refuse with a named contract error;
     // serving is batched by nature — chunk the query frame and union.
     val dim = queries.limit(1).collect().headOption
       .flatMap(r => scala.util.Try(r.getSeq[Any](1).length).toOption)
@@ -412,19 +380,9 @@ object SimilaritySearch {
         s"frame (e.g. by pmod(hash(id), cast(ceil(n / $cap.0) as int))) " +
         "and union the results")
     val nHops = if (hops == 0) derivedHops(index.n) else hops
-    // join strategy from the build-time corpus size: a small index keeps
-    // Spark's own unhinted plan (measured fastest at test scale); past
-    // the threshold the per-hop BEAM side is forced broadcast (the only
-    // shape that survives a corpus-sized edge list — unhinted re-shuffles
-    // the whole adjacency every hop) — see Similarity.beamOverAdj for the
-    // measured story
     Similarity.beamOverAdj(spark, index.adjacency, index.corpus,
       index.entries, named(queries, "q_id", "q_emb"), beamWidth, nHops, k,
-      excludeSelf = false, smallIndex = index.n <= SmallIndexMaxRows,
-      // beam row bound for the loop's explicit exchange widths (the hop
-      // loop runs AQE-off, so partition counts must be size-derived, not
-      // coalesced): nQ was just counted for the batch-cap check above
-      beamRows = math.max(1L, nQ) * beamWidth)
+      excludeSelf = false)
   }
 
   /** Per-call query-batch ceiling for [[graphAnnSearch]]: the beam
@@ -434,15 +392,6 @@ object SimilaritySearch {
     * ids. Larger workloads chunk the query frame; each chunk reuses the
     * same built index. */
   val MaxSearchQueries: Int = 262144
-
-  /** Corpus-size threshold below which [[graphAnnSearch]] keeps Spark's
-    * unhinted join plan (measured fastest at test scale — hints only
-    * subtract there). Above it, the per-hop re-shuffle of the n × 14-row
-    * adjacency that the unhinted plan chooses becomes the serving cost
-    * (measured: 0.88 GiB at n = 200k), so the beam side is forced
-    * broadcast instead. 2¹⁶ keeps the unhinted plan's worst case at
-    * ~14 MB of adjacency per hop. */
-  val SmallIndexMaxRows: Long = 65536L
 
   /** PRODUCT-QUANTIZATION asymmetric-distance top-k (the ADC of Jégou et
     * al. 2011) over arbitrary frames — the compression route: the corpus

@@ -50,6 +50,8 @@ object CurateCorpus {
         .select(col("doc_id")), "doc_id")
       .transform(graft.Pin.tick)
     val n1 = quality.count()
+    // each stage reads only the one before it: drop a tick once the next exists
+    graft.Pin.drop(docs)
 
     // 2. exact dedup: one keeper per content digest (lowest id)
     val exact = quality
@@ -57,6 +59,7 @@ object CurateCorpus {
         .select(col("keep_id").as("doc_id")), "doc_id")
       .transform(graft.Pin.tick)
     val n2 = exact.count()
+    graft.Pin.drop(quality)
 
     // 3. near-dup dedup: MinHash+LSH clusters, keep each cluster's min id
     val nearDrops = DedupAlgorithms.nearDupClusters(exact)
@@ -64,6 +67,7 @@ object CurateCorpus {
     val kept = exact.join(nearDrops, Seq("doc_id"), "left_anti")
       .transform(graft.Pin.tick)
     val n3 = kept.count()
+    graft.Pin.drop(exact)
 
     // 4. PII scrub: redact emails/IPs in the survivors BEFORE any tokens
     // are derived (cardinality-preserving — listed in the attrition report
@@ -74,6 +78,7 @@ object CurateCorpus {
     val scrubbed = TextAnalytics.piiScrub(kept)
       .select(col("doc_id"), col("scrubbed").as("text"))
       .transform(graft.Pin.tick)
+    graft.Pin.drop(kept)
 
     // 5-7. tokenize (BPE trained on the scrubbed survivors), pack, shard —
     // all cardinality-preserving: the manifest carries every survivor once

@@ -1840,10 +1840,9 @@ object GraphOps {
   }
 
   /** Broadcast-hint `df` when its EXACT row count is under
-    * [[BrandesBroadcastMaxRows]] — the size-aware discipline
-    * Similarity.beamOverAdj uses for the beam side, applied to Brandes'
-    * state-sized frames (checkpointed frames report no stats, so the
-    * optimizer can't make this call itself). */
+    * [[BrandesBroadcastMaxRows]]: Brandes' state-sized frames are
+    * checkpointed, and checkpointed frames report no stats, so the
+    * optimizer can't make this call itself. */
   private def hintSmall(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BrandesBroadcastMaxRows) broadcast(df) else df
 

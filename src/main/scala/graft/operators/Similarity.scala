@@ -1,9 +1,15 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Similarity search over the `embeddings` table (ArrayType(FloatType), 64-d).
   *
@@ -1091,32 +1097,19 @@ object Similarity {
     * long-link pool (j = 1..[[MaxLongLinks]] — a combo takes the j <=
     * links prefix), entry points, query set, and the corpus frame. */
   private case class BeamContext(dir: String, knn: DataFrame, lnkAll: DataFrame,
-      ent: DataFrame, q: DataFrame, e: DataFrame, n: Long)
+      ent: DataFrame, q: DataFrame, e: DataFrame)
 
-  /** The memoized serving adjacency for a links prefix, laid out on its
-    * lookup key ([[servingParts]] partitions derived from the edge count:
-    * n × (3 kNN + links) half-edges, symmetrized). The symmetrize/distinct
-    * shuffle is the only corpus-edge-sized work left at search time, and
-    * it's links-dependent but query-independent — so repeated searches
-    * (bench reps, the 3 sweep cells sharing a links value) reuse the
-    * blocks instead of re-shuffling the edge list per call. */
+  /** The memoized serving adjacency for a links prefix (n × (3 kNN +
+    * links) half-edges, symmetrized). The symmetrize/distinct shuffle is
+    * the only corpus-edge-sized work left at search time, and it's
+    * links-dependent but query-independent — so repeated searches (bench
+    * reps, the 3 sweep cells sharing a links value) reuse the blocks
+    * instead of re-shuffling the edge list per call. */
   private def adjFor(s: SparkSession, ctx: BeamContext, links: Int): DataFrame =
     Pin.memo(s, ("graph-ann-adj", ctx.dir, links))(
       symmetrizedAdj(ctx.knn.union(
         ctx.lnkAll.filter(col("j") <= links)
-          .select(col("vec_a"), col("vec_b"))),
-        servingParts(ctx.n * (3 + links) * 2, 24)))
-
-  /** Partition count for a checkpointed serving structure, derived from
-    * its estimated size (~64 MB per partition, the AQE advisory default):
-    * the registry's 2k-vector corpora collapse to one partition (stage
-    * scheduling floor, not 32 near-empty tasks per hop) while a
-    * billion-row index spreads over thousands — scale-adaptive, never a
-    * constant tuned to either local mode or a cluster. */
-  private[graft] def servingParts(rows: Long, bytesPerRow: Long): Int = {
-    val target = 64L << 20
-    math.max(1L, math.min(1L << 20, (rows * bytesPerRow + target - 1) / target)).toInt
-  }
+          .select(col("vec_a"), col("vec_b")))))
 
   /** Largest long-link count any parameterization uses — the sweep's
     * upper bound; [[LongLinks]] <= this. */
@@ -1133,22 +1126,12 @@ object Similarity {
   /** Build the graph-ANN context (the expensive, combo-independent part:
     * k-means quantizer + kNN graph). */
   private def beamContextImpl(s: SparkSession, dir: String): BeamContext = {
-    val (knn, lnkAll, ent, q, eSmall, n) = beamBuildFrames(s, dir)
-    // the corpus lookup table is checkpointed ON its lookup key (hash by
-    // vec_id, sorted within partitions, size-derived partition count): the
-    // per-hop scoring join then only ever exchanges the beam-sized
-    // candidate frame — the index side ships zero bytes per hop at every
-    // scale (r18: the unkeyed layout re-exchanged + re-sorted both
-    // checkpointed sides on every hop of every search)
-    val eKeyed = eSmall.repartition(servingParts(n, 8 + 4L * Dim), col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-    // q and ent are tiny but referenced EVERY hop (q is broadcast into each
-    // scoring join): checkpointed once here so a search never re-scans
-    // parquet for them per hop (r18: each hop's query re-read the
-    // embeddings footer + filter for the 8-row query frame)
+    val (knn, lnkAll, ent, q, eSmall) = beamBuildFrames(s, dir)
+    // q and ent are tiny but read by EVERY search: checkpointed once here
+    // so a search never re-scans parquet for them (r18: each hop's query
+    // re-read the embeddings footer + filter for the 8-row query frame)
     BeamContext(dir, Pin.serving(knn), Pin.serving(lnkAll),
-      Pin.serving(ent), Pin.serving(q),
-      Pin.serving(eKeyed), n)
+      Pin.serving(ent), Pin.serving(q), Pin.serving(eSmall))
   }
 
   /** The un-checkpointed build frames (knn edges, j-tagged long-link
@@ -1159,7 +1142,7 @@ object Similarity {
     * the whole table). Production path checkpoints these via
     * [[beamContextImpl]]. */
   private[graft] def beamBuildFrames(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Long) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = t(s, dir, "embeddings")
     // kNN edges within TRAINED cells (the ann_ivf_trained quantizer), not
     // the metadata label cells ann_knn_graph demonstrates: a navigable
@@ -1200,27 +1183,35 @@ object Similarity {
       .select(col("vec_id"))
     val q = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // the per-hop scoring joins probe the corpus once per hop: serve the
-    // projected (vec_id, embedding) pairs from checkpointed blocks, not a
-    // fresh parquet scan each hop
+    // each hop's scoring step reads the corpus: serve the projected
+    // (vec_id, embedding) pairs from checkpointed blocks, not a fresh
+    // parquet scan each hop
     val eSmall = e.select(col("vec_id"), col("embedding"))
-    (knn, lnkAll, ent, q, eSmall, n)
+    (knn, lnkAll, ent, q, eSmall)
   }
 
   /** Symmetrize + materialize an (vec_a, vec_b) half-edge list into the
-    * serving adjacency, checkpointed ON its lookup key: hash-partitioned
-    * by vec_a (`parts` partitions, derived from the edge count by the
-    * caller) and sorted within partitions. Factored so [[beamRun]] can
-    * memoize the result per links prefix ([[adjFor]]) instead of
-    * re-shuffling it on every search call — with the keyed layout the
-    * per-hop neighbor-expansion join exchanges only the beam keys; the
-    * edge list itself never moves again at any scale. */
-  private def symmetrizedAdj(adjHalf: DataFrame, parts: Int): DataFrame =
+    * serving adjacency. Factored so [[beamRun]] can memoize the result per
+    * links prefix ([[adjFor]]) instead of re-shuffling it on every search
+    * call: each hop looks the beam's ids up in it through a broadcast,
+    * so the edge list itself never moves again at any scale. */
+  private def symmetrizedAdj(adjHalf: DataFrame): DataFrame =
     adjHalf
       .union(adjHalf.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
       .distinct()
-      .repartition(parts, col("vec_a")).sortWithinPartitions(col("vec_a"))
       .transform(Pin.serving)
+
+  /** A scored candidate: (query index, vec_id, cos_sim). */
+  private type Hit = (Int, Long, java.lang.Double)
+
+  /** Spark's order for (cos_sim desc, vec_id): under desc, nulls sort
+    * last and NaN, which graft_cosine gives a zero vector, first. */
+  private val beamOrder: Ordering[Hit] = (a, b) => {
+    val bySim =
+      if (a._3 == null || b._3 == null) java.lang.Boolean.compare(a._3 == null, b._3 == null)
+      else SQLOrderingUtil.compareDoubles(b._3, a._3)
+    if (bySim != 0) bySim else java.lang.Long.compare(a._2, b._2)
+  }
 
   /** The frame-generic synchronous beam search over a PREBUILT
     * symmetrized adjacency — [[beamRun]]'s loop, shared with the public
@@ -1229,135 +1220,70 @@ object Similarity {
     * shuffles). `adj` is the symmetrized (vec_a, vec_b) edge list
     * ([[symmetrizedAdj]] builds one from a half-edge list); `e` the
     * (vec_id, embedding) corpus; `ent` the (vec_id) entry points; `q` the
-    * (q_id, q_emb) query set. 100 TB shape: beam state is queries ×
-    * beamWidth rows, each hop two key-lookup joins + one beam-sized
-    * window, corpus never shuffled. */
+    * (q_id, q_emb) query set. Ids are longs.
+    *
+    * The beam — at most queries × beamWidth rows — lives on the driver.
+    * Each hop is two collects on `s`, one job each: the adjacency rows of
+    * the beam's ids (expand), then the corpus rows of the candidates not
+    * yet in the beam, scored against their queries (score). What the
+    * driver holds reaches the executors as a broadcast variable, which
+    * takes no job, where a broadcast join of a driver-built frame takes
+    * one per side. The driver merges the scored pairs into the beam and
+    * keeps each query's best beamWidth by (cos_sim desc, vec_id). No row
+    * of the index is exchanged at any corpus size, and AQE, left on, has
+    * no stage to split into extra jobs. */
   private[graft] def beamOverAdj(s: SparkSession, adj: DataFrame,
       e: DataFrame, ent: DataFrame, q: DataFrame, beamWidth: Int,
-      hops: Int, k: Int, excludeSelf: Boolean,
-      smallIndex: Boolean, beamRows: Long = 128L): DataFrame = {
-    // The hop loop materializes eagerly (one localCheckpoint per hop), so
-    // AQE turns every Exchange into its own query-stage JOB plus a
-    // re-optimization pass — r18 counted 59 jobs/59 stages for 64 TASKS
-    // per search, i.e. the whole search cost is per-stage scheduling over
-    // KB-sized frames (§2.2's many-small-blocks pathology, driver-side).
-    // Every per-hop frame is beam-bounded BY CONSTRUCTION at any corpus
-    // size (that is the point of beam search), and every exchange in the
-    // loop carries an explicit size-derived partition count, so AQE has
-    // nothing to decide here: each hop plans once and runs as ONE
-    // multi-stage job (+1 broadcast job per hop input). A Dataset plans in
-    // the session it starts from, so the loop's inputs are rooted here in
-    // `loop`, the caller's AQE-off sibling, and prune builds the beam
-    // there: the caller's conf is never written, and concurrent apps on
-    // the shared session keep AQE. Job groups are SparkContext-wide, so
-    // OpsServer kill still reaches the hop jobs. The index BUILD and the
-    // final rank assembly (rooted back in `s`) keep AQE.
-    val loop = graft.Engine.fixedPlanSession(s)
-    // the same analyzed plan in `session`: unlike a createDataFrame rebase
-    // it keeps the statistics (which pick hop 0's joins) and keyed layout
-    def rooted(session: SparkSession, df: DataFrame): DataFrame = {
-      import org.apache.spark.sql.classic.ClassicConversions._
-      new org.apache.spark.sql.classic.Dataset(session, df.queryExecution.analyzed, df.encoder)
+      hops: Int, k: Int, excludeSelf: Boolean): DataFrame = {
+    val sc = s.sparkContext
+    val shipped = mutable.Buffer.empty[Broadcast[_]]
+    def ship[T: ClassTag](v: T): Broadcast[T] = { val b = sc.broadcast(v); shipped += b; b }
+    // `df`'s rows whose id in `key` is paired with a query, once per
+    // pairing, with that query's index as `qi`
+    def fanOut(df: DataFrame, key: String, pairs: Iterable[(Int, Long)]): DataFrame = {
+      val b = ship(pairs.groupMap(_._2)(_._1).view.mapValues(_.toArray).toMap)
+      df.withColumn("qi",
+        explode(udf((id: Long) => b.value.getOrElse(id, Array.empty[Int])).apply(col(key))))
     }
-    val (adjL, eL, entL, qL) =
-      (rooted(loop, adj), rooted(loop, e), rooted(loop, ent), rooted(loop, q))
-    // Scoring-join strategy is SIZE-AWARE (r17, measured): `smallIndex`
-    // (decided by callers from the build-time n) keeps Spark's unhinted
-    // choice for the corpus-lookup join, a large index forces the
-    // candidate side broadcast (queries × beamWidth × links rows — fixed
-    // per-hop latency, zero corpus movement, the only shape that survives
-    // a corpus-sized edge list: unhinted, the checkpointed stat-less
-    // corpus re-shuffles every hop — the r17 100× tally measured 0.88 GiB
-    // of search-time shuffle against a 0.39 GiB build). The neighbor-
-    // EXPANSION join is NOT size-aware: r18's keyed-layout measurement
-    // superseded the r17 "hints only subtract" reading for it — both
-    // routes broadcast the beam keys onto the keyed adjacency (see the
-    // hop loop below). Both routes return identical rows (spec-pinned).
-    def score(cands: DataFrame): DataFrame =
-      (if (smallIndex) cands.join(eL, "vec_id")
-       else eL.join(broadcast(cands), "vec_id"))
-      .join(broadcast(qL), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(cosine("embedding", "q_emb"), 4).as("cos_sim"))
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    // the pruned beam is a tick, REBASED onto its RDD (createDataFrame
-    // over lc.rdd, in `loop`): localCheckpoint preserves the pruned plan's
-    // constraint set, and when the inputs carry renamed lineage (the
-    // facade's toDF'd user frames) those constraints can reference
-    // attributes the next hop's union no longer has — Catalyst's Union
-    // constraint rewrite then throws "key not found: vec_id#N". The rebase
-    // yields a constraint-free relation over the same blocks; the beam is
-    // queries × beamWidth rows, so the extra row boundary costs nothing.
-    //
-    // Dedup discipline (r18): the candidate dedup exchanges are KEYED so
-    // each one doubles as the clustering the next operator needs —
-    // dropDuplicates(q_id, vec_id) equals distinct() because cos_sim is a
-    // pure function of (q_id, vec_id) (route-equality spec-pinned). In
-    // prune, repartition(q_id) clusters the dedup AND the beam window
-    // (hashpartitioning on a subset of the dedup keys satisfies its
-    // ClusteredDistribution), so union→dedup→rank costs one beam-sized
-    // exchange instead of the two the old distinct()+window pair paid.
-    // Beam-sized exchange widths, derived from the caller-declared beam
-    // row bound (nQueries × beamWidth; the facade's batch cap bounds it at
-    // any scale, the registry's is 8 × 16) — explicit counts because the
-    // hop loop plans with AQE OFF (below), so nothing coalesces a
-    // default-width exchange of a KB-sized frame into one task. qParts
-    // keys the prune dedup+rank, candParts the large-route candidate
-    // dedup (candidates ≈ beam × symmetrized degree ≈ 16×).
-    val qParts = servingParts(beamRows, 48)
-    val candParts = servingParts(beamRows * 16, 24)
-    def prune(scored: DataFrame): DataFrame = scored
-      .repartition(qParts, col("q_id"))
-      .dropDuplicates("q_id", "vec_id")
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= beamWidth)
-      .select(col("q_id"), col("vec_id"), col("cos_sim"))
-      .transform(Pin.tick)
-    def rebase(lc: DataFrame): DataFrame = loop.createDataFrame(lc.rdd, lc.schema)
-    // smallIndex: adj and e come from [[symmetrizedAdj]]/[[beamContextImpl]]
-    // (or the facade's build) checkpointed ON their lookup keys, so the
-    // expansion join exchanges only the beam keys and the scoring join only
-    // the candidate frame — re-keyed here to the corpus layout's partition
-    // count so EnsureRequirements matches the two sides without moving the
-    // index. An unkeyed caller frame still plans correctly (Spark inserts
-    // the exchanges the old route always paid).
-    lazy val eParts = e.rdd.getNumPartitions
-    val descPrev = s.sparkContext.getLocalProperty("spark.job.description")
-    val beam =
-      try {
-        s.sparkContext.setJobDescription("graphann: hop 0 (entry scoring)")
-        // lc is the beam's tick, b the beam rebased onto it
-        var lc = prune(score(qL.select(col("q_id")).crossJoin(entL)))
-        var b = rebase(lc)
-        (1 to hops).foreach { h =>
-          s.sparkContext.setJobDescription(s"graphann: hop $h")
-          val beamKeys = b.select(col("q_id"), col("vec_id").as("vec_a"))
-          // expansion is the SAME shape on both routes (r18, measured): the
-          // beam keys broadcast onto the keyed adjacency — beamKeys is bounded
-          // by queries × beamWidth (the graphAnnSearch batch cap sizes exactly
-          // this frame), so the broadcast is guard-bounded at any corpus size,
-          // and the adjacency side never moves. The routes differ only in the
-          // scoring join and dedup keying below.
-          val expanded = adjL.join(broadcast(beamKeys), "vec_a")
-            .select(col("q_id"), col("vec_b").as("vec_id"))
-          val nbrs =
-            if (smallIndex)
-              expanded.repartition(eParts, col("vec_id"))
-                .dropDuplicates("q_id", "vec_id")
-            else
-              expanded.repartition(candParts, col("q_id"), col("vec_id"))
-                .dropDuplicates("q_id", "vec_id")
-          val next = prune(score(nbrs).union(b))
-          Pin.drop(lc)
-          lc = next
-          b = rebase(lc)
-        }
-        rooted(s, b)
-      } finally s.sparkContext.setJobDescription(descPrev)
-    (if (excludeSelf) beam.filter(col("vec_id") =!= col("q_id")) else beam)
-      .withColumn("rank", row_number().over(wB))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("cos_sim"), col("rank"))
+    // each query's best beamWidth hits, best first
+    def prune(hits: Iterable[Hit]): Seq[Hit] =
+      hits.groupBy(_._1).values
+        .flatMap(_.toSeq.distinctBy(_._2).sorted(beamOrder).take(beamWidth)).toSeq
+    val descPrev = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription("graphann: hop 0 (entry scoring)")
+      // a null id joins no candidate, as in the oracle
+      val qs = q.filter(col("q_id").isNotNull).select(col("q_id"), col("q_emb"))
+        .collect().distinctBy(_.get(0))
+      val qEmb = ship(qs.map(_.getSeq[Float](1)))
+      val embOf = udf((qi: Int) => qEmb.value(qi))
+      def score(cands: Iterable[(Int, Long)]): Seq[Hit] =
+        if (cands.isEmpty) Nil
+        else fanOut(e, "vec_id", cands).withColumn("q_emb", embOf(col("qi")))
+          .select(col("qi"), col("vec_id"), round(cosine("embedding", "q_emb"), 4))
+          .collect().map(r => (r.getInt(0), r.getLong(1), r.getAs[java.lang.Double](2))).toSeq
+      val entIds = ent.select(col("vec_id")).collect().map(_.getLong(0))
+      var beam = prune(score(for (qi <- qs.indices; v <- entIds) yield (qi, v)))
+      (1 to hops).foreach { h =>
+        sc.setJobDescription(s"graphann: hop $h")
+        val held = beam.map(hit => (hit._1, hit._2)).toSet
+        val nbrs = fanOut(adj, "vec_a", held).select(col("qi"), col("vec_b")).collect()
+          .map(r => (r.getInt(0), r.getLong(1))).distinct.filterNot(held)
+        beam = prune(beam ++ score(nbrs))
+      }
+      // groupBy keeps each query's hits best first
+      val ranked = beam.groupBy(_._1).toSeq.flatMap { case (qi, hits) =>
+        val id = qs(qi).get(0)
+        hits.filter(hit => !excludeSelf || id != hit._2).take(k)
+          .zipWithIndex.map { case ((_, v, sim), i) => Row(id, v, sim, i + 1) }
+      }
+      s.createDataFrame(ranked.asJava, StructType(Seq(q.schema("q_id"),
+        StructField("vec_id", LongType), StructField("cos_sim", DoubleType),
+        StructField("rank", IntegerType, nullable = false))))
+    } finally {
+      sc.setJobDescription(descPrev)
+      shipped.foreach(_.destroy())
+    }
   }
 
   /** One parameterized beam search over a prebuilt [[BeamContext]]:
@@ -1365,17 +1291,8 @@ object Similarity {
     * width and long-link count. */
   private def beamRun(s: SparkSession, ctx: BeamContext,
       beamWidth: Int, links: Int): DataFrame =
-    // smallIndex = true EXPLICITLY (the flag has no default — r17 second
-    // review: a silent default let callers inherit the scale-unsafe
-    // route): the registry corpora are test-SF-sized by construction
-    // (≤ 2k vectors; the DuckDB oracle unrolls the identical plan), and
-    // deriving the flag here would cost a count() job during plan
-    // construction, which the registry keeps job-free. Corpora past
-    // SmallIndexMaxRows go through the public facade, which derives the
-    // flag from the build-time n.
     beamOverAdj(s, adjFor(s, ctx, links),
-      ctx.e, ctx.ent, ctx.q, beamWidth, BeamHops, 10, excludeSelf = true,
-      smallIndex = true)
+      ctx.e, ctx.ent, ctx.q, beamWidth, BeamHops, 10, excludeSelf = true)
 
   /** The Spark beam search shared by [[annGraphTopK]] and
     * [[annGraphRecall]]: returns the final (q_id, vec_id, cos_sim, rank)
@@ -1396,12 +1313,12 @@ object Similarity {
     * best, so a round can only improve the beam), the classic guarantee
     * beam search gives without a visited set.
     *
-    * 100 TB shape: beam state is queries × [[BeamWidth]] rows regardless
-    * of corpus size; each hop is two key-lookup joins (adjacency by node,
-    * vectors by id — both broadcast-able for a query batch) and one
-    * beam-sized window; the corpus is never shuffled and only touched by
-    * point lookups — the property that makes graph ANN the serving-side
-    * winner over scan-everything IVF when queries are selective. */
+    * 100 TB shape: beam state is queries × [[BeamWidth]] rows on the
+    * driver regardless of corpus size; each hop is two broadcast key
+    * lookups (adjacency by node, vectors by id) and a beam-sized merge on
+    * the driver; the corpus is never shuffled and only touched by point
+    * lookups — the property that makes graph ANN the serving-side winner
+    * over scan-everything IVF when queries are selective. */
   val annGraphTopK = GraftQuery(
     "ann_graph_topk",
     (s, dir) => beamSearch(s, dir).orderBy(col("q_id"), col("rank")),

@@ -112,7 +112,8 @@ final class AppRegistry(spark: SparkSession) {
   // terminal records for streams: id -> (terminatedAtMs, exception message)
   private val terminatedStreams = TrieMap.empty[java.util.UUID, (Long, Option[String])]
 
-  def submitted: Seq[AppRegistry.SubmittedApp] = submittedApps.values.toSeq
+  /** The submitted batch apps, in submission order. */
+  def submitted: Seq[AppRegistry.SubmittedApp] = submittedApps.values.toSeq.sortBy(_.order)
 
   /** Launch a named batch query asynchronously; returns its app id.
     * The result is forced through the noop sink (full plan execution,
@@ -407,6 +408,8 @@ object AppRegistry {
   final case class LatencyHistogram(
       count: Int, meanMs: Double, p50Ms: Long, p95Ms: Long, p99Ms: Long, maxMs: Long)
 
+  private val submissions = new java.util.concurrent.atomic.AtomicLong
+
   /** A batch query launched via REST submitapp — tracked for applist /
     * detail / kill exactly like a streaming query, minus progress events
     * (batch jobs report through the job group, not the listener bus). */
@@ -414,6 +417,7 @@ object AppRegistry {
       val id: java.util.UUID, val name: String, val sfDir: String,
       private[ops] val run: (SparkSession, String) => DataFrame) {
     val startedAtMs: Long = System.currentTimeMillis()
+    private[ops] val order: Long = submissions.getAndIncrement()
     @volatile var status: String = "running" // running | finished | failed | killed
     @volatile var finishedAtMs: Long = 0L
     @volatile var error: String = null

@@ -56,7 +56,8 @@ object Windows {
     * top-k when the window's final aggregate arrives whole in one batch. In
     * update mode a batch ranks only the keys updated in that batch and
     * earlier emissions are never retracted — route update-mode streams into
-    * a window-keyed upsert store (the idempotent-sink pattern) instead. */
+    * a window-keyed upsert store (the idempotent-sink pattern,
+    * [[topKPerWindowExternal]]) instead. */
   def topKPerWindow(k: Int, measure: String, tieBreak: Seq[String],
       sink: DataFrame => Unit): (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
     val w = org.apache.spark.sql.expressions.Window
@@ -66,54 +67,6 @@ object Windows {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k))
   }
-
-  /** Window-keyed upsert store backing [[topKPerWindowUpsert]] — the
-    * update-mode-correct companion of [[topKPerWindow]]. Holds the LATEST
-    * aggregate per (window, key); top-k is recomputed from the full window
-    * state, so a batch that updates only some keys still ranks against
-    * every key seen so far (the exact failure mode of ranking a raw update
-    * batch). In production back it with any keyed store (RocksDB, a table
-    * with (window, key) primary key) — the API is the idempotent-upsert
-    * shape, so replays overwrite instead of appending. */
-  final class WindowTopKStore {
-    private val state =
-      new scala.collection.concurrent.TrieMap[String, scala.collection.concurrent.TrieMap[String, Double]]()
-
-    def upsert(window: String, key: String, measure: Double): Unit = {
-      state.getOrElseUpdate(window, scala.collection.concurrent.TrieMap.empty)
-        .put(key, measure)
-      ()
-    }
-
-    /** measure desc, key asc tie-break — same ordering as topKPerWindow. */
-    def topK(window: String, k: Int): Seq[(String, Double)] =
-      state.get(window).map(_.toSeq.sortBy { case (key, m) => (-m, key) }.take(k))
-        .getOrElse(Seq.empty)
-
-    def windows: Seq[String] = state.keys.toSeq.sorted
-  }
-
-  /** Update-mode streaming top-k: each micro-batch's (window, key, measure)
-    * rows upsert into `store`, then every TOUCHED window's top-k is
-    * recomputed from full window state and emitted. Correct in update mode
-    * (where a batch carries only the keys that changed) — earlier emissions
-    * are superseded per window rather than wrongly ranked per batch. The
-    * batch must be pre-shaped to exactly (window STRING, key STRING,
-    * measure DOUBLE).
-    *
-    * The collect() is deliberate: batches here are window AGGREGATES
-    * (windows x keys-updated-this-batch) feeding a DRIVER-LOCAL store —
-    * the local-mode/test variant. [[topKPerWindowExternal]] is the
-    * cluster-scale twin: same contract, upserts via foreachPartition into
-    * a keyed store, rank by store-side query; nothing upstream changes. */
-  def topKPerWindowUpsert(k: Int, store: WindowTopKStore,
-      sink: (String, Seq[(String, Double)]) => Unit): (DataFrame, Long) => Unit =
-    { (batch: DataFrame, _: Long) =>
-      val rows = batch.collect()
-      rows.foreach(r => store.upsert(r.getString(0), r.getString(1), r.getDouble(2)))
-      rows.map(_.getString(0)).distinct.sorted
-        .foreach(w => sink(w, store.topK(w, k)))
-    }
 
   /** Executor-side client contract for the external top-k store: an
     * idempotent keyed upsert (so replays overwrite, the exactly-once
@@ -151,8 +104,11 @@ object Windows {
     def drop(name: String): Unit = { stores.remove(name); () }
   }
 
-  /** Cluster-scale update-mode streaming top-k — the external-store
-    * variant [[topKPerWindowUpsert]] documents: each micro-batch's
+  /** Update-mode streaming top-k, the update-mode-correct companion of
+    * [[topKPerWindow]]: the store holds the LATEST aggregate per (window,
+    * key), so a batch that updates only some keys still ranks against
+    * every key seen so far, and earlier emissions are superseded per
+    * window. Each micro-batch's
     * (window STRING, key STRING, measure DOUBLE) aggregate rows upsert
     * into the keyed store FROM THE EXECUTORS via foreachPartition — the
     * driver never materializes the batch — then only the TOUCHED window

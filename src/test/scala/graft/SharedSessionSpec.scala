@@ -8,9 +8,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 import scala.jdk.CollectionConverters._
 
 /** Apps share one session (OpsServer runs each submit on its own thread),
-  * so no query may change what another one plans with: the graph-ANN hop
-  * loop plans without AQE, yet the shared session keeps it on at every
-  * job, and concurrent apps, kill included, behave as they do alone. */
+  * so no query may change what another one plans with: the graph-ANN
+  * search runs every hop on the caller's session, which keeps AQE on at
+  * every job, and concurrent apps, kill included, behave as they do
+  * alone. */
 class SharedSessionSpec extends SparkTestBase {
 
   private val aqe = "spark.sql.adaptive.enabled"
@@ -112,7 +113,7 @@ class SharedSessionSpec extends SparkTestBase {
     assert(left.isEmpty, s"the killed app left ${left.mkString(", ")}")
   }
 
-  test("the caller's query listeners see the hop loop's executions until unregistered") {
+  test("the caller's listeners see the search's executions until unregistered") {
     val fresh = spark.newSession()
     import fresh.implicits._
     val c = (0L until 64L).map(i =>
@@ -120,11 +121,10 @@ class SharedSessionSpec extends SparkTestBase {
       .toDF("id", "vec")
     val q = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f))).toDF("qid", "qvec")
     val idx = graft.api.SimilaritySearch.graphAnnBuild(fresh, c, nlist = 2)
-    // executions another session ran for `fresh`: the AQE-off hop loop
-    val forwarded = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = if (qe.sparkSession ne fresh) forwarded.incrementAndGet()
+          ns: Long): Unit = if (qe.sparkSession eq fresh) seen.incrementAndGet()
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
@@ -135,29 +135,19 @@ class SharedSessionSpec extends SparkTestBase {
     def settled(): Int = {
       var last = -1
       val deadline = System.currentTimeMillis() + 10000
-      while (forwarded.get != last && System.currentTimeMillis() < deadline) {
-        last = forwarded.get; Thread.sleep(200)
+      while (seen.get != last && System.currentTimeMillis() < deadline) {
+        last = seen.get; Thread.sleep(200)
       }
       last
     }
     fresh.listenerManager.register(l)
-    search()
-    // one beam checkpoint per hop, plus hop 0
-    assert(settled() >= 3)
-    fresh.listenerManager.unregister(l)
     val before = settled()
     search()
-    assert(settled() == before)
-  }
-
-  test("the hop loop's sibling starts from the caller's runtime conf, with AQE off") {
-    val fresh = spark.newSession()
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    fresh.conf.set(key, "12345")
-    val sib = Engine.fixedPlanSession(fresh)
-    assert(sib ne fresh)
-    assert(sib.conf.get(key) == "12345")
-    assert(sib.conf.get(aqe) == "false" && fresh.conf.get(aqe) == "true")
-    assert(Engine.fixedPlanSession(fresh) eq sib)
+    // the entry scoring and two collects per hop all run on `fresh`
+    assert(settled() - before >= 1 + 2 * 2)
+    fresh.listenerManager.unregister(l)
+    val after = settled()
+    search()
+    assert(settled() == after)
   }
 }

@@ -239,22 +239,22 @@ class SimilaritySearchSpec extends SparkTestBase {
     assert(e0.getMessage.contains("beamWidth"), e0.getMessage)
   }
 
-  test("graphAnn broadcast routes: small-index and large-index plans return identical rows") {
+  test("graphAnn ranks as Spark sorts: a zero vector's NaN cosine comes first") {
     import spark.implicits._
-    // the size-aware hint (broadcast the reusable index side below
-    // SmallIndexMaxRows, the per-hop beam above) is a PLAN choice only —
-    // both routes must emit the same (q_id, vec_id, cos_sim, rank) set
-    val c = corpus().toDF("id", "vec")
+    // graft_cosine gives NaN for a zero vector, and Spark's desc order puts
+    // NaN above every number; the driver-side beam must rank the same way,
+    // so a saturating beam still equals the exact scan
+    val c = (corpus() :+ ((500L, Seq(0f, 0f, 0f, 0f)))).toDF("id", "vec")
     val q = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
       .toDF("qid", "qvec")
-    val idx = SimilaritySearch.graphAnnBuild(spark, c, nlist = 2)
-    def run(small: Boolean) = graft.operators.Similarity.beamOverAdj(
-        spark, idx.adjacency, idx.corpus, idx.entries,
-        q.toDF("q_id", "q_emb"), beamWidth = 16,
-        hops = 5, k = 5, excludeSelf = false, smallIndex = small)
-      .collect().map(_.toSeq).toSet
-    assert(run(small = true) == run(small = false),
-      "broadcast direction changed the result set")
+    val idx = SimilaritySearch.graphAnnBuild(spark, c, nlist = 2, hubs = 4)
+    val full = SimilaritySearch.graphAnnSearch(spark, idx, q, k = 5,
+      beamWidth = corpus().size + 2, hops = 6).collect()
+    assert(full.filter(_.getInt(3) == 1).map(r => (r.getLong(1), r.getDouble(2).isNaN)).toSet ==
+      Set((500L, true)), s"the zero vector must rank first: ${full.toSeq}")
+    val exact = SimilaritySearch.topK(spark, c, q, k = 5)
+      .select("q_id", "vec_id", "cos_sim", "rank").collect()
+    assert(full.map(_.toString).toSet == exact.map(_.toString).toSet)
   }
 
   test("graphAnn hub derivation: hubs=0 sizes the backbone as clamp(ceil(sqrt(n)), 64, 4096)") {

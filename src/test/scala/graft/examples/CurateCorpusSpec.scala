@@ -28,8 +28,20 @@ class CurateCorpusSpec extends SparkTestBase {
   }
 
   test("batch pipeline: per-stage attrition and final manifest are exact") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val (manifest, attrition) = CurateCorpus.curate(df(corpus()),
       packBudget = 100, nShards = 4)
+    // each stage drops the tick before it: the one copy curate's own stages
+    // leave is the scrubbed survivors the manifest reads (the facades it
+    // calls tick on their own, and with no query open those ticks wait
+    // for the ContextCleaner)
+    val left = (spark.sparkContext.getPersistentRDDs -- before)
+      .filter(_._2.toString.contains("CurateCorpus.scala"))
+    val read = manifest.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(left.size == 1 && read(left.keys.head),
+      s"curate left ${left.values.mkString(", ")}")
     val byStage = attrition.map(a => a.stage -> ((a.docsIn, a.docsOut))).toMap
     assert(byStage("quality_gate") == ((18L, 15L)), s"$attrition")
     assert(byStage("exact_dedup") == ((15L, 13L)), s"$attrition")

@@ -3,16 +3,13 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Pins the r19 hop-loop optimization: a graph-ANN search must run a
-  * BOUNDED number of Spark jobs — the search cost at serving time is
-  * per-job/per-stage scheduling over beam-sized (KB) frames, not data
-  * movement, so the job count IS the regression surface. r18 measured 59
-  * jobs for one 5-hop search (AQE spawned a query-stage job per exchange
-  * per hop plus a re-optimization pass each); the loop now plans each hop
-  * once, on the session's AQE-off sibling (Engine.fixedPlanSession, so the
-  * caller's session keeps AQE) with explicit size-derived partition
-  * counts, which caps a hop at its two input broadcasts plus one
-  * multi-stage job. */
+/** A graph-ANN search must run a FIXED number of Spark jobs: its cost at
+  * serving time is per-job scheduling over beam-sized (KB) frames, not
+  * data movement, so the job count IS the regression surface. r18
+  * measured 59 jobs for one 5-hop search (AQE spawned a query-stage job
+  * per exchange per hop). The beam lives on the driver and reaches the
+  * executors as broadcast variables, which take no job, so a hop is
+  * exactly its two collects. */
 class BeamJobBudgetSpec extends SparkTestBase {
 
   private def jobCount(body: => Unit): Int = {
@@ -50,14 +47,13 @@ class BeamJobBudgetSpec extends SparkTestBase {
     val n = jobCount {
       graft.api.SimilaritySearch.graphAnnSearch(spark, idx, q, k = 5).collect()
     }
-    // budget: 2 facade probe jobs (dim probe + batch-cap count), entry
-    // scoring (query broadcast + main), per hop (beam-keys broadcast +
-    // query broadcast + one multi-stage job), final rank collect (AQE on,
-    // ~3). r18's loop measured ~59 here; a re-regression to
-    // job-per-exchange planning trips this long before the bench does.
-    val budget = 2 + 2 + hops * 3 + 4
+    // 2 facade batch-cap probe jobs, the entry collect and entry scoring
+    // (these queries are a local relation, so collecting them runs no
+    // job), then per hop one expand and one score collect; the result is a
+    // local relation too
+    val budget = 2 + 2 + hops * 2
     assert(n <= budget,
       s"search ran $n jobs for $hops hops — budget $budget " +
-        "(job-per-exchange planning is back in the hop loop?)")
+        "(a hop runs more than its two collects?)")
   }
 }

@@ -356,7 +356,7 @@ class PlanInvariantsSpec extends SparkTestBase {
     // the whole table at 100 TB; the long-link targets now land directly
     // on dense ids (hash48 mod n), so NO build frame may declare an
     // unpartitioned window (the kNN window is keyed by vec_a)
-    val (knn, lnkAll, ent, q, eSmall, _) = Similarity.beamBuildFrames(spark, sf)
+    val (knn, lnkAll, ent, q, eSmall) = Similarity.beamBuildFrames(spark, sf)
     for ((df, label) <- Seq(knn -> "knn", lnkAll -> "lnkAll", ent -> "ent",
         q -> "q", eSmall -> "eSmall")) {
       assert(emptyPartitionWindows(df).isEmpty,

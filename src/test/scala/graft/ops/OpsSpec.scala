@@ -258,6 +258,20 @@ class OpsSpec extends SparkTestBase {
     } finally { srv.stop(); reg.close() }
   }
 
+  test("applist lists submitted batch apps in submission order") {
+    val reg = new AppRegistry(spark)
+    // ids are random UUIDs, so a hash-ordered listing shuffles them
+    val names = (1 to 6).map(i => s"ordered_$i")
+    val ids = names.map(n => reg.submit(n, (s, _) => s.range(1).toDF(), "unused"))
+    val deadline = System.currentTimeMillis() + 60000
+    while (reg.submitted.exists(_.status == "running") && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    import org.json4s._
+    val batches = (reg.applist \ "name").children.collect { case JString(n) if n.startsWith("ordered_") => n }
+    assert(batches == names, s"applist order: $batches")
+    assert(reg.submitted.map(_.id) == ids)
+  }
+
   test("per-app config + dynamicdag plan replacement (AppMasterService parity)") {
     val reg = new AppRegistry(spark)
     val catalog: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -51,7 +51,7 @@ class TopKPerWindowSpec extends SparkTestBase {
 
   test("update mode: the upsert store ranks against FULL window state, not just the batch") {
     import spark.implicits._
-    val store = new Windows.WindowTopKStore
+    Windows.InMemoryTopKStore.drop("spec-update")
     val emitted = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Double)]]()
     val in = GraftSource.memory[(String, Timestamp)](spark)
     val windowed = Windows
@@ -59,7 +59,8 @@ class TopKPerWindowSpec extends SparkTestBase {
       .count(col("word"))
       .select(col("window.start").cast("string").as("window"),
         col("word").as("key"), col("count").cast("double").as("measure"))
-    val sink = Windows.topKPerWindowUpsert(2, store,
+    val sink = Windows.topKPerWindowExternal(2,
+      () => Windows.InMemoryTopKStore.client("spec-update"),
       (w, top) => { emitted.put(w, top); () })
     val q = windowed.writeStream.outputMode("update").foreachBatch(sink).start()
     try {
@@ -105,8 +106,7 @@ class TopKPerWindowSpec extends SparkTestBase {
       q.processAllAvailable()
       assert(emitted.get("2024-01-01 10:00:00") === Seq(("a", 3.0), ("b", 2.0)))
 
-      // the update batch carries only c — full-state ranking must win,
-      // exactly like the driver-local store variant
+      // the update batch carries only c — full-state ranking must win
       in.addData(
         ("c", ts("2024-01-01 10:00:07")), ("c", ts("2024-01-01 10:00:08")),
         ("c", ts("2024-01-01 10:00:09")))
