@@ -11,5 +11,6 @@ final case class GraftQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    /** included in the per-round benchmark (Bench.scala) */
+    /** in the benchmarked set: `graft.Bench` times these entries, and
+      * perfbench's `Batch.entries` runs them in both of its workloads */
     headline: Boolean = false)

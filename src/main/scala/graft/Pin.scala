@@ -28,10 +28,14 @@ import scala.collection.mutable.ArrayBuffer
   *    cached subtree stays visible in the plan. Outside any scope (the
   *    library facades, a bare `q.run`) nothing would release a cache, so
   *    the frame is a [[tick]].
-  *  - [[tick]] cuts lineage with an eager `localCheckpoint`: between the
-  *    rounds of an iterative operator, or for a one-off frame read many
-  *    times. The loop that replaces a tick [[drop]]s it; the enclosing
-  *    query releases the rest. With no query open they are the
+  *  - [[rounds]] runs an iterative operator: each round is a [[scope]]
+  *    whose state is a [[tick]], and each round drops the tick it
+  *    replaces. The seed stays what the caller passed, a plain plan or a
+  *    [[reuse]]d frame.
+  *  - [[tick]] cuts lineage with an eager `localCheckpoint`. [[rounds]]
+  *    owns the ticks of a loop; a loop it cannot express (two states, a
+  *    kept candidate) [[drop]]s the tick it replaces by hand. The
+  *    enclosing query releases the rest. With no query open they are the
   *    ContextCleaner's, freed once unreachable.
   *  - [[serving]] materializes a long-lived structure that a [[memo]] or a
   *    facade index hands out to later queries. A frame that outlives its
@@ -138,6 +142,25 @@ object Pin {
     val t = checkpointed(df, Tick, reliable = false)
     open.get.find(_.query).foreach(_.ticks += rddOf(t))
     t
+  }
+
+  /** An iterative operator's rounds. Round `r` (from 1) builds its state
+    * from the previous round's, `seed` for the first, with `step(prev, r)`
+    * inside its own [[scope]]; the state is ticked, `done(prev, next)` may
+    * end the loop, and the previous round's tick is dropped. The seed is
+    * never materialized or dropped: pass a plain plan or a [[reuse]]d
+    * frame. Returns the last state (the seed if `maxRounds` is 0) and the
+    * rounds run. */
+  def rounds(seed: DataFrame, maxRounds: Int)(step: (DataFrame, Int) => DataFrame,
+      done: (DataFrame, DataFrame) => Boolean = (_, _) => false): (DataFrame, Int) = {
+    var (state, r, stop) = (seed, 0, false)
+    while (!stop && r < maxRounds) {
+      r += 1
+      val prev = state
+      state = scope { val next = tick(step(prev, r)); stop = done(prev, next); next }
+      if (prev ne seed) drop(prev)
+    }
+    (state, r)
   }
 
   /** Release a [[tick]] nothing reads any more (the round a loop has just

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.PlanFrame
+import java.util.Locale
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -40,7 +44,28 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
 
-  /** Register all tables as temp views so `spark.sql` works too. */
+  /** SQL `text` over the tables of `dir` it names in `tables`. */
+  def sql(spark: SparkSession, dir: String, text: String, tables: String*): DataFrame =
+    sqlWith(spark, text, tables.map(n => n -> t(spark, dir, n)): _*)
+
+  /** SQL `text` with each name of `frames` bound to its frame for this one
+    * query: the parsed plan reads the frame where it names the relation.
+    * Nothing is registered on the session, so queries running side by side
+    * on it, and the caller's own temp views, never see these names. */
+  def sqlWith(spark: SparkSession, text: String, frames: (String, DataFrame)*): DataFrame = {
+    val bound = frames.map { case (n, df) => n.toLowerCase(Locale.ROOT) -> df }.toMap
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _) if bound.contains(name.toLowerCase(Locale.ROOT)) =>
+        SubqueryAlias(name, bound(name.toLowerCase(Locale.ROOT)).queryExecution.analyzed)
+      // a WITH's definitions are not among its children
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, d) => (n, q.copy(child = bind(q.child)), d) })
+    }
+    PlanFrame(spark, bind(spark.sessionState.sqlParser.parsePlan(text)))
+  }
+
+  /** Register all tables as temp views so `spark.sql` works too: for a
+    * user's own session. Registry entries bind their tables with [[sql]]. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -225,7 +225,7 @@ object SimilaritySearch {
     * `hubs` to pin it. */
   def graphAnnBuild(spark: SparkSession, corpus: DataFrame, nlist: Int = 8,
       shortLinks: Int = 3, longLinks: Int = 4, hubs: Int = 0,
-      trainIters: Int = 5): GraphAnnIndex = {
+      trainIters: Int = 5): GraphAnnIndex = graft.Pin.scope { // releases the build's caches
     // named contract errors, not a silent empty index: hubs = 0 means
     // "derive"; a negative hub count (or zero links) would make hubIds
     // collect empty and every search return zero rows (r15 advice)
@@ -264,7 +264,7 @@ object SimilaritySearch {
     val (cents, _, _) = KMeans.train(spark, c, nlist, trainIters)
     val m = KMeans.assignToCentroids(spark, c, cents)
       .select(col("vec_id"), col("cluster"), col("embedding"))
-      .transform(graft.Pin.tick)
+      .transform(graft.Pin.reuse)
     val ka = m.select(col("cluster"), col("vec_id").as("vec_a"),
       col("embedding").as("ea"))
     val kb = m.select(col("cluster"), col("vec_id").as("vec_b"),
@@ -307,16 +307,16 @@ object SimilaritySearch {
     // search is pure point lookups — graphAnnSearch must run zero
     // edge-list shuffles per call (r15 review: the symmetrize used to
     // re-run per search).
-    // materialize the half-edge list BEFORE self-unioning with its
-    // reverse: a live `half.union(half.select(...))` computes the kNN
-    // window-join and hub explode once per union branch — the most
-    // expensive build stage doubled (r15 review)
-    val half = graft.Pin.tick(knn.union(lnk))
+    // reuse the half-edge list across the self-union with its reverse:
+    // a live `half.union(half.select(...))` computes the kNN window-join
+    // and hub explode once per union branch — the most expensive build
+    // stage, doubled
+    val half = graft.Pin.reuse(knn.union(lnk))
     // the two LONG-LIVED serving structures (the corpus `c` above and
     // this adjacency) go through Pin.serving: with a reliable checkpoint
     // dir configured on the session they survive executor loss (r19;
-    // build intermediates stay localCheckpoint — losing one only fails
-    // the build call itself, which is rerunnable)
+    // build intermediates are cached for the build only — losing one
+    // only fails the build call itself, which is rerunnable)
     val adj = half
       .union(half.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
       .distinct().transform(graft.Pin.serving)

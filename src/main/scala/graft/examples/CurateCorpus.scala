@@ -41,44 +41,49 @@ object CurateCorpus {
     *   shard, pos); attrition has one row per filtering stage. */
   def curate(raw: DataFrame, packBudget: Int = 512, nShards: Int = 8,
       gateRule: String = "r_all"): (DataFrame, Seq[Attrition]) = {
-    val docs = raw.toDF("doc_id", "text").transform(graft.Pin.tick)
-    val n0 = docs.count()
+    // stages 1-4 are one query: it releases every stage's cache, and the
+    // ticks of the facades they call, when it ends. The scrubbed survivors
+    // outlive it: the manifest reads them.
+    val (scrubbed, attrition) = graft.Pin.query {
+      val docs = raw.toDF("doc_id", "text").transform(graft.Pin.reuse)
+      val n0 = docs.count()
 
-    // 1. quality gate: Gopher rule panel, keep the chosen rule's passers
-    val quality = docs
-      .join(TextAnalytics.gopherFlags(docs).filter(col(gateRule))
-        .select(col("doc_id")), "doc_id")
-      .transform(graft.Pin.tick)
-    val n1 = quality.count()
-    // each stage reads only the one before it: drop a tick once the next exists
-    graft.Pin.drop(docs)
+      // 1. quality gate: Gopher rule panel, keep the chosen rule's passers
+      val quality = docs
+        .join(TextAnalytics.gopherFlags(docs).filter(col(gateRule))
+          .select(col("doc_id")), "doc_id")
+        .transform(graft.Pin.reuse)
+      val n1 = quality.count()
 
-    // 2. exact dedup: one keeper per content digest (lowest id)
-    val exact = quality
-      .join(DedupAlgorithms.exactDuplicates(quality)
-        .select(col("keep_id").as("doc_id")), "doc_id")
-      .transform(graft.Pin.tick)
-    val n2 = exact.count()
-    graft.Pin.drop(quality)
+      // 2. exact dedup: one keeper per content digest (lowest id)
+      val exact = quality
+        .join(DedupAlgorithms.exactDuplicates(quality)
+          .select(col("keep_id").as("doc_id")), "doc_id")
+        .transform(graft.Pin.reuse)
+      val n2 = exact.count()
 
-    // 3. near-dup dedup: MinHash+LSH clusters, keep each cluster's min id
-    val nearDrops = DedupAlgorithms.nearDupClusters(exact)
-      .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
-    val kept = exact.join(nearDrops, Seq("doc_id"), "left_anti")
-      .transform(graft.Pin.tick)
-    val n3 = kept.count()
-    graft.Pin.drop(exact)
+      // 3. near-dup dedup: MinHash+LSH clusters, keep each cluster's min id
+      val nearDrops = DedupAlgorithms.nearDupClusters(exact)
+        .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
+      val kept = exact.join(nearDrops, Seq("doc_id"), "left_anti")
+        .transform(graft.Pin.reuse)
+      val n3 = kept.count()
 
-    // 4. PII scrub: redact emails/IPs in the survivors BEFORE any tokens
-    // are derived (cardinality-preserving — listed in the attrition report
-    // for auditability with docsIn == docsOut). Deliberately AFTER dedup:
-    // the digests above saw raw text, so two docs differing only in
-    // redacted PII stay distinct exact-dedup keys and are left to the
-    // near-dup stage, rather than silently collapsing post-redaction.
-    val scrubbed = TextAnalytics.piiScrub(kept)
-      .select(col("doc_id"), col("scrubbed").as("text"))
-      .transform(graft.Pin.tick)
-    graft.Pin.drop(kept)
+      // 4. PII scrub: redact emails/IPs in the survivors BEFORE any tokens
+      // are derived (cardinality-preserving — listed in the attrition report
+      // for auditability with docsIn == docsOut). Deliberately AFTER dedup:
+      // the digests above saw raw text, so two docs differing only in
+      // redacted PII stay distinct exact-dedup keys and are left to the
+      // near-dup stage, rather than silently collapsing post-redaction.
+      val scrubbed = TextAnalytics.piiScrub(kept)
+        .select(col("doc_id"), col("scrubbed").as("text"))
+        .transform(graft.Pin.serving)
+      (scrubbed, Seq(
+        Attrition("quality_gate", n0, n1),
+        Attrition("exact_dedup", n1, n2),
+        Attrition("near_dup_dedup", n2, n3),
+        Attrition("pii_scrub", n3, n3)))
+    }
 
     // 5-7. tokenize (BPE trained on the scrubbed survivors), pack, shard —
     // all cardinality-preserving: the manifest carries every survivor once
@@ -91,11 +96,7 @@ object CurateCorpus {
       .select(col("doc_id"), col("n_tokens"), col("n_bpe_tokens"),
         col("seq_id"), col("seq_offset"), col("shard"), col("pos"))
 
-    (manifest, Seq(
-      Attrition("quality_gate", n0, n1),
-      Attrition("exact_dedup", n1, n2),
-      Attrition("near_dup_dedup", n2, n3),
-      Attrition("pii_scrub", n3, n3)))
+    (manifest, attrition)
   }
 
   /** Streaming twin of [[curate]]'s filtering stages: per micro-batch, the

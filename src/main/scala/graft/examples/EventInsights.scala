@@ -43,15 +43,16 @@ object EventInsights {
     * @param gap        session inactivity gap */
   def analyze(events: DataFrame, steps: (String, String, String),
       conversion: String, gap: String = "30 minutes"): Report = {
-    // localCheckpoint materializes the raw log once for the report's
-    // several consumers — right for a demo-scale frame held in executor
+    // the raw log is materialized once for the report's several
+    // consumers (cached for the caller's query, or a localCheckpoint when
+    // none is open) — right for a demo-scale frame held in executor
     // memory. At 100 TB the same fan-out would checkpoint to cluster
     // storage (spark.checkpoint against a reliable dir) or simply re-read
     // the parquet per leg (scans are cheap; executor-local blocks of the
     // whole log are not) — the trade this example does not pay at its
     // scale but a production scheduler must choose.
     val ev = events.toDF("event_id", "user_id", "ts", "event_type", "value")
-      .transform(graft.Pin.tick)
+      .transform(graft.Pin.reuse)
     Report(
       sessions = EventAnalytics.sessionize(
         ev.select(col("user_id"), col("ts"), col("value")), gap),

@@ -714,14 +714,11 @@ object Dedup {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("h"))
       val snapshot = docs.filter(col("doc_id") % 7 === 0).select(col("h"))
-      snapshot.createOrReplaceTempView("graft_ingest_snapshot")
-      docs.filter(col("doc_id") % 7 =!= 0)
-        .createOrReplaceTempView("graft_ingest_incoming")
       // sizing derived from the snapshot itself (one count-star scan of
       // the digest projection) — never a fixture constant; see
       // ingestBloomSizing for the saturation rationale
       val (estItems, numBits) = ingestBloomSizing(snapshot.count())
-      s.sql(s"""
+      Tables.sqlWith(s, s"""
         WITH scored AS (
           SELECT doc_id, h,
             graft_might_contain(
@@ -735,7 +732,9 @@ object Dedup {
         SELECT s.doc_id, s.h
         FROM (SELECT doc_id, h FROM scored WHERE maybe_dup) s
         LEFT ANTI JOIN graft_ingest_snapshot sn ON s.h = sn.h
-        ORDER BY doc_id""")
+        ORDER BY doc_id""",
+        "graft_ingest_snapshot" -> snapshot,
+        "graft_ingest_incoming" -> docs.filter(col("doc_id") % 7 =!= 0))
     },
     // identical semantics to the exact formulation => identical oracle
     Some("""SELECT doc_id, md5(text) AS h FROM documents

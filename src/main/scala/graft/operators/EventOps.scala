@@ -1842,9 +1842,9 @@ object EventOps {
       val tot = hop.groupBy(col("i")).agg(sum(col("n")).as("tot"))
       val p = hop.join(tot, "i")
         .select(col("i"), col("j"), expr("n * 1000000L div tot").as("p_micro"))
-        .transform(Pin.tick)
+        .transform(Pin.reuse)
       val states = p.select(col("i").as("state"))
-        .union(p.select(col("j").as("state"))).distinct().transform(Pin.tick)
+        .union(p.select(col("j").as("state"))).distinct().transform(Pin.reuse)
       val k = states.count()
       val pi0 = states.select(col("state"), lit(1000000L / k).as("pi"))
       var pi = pi0
@@ -1945,7 +1945,7 @@ object EventOps {
         .withColumn("h", expr(
           """cast(conv(substring(md5(concat('kmv:', cast(user_id as string))),
              1, 12), 16, 10) as bigint)"""))
-        .transform(Pin.tick)
+        .transform(Pin.reuse)
       val exact = both.groupBy(col("seg")).agg(count(lit(1)).as("exact_distinct"))
       // two-phase K-minimum-values: partial top-K per (seg, h mod 64) bucket,
       // then final top-K per segment
@@ -2170,7 +2170,7 @@ object EventOps {
       val ranked = hashed
         .withColumn("r1", row_number().over(w1)).filter(col("r1") <= Kmax)
         .withColumn("r2", row_number().over(w2)).filter(col("r2") <= Kmax)
-        .select(col("h"), col("r2")).transform(Pin.tick)
+        .select(col("h"), col("r2"))
       val exact = broadcast(hashed.agg(count(lit(1)).as("exact_distinct")))
       val R = lit(281474976710656.0) // 2^48 as double, exact
       val ks = s.range(0, 3).select(

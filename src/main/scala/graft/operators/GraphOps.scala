@@ -3,6 +3,7 @@ package graft.operators
 import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Bulk graph analytics beyond the PageRank/BFS tick protocols — the two
   * remaining classic iterative/relational graph shapes a dataflow engine is
@@ -40,34 +41,25 @@ object GraphOps {
     val edges = p.select(col("a").as("src"), col("b").as("dst"))
       .union(p.select(col("b").as("src"), col("a").as("dst")))
       .distinct().transform(Pin.reuse)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).transform(Pin.tick)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < 50) Pin.scope { // releases this tick's pins
-      it += 1
-      // hook: pull the min label across each edge
-      val nbrMin = edges.join(labels, col("src") === col("node"))
-        .select(col("dst").as("nb"), col("label"))
-        .groupBy(col("nb")).agg(min(col("label")).as("nbr_min"))
-      val hooked = labels.join(nbrMin, col("node") === col("nb"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+    val seed = edges.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")).transform(Pin.reuse) // read by round 1 and its test
+    // each node's own label enters its hook as a self-loop
+    val hooks = edges.union(seed.select(col("node").as("src"), col("node").as("dst")))
+      .transform(Pin.reuse)
+    Pin.rounds(seed, 50)((labels, _) => {
+      // hook: each node takes the min label over itself and its neighbors
+      val hooked = hooks.join(labels, col("src") === col("node"))
+        .groupBy(col("dst").as("node")).agg(min(col("label")).as("label"))
         .transform(Pin.reuse) // read twice by the shortcut self-join below
       // shortcut (pointer jumping): follow one level of label indirection —
       // this is what turns O(diameter) ticks into O(log diameter)
-      val short = hooked.as("x")
+      hooked.as("x")
         .join(hooked.select(col("node").as("ln"), col("label").as("lab2")).as("y"),
           col("x.label") === col("y.ln"), "left")
         .select(col("x.node").as("node"),
           least(col("x.label"), coalesce(col("lab2"), col("x.label"))).as("label"))
-        .transform(Pin.tick)
-      changed = short.as("n").join(labels.as("o"), col("n.node") === col("o.node"))
-        .filter(col("n.label") =!= col("o.label")).count()
-      Pin.drop(labels)
-      labels = short
-    }
-    (labels, it)
+    }, (labels, short) => short.as("n").join(labels.as("o"), col("n.node") === col("o.node"))
+      .filter(col("n.label") =!= col("o.label")).count() == 0)
   }
 
   /** Deduplicated id-oriented (u < v) part co-purchase edges — parts
@@ -209,14 +201,14 @@ object GraphOps {
     * (node, label) vote count; ticks are cut by eager localCheckpoint.
     * Shared by graph_label_propagation and
     * [[graft.api.GraphAlgorithms.labelPropagation]].
-    * The edge cache lives for the call: the returned labels are
-    * checkpointed.
+    * The edge and seed caches live for the call: the returned labels are
+    * the last round's tick.
     * @return (node, seed, label) after `rounds` synchronous rounds */
-  private[graft] def lpaOn(edges0: DataFrame, seeds: DataFrame,
+  private[graft] def lpaOn(edges0: DataFrame, seeds0: DataFrame,
       rounds: Int): DataFrame = Pin.scope {
     val edges = Pin.reuse(edges0)
-    var labels = seeds.withColumn("label", col("seed")).transform(Pin.tick)
-    for (_ <- 1 to rounds) {
+    val seeds = Pin.reuse(seeds0) // the first state, and clamped every round
+    Pin.rounds(seeds.withColumn("label", col("seed")), rounds)((labels, _) => {
       val votes = edges.join(labels, col("u") === col("node"))
         .filter(col("label").isNotNull)
         .groupBy(col("v").as("n"), col("label")).agg(count(lit(1)).as("c"))
@@ -225,14 +217,10 @@ object GraphOps {
           .over(org.apache.spark.sql.expressions.Window.partitionBy(col("n"))))
         .filter(col("c") === -col("best.negc") && col("label") === col("best.lab"))
         .select(col("n").as("node"), col("label").as("adopted"))
-      val next = seeds.join(adopted, Seq("node"), "left")
+      seeds.join(adopted, Seq("node"), "left")
         .select(col("node"), col("seed"),
           coalesce(col("seed"), col("adopted")).as("label"))
-        .transform(Pin.tick) // eager: materialized before the old tick drops
-      Pin.drop(labels)
-      labels = next
-    }
-    labels
+    })._1
   }
 
   private def lpaLabels(s: SparkSession, dir: String): DataFrame = {
@@ -302,32 +290,32 @@ object GraphOps {
       edges.join(alive.select(col("node").as("u")), "u")
         .join(alive.select(col("node").as("v")), "v")
         .groupBy(col("u")).agg(count(lit(1)).as("c"))
-    // alive sets only ever SHRINK (next joins against alive), so equal
-    // counts imply equal sets — the scalar fixpoint test is sound. Each
-    // tick's alive carries the degrees of the round that produced it:
-    // at fixpoint those ARE the final core degrees (the set stopped
-    // changing), so no post-loop recompute is needed, and the eager
-    // checkpoint cuts the returned plan's lineage from the edge cache
-    // before the scope releases it.
-    var alive = edges.select(col("u").as("node")).distinct()
-      .withColumn("c", lit(0L)).transform(Pin.tick)
-    var n = alive.count()
-    var changed = true
-    var it = 0
-    while (changed && it < 50) {
-      it += 1
-      val next = degrees(alive.select("node")).filter(col("c") >= k)
-        .select(col("u").as("node"), col("c")).transform(Pin.tick)
-      val m = next.count()
-      changed = m != n
-      Pin.drop(alive)
-      alive = next
-      n = m
-    }
+    // alive sets only ever SHRINK (next joins against alive). Each tick's
+    // alive carries the degrees of the round that produced it: at fixpoint
+    // those ARE the final core degrees, so no post-loop recompute is needed.
+    val seed = edges.select(col("u").as("node")).distinct().withColumn("c", lit(0L))
+    val fixpoint = new Shrinking(seed.count())
+    val (alive, it) = Pin.rounds(seed, 50)((alive, _) =>
+      degrees(alive.select("node")).filter(col("c") >= k)
+        .select(col("u").as("node"), col("c")), fixpoint)
     // a capped non-fixpoint result would be silently NOT a k-core — fail
     // loudly instead (50 rounds >> any graph this serves; see OracleRounds)
-    require(!changed, s"kcore failed to reach fixpoint within $it rounds")
+    require(fixpoint.stable, s"kcore failed to reach fixpoint within $it rounds")
     (alive.select(col("node"), col("c").as("degree")), it)
+  }
+
+  /** The stop test of a loop whose state only shrinks ([[kcore]]'s alive
+    * set, [[ktruss]]'s edges): equal row counts mean equal sets, a
+    * fixpoint. Counts each tick in one narrow job over its blocks
+    * (`count()` plans an aggregate: two jobs). */
+  private final class Shrinking(private var rows: Long) extends ((DataFrame, DataFrame) => Boolean) {
+    var stable = false
+    def apply(prev: DataFrame, next: DataFrame): Boolean = {
+      val m = next.queryExecution.toRdd.count()
+      stable = m == rows
+      rows = m
+      stable
+    }
   }
 
   /** Rounds the DuckDB oracle unrolls; the engine's peel count must stay
@@ -385,19 +373,13 @@ object GraphOps {
     * Input: directed weighted edges (src, dst, w); `sources` is a 1-row
     * (node, dist=0) seed. Output: (node, dist) for nodes reachable within
     * the hop bound. */
-  private[graft] def sssp(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
-    var dist = Pin.tick(sources)
-    for (_ <- 1 to maxHops) {
+  private[graft] def sssp(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame =
+    Pin.rounds(sources, maxHops)((dist, _) => {
       val relax = dist.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
-      val next = dist.select(col("node"), col("dist").as("cand")).union(relax)
+      dist.select(col("node"), col("dist").as("cand")).union(relax)
         .groupBy(col("node")).agg(min(col("cand")).as("dist"))
-        .transform(Pin.tick)
-      Pin.drop(dist)
-      dist = next
-    }
-    dist
-  }
+    })._1
 
   private val SsspHops = 6
 
@@ -415,10 +397,12 @@ object GraphOps {
       val edges = half.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(half.select(col("b").as("src"), col("a").as("dst"), col("w")))
         .transform(Pin.reuse)
-      // source = min node id — a 1-row aggregate, no crossJoin, no collect
+      // source = min node id: one row, collected so the rounds read it as
+      // a local relation, which costs no job however often they read it
       val source = edges.select(col("src").as("node")).agg(min(col("node")).as("node"))
         .withColumn("dist", lit(0L))
-      sssp(edges, source, SsspHops).orderBy(col("node"))
+      sssp(edges, s.createDataFrame(source.collect().toSeq.asJava, source.schema), SsspHops)
+        .orderBy(col("node"))
     },
     Some {
       // MATERIALIZED is load-bearing (the graph_kcore precedent): each round
@@ -1557,15 +1541,14 @@ object GraphOps {
     * closes ≥ 2 triangles WITHIN the subgraph — the edge-cohesion ladder's
     * next rung after [[kcoreQuery]]'s vertex degrees (a 4-clique chain is
     * a 4-truss; a hub star satisfies any core but no truss), completing
-    * the cohesion family degree → core → truss. Computed as 8 SYNCHRONOUS
-    * peeling rounds (simultaneous removal — deterministic, the kcore
-    * discipline; fixpoint lands by round 4 at every tested SF, and
-    * peeling is idempotent at fixpoint so the capped unrolled oracle is
-    * exact). Each round re-derives per-edge support via the
-    * degree-oriented wedge machinery (Σ C(outdeg,2) work — the bound a
+    * the cohesion family degree → core → truss. Computed as at most 8
+    * SYNCHRONOUS peeling rounds (simultaneous removal — deterministic, the
+    * kcore discipline), stopping once a round removes nothing: peeling is
+    * idempotent there, so the oracle's 8 unrolled rounds stay exact. Each
+    * round re-derives per-edge support via the degree-oriented wedge machinery (Σ C(outdeg,2) work — the bound a
     * power-law hub demands), shuffles only (edge, support) pairs, never
     * edges-join-edges beyond the wedge closure. Output: the 4-truss edge
-    * list with final support recomputed ON the truss (a 9th enumeration),
+    * list with final support recomputed ON the truss (one more enumeration),
     * pruned co-purchase graph (every 5th order) so the oracle's
     * id-oriented re-enumeration stays seconds at sf0.1. */
   val ktruss = GraftQuery(
@@ -1574,17 +1557,14 @@ object GraphOps {
       val li = Tables.t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .filter(col("l_orderkey") % 5 === 0)
-      var half = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct().transform(Pin.tick)
-      var r = 0
-      while (r < 8) {
-        val next = Pin.tick(trussPeelRound(half))
-        Pin.drop(half)
-        half = next
-        r += 1
+      // the scope releases the seed once the peeled edges are ticked
+      val (half, _) = Pin.scope {
+        val seed = li.as("a").join(li.as("b"),
+            col("a.l_orderkey") === col("b.l_orderkey") &&
+              col("a.l_partkey") < col("b.l_partkey"))
+          .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+          .distinct().transform(Pin.reuse)
+        Pin.rounds(seed, 8)((half, _) => trussPeelRound(half), new Shrinking(seed.count()))
       }
       half.join(edgeSupport(half), Seq("u", "v"), "left")
         .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("support"))
@@ -1801,13 +1781,9 @@ object GraphOps {
       hops: Int, onHop: Int => Unit = _ => ()): DataFrame = {
     val sess = und.sparkSession
     import sess.implicits._
-    var visited = seeds.map(x => (x, x, 0, 1L))
-      .toDF("s", "v", "dist", "sigma")
-      .transform(Pin.tick)
-    var vRows = seeds.size.toLong
-    var frontier = visited
-    var fRows = vRows
-    (1 to hops).foreach { h =>
+    val seed = seeds.map(x => (x, x, 0, 1L)).toDF("s", "v", "dist", "sigma")
+    var hop = 0
+    Pin.rounds(seed, hops)((visited, h) => {
       // The frontier (and the visited anti-join probe) are STATE-sized —
       // sources × reach rows — while und is the CORPUS-sized edge fact.
       // A localCheckpointed frame carries no size stats, so unhinted
@@ -1817,26 +1793,20 @@ object GraphOps {
       // tier). Size-aware broadcast of the state side keeps the edge
       // fact stream-read per hop: measured per-hop shuffle drops to the
       // frontier-expansion volume, invariant in corpus scale. Row counts
-      // are exact and free (the frames are checkpointed — counting scans
-      // cached blocks); past the cap (a graph whose reach outgrows
-      // broadcast) the plain plan returns, correctness unchanged.
-      val expand = hintSmall(frontier, fRows).as("f")
+      // are exact and cheap (state-sized scans); past the cap (a graph
+      // whose reach outgrows broadcast) the plain plan returns,
+      // correctness unchanged.
+      val frontier = visited.filter(col("dist") === h - 1)
+      val expand = hintSmall(frontier, frontier.count()).as("f")
         .join(und.as("e"), col("f.v") === col("e.src"))
         .groupBy(col("f.s").as("s"), col("e.dst").as("v"))
         .agg(sum(col("f.sigma")).as("sigma"))
       val news = expand
-        .join(hintSmall(visited.select(col("s"), col("v")), vRows),
+        .join(hintSmall(visited.select(col("s"), col("v")), visited.count()),
           Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(h).as("dist"), col("sigma"))
-      val grown = Pin.tick(visited.union(news))
-      Pin.drop(visited)
-      visited = grown
-      vRows = visited.count()
-      frontier = visited.filter(col("dist") === h)
-      fRows = frontier.count()
-      onHop(h)
-    }
-    visited
+      visited.union(news)
+    }, (_, _) => { hop += 1; onHop(hop); false })._1 // reports each hop, never stops
   }
 
   /** Broadcast-hint `df` when its EXACT row count is under
@@ -1868,10 +1838,11 @@ object GraphOps {
     // TWICE (the p⋈und and (p⋈und)⋈rw sort-merges).
     val lvlCounts = vis.groupBy(col("dist")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    var out = vis.filter(col("dist") === hops)
+    val seed = vis.filter(col("dist") === hops)
       .select(col("s"), col("v"), col("dist"), col("sigma"), lit(0L).as("delta"))
-      .transform(Pin.tick)
-    (hops to 1 by -1).foreach { lvl =>
+    var lvl = hops + 1
+    Pin.rounds(seed, hops)((out, _) => {
+      lvl -= 1
       val nLvl = lvlCounts.getOrElse(lvl, 0L)
       val nPrev = lvlCounts.getOrElse(lvl - 1, 0L)
       val rw = out.filter(col("dist") === lvl)
@@ -1887,12 +1858,8 @@ object GraphOps {
         .join(terms, Seq("s", "v"), "left")
         .select(col("s"), col("v"), col("dist"), col("sigma"),
           coalesce(col("delta"), lit(0L)).as("delta"))
-      val grown = Pin.tick(out.union(lvlRows))
-      Pin.drop(out)
-      out = grown
-      onLevel(lvl)
-    }
-    out
+      out.union(lvlRows)
+    }, (_, _) => { onLevel(lvl); false })._1 // reports each level, never stops
   }
 
   /** σ headroom guard: with σ ≤ 1e6 and δ ≤ reach·(1e6+δ_next) the

@@ -172,14 +172,14 @@ object KMeans {
     * @return (model, fine iterations run, fine objective history) */
   def trainHierarchical(s: SparkSession, e: DataFrame, coarseK: Int,
       fineK: Int, maxIters: Int = 10,
-      tol: Double = 1e-4): (HierCentroids, Int, Seq[Double]) = {
+      tol: Double = 1e-4): (HierCentroids, Int, Seq[Double]) = Pin.scope {
     require(fineK >= 1 && fineK <= 256,
       s"fineK must be in [1, 256] (packed argmax radix), got $fineK")
     val (coarse, _, _) = train(s, e, coarseK, maxIters, tol)
     val assigned = assignToCentroids(s,
         e.select(col("vec_id"), col("embedding")), coarse)
       .select(col("vec_id"), col("embedding"), col("cluster"))
-      .transform(Pin.tick) // coarse cells are fixed across fine ticks
+      .transform(Pin.reuse) // coarse cells are fixed across fine ticks
     val sw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster")).orderBy(col("vec_id"))
     var fine: Map[(Int, Int), Array[Double]] = assigned

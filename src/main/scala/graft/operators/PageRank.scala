@@ -62,33 +62,21 @@ object PageRank {
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct().transform(Pin.reuse)
     val n = nodes.count() // driver-side scalar; fine at any scale
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
+    // each round's tick truncates the LOGICAL plan too — with cache alone
+    // the nested-join plan grows per round and planning cost explodes
+    val (ranks, _) = Pin.rounds(nodes.withColumn("rank", lit(1.0 / n)), maxIters)((ranks, _) => {
       val contribs = edges
         .join(deg, "src")
         .join(ranks, col("src") === col("node"))
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      // localCheckpoint (eager) truncates the LOGICAL plan too — with cache
-      // alone the nested-join plan grows per tick and planning/explain cost
-      // explodes after ~tens of iterations (on a cluster: checkpoint to a
-      // reliable dir instead; same lineage-cut, executor-loss-safe)
-      val next = nodes.join(contribs, Seq("node"), "left")
+      nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(0.15 / n) + lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .transform(Pin.tick)
-      if (tol > 0.0) {
-        // one scalar per tick: the reference's convergence check
-        val delta = next.as("a").join(ranks.as("b"), col("a.node") === col("b.node"))
-          .agg(max(abs(col("a.rank") - col("b.rank")))).head().getDouble(0)
-        converged = delta < tol
-      }
-      if (it > 0) Pin.drop(ranks) // the first ranks are the lazy uniform start
-      ranks = next
-      it += 1
-    }
+    }, (ranks, next) =>
+      // one scalar per tick: the reference's convergence check
+      tol > 0.0 && next.as("a").join(ranks.as("b"), col("a.node") === col("b.node"))
+        .agg(max(abs(col("a.rank") - col("b.rank")))).head().getDouble(0) < tol)
     ranks.select(col("node"), round(col("rank"), 8).as("pr")).orderBy(col("node"))
   }
 
@@ -133,21 +121,13 @@ object PageRank {
       val rev = li.select(col("l_partkey").as("src"), (col("l_suppkey") + SuppOffset).as("dst"))
       val edges = Pin.reuse(fwd.union(rev).distinct())
       val source = 1L
-      var visited = Seq((source, 0)).toDF("node", "hops").transform(Pin.tick)
-      var frontier = visited // the tick holding the nodes reached last round
-      var d = 0
-      while (d < 4) {
-        d += 1
-        val next = frontier.select(col("node")).join(edges, col("node") === col("src"))
+      // one state: the frontier is the nodes the last round reached
+      val (visited, _) = Pin.rounds(Seq((source, 0)).toDF("node", "hops"), 4)((visited, d) =>
+        visited.union(visited.filter(col("hops") === d - 1).select(col("node"))
+          .join(edges, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")).as("v"), Seq("node"), "left_anti")
-          .transform(Pin.tick)
-        if (frontier ne visited) Pin.drop(frontier)
-        val grown = visited.union(next.withColumn("hops", lit(d))).transform(Pin.tick)
-        Pin.drop(visited)
-        visited = grown
-        frontier = next
-      }
+          .withColumn("hops", lit(d))))
       visited.select(col("node"), col("hops")).orderBy(col("node"))
     },
     Some(s"""WITH RECURSIVE edges AS (
@@ -288,23 +268,18 @@ object PageRank {
       val nodes = Pin.reuse(edges.select(col("src").as("node")).distinct())
       val nSeeds = nodes.filter(col("node") % 17 === 0).count()
       val teleport = when(col("node") % 17 === 0, lit(0.15 / nSeeds)).otherwise(lit(0.0))
-      var ranks = nodes.withColumn("rank",
+      val seed = nodes.withColumn("rank",
         when(col("node") % 17 === 0, lit(1.0 / nSeeds)).otherwise(lit(0.0)))
-      var it = 0
-      while (it < Iters) {
+      val (ranks, _) = Pin.rounds(seed, Iters)((ranks, _) => {
         val contribs = edges
           .join(deg, "src")
           .join(ranks, col("src") === col("node"))
           .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-        val next = nodes.join(contribs, Seq("node"), "left")
+        nodes.join(contribs, Seq("node"), "left")
           .select(col("node"),
             (teleport + lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-          .transform(Pin.tick)
-        if (it > 0) Pin.drop(ranks) // the first ranks are the lazy seed vector
-        ranks = next
-        it += 1
-      }
+      })
       ranks.select(col("node"), round(col("rank"), 8).as("ppr")).orderBy(col("node"))
     },
     Some(s"""WITH edges AS (

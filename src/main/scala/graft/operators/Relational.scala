@@ -953,19 +953,16 @@ object Relational {
     * never happens, which is exactly why the declarative form scales. */
   val q42LateralTopN = GraftQuery(
     "q42_lateral_topn",
-    (s, dir) => {
-      t(s, dir, "nation").createOrReplaceTempView("nation")
-      t(s, dir, "customer").createOrReplaceTempView("customer")
-      s.sql("""SELECT n.n_name, t.c_name, t.c_acctbal
-               FROM nation n, LATERAL (
-                 SELECT c_name, round(c_acctbal, 2) AS c_acctbal
-                 FROM customer c
-                 WHERE c.c_nationkey = n.n_nationkey
-                 ORDER BY c.c_acctbal DESC, c.c_custkey
-                 LIMIT 2
-               ) t
-               ORDER BY n.n_name, t.c_acctbal DESC, t.c_name""")
-    },
+    (s, dir) => Tables.sql(s, dir,
+      """SELECT n.n_name, t.c_name, t.c_acctbal
+         FROM nation n, LATERAL (
+           SELECT c_name, round(c_acctbal, 2) AS c_acctbal
+           FROM customer c
+           WHERE c.c_nationkey = n.n_nationkey
+           ORDER BY c.c_acctbal DESC, c.c_custkey
+           LIMIT 2
+         ) t
+         ORDER BY n.n_name, t.c_acctbal DESC, t.c_name""", "nation", "customer"),
     Some("""SELECT n.n_name, t.c_name, t.c_acctbal
             FROM nation n, LATERAL (
               SELECT c_name, round(c_acctbal, 2) AS c_acctbal
@@ -1512,11 +1509,7 @@ object Relational {
     * cents (deterministic, engine-exact). */
   val q57MinCostSupplier = GraftQuery(
     "q57_min_cost_supplier",
-    (s, dir) => {
-      Seq("part", "supplier", "nation", "region", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q57Sql)
-    },
+    (s, dir) => Tables.sql(s, dir, Q57Sql, "part", "supplier", "nation", "region", "lineitem"),
     Some(Q57Sql))
 
   private lazy val Q57Sql =
@@ -1601,11 +1594,7 @@ object Relational {
     * float divides anywhere. */
   val q59ConcentratedSuppliers = GraftQuery(
     "q59_concentrated_suppliers",
-    (s, dir) => {
-      Seq("part", "supplier", "nation", "lineitem")
-        .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q59Sql)
-    },
+    (s, dir) => Tables.sql(s, dir, Q59Sql, "part", "supplier", "nation", "lineitem"),
     Some(Q59Sql))
 
   private lazy val Q59Sql =
@@ -1767,10 +1756,7 @@ object Relational {
     * all returned (Q15 semantics), deterministically ordered. */
   val q63TopSupplier = GraftQuery(
     "q63_top_supplier",
-    (s, dir) => {
-      Seq("supplier", "lineitem").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q63Sql)
-    },
+    (s, dir) => Tables.sql(s, dir, Q63Sql, "supplier", "lineitem"),
     Some(Q63Sql))
 
   private lazy val Q63Sql =
@@ -1794,11 +1780,7 @@ object Relational {
     * (negative balance) is key-only and broadcasts as the anti side. */
   val q64SupplierPartStats = GraftQuery(
     "q64_supplier_part_stats",
-    (s, dir) => {
-      Seq("part", "supplier", "lineitem").foreach(n =>
-        t(s, dir, n).createOrReplaceTempView(n))
-      s.sql(Q64Sql)
-    },
+    (s, dir) => Tables.sql(s, dir, Q64Sql, "part", "supplier", "lineitem"),
     Some(Q64Sql))
 
   private lazy val Q64Sql =

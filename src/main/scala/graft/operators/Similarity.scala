@@ -3,6 +3,8 @@ package graft.operators
 import graft.{GraftQuery, Pin, Tables}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1231,7 +1233,8 @@ object Similarity {
     * one per side. The driver merges the scored pairs into the beam and
     * keeps each query's best beamWidth by (cos_sim desc, vec_id). No row
     * of the index is exchanged at any corpus size, and AQE, left on, has
-    * no stage to split into extra jobs. */
+    * no stage to split into extra jobs. The result is a local relation of
+    * (q_id, vec_id, cos_sim, rank) rows in (q_id, rank) order. */
   private[graft] def beamOverAdj(s: SparkSession, adj: DataFrame,
       e: DataFrame, ent: DataFrame, q: DataFrame, beamWidth: Int,
       hops: Int, k: Int, excludeSelf: Boolean): DataFrame = {
@@ -1252,9 +1255,14 @@ object Similarity {
     val descPrev = sc.getLocalProperty("spark.job.description")
     try {
       sc.setJobDescription("graphann: hop 0 (entry scoring)")
+      // queries in Spark's ascending q_id order, so the result needs no sort
+      val idType = q.schema("q_id").dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      val byId = RowOrdering.createNaturalAscendingOrdering(Seq(idType))
+        .on[Row](r => InternalRow(toCatalyst(r.get(0))))
       // a null id joins no candidate, as in the oracle
       val qs = q.filter(col("q_id").isNotNull).select(col("q_id"), col("q_emb"))
-        .collect().distinctBy(_.get(0))
+        .collect().distinctBy(_.get(0)).sorted(byId)
       val qEmb = ship(qs.map(_.getSeq[Float](1)))
       val embOf = udf((qi: Int) => qEmb.value(qi))
       def score(cands: Iterable[(Int, Long)]): Seq[Hit] =
@@ -1271,8 +1279,8 @@ object Similarity {
           .map(r => (r.getInt(0), r.getLong(1))).distinct.filterNot(held)
         beam = prune(beam ++ score(nbrs))
       }
-      // groupBy keeps each query's hits best first
-      val ranked = beam.groupBy(_._1).toSeq.flatMap { case (qi, hits) =>
+      // groupBy keeps each query's hits best first; rows in (q_id, rank) order
+      val ranked = beam.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qi, hits) =>
         val id = qs(qi).get(0)
         hits.filter(hit => !excludeSelf || id != hit._2).take(k)
           .zipWithIndex.map { case ((_, v, sim), i) => Row(id, v, sim, i + 1) }
@@ -1321,7 +1329,7 @@ object Similarity {
     * over scan-everything IVF when queries are selective. */
   val annGraphTopK = GraftQuery(
     "ann_graph_topk",
-    (s, dir) => beamSearch(s, dir).orderBy(col("q_id"), col("rank")),
+    (s, dir) => beamSearch(s, dir), // rows come in (q_id, rank) order
     Some(s"""WITH $beamCtes
              SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank
              FROM beam_out ORDER BY q_id, rank"""),
@@ -2664,14 +2672,19 @@ object Similarity {
       .orderBy(col("rel").desc, col("vec_id"))
     val wp = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("vec_id"))
-    var selected = shortlist
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"),
-        lit(1).as("pick"), expr("0.7 * rel - 0.3 * 0.0").as("score"))
-      .transform(Pin.tick)
-    var k = 2
-    while (k <= 5) {
+    // the first picks, one row per query, collected so the first round
+    // reads them as a local relation, which costs no job however often it
+    // is read (the driver holds queries-many rows, as the beam search does)
+    val pick1 = {
+      val df = shortlist
+        .withColumn("rn", row_number().over(wr))
+        .filter(col("rn") === 1)
+        .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"),
+          lit(1).as("pick"), expr("0.7 * rel - 0.3 * 0.0").as("score"))
+      s.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    }
+    // round r makes pick r + 1
+    val (selected, _) = Pin.rounds(pick1, 4)((selected, r) => {
       val cand = shortlist
         .join(selected.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"), "left_anti")
       val scoredK = cand
@@ -2683,12 +2696,9 @@ object Similarity {
         .withColumn("rn", row_number().over(wp))
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), col("embedding"), col("rel"),
-          lit(k).as("pick"), col("score"))
-      val grown = Pin.tick(selected.union(scoredK))
-      Pin.drop(selected)
-      selected = grown
-      k += 1
-    }
+          lit(r + 1).as("pick"), col("score"))
+      selected.union(scoredK)
+    })
     selected.select(col("q_id"), col("pick"), col("vec_id"), col("rel"), col("score"))
   }
 
@@ -2842,7 +2852,7 @@ object Similarity {
       import s.implicits._
       val ctx = beamContext(s, dir)
       val exact = annBruteTopK.run(s, dir)
-        .select(col("q_id"), col("vec_id")).transform(Pin.tick)
+        .select(col("q_id"), col("vec_id")).transform(Pin.reuse)
       val nExact = exact.count()
       val rows = for {
         bw <- Seq(8, 16, 32); lk <- Seq(0, 2, 4)

@@ -52,6 +52,19 @@ class MaterializationLeakSpec extends SparkTestBase {
     assert(!persisted.contains(rddOf(labels).id), "drop left the tick persisted")
   }
 
+  test("Pin.rounds leaves only its last round's tick and never ticks the seed") {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val seed = spark.range(10).toDF("x")
+    val before = persisted.keySet
+    val (last, rounds) = Pin.rounds(seed, 5)((prev, _) => prev.select((col("x") + 1).as("x")),
+      (_, next) => next.agg(max("x")).head().getLong(0) >= 12)
+    assert(rounds == 3, "the stop test ends the loop after the round it accepts")
+    assert((persisted -- before).keySet == Set(rddOf(last).id), s"persisted: ${leftSince(before)}")
+    assert(last.agg(min("x")).head().getLong(0) == 3)
+    assert(Pin.rounds(seed, 0)((prev, _) => prev)._1 eq seed)
+    Pin.drop(last)
+  }
+
   test("a query releases its undropped ticks when it ends; a serving frame stays") {
     val before = persisted.keySet
     val (ticked, served) = Pin.query {

@@ -12,6 +12,14 @@ class SessionLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(hits.isEmpty, "apply session state in graft.Engine.install instead:\n" + hits.mkString("\n"))
   }
 
+  test("no temp view is registered in src/main outside Tables.registerAll") {
+    // a view is the whole session's: an entry binds its tables with
+    // Tables.sql for its one query instead
+    val hits = SourceLint.hits(Seq("createOrReplaceTempView", "createTempView",
+      "createGlobalTempView", "createOrReplaceGlobalTempView"), "Tables.scala")
+    assert(hits.isEmpty, "bind the names with graft.Tables.sql instead:\n" + hits.mkString("\n"))
+  }
+
   test("sessions are built only by Engine and Verify") {
     val hits = SourceLint.hits(Seq("SparkSession.builder"), "Engine.scala", "Verify.scala")
     assert(hits.isEmpty, "get the session from graft.Engine.session instead:\n" + hits.mkString("\n"))

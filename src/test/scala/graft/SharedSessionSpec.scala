@@ -90,6 +90,28 @@ class SharedSessionSpec extends SparkTestBase {
     assert(seen.forall(_ == "true"), s"AQE read at job starts: ${seen.mkString(",")}")
   }
 
+  test("q64 on two threads over two data dirs matches its serial run every time") {
+    val q64 = entry("q64_supplier_part_stats")
+    val dirs = Seq(sf, sf.replace("sf0.001", "sf0.01"))
+    val serial = dirs.map(d => d -> Pin.query(hash(q64.run(spark, d)))).toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(dirs.size)
+    val wrong = try {
+      val runs = dirs.map(d => pool.submit(() =>
+        (1 to 10).count(_ => Pin.query(hash(q64.run(spark, d))) != serial(d))))
+      runs.map(_.get(300, TimeUnit.SECONDS)).sum
+    } finally pool.shutdown()
+    assert(wrong == 0, s"$wrong of ${10 * dirs.size} concurrent runs returned another dir's result")
+  }
+
+  test("a SQL-text entry leaves the caller's temp views alone") {
+    import spark.implicits._
+    Seq(1L, 2L).toDF("mine").createOrReplaceTempView("part")
+    try {
+      Pin.query(entry("q57_min_cost_supplier").run(spark, sf).collect())
+      assert(spark.table("part").columns.toSeq == Seq("mine"))
+    } finally spark.catalog.dropTempView("part")
+  }
+
   test("killing an ann_graph_topk app mid-search ends it as killed") {
     val registry = new AppRegistry(spark)
     val hopRunning = new CountDownLatch(1)

@@ -31,12 +31,11 @@ class CurateCorpusSpec extends SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (manifest, attrition) = CurateCorpus.curate(df(corpus()),
       packBudget = 100, nShards = 4)
-    // each stage drops the tick before it: the one copy curate's own stages
-    // leave is the scrubbed survivors the manifest reads (the facades it
-    // calls tick on their own, and with no query open those ticks wait
-    // for the ContextCleaner)
+    // stages 1-4 run as one query: the one copy they leave is the scrubbed
+    // survivors the manifest reads, and no tick of the near-dup stage's
+    // connected components outlives it
     val left = (spark.sparkContext.getPersistentRDDs -- before)
-      .filter(_._2.toString.contains("CurateCorpus.scala"))
+      .filter(r => Seq("CurateCorpus.scala", "GraphOps.scala").exists(r._2.toString.contains))
     val read = manifest.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }.toSet

@@ -1,16 +1,17 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{Pin, SparkEntry, SparkTestBase}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** A graph-ANN search must run a FIXED number of Spark jobs: its cost at
-  * serving time is per-job scheduling over beam-sized (KB) frames, not
-  * data movement, so the job count IS the regression surface. r18
-  * measured 59 jobs for one 5-hop search (AQE spawned a query-stage job
-  * per exchange per hop). The beam lives on the driver and reaches the
-  * executors as broadcast variables, which take no job, so a hop is
-  * exactly its two collects. */
-class BeamJobBudgetSpec extends SparkTestBase {
+/** Warm job budgets. At the sizes these queries run here their cost is
+  * per-job scheduling, not data movement, so the job count is the
+  * regression surface. Each row is the count one warm run measured at the
+  * test SF, under `Pin.query` as the runners run it, after a first run has
+  * warmed codegen and the session's memos: the 13 headline entries, the
+  * entries whose loops run on `Pin.rounds`, and the graph-ANN facade
+  * search. A change that adds jobs to a row fails here; one that removes
+  * some lowers the row. */
+class JobBudgetSpec extends SparkTestBase {
 
   private def jobCount(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -30,6 +31,44 @@ class BeamJobBudgetSpec extends SparkTestBase {
       }
       now
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private val budgets: Seq[(String, Int)] = Seq(
+    // headline
+    "q1_agg" -> 5,
+    "q2_join_broadcast" -> 7,
+    "q3_join_multi" -> 7,
+    "q10_topk" -> 2,
+    "q25_explode_wordcount" -> 3,
+    "q43_join_six" -> 14,
+    "q44_market_share" -> 19,
+    "ev_window_tumbling" -> 5,
+    "dedup_minhash_fast" -> 8,
+    "ann_cosine_topk" -> 6,
+    "ann_pq_topk" -> 9,
+    "ann_graph_topk" -> 13,
+    "lm_bigram_score" -> 9,
+    // loops on Pin.rounds
+    "graph_connected_components" -> 92,
+    "graph_ktruss" -> 64,
+    "graph_betweenness" -> 59,
+    "graph_pagerank" -> 41,
+    "graph_personalized_pagerank" -> 40,
+    "dedup_clusters" -> 40,
+    "graph_kcore" -> 32,
+    "ann_mmr_topk" -> 30,
+    "graph_bfs" -> 23,
+    "graph_label_propagation" -> 25,
+    "graph_sssp" -> 26)
+
+  budgets.foreach { case (name, budget) =>
+    test(s"$name runs at most $budget jobs warm") {
+      val q = SparkEntry.queries(name)
+      def run(): Unit = Pin.query { q(spark, sf).collect(); () }
+      run()
+      val n = jobCount(run())
+      assert(n <= budget, s"$name ran $n jobs warm, budget $budget")
+    }
   }
 
   test("graphAnnSearch stays within the per-hop job budget") {
