@@ -25,18 +25,20 @@ import scala.collection.mutable.ArrayBuffer
   *    share stays until the last one ends. A scope never owns ticks.
   *  - [[reuse]] marks a frame that is read more than once. Inside a scope
   *    it is a lazy `cache()`, so plan construction runs no jobs and the
-  *    cached subtree stays visible in the plan. Outside any scope (the
-  *    library facades, a bare `q.run`) nothing would release a cache, so
-  *    the frame is a [[tick]].
+  *    cached subtree stays visible in the plan. That hides a cost: under
+  *    AQE each read of a not-yet-built cache inside the first query that
+  *    reads it is its own job, so a frame one query reads k times costs k
+  *    jobs as a reuse and 1 as a tick (`ev_kmv_overlap`'s K-set: 48 warm
+  *    jobs at sf0.01 as a reuse, 36 as a tick). Outside any scope (the
+  *    facades, a bare `q.run`) the frame is a [[tick]]: nothing would
+  *    release a cache.
   *  - [[rounds]] runs an iterative operator: each round is a [[scope]]
   *    whose state is a [[tick]], and each round drops the tick it
-  *    replaces. The seed stays what the caller passed, a plain plan or a
-  *    [[reuse]]d frame.
-  *  - [[tick]] cuts lineage with an eager `localCheckpoint`. [[rounds]]
-  *    owns the ticks of a loop; a loop it cannot express (two states, a
-  *    kept candidate) [[drop]]s the tick it replaces by hand. The
-  *    enclosing query releases the rest. With no query open they are the
-  *    ContextCleaner's, freed once unreachable.
+  *    replaces. The seed stays what the caller passed.
+  *  - [[tick]] cuts lineage with an eager `localCheckpoint`. Only
+  *    Louvain's guarded passes and the streaming curator [[drop]] a tick
+  *    by hand. The enclosing query releases the rest; with no query open
+  *    the ContextCleaner does, once they are unreachable.
   *  - [[serving]] materializes a long-lived structure that a [[memo]] or a
   *    facade index hands out to later queries. A frame that outlives its
   *    query must come from here, never from [[tick]].
@@ -149,8 +151,9 @@ object Pin {
     * inside its own [[scope]]; the state is ticked, `done(prev, next)` may
     * end the loop, and the previous round's tick is dropped. The seed is
     * never materialized or dropped: pass a plain plan or a [[reuse]]d
-    * frame. Returns the last state (the seed if `maxRounds` is 0) and the
-    * rounds run. */
+    * frame, or a previous call's result to keep it as a snapshot. Returns
+    * the last state (the seed if `maxRounds` is 0) and the rounds run;
+    * the last state's tick is the enclosing query's to release. */
   def rounds(seed: DataFrame, maxRounds: Int)(step: (DataFrame, Int) => DataFrame,
       done: (DataFrame, DataFrame) => Boolean = (_, _) => false): (DataFrame, Int) = {
     var (state, r, stop) = (seed, 0, false)
@@ -163,10 +166,10 @@ object Pin {
     (state, r)
   }
 
-  /** Release a [[tick]] nothing reads any more (the round a loop has just
-    * replaced). Launches no job. Throws on any other frame: a frame
-    * derived from a tick, a cache or a [[serving]] frame is not Pin's to
-    * drop here. */
+  /** Release a [[tick]] nothing reads any more (the round [[rounds]] has
+    * just replaced, or a hand-kept loop's losing candidate). Launches no
+    * job. Throws on any other frame: a frame derived from a tick, a cache
+    * or a [[serving]] frame is not Pin's to drop here. */
   def drop(tick: DataFrame): Unit = {
     val rdd = Option(rddOf(tick)).filter(made.get(_) == Tick).getOrElse(throw new IllegalArgumentException(
       s"not a Pin.tick: ${tick.queryExecution.analyzed.simpleString(80)}"))

@@ -44,12 +44,16 @@ object GraphAlgorithms {
 
   /** Connected components by min-label propagation with pointer jumping —
     * O(log diameter) synchronous ticks.
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @param pairs undirected edges, two columns
     * @return (node, label) where label = min reachable node id */
   def connectedComponents(pairs: DataFrame): DataFrame =
     GraphOps.components(pairs)
 
   /** The k-core: iterative peel-to-fixpoint of nodes with degree < k.
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @return (node, deg) of the surviving subgraph's degrees */
   def kCore(pairs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
@@ -58,6 +62,8 @@ object GraphAlgorithms {
 
   /** Hop-bounded single/multi-source shortest paths (Bellman-Ford frontier
     * relaxation; exact integral weights).
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @param edges   directed (src, dst, w) — pass both directions for
     *                undirected graphs
     * @param sources (node, dist) seed rows, usually dist = 0
@@ -80,6 +86,8 @@ object GraphAlgorithms {
 
   /** Sampled-source Brandes betweenness (hop-bounded, exact-integer
     * dependency micros; Brandes & Pich 2007 estimator).
+    * Reads two loop ticks: the caller's `Pin.query` releases them, or with
+    * no query open the ContextCleaner once the frame is unreachable.
     * @param und   undirected edges, both directions, (src, dst)
     * @param seeds source sample (collected ids — source-sample-sized)
     * @return (s, v, dist, sigma, delta) per (source, reached node) */
@@ -194,6 +202,8 @@ object GraphAlgorithms {
     * eager checkpoints. Labeled nodes absent from the edge list do not
     * propagate (no edges to carry them) but DO appear in the output with
     * their clamped label — the clamp contract covers them too.
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @param pairs   undirected edges, two columns
     * @param labeled (node, label) rows for the seeded nodes only
     * @return (node, label) for every node that ends up labeled */
@@ -241,6 +251,8 @@ object GraphAlgorithms {
     * form. Per tick: one key-partitioned join + sum shuffle, lineage cut
     * by eager localCheckpoint, one driver-side delta scalar — never a
     * node-set collect.
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @param edges directed (src, dst), two columns; duplicates dedup
     * @return (node, pr) ranks rounded to 8 dp, ordered by node */
   def pageRank(edges: DataFrame, tol: Double = 1e-6,

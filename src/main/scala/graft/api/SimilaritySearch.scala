@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.md5Prefix
 import graft.operators.{KMeans, Similarity}
 
 /** PUBLIC similarity-search facade over arbitrary embedding DataFrames —
@@ -290,8 +291,7 @@ object SimilaritySearch {
     // Catalyst's Union constraint rewrite on the checkpointed frame)
     val lnkCols = (1 to longLinks).map { j =>
       element_at(hubArr,
-        (pmod(expr(s"""cast(conv(substring(md5(concat('glnk:$j:',
-            cast(vec_id as string))), 1, 12), 16, 10) as bigint)"""),
+        (pmod(md5Prefix(concat(lit(s"glnk:$j:"), col("vec_id").cast("string")), 12),
           lit(hubIds.length.toLong)) + 1).cast("int"))
     }
     val lnk = c.select(col("vec_id").as("vec_a"),

@@ -70,21 +70,22 @@ object TextAnalytics {
   /** Train `rounds` greedy BPE merges over the corpus (most frequent
     * adjacent symbol pair per round, count-desc then lexicographic
     * tie-break; merges apply left-to-right non-overlapping). The loop runs
-    * over the distinct-word dictionary — one corpus scan, then
-    * vocabulary-sized iterations.
+    * over the distinct-word dictionary — two corpus scans, then
+    * vocabulary-sized iterations — inside its own `Pin.query`, so its
+    * ticks are released before this returns.
     * @return (rank, lhs, rhs, pair_count) one row per learned merge */
   def bpeTrain(df: DataFrame, rounds: Int = 10): DataFrame = {
     val d = docs(df)
     import d.sparkSession.implicits._
-    val (merges, state) = TextAnalysis.bpeTrainOn(d, rounds)
-    graft.Pin.drop(state)
-    merges.toDF("rank", "lhs", "rhs", "pair_count")
+    graft.Pin.query(TextAnalysis.bpeTrainOn(d, rounds)._1).toDF("rank", "lhs", "rhs", "pair_count")
   }
 
   /** Train BPE merges on this corpus and encode it under them: per-document
     * word and BPE-token counts — the number budget/packing/billing
     * decisions are made in. Encoding is a broadcast-hash join of the
     * vocabulary-sized dictionary; the corpus streams through once.
+    * Reads a loop tick: the caller's `Pin.query` releases it, or with no
+    * query open the ContextCleaner once the frame is unreachable.
     * @return (doc_id, n_words, n_bpe_tokens) */
   def bpeTokenCounts(df: DataFrame, rounds: Int = 10): DataFrame = {
     val d = docs(df)

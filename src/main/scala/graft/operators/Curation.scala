@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -484,9 +485,8 @@ object Curation {
       t(s, dir, "documents")
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"))
-        .withColumn("v", conv(substring(
-          md5(concat(lit("dpnoise:"), col("lang"), lit(":"), col("source"))),
-          1, 12), 16, 10).cast("long"))
+        .withColumn("v",
+          md5Prefix(concat(lit("dpnoise:"), col("lang"), lit(":"), col("source")), 12))
         .withColumn("u", expr("(cast(v as double) + 0.5) / 281474976710656.0"))
         .withColumn("noise_micro", expr(
           """cast(floor((case when u >= 0.5 then -ln(2.0 * (1.0 - u))
@@ -1085,7 +1085,7 @@ object Curation {
     "curation_temperature_sample",
     (s, dir) => {
       val docs = t(s, dir, "documents").select(col("lang"),
-        (conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long") % 1000000L).as("b"))
+        (md5Prefix(col("text"), 8) % 1000000L).as("b"))
       val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
       val nMax = broadcast(counts.agg(max(col("n_docs")).as("n_max")))
       docs.join(broadcast(counts), "lang")
@@ -1240,7 +1240,7 @@ object Curation {
           """transform(sequence(0, size(w)-2),
              i -> concat_ws(' ', w[i], w[i+1]))""")).as("bg"))
         .withColumn("bucket",
-          expr(s"cast(conv(substring(md5(bg), 1, 4), 16, 10) as int) % $B"))
+          md5Prefix(col("bg"), 4).cast("int") % B)
       // per-bucket counts for target (en) and raw (all) in ONE pass
       val counts = bg.groupBy(col("bucket")).agg(
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_c"),

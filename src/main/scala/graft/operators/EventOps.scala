@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1847,23 +1848,20 @@ object EventOps {
         .union(p.select(col("j").as("state"))).distinct().transform(Pin.reuse)
       val k = states.count()
       val pi0 = states.select(col("state"), lit(1000000L / k).as("pi"))
-      var pi = pi0
-      val snaps = collection.mutable.Map[Int, DataFrame](0 -> pi0)
-      (1 to 4).foreach { tck =>
+      // two ticks from π₀ to π₂, two more from π₂ to π₄: rounds keeps its
+      // seed, so the emitted snapshots stay
+      def twoTicks(from: DataFrame): DataFrame = Pin.rounds(from, 2)((pi, _) => {
         val next = pi.as("x").join(p.as("p"), col("p.i") === col("x.state"))
           .groupBy(col("p.j").as("state"))
           .agg(sum(expr("pi * p_micro div 1000000")).as("pi"))
-        val cur = states.join(next, Seq("state"), "left")
+        states.join(next, Seq("state"), "left")
           .select(col("state"), coalesce(col("pi"), lit(0L)).as("pi"))
-          .transform(Pin.tick)
-        if (tck % 2 == 0) Pin.drop(pi) // odd ticks are not emitted
-        pi = cur
-        snaps(tck) = pi
-      }
+      })._1
+      val pi2 = twoTicks(pi0)
       states
-        .join(snaps(0).withColumnRenamed("pi", "pi0_micro"), "state")
-        .join(snaps(2).withColumnRenamed("pi", "pi2_micro"), "state")
-        .join(snaps(4).withColumnRenamed("pi", "pi4_micro"), "state")
+        .join(pi0.withColumnRenamed("pi", "pi0_micro"), "state")
+        .join(pi2.withColumnRenamed("pi", "pi2_micro"), "state")
+        .join(twoTicks(pi2).withColumnRenamed("pi", "pi4_micro"), "state")
         .orderBy(col("state"))
     },
     Some(s"""WITH hop AS (
@@ -1942,9 +1940,7 @@ object EventOps {
         .select(lit(name).as("seg"), col("user_id")).distinct()
       val both = seg("a_first_half", firstHalf = true)
         .union(seg("b_second_half", firstHalf = false))
-        .withColumn("h", expr(
-          """cast(conv(substring(md5(concat('kmv:', cast(user_id as string))),
-             1, 12), 16, 10) as bigint)"""))
+        .withColumn("h", md5Prefix(concat(lit("kmv:"), col("user_id").cast("string")), 12))
         .transform(Pin.reuse)
       val exact = both.groupBy(col("seg")).agg(count(lit(1)).as("exact_distinct"))
       // two-phase K-minimum-values: partial top-K per (seg, h mod 64) bucket,
@@ -2160,9 +2156,7 @@ object EventOps {
       val Kmax = 256
       val hashed = t(s, dir, "orders")
         .select(col("o_custkey").as("user_id")).distinct()
-        .withColumn("h", expr(
-          """cast(conv(substring(md5(concat('kmv:', cast(user_id as string))),
-             1, 12), 16, 10) as bigint)"""))
+        .withColumn("h", md5Prefix(concat(lit("kmv:"), col("user_id").cast("string")), 12))
       // two-phase rank at Kmax: partial top-Kmax per (h mod 64) bucket,
       // then one global rank over the <= 64*Kmax survivors
       val w1 = Window.partitionBy(pmod(col("h"), lit(64L))).orderBy(col("h"))

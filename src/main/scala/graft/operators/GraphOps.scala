@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -1241,17 +1242,20 @@ object GraphOps {
     def micro(qn: Long): Long =
       ((BigInt(qn) + BigInt(4) * m * m) * 1000000 / (BigInt(4) * m * m)
         - 1000000).toLong
+    // accept-if-improved passes from (a0, q0): each candidate is a tick,
+    // and of it and the incumbent the one with the lower Q is dropped
+    // (never the seed, which is a plain plan)
+    def guarded(u: DataFrame, k: DataFrame, a0: DataFrame, q0: Long, parities: Seq[Int])(
+        qOf: DataFrame => Long): (DataFrame, Long) =
+      parities.foldLeft((a0, q0)) { case ((a, q), p) =>
+        val cand = Pin.tick(louvainPass(u, k, a, m, p))
+        val qc = qOf(cand)
+        val (kept, lost) = if (qc > q) ((cand, qc), a) else ((a, q), cand)
+        if (lost ne a0) Pin.drop(lost)
+        kept
+      }
     val q0 = louvainQNum(half, None, k0, a0, m)
-    var a = a0; var q = q0
-    Seq(0, 1, 0, 1).foreach { p =>
-      val cand = Pin.tick(louvainPass(und, k0, a, m, p))
-      val qc = louvainQNum(half, None, k0, cand, m)
-      if (qc > q) {
-        if (a ne a0) Pin.drop(a)
-        a = cand; q = qc
-      } else Pin.drop(cand)
-    }
-    val (a1, q1) = (a, q)
+    val (a1, q1) = guarded(und, k0, a0, q0, Seq(0, 1, 0, 1))(louvainQNum(half, None, k0, _, m))
     val nc1 = a1.select(col("c")).distinct().count()
     // phase 2: contract — communities become weighted super-nodes with
     // self-loops; total weight m and Q of the partition are preserved
@@ -1272,15 +1276,7 @@ object GraphOps {
       .union(sHalf.select(col("v").as("src"), col("u").as("dst"), col("w")))
     val a20 = sK.select(col("node"), col("node").as("c"))
     val q20 = louvainQNum(sHalf, Some(sLoops), sK, a20, m)
-    var a2 = a20; var q2 = q20
-    Seq(0, 1).foreach { p =>
-      val cand2 = Pin.tick(louvainPass(sUnd, sK, a2, m, p))
-      val qc2 = louvainQNum(sHalf, Some(sLoops), sK, cand2, m)
-      if (qc2 > q2) {
-        if (a2 ne a20) Pin.drop(a2)
-        a2 = cand2; q2 = qc2
-      } else Pin.drop(cand2)
-    }
+    val (a2, q2) = guarded(sUnd, sK, a20, q20, Seq(0, 1))(louvainQNum(sHalf, Some(sLoops), sK, _, m))
     val nc2 = a2.select(col("c")).distinct().count()
     val nc0 = k0.count()
     LouvainResult(
@@ -1434,10 +1430,8 @@ object GraphOps {
       val nbr = edges.withColumn("idx",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      def pick(step: Int) = expr(
-        s"""cast(conv(substring(md5(concat('rw:', cast(start as string), ':',
-            cast(wid as string), ':$step:', cast(cur as string))), 1, 12), 16, 10)
-            as bigint) % deg""")
+      def pick(step: Int) = md5Prefix(concat(lit("rw:"), col("start").cast("string"), lit(":"),
+        col("wid").cast("string"), lit(s":$step:"), col("cur").cast("string")), 12) % col("deg")
       var walk = edges.select(col("src").as("start")).distinct()
         .filter(col("start") % 5 === 0)
         .select(col("start"), explode(expr("array(0, 1)")).as("wid"))

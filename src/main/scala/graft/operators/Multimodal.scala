@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,8 +175,7 @@ object Multimodal {
           .select(col("vec_id"), col("embedding")),
           col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("lang"),
-          (conv(substring(md5(col("text")), 1, 8), 16, 10)
-            .cast("long") % 16).as("batch_id"),
+          (md5Prefix(col("text"), 8) % 16).as("batch_id"),
           size(split(col("text"), " ")).as("caption_tokens"),
           round(sqrt(expr("graft_l2sq(embedding, array_repeat(cast(0.0 as float), 64), 0, 64)")), 4)
             .as("emb_norm"))
@@ -224,8 +224,7 @@ object Multimodal {
     "mm_scene_cuts",
     (s, dir) => {
       def luma(ix: org.apache.spark.sql.Column) =
-        conv(substring(md5(concat(lit("luma:"), col("doc_id").cast("string"),
-          lit(":"), ix.cast("string"))), 1, 4), 16, 10).cast("long") % 256
+        md5Prefix(concat(lit("luma:"), col("doc_id").cast("string"), lit(":"), ix.cast("string")), 4) % 256
       val cuts = t(s, dir, "documents")
         .select(col("doc_id"),
           (octet_length(encode(col("text"), "UTF-8")) % 240 + 16).as("n_frames"))

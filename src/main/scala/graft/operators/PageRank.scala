@@ -167,34 +167,28 @@ object PageRank {
   /** The HITS tick loop on a directed (src, dst) edge list — factored out
     * so property specs can pin the fixpoint on synthetic graphs (the
     * GraphOpsSpec pattern). Returns (kind, node, score_ppm) with kind
-    * 'hub' for src-side nodes and 'auth' for dst-side. */
+    * 'hub' for src-side nodes and 'auth' for dst-side. That is also each
+    * round's state: a round reads the previous authorities (the seed is
+    * every dst at 1e6) and emits both sides. `iters` must be at least 1. */
   private[operators] def hitsScores(edges: DataFrame, iters: Int): DataFrame = {
-    var auth = edges.select(col("dst").as("node")).distinct()
-      .withColumn("a", lit(1000000L))
-      .transform(Pin.tick)
-    var hub: DataFrame = null
-    var it = 0
-    while (it < iters) {
-      val hRaw = edges.join(auth, col("dst") === col("node"))
-        .groupBy(col("src")).agg(sum(col("a")).as("h_raw"))
-      val hMax = hRaw.agg(max(col("h_raw"))).head().getLong(0)
-      val nextHub = hRaw
-        .select(col("src"), expr(s"h_raw * 1000000 div ${hMax}L").as("h"))
-        .transform(Pin.tick)
-      if (hub != null) Pin.drop(hub)
-      hub = nextHub
-      val aRaw = edges.join(hub, Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("a_raw"))
-      val aMax = aRaw.agg(max(col("a_raw"))).head().getLong(0)
-      val nextAuth = aRaw
-        .select(col("dst").as("node"), expr(s"a_raw * 1000000 div ${aMax}L").as("a"))
-        .transform(Pin.tick)
-      Pin.drop(auth)
-      auth = nextAuth
-      it += 1
+    // raw * 1e6 div max(raw): the per-side max is one scalar job, and the
+    // raw sums it builds are read again by the round's later jobs
+    def scaled(raw: DataFrame, kind: String, node: String): DataFrame = {
+      val sums = Pin.reuse(raw)
+      val top = sums.agg(max(col("raw"))).head().getLong(0)
+      sums.select(lit(kind).as("kind"), col(node).as("node"),
+        expr(s"raw * 1000000 div ${top}L").as("score_ppm"))
     }
-    hub.select(lit("hub").as("kind"), col("src").as("node"), col("h").as("score_ppm"))
-      .union(auth.select(lit("auth").as("kind"), col("node"), col("a").as("score_ppm")))
+    val seed = edges.select(lit("auth").as("kind"), col("dst").as("node"),
+      lit(1000000L).as("score_ppm")).distinct()
+    Pin.rounds(seed, iters)((prev, _) => {
+      val auth = prev.filter(col("kind") === "auth")
+      val hub = scaled(edges.join(auth, col("dst") === col("node"))
+        .groupBy(col("src")).agg(sum(col("score_ppm")).as("raw")), "hub", "src")
+      val next = scaled(edges.join(hub, col("src") === col("node"))
+        .groupBy(col("dst")).agg(sum(col("score_ppm")).as("raw")), "auth", "dst")
+      hub.union(next)
+    })._1
   }
 
   val hits = GraftQuery(

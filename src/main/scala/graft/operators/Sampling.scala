@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,7 @@ object Sampling {
   // 0..99, deterministic in the document text — shared by the registry's
   // pipeline_hash_sample/split and graft.api.CorpusPipeline
   private[graft] def contentBucket: Column =
-    (conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long") % 100)
+    (md5Prefix(col("text"), 8) % 100)
 
   private def bucket = contentBucket.as("bucket")
 
@@ -43,8 +44,7 @@ object Sampling {
   private[graft] def shardAssignOf(ids: DataFrame, nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nShards >= 1, s"shardAssignOf needs nShards >= 1, got $nShards")
-    val shard = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("long") % nShards).as("shard")
+    val shard = (md5Prefix(col("doc_id").cast("string"), 8) % nShards).as("shard")
     val w = Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))
     ids.select(col("doc_id"), shard,
       md5(concat(lit("shuf:"), col("doc_id").cast("string"))).as("h"))
@@ -240,8 +240,7 @@ object Sampling {
     (s, dir) =>
       t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
-          (conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 100).as("bucket"))
+          (md5Prefix(col("vec_id").cast("string"), 8) % 100).as("bucket"))
         .withColumn("rate_pct", (col("label") % 3 + 1) * 10)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_total"),
@@ -483,10 +482,8 @@ object Sampling {
     (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
-          expr("""cast(floor(
-               ln((cast(conv(substring(md5(concat('ws:', text)), 1, 6), 16, 10)
-                     as double) + 1.0d) / 16777216.0d)
-               / cast(n_chars as double) * 1e9 + 0.5) as bigint)""").as("k_scaled"))
+          floor(ln((md5Prefix(concat(lit("ws:"), col("text")), 6).cast("double") + 1.0)
+            / 16777216.0) / col("n_chars").cast("double") * 1e9 + 0.5).as("k_scaled"))
         .orderBy(col("k_scaled").desc, col("doc_id"))
         .limit(20),
     Some("""SELECT doc_id, n_chars, k_scaled FROM (
@@ -670,8 +667,7 @@ object Sampling {
     (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-            col("text"))), 1, 12), 16, 10).cast("long").as("rh"))
+          md5Prefix(concat(col("doc_id").cast("string"), lit(":"), col("text")), 12).as("rh"))
         .agg(count(lit(1)).as("n_docs"),
           expr("bit_xor(rh)").as("content_xor"),
           expr("bit_xor(doc_id)").as("id_xor")),
@@ -691,11 +687,9 @@ object Sampling {
     (s, dir) =>
       t(s, dir, "documents")
         .select(
-          (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 16).as("shard"),
+          (md5Prefix(col("doc_id").cast("string"), 8) % 16).as("shard"),
           col("doc_id"),
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-            col("text"))), 1, 12), 16, 10).cast("long").as("rh"))
+          md5Prefix(concat(col("doc_id").cast("string"), lit(":"), col("text")), 12).as("rh"))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           expr("bit_xor(rh)").as("content_xor"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Pin, Tables}
+import graft.functions.md5Prefix
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -1174,8 +1175,7 @@ object Similarity {
     val n = e.count()
     val lnkAll = (1 to MaxLongLinks).map { j =>
       e.select(lit(j).as("j"), col("vec_id").as("vec_a"),
-        expr(s"""cast(conv(substring(md5(concat('lnk:$j:',
-            cast(vec_id as string))), 1, 12), 16, 10) as bigint) % ${n}L""")
+        (md5Prefix(concat(lit(s"lnk:$j:"), col("vec_id").cast("string")), 12) % n)
           .as("vec_b"))
     }.reduce(_ union _)
       .filter(col("vec_a") =!= col("vec_b"))

@@ -390,9 +390,11 @@ object TextAnalysis {
     * tie-break; merges apply left-to-right non-overlapping).
     *
     * 100 TB shape (the same trick every real BPE trainer uses): the corpus
-    * is scanned ONCE into a (word, freq) dictionary — one map-side-combined
-    * shuffle — and all iterations run over that distinct-word table, which
-    * is vocabulary-sized, orders of magnitude smaller than the corpus.
+    * reduces to a (word, freq) dictionary — one map-side-combined shuffle,
+    * run twice: by the first pair count and by round 1, whose tick holds
+    * it from then on — and all iterations run over that distinct-word
+    * table, which is vocabulary-sized, orders of magnitude smaller than
+    * the corpus.
     * Per round: the pair count partial-aggregates map-side and the winner
     * is a 1-row TakeOrderedAndProject; the merge applies map-side as a
     * SQL `aggregate` fold with the pair inlined as literals (codegen, no
@@ -405,20 +407,25 @@ object TextAnalysis {
   // memoized per (session, dir): text_bpe_train and text_bpe_encode both
   // need the loop, and a Verify/Bench run executes both back-to-back —
   // the 10 collect rounds and checkpoint materializations should run once.
-  // Later queries read the state, so it is served, not a tick.
+  // Later queries read the state, so it is served; the loop's own last
+  // tick goes with the query that trained it.
   private[operators] def bpeTrainState(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    Pin.memo(s, ("bpe-train", dir))(bpeTrainOn(t(s, dir, "documents"), served = true))
+    Pin.memo(s, ("bpe-train", dir)) {
+      val (merges, state) = bpeTrainOn(t(s, dir, "documents"))
+      (merges, Pin.serving(state))
+    }
 
   /** The BPE merge-training loop over an arbitrary (doc_id, text) frame:
-    * learns `rounds` greedy merges (most frequent adjacent symbol pair,
-    * count-desc then lexicographic tie-break) over the distinct-word
-    * dictionary and returns (merges, final vocabulary state (w, freq,
-    * toks)). The state is a [[Pin.tick]] — vocabulary-sized, safe to
-    * broadcast — or, when `served`, a [[Pin.serving]] frame that outlives
-    * the query. Shared by text_bpe_train/text_bpe_encode and
-    * [[graft.api.TextAnalytics]]'s BPE surface. */
-  private[graft] def bpeTrainOn(docs: DataFrame, rounds: Int = 10, served: Boolean = false)
+    * learns up to `rounds` greedy merges (most frequent adjacent symbol
+    * pair, count-desc then lexicographic tie-break) over the distinct-word
+    * dictionary, stopping early once no word has a pair left, and returns
+    * (merges, final vocabulary state (w, freq, toks)). The state is the
+    * last round's [[Pin.tick]] — vocabulary-sized, safe to broadcast —
+    * or the dictionary plan itself when no round ran. Shared by
+    * text_bpe_train/text_bpe_encode and [[graft.api.TextAnalytics]]'s BPE
+    * surface. */
+  private[graft] def bpeTrainOn(docs: DataFrame, rounds: Int = 10)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     def sqlLit(x: String) = "'" + x.replace("'", "''") + "'"
     val vocab = docs
@@ -427,43 +434,32 @@ object TextAnalysis {
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("w"), col("freq"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("toks"))
-    var state = Pin.tick(vocab)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      // words collapsed to a single token have no pairs and MUST be
-      // filtered first: sequence(1, 0) evaluates to the descending array
-      // [1, 0] in Spark, and element_at(toks, 0) throws
-      val top = state
-        .filter(size(col("toks")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))"))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r, a, b, cnt))
-        val next = state.withColumn("toks", expr(
-          s"""aggregate(toks, cast(array() as array<string>), (acc, x) ->
-                CASE WHEN size(acc) > 0 AND element_at(acc, -1) = ${sqlLit(a)} AND x = ${sqlLit(b)}
-                     THEN concat(slice(acc, 1, size(acc) - 1), array(${sqlLit(a + b)}))
-                     ELSE concat(acc, array(x)) END)"""))
-          .transform(if (served && r == rounds) Pin.serving else Pin.tick)
-        Pin.drop(state)
-        state = next
-      }
-    }
-    if (served && exhausted) {
-      // merges ran out before the last round: serve the last tick instead
-      val kept = Pin.serving(state)
-      Pin.drop(state)
-      state = kept
-    }
-    (merges.result(), state)
+    // words collapsed to a single token have no pairs and MUST be
+    // filtered first: sequence(1, 0) evaluates to the descending array
+    // [1, 0] in Spark, and element_at(toks, 0) throws
+    def topPair(state: DataFrame): Option[(String, String, Long)] = state
+      .filter(size(col("toks")) >= 2)
+      .select(col("freq"), explode(expr(
+        "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))"))
+        .as("p"))
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(sum(col("freq")).as("cnt"))
+      .orderBy(col("cnt").desc, col("a"), col("b"))
+      .limit(1).collect()
+      .headOption.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val merges = collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    // the winner of the round about to run, found on the state before it
+    var top = topPair(vocab)
+    val (state, _) = Pin.rounds(vocab, if (top.isEmpty) 0 else rounds)((prev, r) => {
+      val (a, b, cnt) = top.get
+      merges += ((r, a, b, cnt))
+      prev.withColumn("toks", expr(
+        s"""aggregate(toks, cast(array() as array<string>), (acc, x) ->
+              CASE WHEN size(acc) > 0 AND element_at(acc, -1) = ${sqlLit(a)} AND x = ${sqlLit(b)}
+                   THEN concat(slice(acc, 1, size(acc) - 1), array(${sqlLit(a + b)}))
+                   ELSE concat(acc, array(x)) END)"""))
+    }, (_, next) => merges.length < rounds && { top = topPair(next); top.isEmpty })
+    (merges.toSeq, state)
   }
 
   val bpeTrain = GraftQuery(

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.md5Prefix
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING KMV DISTINCT-COUNT TRACKER — the foreachBatch twin of
@@ -47,8 +48,7 @@ final class StreamingKmvTracker(spark: SparkSession, k: Int = 64) {
     val c1 = batch.toDF(batch.columns.indices.map(i => s"_c$i"): _*)
     val hashed = c1
       .select(col("_c0").cast("string").as("key"))
-      .select(conv(substring(md5(concat(lit("kmv:"), col("key"))
-        .cast("binary")), 1, 12), 16, 10).cast("long").as("h"))
+      .select(md5Prefix(concat(lit("kmv:"), col("key")), 12).as("h"))
       .as[Long]
     val batchK = hashed.mapPartitions { it =>
       val set = scala.collection.mutable.TreeSet.empty[Long]

@@ -5,7 +5,8 @@ package graft
   * a pin with no owner — released by nobody, or by a session-wide flush
   * that drops a concurrent app's caches. A raw `localCheckpoint(` or
   * `.checkpoint(` would be a tick no query releases, and a hand-placed
-  * `unpersist(` a release no spec checks reaches the blocks. */
+  * `unpersist(` a release no spec checks reaches the blocks. A loop drops
+  * ticks by hand only where `Pin.rounds` cannot express it. */
 class MaterializationLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("no cache, persist or clearCache in src/main outside Pin.scala") {
@@ -17,6 +18,13 @@ class MaterializationLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     val hits = SourceLint.hits(
       Seq("localCheckpoint(", ".checkpoint(", "unpersist(", "ReleaseBlocks("), "Pin.scala")
     assert(hits.isEmpty, "cut lineage with Pin.tick and release with Pin.drop instead:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("Pin.drop only in Pin.scala, Louvain's guarded passes and the streaming curator") {
+    val hits = SourceLint.hits(Seq("Pin.drop("),
+      "Pin.scala", "operators/GraphOps.scala", "examples/CurateCorpus.scala")
+    assert(hits.isEmpty, "run the loop on Pin.rounds, which drops the ticks it replaces:\n" +
       hits.mkString("\n"))
   }
 }

@@ -59,7 +59,13 @@ class JobBudgetSpec extends SparkTestBase {
     "ann_mmr_topk" -> 30,
     "graph_bfs" -> 23,
     "graph_label_propagation" -> 25,
-    "graph_sssp" -> 26)
+    "graph_sssp" -> 26,
+    "graph_hits" -> 41,
+    "ev_markov_steady_state" -> 34,
+    // warm, both read the session's memoized training state: the loop
+    // itself runs in the cold run
+    "text_bpe_train" -> 3,
+    "text_bpe_encode" -> 6)
 
   budgets.foreach { case (name, budget) =>
     test(s"$name runs at most $budget jobs warm") {
