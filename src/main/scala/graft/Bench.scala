@@ -56,7 +56,12 @@ object Bench {
     latencyCont.foreach(h => System.err.println(s"[bench] continuous latency probe: $h"))
     // drop the probe's garbage before timing the relational suite, then
     // warm the JVM/codegen once on the smallest SF so per-query times
-    // measure the engine, not first-call classloading.
+    // measure the engine, not first-call classloading. The codegen half
+    // holds because Engine.session sizes Spark's generated-code cache
+    // (Engine.CodegenCacheMaxEntries) above the classes this pass compiles
+    // (about 262 for the 13 entries at sf0.1); at Spark's default of 100
+    // the later queries' classes evicted the earlier ones' before their
+    // timed reps.
     System.gc()
     headline.foreach { q => Pin.query {
       try q.run(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()

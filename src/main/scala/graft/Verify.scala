@@ -98,6 +98,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheMaxEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Engine.install(spark)

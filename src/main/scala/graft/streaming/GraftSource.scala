@@ -116,13 +116,14 @@ object GraftSource {
     * timestamp->offset replay per docs/contents/internals/gearpump-internals.md:210-227).
     * Offline container — returns the fully-configured reader; `.load()` is
     * the caller's when brokers exist. `startTimestampMs` maps the
-    * reference's startTime replay to `startingOffsetsByTimestamp`. */
+    * reference's startTime replay to `startingTimestamp`, which applies to
+    * every partition of the topic (`startingOffsetsByTimestamp` would have
+    * to name each assigned partition, or the query fails at start). */
   def kafkaReader(spark: SparkSession, brokers: String, topic: String,
       startTimestampMs: Option[Long] = None) = {
     val r = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", brokers)
       .option("subscribe", topic)
-    startTimestampMs.fold(r)(ts => r.option("startingOffsetsByTimestamp",
-      s"""{"$topic": {"0": $ts}}"""))
+    startTimestampMs.fold(r)(ts => r.option("startingTimestamp", ts))
   }
 }
