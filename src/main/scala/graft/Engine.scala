@@ -14,11 +14,15 @@ import org.apache.spark.sql.SparkSession
   * graft session needs is applied once, by [[session]] or [[install]].
   *
   * Scale notes (100 TB target):
-  *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting means
-  *    one static `spark.sql.shuffle.partitions` setting survives 1000x data
-  *    growth (partitions re-split at runtime).
-  *  - On a real cluster, callers override master/memory via spark-submit conf;
-  *    nothing here hard-codes local mode.
+  *  - [[parallelism]] sets the shuffle width to a local master's task
+  *    slots. On a real cluster, master, memory and width come from
+  *    spark-submit conf; nothing here hard-codes local mode.
+  *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting
+  *    means one static width survives 1000x data growth.
+  *  - A stateful stream keeps the width of its first start as its state
+  *    partitions and commits every one of them each micro-batch, so a
+  *    width above the slot count is fixed cost per batch (README "Session
+  *    setup" has the measurement).
   *
   * Generated-code cache: Spark keeps the classes it compiles for plans in
   * one JVM-wide LRU, sized by the static conf
@@ -41,12 +45,11 @@ object Engine {
 
   def session(
       appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = 32): SparkSession = {
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config(parallelism(master))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -61,6 +64,18 @@ object Engine {
     install(spark)
     spark
   }
+
+  /** The conf that sizes a session's shuffles to `master`: on a local
+    * master `spark.sql.shuffle.partitions` is its task slots (`local` 1,
+    * `local[N]` and `local[N,F]` N, `local[*]` the JVM's processors); on
+    * any other master it is empty. [[session]] and `Verify.main` build with it. */
+  def parallelism(master: String): Map[String, String] = (master match {
+    case "local" => Some(1)
+    case LocalSlots(n) => Some(if (n == "*") Runtime.getRuntime.availableProcessors else n.toInt)
+    case _ => None
+  }).map(n => "spark.sql.shuffle.partitions" -> n.toString).toMap
+
+  private val LocalSlots = """local\[(\d+|\*)(?:\s*,\s*\d+)?\]""".r
 
   /** Apply to a live session everything a graft session needs: the
     * native functions of [[graft.plans.GraftExtensions]], the

@@ -88,13 +88,13 @@ object Verify {
         System.err.println("usage: graft.Verify <sfDir> <outDir> [comma-separated query names]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"
     // not Engine.session: the dump keeps Spark's default INT96 parquet
     // timestamps; Engine's TIMESTAMP_MICROS would make the DuckDB oracle
     // compare (scripts/check.py) read them as TIMESTAMPTZ
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(master)
+      .config(Engine.parallelism(master))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -153,7 +153,7 @@ object CurateCorpus {
     * attrition and a manifest sample. */
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.Engine.session("curate-corpus", "local[4]", 8)
+    val spark = graft.Engine.session("curate-corpus", "local[4]")
     val docs = graft.Tables.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     // the synthetic fixture has no English stopwords, so gate on the

@@ -170,7 +170,7 @@ object EventInsights {
   /** Demo main: report over the fixture event log. */
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.Engine.session("event-insights", "local[4]", 8)
+    val spark = graft.Engine.session("event-insights", "local[4]")
     val ev = graft.Tables.t(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("value"))

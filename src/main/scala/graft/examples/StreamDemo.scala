@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Library-surface drive: veneer pipeline + streaming wordcount + rate source. */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session("demo", "local[4]", 4)
+    val spark = Engine.session("demo", "local[4]")
     import spark.implicits._
 
     // 1. Gearpump-shaped veneer over a batch source

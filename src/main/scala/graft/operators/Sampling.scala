@@ -101,7 +101,7 @@ object Sampling {
       keyCol: String, valCol: String, outCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val df = Pin.reuse(in) // value column computed once, not once per phase
-    val parallelism = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parallelism = s.sessionState.conf.numShufflePartitions
     val range = df.agg(min(col(keyCol)), max(col(keyCol))).head()
     if (range.isNullAt(0)) // empty input: empty result, right schema
       df.withColumn(outCol, lit(0L))

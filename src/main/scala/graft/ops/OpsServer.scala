@@ -465,7 +465,7 @@ final class OpsServer(spark: SparkSession, registry: AppRegistry, port: Int = 0,
   private def workerConfig(id: String): JValue = {
     val keys = List("spark.executor.memory", "spark.executor.cores",
       "spark.executor.instances", "spark.memory.fraction",
-      "spark.sql.shuffle.partitions", "spark.master")
+      "spark.master", "spark.sql.shuffle.partitions")
     def value(k: String): String = spark.conf.getOption(k)
       .orElse(Option(spark.sparkContext.getConf.get(k, null))).getOrElse("")
     ("workerId" -> id.toInt) ~ ("config" -> JObject(keys.map(k => JField(k, JString(value(k))))))

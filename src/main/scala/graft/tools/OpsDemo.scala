@@ -15,7 +15,7 @@ import graft.streaming.GraftSource
 object OpsDemo {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(18090)
-    val spark = Engine.session("ops-demo", "local[4]", 4)
+    val spark = Engine.session("ops-demo", "local[4]")
     val reg = new AppRegistry(spark)
     val srv = new OpsServer(spark, reg, catalog = Map.empty, port = port).start()
     val q = GraftSource.rate(spark, rowsPerSecond = 50000, payloadBytes = 64)

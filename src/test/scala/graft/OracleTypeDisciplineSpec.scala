@@ -44,7 +44,7 @@ class OracleTypeDisciplineSpec extends AnyFunSuite {
   /** Column → Spark type name, from the driver's own parquet tables, so the
     * integer/double call matches what DuckDB actually reads. */
   private lazy val colTypes: Map[String, String] = {
-    val spark = Engine.session("graft-test", "local[4]", 4)
+    val spark = Engine.session("graft-test", "local[4]")
     Tables.names.flatMap { n =>
       Tables.t(spark, "/root/testdata/sf0.001", n)
         .schema.fields.map(f => f.name.toLowerCase -> f.dataType.typeName)
@@ -181,7 +181,7 @@ class OracleTypeDisciplineSpec extends AnyFunSuite {
     * [[Pin.query]] releases those and its caches. */
   test("no oracled query emits a top-level ARRAY/MAP/STRUCT output column") {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val spark = Engine.session("graft-test", "local[4]", 4)
+    val spark = Engine.session("graft-test", "local[4]")
     val dir = "/root/testdata/sf0.001"
     def complexCols(schema: StructType): Seq[String] =
       schema.fields.collect {

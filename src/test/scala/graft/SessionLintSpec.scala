@@ -20,6 +20,14 @@ class SessionLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(hits.isEmpty, "bind the names with graft.Tables.sql instead:\n" + hits.mkString("\n"))
   }
 
+  test("no literal shuffle-partition count in src/main") {
+    // the width follows the session's slots (Engine.parallelism); a literal
+    // fallback disagrees with whatever session the code runs on
+    val hits = SourceLint.hits(Seq("shuffle.partitions\", \""))
+    assert(hits.isEmpty, "read the session's sessionState.conf.numShufflePartitions instead:\n" +
+      hits.mkString("\n"))
+  }
+
   test("sessions are built only by Engine and Verify") {
     val hits = SourceLint.hits(Seq("SparkSession.builder"), "Engine.scala", "Verify.scala")
     assert(hits.isEmpty, "get the session from graft.Engine.session instead:\n" + hits.mkString("\n"))

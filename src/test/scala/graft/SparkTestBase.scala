@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * drops the SQL cache and its temp views on exit and nudges GC so the
   * ContextCleaner can reap dead broadcast/checkpoint blocks. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = Engine.session("graft-test", "local[4]", 4)
+  lazy val spark: SparkSession = Engine.session("graft-test", "local[4]")
   lazy val sf: String = "/root/testdata/sf0.001"
 
   override def afterAll(): Unit = {

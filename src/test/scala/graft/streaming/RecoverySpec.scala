@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 import graft.SparkTestBase
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, timestamp_seconds, window}
 
 object RecoveryCollector {
   val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -15,6 +16,16 @@ object RecoveryCollector {
   * offset log in checkpointLocation. Kill the query, add more input,
   * restart from the same checkpoint: every record exactly once. */
 class RecoverySpec extends SparkTestBase {
+
+  // the file source lists files at the top level: write each batch
+  // elsewhere, then move its part-file into inDir
+  private def addPart(inDir: String, name: String, df: DataFrame): Unit = {
+    val tmp = Files.createTempDirectory("graft-stage").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(inDir, s"$name.parquet"))
+    ()
+  }
 
   test("restart from checkpoint neither loses nor duplicates records") {
     import spark.implicits._
@@ -35,15 +46,8 @@ class RecoverySpec extends SparkTestBase {
         .start()
     }
 
-    // the file source lists files at the top level: write each batch
-    // elsewhere, then move its part-file into inDir
-    def addFile(from: Long, until: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-stage").toString
-      spark.range(from, until).toDF("id").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, java.nio.file.Paths.get(inDir, s"batch-$from.parquet"))
-      ()
-    }
+    def addFile(from: Long, until: Long): Unit =
+      addPart(inDir, s"batch-$from", spark.range(from, until).toDF("id"))
 
     addFile(1, 6)
     val q1 = startQuery()
@@ -55,5 +59,51 @@ class RecoverySpec extends SparkTestBase {
 
     import scala.jdk.CollectionConverters._
     assert(RecoveryCollector.seen.asScala.toSeq.sorted === (1L to 10L))
+  }
+
+  test("a restart keeps the state partitions its checkpoint recorded") {
+    val inDir = Files.createTempDirectory("graft-in").toString
+    val ckDir = Files.createTempDirectory("graft-ck").toString
+    val counts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val key = "spark.sql.shuffle.partitions"
+
+    def startQuery(session: SparkSession) =
+      session.readStream.schema("ts TIMESTAMP").option("maxFilesPerTrigger", 1).parquet(inDir)
+        .groupBy(window(col("ts"), "10 seconds")).count()
+        .select(col("window.start").cast("long"), col("count"))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckDir)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          df.collect().foreach(r => counts.put(r.getLong(0), r.getLong(1))); ()
+        }
+        .start()
+
+    def addSeconds(name: String, secs: Long*): Unit = {
+      import spark.implicits._
+      addPart(inDir, name, secs.toDF("s").select(timestamp_seconds(col("s")).as("ts")))
+    }
+
+    // first start on a session 8 wide: the stateful count takes 8 partitions
+    val eight = spark.newSession()
+    eight.conf.set(key, "8")
+    addSeconds("a", 1, 2, 3)
+    val q1 = startQuery(eight)
+    q1.processAllAvailable(); q1.stop()
+    assert(counts.get(0L) === 3L)
+
+    // restart on the shared 4-wide session from the same checkpoint
+    addSeconds("b", 4, 5, 12)
+    val q2 = startQuery(spark)
+    q2.processAllAvailable(); q2.stop()
+
+    import scala.jdk.CollectionConverters._
+    assert(counts.asScala.toMap === Map(0L -> 5L, 10L -> 1L), "counts are cumulative across the restart")
+    val offsets = new java.io.File(ckDir, "offsets").listFiles().filter(_.getName.forall(_.isDigit))
+    val last = offsets.maxBy(_.getName.toLong)
+    assert(Files.readString(last.toPath).contains(s"\"$key\":\"8\""),
+      s"${last.getName} no longer records 8 partitions")
+    val stateParts = new java.io.File(ckDir, "state/0").list().filter(_.forall(_.isDigit))
+    assert(stateParts.length === 8)
+    assert(spark.conf.get(key) === "4", "the restart leaves the shared session's width alone")
   }
 }
